@@ -27,10 +27,12 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // Cached plans pin their shuffle output partitioning unless AQE
       // is allowed to re-plan it; at high shuffle-partition counts
-      // that turns every .cache() inside an iterative loop (label
-      // propagation) into partitions×iterations scheduler overhead —
-      // PartitionSweep measured components 6.2× SLOWER at 2048
-      // partitions before this flag, invariant-and-flat after.
+      // that turns every .cache() inside an iterative loop into
+      // partitions×iterations scheduler overhead (PartitionSweep
+      // measured cached-round components 6.2× SLOWER at 2048
+      // partitions without this flag). Label propagation checkpoints
+      // its rounds and no longer relies on it; the flag stays for
+      // every other cached plan a session builds.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       // Fact⋈fact path (neither side broadcastable at real scale):

@@ -24,8 +24,13 @@ object SparkEntry {
     * candidate chain is the most expensive stage of the whole dedup
     * family — re-running it to apply verdicts it already produced
     * doubled the suite's top cost (round-5 gate: 41 s). The labels
-    * are lineage-free (localCheckpoint inside `components`), so the
-    * memo holds a label-sized frame per (session, dir), never a plan.
+    * are lineage-free: `components` returns a sort over the last
+    * label-propagation round's checkpoint, and has already released
+    * the superseded rounds' and the edge frame's blocks. So the memo
+    * holds one label-sized checkpoint per (session, dir), never a plan
+    * or a cache entry; a lost block of it fails the reading query
+    * loudly, like every localCheckpoint (the executor-loss
+    * materialization policy covers it through honestCheckpoint).
     * `dedup_components` always recomputes (its bench time stays an
     * honest measure of the full chain) and refreshes the memo;
     * `dedup_apply` reuses the latest labels, computing them only if

@@ -190,7 +190,7 @@ object Dedup {
   def verifyPairs(documents: DataFrame, pairs: DataFrame,
                   threshold: Double = 0.8, w: Int = 3): DataFrame =
     verifyJaccard(pairs.select(col("a"), col("b")).distinct(),
-      shingleRows(documents, w).honestCheckpoint(), threshold)
+      shingleRows(documents, w).honestCheckpoint(), threshold).orderBy(col("a"), col("b"))
 
   /** Exact Jaccard verification of candidate (a, b) pairs against the
     * full shingle sets; emits pairs with round(j, 6) ≥ threshold.
@@ -206,6 +206,7 @@ object Dedup {
     * a few dozen bytes regardless of document size; total work stays
     * candidate-bounded (the LSH / pigeonhole / prefix-filter
     * guarantee). Union sizes come from per-doc shingle counts.
+    * Unsorted: [[components]] needs no order, the public callers sort.
     */
   private def verifyJaccard(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -235,7 +236,6 @@ object Dedup {
             / (col("na") + col("nb") - col("inter")), 6) + lit(0.0)))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
-      .orderBy(col("a"), col("b"))
   }
 
   /** The shared count-based pair-intersection core behind
@@ -267,7 +267,11 @@ object Dedup {
     * query.
     */
   def minhashLsh(documents: DataFrame, numHashes: Int = 32, bands: Int = 16,
-                 threshold: Double = 0.8): DataFrame = {
+                 threshold: Double = 0.8): DataFrame =
+    minhashPairs(documents, numHashes, bands, threshold).orderBy(col("a"), col("b"))
+
+  private def minhashPairs(documents: DataFrame, numHashes: Int, bands: Int,
+                           threshold: Double): DataFrame = {
     val rows = numHashes / bands
     // The shingle frame feeds the signature aggregation AND three
     // verify-stage references (both candidate sides + per-doc sizes);
@@ -367,7 +371,7 @@ object Dedup {
     * ever sees one change-count per round, never data.
     */
   def components(documents: DataFrame, threshold: Double = 0.8): DataFrame =
-    componentsFromPairs(minhashLsh(documents, threshold = threshold))
+    componentsFromPairs(minhashPairs(documents, 32, 16, threshold))
 
   /** Connected components over an explicit near-dup pair frame
     * (columns `a`, `b`) — the reusable second stage of [[components]],
@@ -375,52 +379,47 @@ object Dedup {
     * wants SimHash/PPJoin pairs instead of MinHash) doesn't re-run
     * candidate generation to cluster them.
     *
-    * Job-count design: label propagation runs TWO rounds per
-    * materialized job, and the convergence check reads only the
-    * second round's change flag. Dup clusters are near-cliques
-    * (diameter ≤ 2 is the overwhelming case: every member collides
-    * with the keeper), so round 1 reaches the fixpoint and round 2
-    * proves it — the whole loop is typically ONE cluster job, where
-    * the round-per-job version paid 2-3 sequential cache+count jobs
-    * of fixed scheduler latency each (the round-5 bench-gate spike).
-    * Longer chains still converge: the loop keeps double-stepping
-    * until a quiet round.
+    * Label propagation runs TWO rounds per materialized step and reads
+    * only the second round's change count: dup clusters are
+    * near-cliques, so the first step usually reaches the fixpoint and
+    * the second proves it. Longer chains keep double-stepping.
+    *
+    * The symmetric edges and every double round are honestCheckpoints,
+    * so each step plans a constant-size plan over two checkpoint
+    * leaves, never the pair chain (MinHash → verify) re-analysed per
+    * round, and nothing enters the CacheManager. A superseded round's
+    * blocks are released once the next round is materialized, the
+    * edge blocks after the loop; the result reads the last round's
+    * checkpoint, which the ContextCleaner frees with the frame. As
+    * with every other localCheckpoint, a lost round block fails the
+    * query loudly instead of recomputing; the executor-loss
+    * materialization policy covers it through honestCheckpoint.
     */
   def componentsFromPairs(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("a"), col("b"))
-    val edges = p.unionByName(p.select(col("b").as("a"), col("a").as("b"))).cache()
+    val edges = p.unionByName(p.select(col("b").as("a"), col("a").as("b"))).honestCheckpoint()
     def propagate(labels: DataFrame): DataFrame = {
       val viaNeighbors = labels.join(edges, col("node") === col("a"))
         .groupBy(col("b")).agg(min(col("comp")).as("ncomp"))
         .select(col("b").as("node"), col("ncomp"))
       // Carry the previous label through the update so the
-      // convergence check is a filter over the cached frame, not a
-      // second labels⋈next join per round.
+      // convergence check is a filter over the round's checkpoint, not
+      // a second labels⋈next join per round.
       labels.select(col("node"), col("comp")).join(viaNeighbors, Seq("node"), "left")
         .select(col("node"), col("comp").as("prev"),
           least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
     }
     var labels = edges.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("comp"))
-    var cached: DataFrame = null
     var changed = 1L
     while (changed > 0) {
-      val next = propagate(propagate(labels)).cache()
+      val next = propagate(propagate(labels)).honestCheckpoint()
       changed = next.filter(col("comp") =!= col("prev")).count()
-      if (cached != null) cached.unpersist()
-      cached = next
-      labels = next.select(col("node"), col("comp"))
+      labels.releaseCheckpoint() // no-op on the initial, unmaterialized labels
+      labels = next
     }
-    edges.unpersist()
-    // Hand back a lineage-free frame and release the loop cache: the
-    // shared CacheManager is keyed by plan and never auto-evicts, so
-    // leaving the final label frame cached would accumulate one
-    // corpus-sized cache entry per components() call in a session.
-    // localCheckpoint blocks are ContextCleaner-managed — freed once
-    // the returned frame is unreferenced.
-    val out = labels.honestCheckpoint()
-    cached.unpersist()
-    out.orderBy(col("node"))
+    edges.releaseCheckpoint()
+    labels.select(col("node"), col("comp")).orderBy(col("node"))
   }
 
   /** Apply the near-dup verdicts to the corpus — the step that turns
@@ -522,7 +521,7 @@ object Dedup {
     val cands = prefix.as("x").join(prefix.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    verifyJaccard(cands, sh, threshold)
+    verifyJaccard(cands, sh, threshold).orderBy(col("a"), col("b"))
   }
 
   /** Asymmetric containment pairs: overlap coefficient

@@ -472,10 +472,12 @@ object TextOps {
     // plain HASH aggregates plus a winner-retrieval join, bit-identical
     // by construction: max(cnt) per doc names the winning count, the
     // join keeps exactly the tokens carrying it, and min(token) over
-    // that (naturally tiny) tie set is the declared lexicographic
-    // tiebreak. No packed ordering column is needed — the join already
-    // restricts to the max-count ties, so the only residual sort is
-    // ~one row per doc inside the hash aggregate's min(token).
+    // that tie set is the declared lexicographic tiebreak. The tie set
+    // is small only when the doc repeats a token: at wc = 1 (every
+    // token unique) it is the doc's whole vocabulary, so on
+    // all-unique-token corpora the join survivors reach corpus-token
+    // scale. That stays linear and hash-aggregated, just a constant
+    // factor over a prefix-bounded filter; the answer is unchanged.
     val tokCounts = tok.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("cnt"))
     val perDoc = tokCounts.groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_tokens"),

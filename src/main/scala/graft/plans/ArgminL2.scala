@@ -52,8 +52,10 @@ case class ArgminL2I64(child: Expression, cents: Array[Long],
                        k: Int, dim: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"argmin_l2 expects array<long>, got $t")
+    // a null slot would read as 0 through getLong: reject nullable elements
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"argmin_l2 expects array<long> without null elements, got $t")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "argmin_l2"

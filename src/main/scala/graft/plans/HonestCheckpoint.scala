@@ -15,6 +15,11 @@ object HonestCheckpoint {
   implicit class HonestCheckpointOps(private val df: DataFrame) extends AnyVal {
     def honestCheckpoint(): DataFrame = ColumnBridge.honestCheckpoint(df)
 
+    /** Frees a superseded checkpoint's blocks now — see
+      * ColumnBridge.releaseCheckpoint.
+      */
+    def releaseCheckpoint(): Unit = ColumnBridge.releaseCheckpoint(df)
+
     /** [[honestCheckpoint]] that re-declares the hash partitioning an
       * explicit `repartition(n, cols)` physically gave the frame (AQE
       * checkpoints otherwise surface as Unknown partitioning and

@@ -65,6 +65,18 @@ object ColumnBridge {
     }
   }
 
+  /** Frees the blocks behind a checkpoint made by [[honestCheckpoint]]
+    * (non-blocking, as `Dataset.unpersist()`), for loops that supersede
+    * their checkpoints before the ContextCleaner would collect them.
+    * The frame must not be read again. A no-op on any frame that is not
+    * a bare checkpoint.
+    */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** [[honestCheckpoint]] that additionally RESTORES a hash
     * partitioning the checkpoint physically has but can no longer
     * prove.

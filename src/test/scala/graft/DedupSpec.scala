@@ -3,6 +3,10 @@ package graft
 import java.security.MessageDigest
 
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.types.LongType
 
 /** Sketch-based dedup operators are checked against an independent
   * in-Scala brute-force implementation (different tokenizer code,
@@ -124,9 +128,10 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("components assigns every near-dup cluster its min doc_id via union-find oracle") {
-    // Independent union-find over the brute-force pair set.
-    val pairs = bruteJaccard(3, 0.8).map(p => (p._1, p._2))
+  /** Independent in-Scala union-find: every node of the pair graph →
+    * the min id of its connected component.
+    */
+  private def unionFind(pairs: Iterable[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       val p = parent.getOrElseUpdate(x, x)
@@ -136,12 +141,63 @@ class DedupSpec extends SparkSpec {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val expected = parent.keys.toList.map(n => n -> find(n)).toMap
-    val got = Dedup.components(corpus.toDF("doc_id", "text")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    parent.keys.toList.map(n => n -> find(n)).toMap
+  }
+
+  private def labelsOf(comps: DataFrame): Map[Long, Long] =
+    comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // 8-node path 1-2-…-8: label 1 needs 7 hops to reach node 8, two
+  // per double round, so the loop runs 4 changing rounds + a quiet one
+  private val path8 = (1L until 8L).map(i => (i, i + 1))
+
+  test("components assigns every near-dup cluster its min doc_id via union-find oracle") {
+    val expected = unionFind(bruteJaccard(3, 0.8).map(p => (p._1, p._2)))
+    val got = labelsOf(Dedup.components(corpus.toDF("doc_id", "text")))
     assert(got === expected)
     assert(got.nonEmpty)
     assert(got.values.toSet.size < got.size, "must contain a non-trivial cluster")
+  }
+
+  test("componentsFromPairs converges over multi-round chains, stars and no pairs") {
+    assert(labelsOf(Dedup.componentsFromPairs(path8.toDF("a", "b"))) === unionFind(path8))
+    // two disjoint stars, pairs given in both orientations; the second
+    // star's min id is a leaf, not its center
+    val stars = Seq(15L -> 11L, 12L -> 15L, 15L -> 13L, 14L -> 15L,
+      30L -> 21L, 30L -> 35L, 36L -> 30L)
+    val got = labelsOf(Dedup.componentsFromPairs(stars.toDF("a", "b")))
+    assert(got === unionFind(stars))
+    assert(got.values.toSet === Set(11L, 21L))
+    val empty = Dedup.componentsFromPairs(Seq.empty[(Long, Long)].toDF("a", "b"))
+    assert(empty.collect().isEmpty)
+    assert(empty.schema.map(f => f.name -> f.dataType) === Seq("node" -> LongType, "comp" -> LongType))
+  }
+
+  test("components leaves no cache entry, a lineage-free result and no round or edge blocks") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    def stored(): Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    def checkpointRdd(df: DataFrame): Int = {
+      val plan = df.queryExecution.analyzed
+      assert(plan.collectFirst { case m: InMemoryRelation => m }.isEmpty, plan.treeString)
+      plan.collectLeaves() match {
+        case Seq(l: LogicalRDD) => l.rdd.id
+        case leaves => fail(s"expected one LogicalRDD leaf, got $leaves")
+      }
+    }
+    val before = stored()
+    val comps = Dedup.components(corpus.toDF("doc_id", "text"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // Besides the result's own checkpoint, only the MinHash shingle
+    // and signature checkpoints (ContextCleaner-managed) may hold
+    // blocks: no superseded round, no edge frame.
+    assert((stored() -- before - checkpointRdd(comps)).size <= 2)
+    // A bare pair frame has no other checkpoints, and the path runs
+    // four superseded rounds: the result's blocks are all that remain.
+    val beforePath = stored()
+    val pathComps = Dedup.componentsFromPairs(path8.toDF("a", "b"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert((stored() -- beforePath).subsetOf(Set(checkpointRdd(pathComps))))
   }
 
   test("applyDedup maps every doc to its cluster keeper and keeps exactly the keepers") {

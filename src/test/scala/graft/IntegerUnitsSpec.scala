@@ -144,6 +144,16 @@ class IntegerUnitsSpec extends SparkSpec {
     assert((e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse(""))
       .contains("argmin_l2"), s"unexpected failure: $e")
   }
+
+  test("argminUnits rejects array<long> input that may hold nulls at analysis") {
+    import spark.implicits._
+    val nullable = Seq(Tuple1(Seq(Some(1L), None))).toDF("u")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      nullable.select(graft.plans.ArgminL2.argminUnits(col("u"), Seq(Array(0L, 0L))))
+    }
+    assert(e.getMessage.contains("argmin_l2 expects array<long> without null elements"),
+      s"unexpected failure: $e")
+  }
 }
 
 /** typedlit row shape for the argmin HOF reference (a case class is
