@@ -57,23 +57,20 @@ object PartitionSweep {
       "dedup_semantic_hier" -> (() =>
         operators.Similarity.dedupSemanticHier(embeddings, k1 = 7, k2 = 7).count()),
       // the grouped trainer's per-iteration means shuffle on
-      // (coarse, fine, dim) and the argmin groupBy on (coarse,
-      // vec_id) — different keys per stage, so partition-count
-      // sensitivity would surface here if anywhere; answers must
-      // equal the looped trainer's at every setting
+      // (coarse, fine, dim), then (coarse, fine) — different keys
+      // per stage, so partition-count sensitivity would surface here
+      // if anywhere (dedup_semantic_hier runs the same build)
       "dedup_sem_hier_grp" -> (() =>
         operators.Similarity.dedupSemanticHierGrouped(embeddings, k1 = 7, k2 = 7).count()),
-      // wide (centroids-as-data) flat trainer at the same 10× cluster
-      // budget: the n×k fan + min(struct) argmin + spreadForFan
-      // repartition are new shuffle users — answers must match the
-      // literal trainer's semantics at every partition count
+      // flat trainer at the same 10× cluster budget: the (cluster,
+      // dim) mean shuffle and the pair join's (cluster, bi, bj)
+      // exchange must give the same answers at every partition count
       "dedup_semantic_wide" -> (() =>
-        operators.Similarity.dedupSemanticWide(embeddings, k = 40).count()),
-      // trained IVF with the coarse quantizer FORCED wide (round 15's
-      // assignTopCellsData): the probe maps a broadcast centroid row
-      // through a transform lambda and the trainer shuffles the
-      // (cluster, dim) partial sums — nlist = 128 is past the kernel
-      // budget at every setting, so only the data branch runs
+        operators.Similarity.dedupSemantic(embeddings, k = 40).count()),
+      // trained IVF at nlist = 128: past 64 centroids the training
+      // corpus is spread before the argmin (a repartition exchange),
+      // the trainer shuffles the (cluster, dim) partial sums and the
+      // probe explodes each query's top-nprobe cells
       "ann_ivf_trained_wide" -> (() =>
         operators.Similarity.annIvfTrained(embeddings, fixedQ, nlist = 128, iters = 1,
           nprobe = 2).count()),

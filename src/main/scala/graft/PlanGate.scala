@@ -30,23 +30,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PlanGate {
 
-  /** The plan-shaping subset of [[GraftSession]]'s config, applied to
-    * a fresh session state so the gate sees production plans from any
-    * base session.
+  /** [[GraftSession.sqlConfs]] applied to a fresh session state, with
+    * the shuffle partition count pinned to 32, so the gate sees
+    * production plans from any base session.
     */
   def session(base: SparkSession): SparkSession = {
     val s = base.newSession()
-    Seq(
-      "spark.sql.shuffle.partitions" -> "32",
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.session.timeZone" -> "UTC").foreach { case (k, v) => s.conf.set(k, v) }
+    (GraftSession.sqlConfs :+ ("spark.sql.shuffle.partitions" -> "32"))
+      .foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 

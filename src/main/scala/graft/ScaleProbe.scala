@@ -251,23 +251,18 @@ object ScaleProbe {
       "dedup_passages" -> ((_, d, _, _, _) => operators.Dedup.passages(d).count()),
       "dedup_substring" -> ((_, d, _, _, _) => operators.Dedup.substrings(d).count()),
       "vocab_by_lang" -> ((_, d, _, _, _) => operators.TextOps.vocabByLangHeap(d).count()),
-      // ArgminL2 kernel gate (round-18, VERDICT #6): the wide
-      // (centroids-as-data) assignment at a FIXED FAISS-range k=400
-      // — NOT the 4·mult corpus contract — so the row isolates the
-      // per-row k·d argmin constant (iters=1 → two corpus argmin
-      // passes: the Lloyd mean pass + the final assign). This is the
-      // measurement that decides whether the interpreted
-      // transform+array_min HOF binds at production nlist, or stays
-      // inside scan noise.
+      // ArgminL2 kernel gate: the flat assignment at a FIXED
+      // FAISS-range k=400 — NOT the 4·mult corpus contract — so the
+      // row isolates the per-row k·d argmin constant (iters=1 → two
+      // corpus argmin passes: the Lloyd mean pass + the final assign).
       "argmin_wide_k400" -> ((_, _, _, em, _) =>
-        operators.Similarity.semanticIndexBuildWide(em, k = 400, iters = 1)
+        operators.Similarity.semanticIndexBuild(em, k = 400, iters = 1)
           .assigned.count()),
-      // same gate one shape up (IndexIVFFlat-range nlist): if the
-      // k=400 row is flat and this one scales ∝k, the HOF constant
-      // is visible — the kernel decision reads the k-slope between
-      // the two rows, not either row alone.
+      // same gate one shape up (IndexIVFFlat-range nlist): the
+      // k-slope between the two rows is the kernel's per-centroid
+      // constant.
       "argmin_wide_k2048" -> ((_, _, _, em, _) =>
-        operators.Similarity.semanticIndexBuildWide(em, k = 2048, iters = 1)
+        operators.Similarity.semanticIndexBuild(em, k = 2048, iters = 1)
           .assigned.count()),
       "token_budget" -> ((_, d, _, _, k) =>
         operators.Curation.tokenBudget(d, budget = 10000L * k).count()),
@@ -449,21 +444,17 @@ object ScaleProbe {
       "dedup_semantic" -> ((_, _, _, em, k) =>
         operators.Similarity.dedupSemantic(em, k = 4 * k.toInt).count()),
       // Hierarchical SemDeDup probe: k₁=k₂=⌈√(4·mult)⌉ keeps total
-      // clusters ∝ corpus (the flat probe's contract) while each
-      // assignment level stays within the plan-literal kernel budget
-      // — at 100× that is 20×20=400 effective clusters where the
-      // flat operator cannot go (its 100× row is deliberately
-      // unprobed; this is the operator that replaces it there).
+      // clusters ∝ corpus (the flat probe's contract) while each row
+      // scans k₁ + k₂ centroids — at 100× that is 20×20=400 effective
+      // clusters for 40 distance evaluations per row.
       "dedup_semantic_hier" -> ((_, _, _, em, k) => {
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
         operators.Similarity.dedupSemanticHier(em, k1 = side, k2 = side).count()
       }),
-      // Grouped fine trainer at the same k₁=k₂ sizing: identical
-      // answers (spec-pinned), but each fine Lloyd iteration is ONE
-      // dataframe program instead of k₁ sequential train() calls —
-      // at 100× (side 20) that is 3 assignment jobs total vs the
-      // loop's ~60 job-groups of fixed scheduling latency. This row
-      // measures what that buys in wall-clock.
+      // The grouped build at the same k₁=k₂ sizing, called by its
+      // own name (dedup_semantic_hier delegates to it): each fine
+      // Lloyd iteration is ONE dataframe program — at 100× (side 20)
+      // 3 assignment jobs total.
       "dedup_sem_hier_grp" -> ((_, _, _, em, k) => {
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
         operators.Similarity.dedupSemanticHierGrouped(em, k1 = side, k2 = side).count()
@@ -474,19 +465,10 @@ object ScaleProbe {
       // layout buys at serve time (the probe join reads toward only
       // the batch's cells' partitions; with k ∝ n each cell holds a
       // constant row budget, so the serve should stay ~flat, the
-      // semantic analog of the ann_*_served rows). 10× ONLY: the
-      // probe's one-time index build uses the FLAT trainer, and
-      // k = 400 plan-literal kernels at 100× is exactly the cap the
-      // hier operator documents — measured here as a JIT code-cache
-      // exhaustion (53k nmethods, compilation disabled, interpreted
-      // crawl), so the guard fails fast instead of melting the JVM.
-      // The 100× build path is the hier/grouped trainer (#25d/#25f);
-      // a two-level probe-side assignment would be its serve mate.
+      // semantic analog of the ann_*_served rows).
       "sem_probe_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sem_index"
         val kk = 4 * k.toInt
-        require(kk <= 64, s"sem_probe_served: flat k=$kk exceeds the plan-literal kernel " +
-          "budget (~64) — the hier trainer is the build path past 10×; see the probe comment")
         val (params, n) = (s"sem;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", em.count())
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticIndexVersion) { staging =>
           operators.Similarity.semanticIndexSave(
@@ -498,14 +480,12 @@ object ScaleProbe {
           threshold = 0.45).count()
       }),
       // The HANDOFF measurement (round-13 verdict #8): the flat serve
-      // probe AT ITS k ≤ 64 plan-literal cap on whatever corpus it is
-      // given. At 100× the SemDeDup contract wants k = 400; capped at
-      // 64, each cell holds ~6× its budgeted rows, so the probe join
-      // fans ~6× the pairs — this row records what the flat layout
-      // degrades to exactly where the hier index takes over
-      // (sem_probe_hier_served is the row that holds the contract
-      // there). Index dir is cap-keyed so it never collides with the
-      // uncapped 10× dir.
+      // probe with k capped at 64 on whatever corpus it is given. At
+      // 100× the SemDeDup contract wants k = 400; capped at 64, each
+      // cell holds ~6× its budgeted rows, so the probe join fans ~6×
+      // the pairs — this row records what an under-sized k costs
+      // (sem_probe_hier_served holds the contract there). Index dir
+      // is cap-keyed so it never collides with the uncapped dir.
       "sem_probe_flat_cap" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semcap_index"
         val kk = math.min(4 * k.toInt, 64)
@@ -519,33 +499,24 @@ object ScaleProbe {
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
-      // The WIDE (centroids-as-data) flat trainer at the corpus
-      // contract's k = 4·mult WITHOUT any cap — the run the
-      // plan-literal trainer physically cannot make past k ≈ 64
-      // (k = 400 melted the JIT code cache): plan size is O(1) in k,
-      // so the only cost is the n×k assignment fan-out. This is the
-      // single-level alternative to the hier factorization at the
-      // second/third decade — both paths now carry measured rows.
+      // The flat trainer at the corpus contract's k = 4·mult, named
+      // for the single-level alternative to the hier factorization
+      // at the second/third decade: plan size is O(1) in k, so the
+      // cost is the n×k argmin scan.
       "dedup_semantic_wide" -> ((_, _, _, em, k) =>
-        operators.Similarity.dedupSemanticWide(em, k = 4 * k.toInt).count()),
-      // Grouped trainer at HIGH k₁ (round-13 verdict #8, after the
-      // model-parameter aggregation pinning landed): k₁ = 64 (the
-      // coarse plan-literal kernel budget — the honest ceiling; past
-      // it the COARSE level needs the same centroids-as-data join the
-      // fine level already uses, a documented residual), k₂ sized so
-      // k₁·k₂ tracks the corpus contract. The looped trainer here
-      // would serialize k₁ × iters ≈ 192 train job-groups; grouped
-      // runs 3 assignment jobs per fine iteration regardless of k₁ —
-      // this row records what that buys where it matters.
+        operators.Similarity.dedupSemantic(em, k = 4 * k.toInt).count()),
+      // Grouped build at HIGH k₁: k₁ = 64, k₂
+      // sized so k₁·k₂ tracks the corpus contract; 3 assignment jobs
+      // per fine iteration regardless of k₁.
       "dedup_sem_hier_grp_wide" -> ((_, _, _, em, k) => {
         val k2 = math.max(1, math.ceil(4.0 * k / 64).toInt)
         operators.Similarity.dedupSemanticHierGrouped(em, k1 = 64, k2 = k2).count()
       }),
       // The WIDE serve probe: the frozen single-level index at the
-      // UNCAPPED corpus-contract k (400 at 100×) — build once via
-      // the shared detection (first timed run pays it; min-of-2
-      // reads serve-only), each probe batch assigns through the
-      // broadcast centroid frame (plan O(1) in k) and joins the
+      // corpus-contract k (400 at 100×), under its own index dir —
+      // build once via the shared detection (first timed run pays
+      // it; min-of-2 reads serve-only), each probe batch assigns
+      // through the fused kernel (plan O(1) in k) and joins the
       // cluster-partitioned assignment. With k ∝ n each cell holds a
       // constant row budget, so the serve should stay ~flat — the
       // single-level counterpart of sem_probe_hier_served.
@@ -555,9 +526,9 @@ object ScaleProbe {
         val (params, n) = (s"semwide;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", em.count())
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticIndexVersion) { staging =>
           operators.Similarity.semanticIndexSave(
-            operators.Similarity.semanticIndexBuildWide(em, kk), staging, params, n)
+            operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
         }
-        operators.Similarity.semanticProbeWide(
+        operators.Similarity.semanticProbe(
           operators.Similarity.semanticIndexLoad(spark, dir, Some(meta)),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
@@ -601,16 +572,14 @@ object ScaleProbe {
         operators.Similarity.annRangeIvfServed(em,
           s"/tmp/graft_scale${k}_${recipeVersion}_rangeivf_index", fixedQ,
           threshold = 0.3, queriesAreCorpusDerived = Some(true)).count()),
-      // Hier coarse PAST the kernel budget (round 14): k1 = 128
-      // forces the coarse level onto the centroids-as-data path at
-      // every scale (the third-decade residual closed this round —
-      // dedup_sem_hier_grp_wide's k1 = 64 ceiling no longer binds);
+      // Hier with a wide coarse level: k1 = 128 spreads
+      // the training corpus before the coarse argmin at every scale;
       // k2 sized so k1·k2 tracks the corpus contract.
       "sem_hier_wide_coarse" -> ((_, _, _, em, k) => {
         val k2 = math.max(1, math.ceil(4.0 * k / 128).toInt)
         operators.Similarity.dedupSemanticHierGrouped(em, k1 = 128, k2 = k2).count()
       }),
-      // Build-only half of the row above: isolates the wide-coarse
+      // Build-only half of the row above: isolates the two-level
       // trainer + assignment from the within-cluster pair verify.
       "sem_hier_wide_build" -> ((_, _, _, em, k) => {
         val k2 = math.max(1, math.ceil(4.0 * k / 128).toInt)
@@ -627,12 +596,10 @@ object ScaleProbe {
       // the bucketed prefix sum, not a fixed-size early cut.
       "quality_budget" -> ((_, d, _, _, k) =>
         operators.Curation.qualityBudget(d, budget = 10000L * k).count()),
-      // Trained IVF with the coarse quantizer FORCED wide at a
-      // FAISS-ish nlist (round 15): nlist = 128 sits past the
-      // ~64-kernel budget at every scale, so this row reads the
-      // centroids-as-data train + assign + top-nprobe probe slope —
-      // the branch that is the ONLY one that runs at production
-      // nlist ≈ 4√n.
+      // Trained IVF at a FAISS-ish nlist: nlist = 128
+      // spreads the training corpus at every scale, so this row reads
+      // the train + assign + top-nprobe probe slope at the shape
+      // production nlist ≈ 4√n runs.
       "ann_ivf_trained_wide" -> ((_, _, _, em, _) =>
         operators.Similarity.annIvfTrained(em, fixedQ, nlist = 128, iters = 1,
           nprobe = 2).count()),

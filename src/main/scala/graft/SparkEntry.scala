@@ -170,24 +170,21 @@ object SparkEntry {
     // sub-quadratic scale companion to dedup_embedding -> full oracle
     // (lloydCtes + within-cluster self-join)
     "dedup_semantic"      -> ((s, d) => Similarity.dedupSemantic(Tables(s, d).embeddings, k = 4)),
-    // centroids-as-data trainer (k unbounded by plan size) —
-    // bit-identical to dedup_semantic at equal k, shared oracle
-    "dedup_semantic_wide" -> ((s, d) => Similarity.dedupSemanticWide(Tables(s, d).embeddings, k = 4)),
+    // dedup_semantic under its registered name (shared oracle)
+    "dedup_semantic_wide" -> ((s, d) => Similarity.dedupSemantic(Tables(s, d).embeddings, k = 4)),
     // Hierarchical SemDeDup (coarse cells -> per-cell fine k-means):
     // the second-decade scale path where flat assignment's n*k*d
     // term turns quadratic; oracle = coarse Lloyd chain + one
     // RESTRICTED fine chain per coarse cell (the trainEx technique)
     "dedup_semantic_hier" -> ((s, d) => Similarity.dedupSemanticHier(Tables(s, d).embeddings, k1 = 2, k2 = 2)),
-    // The hier fine level as ONE dataframe program per iteration
-    // (broadcast centroid-frame join + min(struct) argmin) instead of
-    // a k1-iteration driver loop; bit-identical -> shared oracle
+    // The hier build spelled as withinClusterPairs over
+    // semanticIndexBuildHier (dedup_semantic_hier delegates to it) ->
+    // shared oracle
     "dedup_semantic_hier_grouped" -> ((s, d) => Similarity.dedupSemanticHierGrouped(Tables(s, d).embeddings, k1 = 2, k2 = 2)),
-    // Hier build with the COARSE level forced through the
-    // centroids-as-data path (the k1 > kernel-budget regime) — bit-
-    // identical to the grouped build at equal k1 (shared oracle);
-    // the registration that keeps the wide-coarse branch gate-checked
+    // dedup_semantic_hier_grouped under its registered name (shared
+    // oracle)
     "dedup_semantic_hier_wide" -> ((s, d) => Similarity.dedupSemanticHierGrouped(Tables(s, d).embeddings,
-      k1 = 2, k2 = 2, wideCoarse = Some(true))),
+      k1 = 2, k2 = 2)),
     // Frozen lifecycle for the TWO-LEVEL semantic index: build-if-
     // absent (grouped trainer) -> load -> same pair verify; bit-
     // identical to dedup_semantic_hier (shared oracle)
@@ -231,13 +228,9 @@ object SparkEntry {
     // ranking SQL -> full oracle too; nprobe=2 exercises the
     // multi-cell recall knob under the gate
     "ann_ivf_trained"     -> ((s, d) => Similarity.annIvfTrained(Tables(s, d).embeddings, nprobe = 2)),
-    // The same trained-quantizer search FORCED through the
-    // centroids-as-data path (the nlist > kernel-budget regime —
-    // production FAISS sizes nlist ~ 4sqrt(n)-16sqrt(n), decades past
-    // the ~64-kernel JIT cap) — bit-identical at equal nlist, shares
-    // ann_ivf_trained's full oracle
+    // ann_ivf_trained under its registered name (shared oracle)
     "ann_ivf_trained_wide" -> ((s, d) => Similarity.annIvfTrained(Tables(s, d).embeddings,
-      nprobe = 2, wide = Some(true))),
+      nprobe = 2)),
     // PQ: exact integer-units training/encode/ADC -> full oracle (pqCtes)
     // + determinism/recall specs (SimilaritySpec)
     "ann_pq"              -> ((s, d) => Similarity.annPq(Tables(s, d).embeddings)),
@@ -439,7 +432,7 @@ object SparkEntry {
   }
   /** Unrolled Lloyd-iteration CTE chain (the fin_ridge unroll
     * technique) — k-means in exact 1e-8 integer units, mirroring
-    * Similarity.train/assignCells op-for-op: `ex` quantizes
+    * Similarity.lloyd/nearestCells op-for-op: `ex` quantizes
     * components (round(double · 1e8) — the ann_lsh fixed-point
     * pattern), `c0` is the md5-ordered seed, and each round t
     * computes integer squared distances `d{t}`, the argmin
@@ -494,7 +487,7 @@ object SparkEntry {
     * parquet round trip; see
     * [[operators.Similarity.dedupSemanticServed]]): the unrolled
     * Lloyd chain assigns clusters in exact integer units
-    * (bit-identical to Similarity.train), then a within-cluster
+    * (bit-identical to Similarity.lloyd), then a within-cluster
     * self-join re-derives the exact decimal cosine — the candidate
     * set AND the verified pairs must both agree.
     */
@@ -562,12 +555,12 @@ object SparkEntry {
     * CTE name prefixed `f{c}_`, training AND final assignment
     * restricted to the vectors the global `a_fin` put in coarse
     * cell `c` (so the global chain must precede this in the WITH
-    * list). Mirrors Similarity.train on the filtered cell frame
+    * list). Mirrors Similarity.lloyd on the filtered cell frame
     * exactly: md5-seeded init WITHIN the cell, per-round argmin with
     * (du, cluster) tiebreak, half-up integer means, starved fine
     * cells keep their previous centroid. An EMPTY coarse cell yields
-    * empty CTEs end-to-end — the same nothing the Scala side's
-    * occupied-cells loop contributes.
+    * empty CTEs end-to-end — the same nothing an unoccupied coarse
+    * cell contributes to the grouped build.
     */
   private def fineLloydCtes(c: Int, k2: Int, iters: Int): String = {
     val p = s"f${c}_"
@@ -600,7 +593,7 @@ object SparkEntry {
 
   /** Query-side nprobe probing over the Lloyd chain's final
     * centroids: the top-`nprobe` (du, cluster)-ordered cells per
-    * query vector, mirroring Similarity.assignTopCells (nprobe=1
+    * query vector, mirroring Similarity.nearestCells (nprobe=1
     * degenerates to a_fin's argmin). Requires `d_fin` (lloydCtes)
     * earlier in the WITH chain.
     */
@@ -3209,7 +3202,7 @@ FROM e ORDER BY user_id, day"""
         |WHERE round(CAST(dot AS DOUBLE) / sqrt(CAST(na.nrm AS DOUBLE) * CAST(nb.nrm AS DOUBLE)), 6) + 0.0 >= 0.45
         |ORDER BY a, b""".stripMargin),
     // SemDeDup replay: the unrolled Lloyd chain assigns clusters in
-    // exact integer units (bit-identical to Similarity.train), then a
+    // exact integer units (bit-identical to Similarity.lloyd), then a
     // within-cluster self-join re-derives the exact decimal cosine —
     // the candidate set AND the verified pairs must both agree.
     "dedup_semantic" -> dedupSemanticOracle,
@@ -3230,8 +3223,7 @@ FROM e ORDER BY user_id, day"""
     // operator (same init/argmin/mean algebra, one dataframe program
     // per iteration), same oracle.
     "dedup_semantic_hier_grouped" -> dedupSemanticHierOracle,
-    // Wide-coarse build: bit-identical to the grouped hier build
-    // (trainData/assignCellsData parity is spec-pinned), same oracle.
+    // The grouped hier build under its registered name, same oracle.
     "dedup_semantic_hier_wide" -> dedupSemanticHierOracle,
     // Frozen lifecycle over the grouped build: bit-identical (the
     // assignment survives the parquet round trip), same oracle.
@@ -3333,12 +3325,7 @@ FROM e ORDER BY user_id, day"""
     // runs across the probed cells' union. qlabel = the matched
     // corpus cell, so `label` stays the neighbor's cell.
     "ann_ivf_trained" -> annIvfTrainedOracle,
-    // The SAME search with the coarse quantizer forced through the
-    // centroids-as-data path (trainAuto/assignCellsAuto/
-    // assignTopCellsAuto wide) — bit-identical at equal nlist, so it
-    // shares ann_ivf_trained's full oracle; the registration that
-    // keeps the wide-quantizer branch (nlist > kernel budget at
-    // production FAISS sizing) gate-checked every round.
+    // ann_ivf_trained under its registered name, same oracle.
     "ann_ivf_trained_wide" -> annIvfTrainedOracle,
     // PQ search fully replayed: exact-decimal-norm normalization,
     // integer-units joint codebook training (unrolled), integer ADC

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.HonestCheckpoint._
@@ -169,256 +169,139 @@ object Similarity {
     * (driver-side model parameters) + the corpus assignment frame,
     * materialized ONCE (honestCheckpoint) — [[dedupSemantic]]'s
     * build step, and the index [[semanticProbe]] serves
-    * ingestion-time queries from.
+    * ingestion-time queries from. Centroids travel as data through
+    * the fused [[graft.plans.ArgminL2I64]] kernel, so plan size is
+    * O(1) in k and k can track the corpus on one level.
     */
   final case class SemanticIndex private[Similarity] (
       centroids: Seq[Array[Long]], assigned: DataFrame)
 
   def semanticIndexBuild(embeddings: DataFrame, k: Int = 8,
                          iters: Int = 3): SemanticIndex = {
-    val (centroids, a) = trainAssignAuto(embeddings, k, iters, wide = Some(false))
+    val (centroids, a) = trainAssign(embeddings, k, iters)
     val assigned = a
       .select(col("vec_id"), col("embedding"), col("cluster"))
       .honestCheckpoint()
     SemanticIndex(centroids, assigned)
   }
 
-  /** [[semanticIndexBuild]] with CENTROIDS AS DATA — the flat
-    * trainer freed of its plan-literal kernel budget: [[train]] /
-    * [[assignCells]] encode each centroid as a codegen kernel
-    * literal, which caps k at ~64 (k = 400 measured as JIT
-    * code-cache exhaustion — the reason the hier index exists for
-    * the second decade). Here centroids live in a broadcast
-    * (cluster, cu) frame — the grouped fine trainer's algebra with
-    * one global cell — so plan size is O(1) in k and k can track the
-    * corpus through the THIRD decade directly (k in the hundreds on
-    * one level, the residual the round-13 wide-k₁ probe documented
-    * at the coarse level). BIT-IDENTICAL to [[semanticIndexBuild]]
-    * by construction (same md5-seeded init, same (du, cluster)
-    * lexicographic argmin = assignCells' lowest-cluster tiebreak,
-    * same sign-split half-up integer means, empty clusters keep
-    * their previous centroid) — spec-pinned at overlapping k, and
-    * `dedup_semantic_wide` shares dedup_semantic's FULL oracle.
-    * Trade: the data join fans n×k rows through one shuffle-free
-    * broadcast per iteration vs k codegen kernels per row — at small
-    * k the kernels win (gate p50 texture), at k past the budget only
-    * this path runs.
+  /** Centroid count past which a corpus-sized frame is spread over
+    * the session's parallelism before its per-row k-fold argmin: a
+    * compact parquet table (one 128 MB split holds ~500k vectors)
+    * would otherwise put the whole k-times-amplified scan on ONE core
+    * (measured as a single-threaded crawl at 100×/k=400). At small k
+    * the repartition exchange costs more than it saves (the IVF-PQ
+    * build at k = 8 ran faster unspread), so k alone decides.
     */
-  def semanticIndexBuildWide(embeddings: DataFrame, k: Int = 8,
-                             iters: Int = 3): SemanticIndex = {
-    // train + final assign share ONE spread, quantized checkpoint
-    // (see corpusFrame) — the assign is a map pass over it.
-    val (centroids, a) = trainAssignAuto(embeddings, k, iters, wide = Some(true))
-    val assigned = a
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-      .honestCheckpoint()
-    SemanticIndex(centroids, assigned)
-  }
+  private val spreadAboveK = 64
 
-  /** Repartition a corpus frame to the session's parallelism before
-    * a per-row k-fold fan-out stage. Narrow inputs (a single compact
-    * parquet split) otherwise serialize the amplified work on one
-    * core; probe BATCHES skip this (they are broadcast-bound, not
-    * fan-bound).
+  /** `df` repartitioned to the session's parallelism when `k` is past
+    * [[spreadAboveK]], else `df` unchanged. Probe BATCHES skip this
+    * (they are broadcast-bound, not fan-bound).
     */
-  private def spreadForFan(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  private def spreadForK(df: DataFrame, k: Int): DataFrame =
+    if (k > spreadAboveK) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 
-  /** SemDeDup pairs over the wide (centroids-as-data) build —
-    * bit-identical to [[dedupSemantic]] at equal k (shared oracle);
-    * the registration that keeps the unbounded-k path gate-checked.
-    */
-  def dedupSemanticWide(embeddings: DataFrame, k: Int = 8, iters: Int = 3,
-                        threshold: Double = 0.45, blocks: Int = 0): DataFrame =
-    withinClusterPairs(semanticIndexBuildWide(embeddings, k, iters).assigned,
-      threshold, blocks)
-
-  /** [[semanticProbe]] through the data-join assignment — the serve
-    * mate for wide-k indexes where k plan-literal kernels per batch
-    * row would rebuild the cap the wide trainer removed.
-    */
-  def semanticProbeWide(index: SemanticIndex, batch: DataFrame,
-                        threshold: Double = 0.45,
-                        excludeSelf: Boolean = false): DataFrame = {
-    val nb = assignCellsData(batch.select(col("vec_id"), col("embedding")), index.centroids)
-      .select(col("vec_id").as("new_id"), col("embedding").as("eb"), col("cluster"))
-    index.assigned
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ea"), col("cluster"))
-      .join(broadcast(nb), Seq("cluster"))
-      .filter(if (excludeSelf) col("corpus_id") =!= col("new_id") else lit(true))
-      .filter(cosineFast(col("ea"), col("eb")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("ea"), col("eb")), decNorm2(col("ea")), decNorm2(col("eb"))))
-      .filter(col("cosine") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("cluster"), col("cosine"))
-      .orderBy(col("new_id"), col("corpus_id"))
-  }
-
-  /** One element of the centroid-ARRAY model literal: the whole model
-    * travels as ONE `array<struct<cluster, cu>>` typedlit — plan DATA
-    * in the references array (the [[pqCbData]] class: shipped once
-    * per stage inside the task binary's own broadcast, deserialized
-    * once per executor), so a data-path argmin is a per-row
-    * `transform` + `array_min` over it with NO crossJoin and NO
-    * BroadcastExchange sub-job. The previous one-row broadcast frame
-    * cost a separate ~50-100 ms broadcast job per Lloyd iteration —
-    * pure driver latency for a kilobyte-sized model.
-    */
-  private final case class CentEntry(cluster: Long, cu: Seq[Long])
-
-  /** The centroid model as a typedlit array column (see [[CentEntry]]). */
-  private def centsLit(centroids: Seq[Array[Long]]): Column =
-    typedlit(centroids.zipWithIndex.map { case (cu, i) => CentEntry(i.toLong, cu.toSeq) })
-
-  /** Per-coarse-cell slice of the hier fine-centroid model — the
-    * broadcast side of the fine argmin: k₁ rows, each carrying that
-    * cell's ≤ k₂ centroids as `array<struct<fine, cu>>`.
-    */
-  private final case class FineEntry(fine: Long, cu: Seq[Long])
-
-  /** Lexicographic argmin over a centroid array column: one
-    * [[graft.plans.IntegerUnits.l2Units]] kernel per element through
-    * a `transform`, then `array_min` — `min(struct(du, id))` with the
-    * lowest-id tiebreak, computed PER ROW in one map pass. This is
-    * the shuffle-free replacement for the previous
-    * crossJoin-then-`groupBy(vec_id).agg(min(struct))` shape: `min`
-    * over a struct cannot use HashAggregate, so that shape planned a
-    * full SortAggregate chain (sort n×k fanned rows carrying the
-    * embedding payload, exchange by vec_id, sort again) — measured
-    * 10-17 s of task time per Lloyd iteration on a 2000-row corpus.
-    * Bit-identical (same struct ordering, nulls impossible).
-    */
-  private def argminOver(cents: Column, u: Column, idField: String): Column =
-    array_min(transform(cents, c =>
-      struct(graft.plans.IntegerUnits.l2Units(u, c.getField("cu")).as("du"),
-        c.getField(idField).as(idField))))
-
-  /** Nearest-centroid assignment against CENTROIDS AS DATA: the model
-    * rides as one typedlit array ([[centsLit]]) and each input row
-    * computes its own argmin ([[argminOver]]) — no row fan, no
-    * aggregation, no shuffle, no broadcast sub-job; one map-stage
-    * projection. Same output shape and bit-identical results as
-    * [[assignCells]] (lowest-cluster tiebreak; spec-pinned).
-    */
-  private def assignCellsData(df: DataFrame, centroids: Seq[Array[Long]]): DataFrame =
-    assignCellsDataPre(
-      df.select(col("vec_id"), col("embedding"), units(col("embedding")).as("u")),
-      centroids)
-
-  /** [[assignCellsData]] over a frame that ALREADY carries the
-    * quantized `u` column (a [[corpusFrame]] checkpoint) — skips the
-    * re-quantize so shared-frame callers don't pay it per pass.
-    */
-  private def assignCellsDataPre(withU: DataFrame, centroids: Seq[Array[Long]]): DataFrame = {
-    if (centroids.isEmpty)
-      return withU
-        .withColumn("cluster", lit(null).cast("long"))
-        .withColumn("du", lit(null).cast("long"))
-        .limit(0)
-    // fused kernel, not the transform+array_min HOF: the HOF's
-    // per-centroid lambda dispatch + struct boxing is ~230 ns/centroid
-    // and linear in k (ScaleProbe argmin_wide_k400/k2048) — at
-    // production nlist it IS the assignment cost. centsLit ids are
-    // zipWithIndex, so index order == cluster id (the kernel contract).
-    withU
-      .select(col("vec_id"), col("embedding"), col("u"),
-        graft.plans.ArgminL2.argminUnits(col("u"), centroids).as("p"))
-      .select(col("vec_id"), col("embedding"), col("u"),
-        col("p").getItem(1).as("cluster"), col("p").getItem(0).as("du"))
-  }
+  /** (vec_id, embedding, u): a vector frame with its quantized units. */
+  private def withUnits(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"), units(col("embedding")).as("u"))
 
   /** The TRAINING CORPUS as ONE materialized frame:
-    * (vec_id, embedding, u), quantized once, spread once (the fan
-    * paths), then localCheckpointed — so the Lloyd init, every
-    * iteration's mean pass, and the final corpus assignment read the
-    * materialized blocks instead of each re-running the source scan
-    * (plus, on the spread path, the repartition exchange). Before
-    * this, `trainData`'s lazily-recomputed `spreadForFan(...)` cost
-    * iters× full corpus scans + spread exchanges per train — the
-    * guide §2.4/§5 recompute-vs-materialize trade at its most
-    * lopsided (the frame is reused iters+2 times per build). Eager
-    * checkpoint cost: one corpus pass + (vec_id, embedding, u)
-    * blocks; blocks are ContextCleaner-freed when the frame goes out
-    * of scope.
+    * (vec_id, embedding, u), quantized once, spread once when k calls
+    * for it ([[spreadForK]]), then localCheckpointed — so the Lloyd
+    * init, every iteration's mean pass, and the final corpus
+    * assignment read the materialized blocks instead of each
+    * re-running the source scan (and the spread exchange): the guide
+    * §2.4/§5 recompute-vs-materialize trade at its most lopsided (the
+    * frame is reused iters+2 times per build). Eager checkpoint cost:
+    * one corpus pass + (vec_id, embedding, u) blocks; blocks are
+    * ContextCleaner-freed when the frame goes out of scope.
     */
-  private def corpusFrame(embeddings: DataFrame, spread: Boolean): DataFrame = {
-    val base = embeddings.select(col("vec_id"), col("embedding"))
-    (if (spread) spreadForFan(base) else base)
-      .select(col("vec_id"), col("embedding"), units(col("embedding")).as("u"))
+  private def corpusFrame(embeddings: DataFrame, k: Int): DataFrame =
+    withUnits(spreadForK(embeddings.select(col("vec_id"), col("embedding")), k))
       .honestCheckpoint()
-  }
 
   /** Train + corpus assignment sharing ONE [[corpusFrame]]
-    * checkpoint: the budget-aware pairing of [[trainAuto]] +
-    * [[assignCellsAuto]](spread = true) that every IVF-family build
-    * previously spelled as two independent plans — each re-scanning
-    * (and re-spreading) the source. Returns (centroids, assigned)
-    * where `assigned` is [[assignCells]]' output shape
-    * (vec_id, embedding, u, cluster, du), a pure per-row map over the
-    * shared checkpoint. Bit-identical to the unshared pairing
-    * (spec-pinned by the existing wide/literal parity harness).
+    * checkpoint: returns (centroids, assigned) where `assigned` is
+    * [[nearestCells]]' output (vec_id, embedding, u, cluster, du), a
+    * pure per-row map over the shared checkpoint.
     */
-  private[graft] def trainAssignAuto(embeddings: DataFrame, k: Int, iters: Int,
-                                     wide: Option[Boolean] = None): (Seq[Array[Long]], DataFrame) = {
-    val w = wide.getOrElse(k > assignKernelBudget)
-    val vecs = corpusFrame(embeddings, spread = w)
-    val cents = if (w) trainDataOn(vecs, k, iters) else trainOn(vecs, k, iters)
-    val assigned = if (w) assignCellsDataPre(vecs, cents) else assignCellsPre(vecs, cents)
-    (cents, assigned)
+  private def trainAssign(embeddings: DataFrame, k: Int,
+                          iters: Int): (Seq[Array[Long]], DataFrame) = {
+    val vecs = corpusFrame(embeddings, k)
+    val cents = lloyd(vecs, "u", k, iters)
+    (cents, nearestCells(vecs, "u", cents))
   }
 
-  /** Lloyd's loop over [[assignCellsData]] — [[train]]'s contract
-    * (md5-seeded init, argmin with lowest-cluster tiebreak, sign-
-    * split half-up integer means, empty clusters keep their previous
-    * centroid; returns k×dim model parameters) with the broadcast
-    * centroid frame in place of plan literals, so k is bounded by
-    * broadcast size (k×dim longs — millions before it matters), not
-    * by the JIT code cache. Bit-identical to [[train]] at any k both
-    * can run (spec-pinned).
+  /** Lloyd's training loop over a materialized (vec_id, `units`)
+    * frame — the one k-means trainer: raw-vector units `u` for the
+    * IVF/SemDeDup quantizers, normalized units `un` for the residual
+    * IVF-PQ cells. Init is the first k vectors in md5(vec_id) order
+    * (seeded, reproducible anywhere); each iteration is one
+    * [[nearestCells]] pass (lowest-cluster tiebreak) feeding
+    * [[centroidMeans]]; an empty cluster keeps its previous centroid.
+    * Returns the trained centroids in 1e-8 units (k×dim model
+    * parameters — the only thing the driver ever collects), none for
+    * an empty corpus.
     */
-  private def trainData(embeddings: DataFrame, k: Int, iters: Int): Seq[Array[Long]] =
-    // spread BEFORE the per-row k-fold argmin: it runs inside the
-    // scan task, so a compact parquet table (one 128 MB split holds
-    // ~500k vectors) would put the whole k-times-amplified workload
-    // on ONE core — measured as a single-threaded crawl at
-    // 100×/k=400. The spread (and the quantize) now happen ONCE per
-    // train ([[corpusFrame]]); iterations read the checkpoint.
-    trainDataOn(corpusFrame(embeddings, spread = true), k, iters)
-
-  /** [[trainData]]'s Lloyd loop over a pre-materialized
-    * [[corpusFrame]] — every iteration reads the checkpointed
-    * (vec_id, u) blocks instead of re-running the scan + spread
-    * exchange (previously iters× corpus scans + exchanges per train).
-    */
-  private def trainDataOn(vecs: DataFrame, k: Int, iters: Int): Seq[Array[Long]] = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    var cents: Seq[(Long, Seq[Long])] = vecs
+  private def lloyd(vecs: DataFrame, units: String, k: Int, iters: Int): Seq[Array[Long]] = {
+    var centroids: Seq[Array[Long]] = vecs
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
-      .select(col("u"))
-      .collect().zipWithIndex.map { case (r, i) => (i.toLong, r.getSeq[Long](0)) }.toSeq
-    for (_ <- 1 to iters) {
-      // ids are 0..k-1 from the init's zipWithIndex (means only ever
-      // update existing keys), so the id-sorted model is index-ordered
-      // — the fused kernel's contract (see assignCellsDataPre).
-      val model = cents.sortBy(_._1).map(_._2.toArray)
-      val means = vecs
-        .select(graft.plans.ArgminL2.argminUnits(col("u"), model)
-          .getItem(1).as("cluster"), col("u"))
-        .select(col("cluster"), posexplode(col("u")).as(Seq("dim", "uu")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(sum(col("uu")).as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("dim"),
-          when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
-            .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"))
-        .repartition(modelAggPartitions, col("cluster"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("ms"))
-        .select(col("cluster"), col("ms.m").as("centroid"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      cents = cents.map { case (c, prev) => (c, means.getOrElse(c, prev)) }
+      .select(col(units))
+      .collect().map(_.getSeq[Long](0).toArray).toSeq
+    if (centroids.nonEmpty) for (_ <- 1 to iters) {
+      val means = centroidMeans(nearestCells(vecs, units, centroids), Seq("cluster"), units)
+        .map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
+      centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
     }
-    cents.sortBy(_._1).map(_._2.toArray)
+    centroids
+  }
+
+  /** One Lloyd mean step: the integer half-up mean of `units` per
+    * `keys` (sign split, so DIV only ever sees nonnegative operands),
+    * collected as (keys..., centroid) rows. The frame is model-sized
+    * (keys × dim rows) after the first aggregate, so the final fold is
+    * pinned to [[modelAggPartitions]].
+    */
+  private def centroidMeans(assigned: DataFrame, keys: Seq[String],
+                            units: String): Array[Row] = {
+    val ks = keys.map(col)
+    assigned.select(ks :+ posexplode(col(units)).as(Seq("dim", "uu")): _*)
+      .groupBy(ks :+ col("dim"): _*)
+      .agg(sum(col("uu")).as("s"), count(lit(1)).as("n"))
+      .select(ks :+ col("dim") :+ when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
+        .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"): _*)
+      .repartition(modelAggPartitions, ks: _*)
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("ms"))
+      .select(ks :+ col("ms.m"): _*)
+      .collect()
+  }
+
+  /** The one nearest-centroid assign/probe: `df`'s columns plus
+    * `cluster` and `du` (squared distance in 1e-16 units) for each of
+    * the row's `nprobe` nearest centroids by (du, cluster) — one row
+    * per probed cell, so nprobe = 1 is the plain argmin with the
+    * lowest-cluster tiebreak. One fused [[graft.plans.ArgminL2I64]]
+    * call per row over the `units` column: no shuffle, no row fan,
+    * plan size O(1) in k. nprobe is the IVF recall knob —
+    * imbalanced cells put true neighbors just across a Voronoi
+    * boundary, and probing the next-nearest cells buys recall back at
+    * candidate cost nprobe/nlist of the corpus. No centroids (an empty
+    * training corpus) gives an empty frame of the same shape.
+    */
+  private def nearestCells(df: DataFrame, units: String, centroids: Seq[Array[Long]],
+                           nprobe: Int = 1): DataFrame = {
+    val keep = df.columns.toSeq.map(col)
+    if (centroids.isEmpty)
+      return df.select(keep :+ lit(null).cast("long").as("cluster") :+
+        lit(null).cast("long").as("du"): _*).limit(0)
+    require(nprobe >= 1 && nprobe <= centroids.size,
+      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
+    df.select(keep :+ explode(graft.plans.ArgminL2.argminUnits(col(units), centroids, nprobe))
+        .as("p"): _*)
+      .select(keep :+ col("p.cluster").as("cluster") :+ col("p.du").as("du"): _*)
   }
 
   /** Persist a [[SemanticIndex]] — the same frozen-index contract as
@@ -550,13 +433,10 @@ object Similarity {
     // a MISSING committed id, not a data-less one.
     if (cnt > 0) {
       val index = semanticIndexLoad(spark, dir, Some(meta))
-      // budget-aware: a delta appended into a WIDE (k > kernel
-      // budget) index must assign through the centroid frame, not k
-      // plan-literal kernels — otherwise append/ingest re-enter the
-      // JIT cap the wide trainer exists to avoid. spread=true: bulk
-      // appends can be corpus-sized single-split frames.
-      assignCellsAuto(batch.select(col("vec_id"), col("embedding")), index.centroids,
-          spread = true)
+      // bulk appends can be corpus-sized single-split frames: spread
+      // them like a training corpus of the same k
+      nearestCells(withUnits(spreadForK(batch.select(col("vec_id"), col("embedding")),
+          index.centroids.size)), "u", index.centroids)
         .select(col("vec_id"), col("embedding"), col("cluster"))
         .write.mode("overwrite").parquet(s"$dir/delta_$batchId.parquet")
     }
@@ -675,7 +555,7 @@ object Similarity {
   def semanticProbe(index: SemanticIndex, batch: DataFrame,
                     threshold: Double = 0.45,
                     excludeSelf: Boolean = false): DataFrame = {
-    val nb = assignCells(batch.select(col("vec_id"), col("embedding")), index.centroids)
+    val nb = nearestCells(withUnits(batch), "u", index.centroids)
       .select(col("vec_id").as("new_id"), col("embedding").as("eb"), col("cluster"))
     index.assigned
       .select(col("vec_id").as("corpus_id"), col("embedding").as("ea"), col("cluster"))
@@ -693,14 +573,11 @@ object Similarity {
     * path. The flat operator's contract grows k with the corpus so a
     * cluster's pair block stays bounded, but flat argmin assignment
     * is then Θ(n·k·d) = Θ(n²·d/200k) — quadratic again, one level
-    * up — and its plan-literal centroid encoding caps k at ~tens of
-    * codegen kernels per row anyway. The production recipe (what
-    * SemDeDup-at-scale actually runs: coarse-quantized assignment)
-    * factors k = k₁·k₂: ONE global Lloyd over k₁ coarse cells, then
-    * an independent k₂-means INSIDE each coarse cell, so assignment
-    * work is O(n·(k₁+k₂)·d) — with k₁ = k₂ = √k that's Θ(n^1.5·d)
-    * total for k ∝ n, and each level stays within the plan-literal
-    * kernel budget (√400 = 20 kernels where flat would need 400).
+    * up. The production recipe (what SemDeDup-at-scale actually runs:
+    * coarse-quantized assignment) factors k = k₁·k₂: ONE global Lloyd
+    * over k₁ coarse cells, then an independent k₂-means INSIDE each
+    * coarse cell, so assignment work is O(n·(k₁+k₂)·d) — with
+    * k₁ = k₂ = √k that's Θ(n^1.5·d) total for k ∝ n.
     *
     * Same guarantees as the flat operator, by the same construction:
     * every returned pair is exact-verified (precision 1.0, result ⊂
@@ -711,87 +588,41 @@ object Similarity {
     * true pair can straddle a coarse OR a fine boundary); the spec
     * pins the measured floor next to the flat operator's.
     *
-    * Physical shape: the coarse assignment materializes once
-    * (honestCheckpoint) and each per-cell fine trainer filters that
-    * frame — k₁ bounded driver-loop train calls (the MLlib pattern:
-    * model parameters live on the driver), then one unioned
-    * assignment frame feeds the same largest-cluster-sized
-    * block-pair triangle as the flat operator. Empty coarse cells
-    * (Lloyd can starve one) are skipped — they hold no vectors, so
-    * they contribute no pairs.
+    * Physical shape: [[semanticIndexBuildHier]]'s grouped build, whose
+    * fine level trains every per-cell k₂-means concurrently in one
+    * dataframe program per Lloyd iteration, then the same
+    * largest-cluster-sized block-pair triangle as the flat operator.
     */
   def dedupSemanticHier(embeddings: DataFrame, k1: Int = 4, k2: Int = 4,
                         iters: Int = 3, threshold: Double = 0.45,
-                        blocks: Int = 0): DataFrame = {
-    // coarse train + assignment share one corpus checkpoint; the
-    // coarse frame KEEPS `u` so the per-cell fine trains reuse the
-    // quantization instead of re-deriving it per Lloyd pass.
-    val (coarseCentroids, coarseA) = trainAssignAuto(embeddings, k1, iters, wide = Some(false))
-    val coarse = coarseA
-      .select(col("vec_id"), col("embedding"), col("u"), col("cluster").as("coarse"))
-      .honestCheckpoint()
-    val occupied = coarse.groupBy(col("coarse")).count()
-      .collect().map(_.getLong(0)).sorted
-    val fine = occupied.toSeq.map { c =>
-      // materialize the CELL once: the per-cell Lloyd loop otherwise
-      // re-filters the full coarse frame every iteration — k₁·(iters+1)
-      // full-frame passes across the loop vs k₁ filter passes now.
-      val cell = coarse.filter(col("coarse") === c)
-        .select(col("vec_id"), col("embedding"), col("u"))
-        .honestCheckpoint()
-      val fc = trainOn(cell, k2, iters)
-      assignCellsPre(cell, fc)
-        .select(col("vec_id"), col("embedding"),
-          (lit(c * k2) + col("cluster")).as("cluster"))
-    }
-    // reduceOption: an EMPTY corpus occupies no coarse cells — degrade
-    // to the empty pair set like embeddingNearDup (advisor round 12).
-    val assigned = fine.reduceOption(_ unionAll _)
-      .getOrElse(coarse.select(col("vec_id"), col("embedding"), col("coarse").as("cluster")).limit(0))
-      .honestCheckpoint()
-    withinClusterPairs(assigned, threshold, blocks)
-  }
+                        blocks: Int = 0): DataFrame =
+    dedupSemanticHierGrouped(embeddings, k1, k2, iters, threshold, blocks)
 
-  /** [[dedupSemanticHier]] with the fine level trained as ONE
-    * dataframe program per Lloyd iteration instead of a k₁-iteration
-    * driver loop of sequential `train()` calls — the documented scale
-    * fix for k₁ in the hundreds, where the loop serializes k₁ × iters
-    * job-group latencies. Every per-cell k₂-means runs CONCURRENTLY
-    * inside a shared plan: fine centroids are DATA keyed by coarse
-    * cell (a broadcast (coarse, fine, cu) frame — model parameters,
-    * k₁·k₂·dim longs, collected once per iteration like the looped
-    * trainer), assignment broadcast-joins each vector to its OWN
-    * cell's centroid ARRAY and computes a per-row lexicographic
-    * argmin ([[argminOver]] = [[assignCells]]' semantics with
-    * lowest-index tiebreak), and the mean step is the same sign-split
-    * integer half-up grouped by (coarse, fine, dim). Job count per
-    * fine iteration: 1, independent of k₁.
-    *
-    * BIT-IDENTICAL to the looped operator by construction — same
-    * md5-seeded per-cell init (row_number over the cell in
-    * (md5(vec_id), vec_id) order vs the loop's orderBy+limit), same
-    * exact-integer-units arithmetic, same empty-cluster-keeps-
-    * previous rule (left join + coalesce vs getOrElse) — so it shares
-    * dedup_semantic_hier's FULL DuckDB oracle, and the spec pins
-    * grouped ≡ looped on the gate corpus.
+  /** [[dedupSemanticHier]] spelled as its build: `withinClusterPairs`
+    * over [[semanticIndexBuildHier]] — the registration that pins the
+    * grouped build against dedup_semantic_hier's FULL DuckDB oracle.
     */
   def dedupSemanticHierGrouped(embeddings: DataFrame, k1: Int = 4, k2: Int = 4,
                                iters: Int = 3, threshold: Double = 0.45,
-                               blocks: Int = 0,
-                               wideCoarse: Option[Boolean] = None): DataFrame =
-    withinClusterPairs(
-      semanticIndexBuildHier(embeddings, k1, k2, iters, wideCoarse).assigned,
+                               blocks: Int = 0): DataFrame =
+    withinClusterPairs(semanticIndexBuildHier(embeddings, k1, k2, iters).assigned,
       threshold, blocks)
 
-  /** The TWO-LEVEL frozen model of the SemDeDup family — what the
-    * flat [[SemanticIndex]] cannot be past k ≈ tens (its centroids
-    * are plan literals): coarse centroids stay literals (k₁ ≲ tens by
-    * construction), fine centroids are DATA keyed by coarse cell
-    * (k₁·k₂·dim longs — model parameters), so total clusters k₁·k₂
-    * can track the corpus while every plan stays bounded. Built by
-    * the grouped trainer ([[dedupSemanticHierGrouped]] is exactly
-    * `withinClusterPairs` over this build — bit-identical to the
-    * looped hier operator, spec-pinned).
+  /** The TWO-LEVEL frozen model of the SemDeDup family: k₁ coarse
+    * centroids plus fine centroids keyed by coarse cell (k₁·k₂·dim
+    * longs — model parameters), so total clusters k₁·k₂ can track the
+    * corpus while every per-row argmin scans only k₁ + k₂ centroids.
+    *
+    * The build trains the fine level as ONE dataframe program per
+    * Lloyd iteration — every per-cell k₂-means runs CONCURRENTLY: the
+    * per-cell kernel ([[graft.plans.ArgminL2.argminUnitsPerCell]])
+    * scans only the row's own coarse cell's centroids, and the mean
+    * step is [[centroidMeans]] keyed by (coarse, fine). Job count per
+    * fine iteration: 1, independent of k₁. Each cell's init is its
+    * first ≤ k₂ vectors in (md5(vec_id), vec_id) order, all cells in
+    * one window pass, and an empty fine cluster keeps its previous
+    * centroid — the flat trainer's rules, cell by cell, which is what
+    * dedup_semantic_hier's oracle replays.
     */
   final case class HierSemanticIndex private[Similarity] (
       coarse: Seq[Array[Long]],
@@ -799,110 +630,74 @@ object Similarity {
       k2: Int, assigned: DataFrame)
 
   def semanticIndexBuildHier(embeddings: DataFrame, k1: Int = 4, k2: Int = 4,
-                             iters: Int = 3,
-                             wideCoarse: Option[Boolean] = None): HierSemanticIndex = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    // COARSE level is budget-aware (round-14 closure of the §6
-    // third-decade residual): within the kernel budget it stays the
-    // k₁ plan-literal chain; past it the coarse trainer/assigner run
-    // centroids-as-data, so k₁ can grow past ~64 like the flat wide
-    // index — the fine level was data-keyed all along. Bit-identical
-    // either way (wideCoarse forces a side; spec-pinned parity).
+                             iters: Int = 3): HierSemanticIndex = {
     // Coarse train + coarse assignment share ONE corpus checkpoint
-    // (trainAssignAuto); the assigned frame materializes again here
+    // (trainAssign); the assigned frame materializes again here
     // because every fine iteration (and the final assignment)
     // re-scans it WITH the coarse label.
-    val (coarseCentroids, coarseA) = trainAssignAuto(embeddings, k1, iters, wideCoarse)
+    val (coarseCentroids, coarseA) = trainAssign(embeddings, k1, iters)
     val vecs = coarseA
       .select(col("vec_id"), col("embedding"), col("u"), col("cluster").as("coarse"))
       .honestCheckpoint()
-    // Per-cell init: first ≤ k₂ vectors of each cell in md5 order —
-    // the loop's train() init, all cells in one window pass.
     val w = Window.partitionBy(col("coarse"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
     var cents: Seq[(Long, Long, Seq[Long])] = vecs
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k2)
       .select(col("coarse"), (col("rn") - 1).cast("long").as("fine"), col("u"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSeq
-    // fine centroids grouped per coarse cell as ONE map literal
-    // (coarse → array<struct<fine, cu>> — model parameters, the
-    // typedlit class of [[centsLit]]), so the fine argmin is a pure
-    // per-row projection ([[argminOver]] over element_at) — no join,
-    // no n×k₂ row fan, no min(struct) SortAggregate chain, no
-    // broadcast sub-job per iteration.
-    def fmap = typedlit(cents.groupBy(_._1).view.mapValues(fs =>
-      fs.sortBy(_._2).map { case (_, f, cu) => FineEntry(f, cu) }).toMap)
-    def assign = vecs
-      .select(col("coarse"), col("vec_id"), col("embedding"), col("u"),
-        argminOver(element_at(fmap, col("coarse")), col("u"), "fine").as("p"))
+    def assign = vecs.withColumn("fine", fineCluster(coarseCentroids.size, cents))
     for (_ <- 1 to iters) {
-      val means = assign
-        .select(col("coarse"), col("p.fine").as("fine"),
-          posexplode(col("u")).as(Seq("dim", "uu")))
-        .groupBy(col("coarse"), col("fine"), col("dim"))
-        .agg(sum(col("uu")).as("s"), count(lit(1)).as("n"))
-        .select(col("coarse"), col("fine"), col("dim"),
-          when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
-            .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"))
-        // k₁·k₂·dim rows from here — model-parameter tail, pinned
-        // (see modelAggPartitions; the p=2048 sweep texture)
-        .repartition(modelAggPartitions, col("coarse"), col("fine"))
-        .groupBy(col("coarse"), col("fine"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("ms"))
-        .select(col("coarse"), col("fine"), col("ms.m").as("cu"))
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getSeq[Long](2))).toMap
+      val means = centroidMeans(assign, Seq("coarse", "fine"), "u")
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getSeq[Long](2))).toMap
       cents = cents.map { case (c, f, prev) => (c, f, means.getOrElse((c, f), prev)) }
     }
     val assigned = assign
       .select(col("vec_id"), col("embedding"),
-        (col("coarse") * k2 + col("p.fine")).as("cluster"))
+        (col("coarse") * k2 + col("fine")).as("cluster"))
       .honestCheckpoint()
     HierSemanticIndex(coarseCentroids, cents, k2, assigned)
   }
 
+  /** Fine cluster of each (coarse, u) row under the per-coarse-cell
+    * model `fine` ((coarse, fine, cu) rows, fine ids 0 until n within
+    * a cell — a centroid's position is its id): one per-cell kernel
+    * call per row. A coarse cell that ended training with no members
+    * has no fine centroids, so a probe vector landing there gets a
+    * null cluster (the inner equi-join on cluster then drops it; a
+    * dead cell has no candidates anyway). No model at all (an empty
+    * corpus) is null for every row — the kernel never sees an empty
+    * model.
+    */
+  private def fineCluster(k1: Int, fine: Seq[(Long, Long, Seq[Long])]): Column =
+    if (fine.isEmpty) lit(null).cast("long")
+    else {
+      val byCell = fine.groupBy(_._1)
+      val cells = (0 until k1).map { c =>
+        val fs = byCell.getOrElse(c.toLong, Nil).sortBy(_._2)
+        require(fs.map(_._2) == fs.indices.map(_.toLong),
+          s"fine centroid ids of coarse cell $c are not 0 until ${fs.size}")
+        fs.map(_._3.toArray)
+      }
+      graft.plans.ArgminL2.argminUnitsPerCell(col("u"), col("coarse"), cells)
+        .getItem(0).getField("cluster")
+    }
+
   /** Ingestion-time probe against a [[HierSemanticIndex]] — the
-    * two-level serve mate of [[semanticProbe]], and the reason the
-    * hier index can serve where the flat one cannot: a batch vector
-    * assigns through k₁ coarse plan-literal kernels and then a
-    * broadcast JOIN against its own cell's ≤ k₂ fine centroids
-    * (the grouped trainer's argmin algebra, applied to the bounded
-    * batch), so probe-side plan size is O(k₁) kernels + one join —
-    * never the O(k₁·k₂) literal chain that exhausted the JIT code
-    * cache at k = 400 (§6). The verify half is identical to the flat
-    * probe: the batch joins only its global cells' members (the
-    * cluster-partitioned on-disk layout prunes the scan), exact
-    * decimal cosine on survivors.
+    * two-level serve mate of [[semanticProbe]]: a batch vector
+    * assigns to its coarse cell ([[nearestCells]]) and then to the
+    * nearest of that cell's ≤ k₂ fine centroids ([[fineCluster]]) —
+    * the build's argmin, applied to the bounded batch. The verify half
+    * is identical to the flat probe: the batch joins only its global
+    * cells' members (the cluster-partitioned on-disk layout prunes the
+    * scan), exact decimal cosine on survivors.
     */
   def semanticProbeHier(index: HierSemanticIndex, batch: DataFrame,
                         threshold: Double = 0.45,
-                        excludeSelf: Boolean = false,
-                        wideCoarse: Option[Boolean] = None): DataFrame = {
-    // per-cell fine centroid map literal, the build's argmin shape
-    // (see semanticIndexBuildHier / argminOver)
-    val fmap = typedlit(index.fine.groupBy(_._1).view.mapValues(fs =>
-      fs.sortBy(_._2).map { case (_, f, cu) => FineEntry(f, cu) }).toMap)
-    // coarse assign is budget-aware like the build: k₁ past the
-    // kernel budget probes through the centroid frame (batches are
-    // broadcast-bound — no spread)
-    val nb = assignCellsAuto(batch.select(col("vec_id"), col("embedding")), index.coarse,
-        wideCoarse)
+                        excludeSelf: Boolean = false): DataFrame = {
+    val nb = nearestCells(withUnits(batch), "u", index.coarse)
       .select(col("vec_id"), col("embedding"), col("u"), col("cluster").as("coarse"))
-      // try_element_at, not element_at: a batch vector can assign to a
-      // DEAD coarse cell (a centroid that ended training with zero
-      // corpus members, so index.fine carries no entries for it).
-      // Under Spark 4's default ANSI mode element_at on the map
-      // literal would throw MAP_KEY_DOES_NOT_EXIST; try_element_at
-      // yields null → null cluster → the inner equi-join below drops
-      // the row — exactly the old broadcast-join drop semantics (a
-      // dead cell has no candidates anyway). Build-side argmins keep
-      // plain element_at: every coarse value there comes from the
-      // checkpointed corpus assignment, whose cells all seeded ≥ 1
-      // fine centroid.
       .select(col("vec_id").as("new_id"), col("embedding").as("eb"),
-        (col("coarse") * index.k2 +
-          argminOver(try_element_at(fmap, col("coarse")), col("u"), "fine")
-            .getField("fine")).as("cluster"))
+        (col("coarse") * index.k2 + fineCluster(index.coarse.size, index.fine)).as("cluster"))
     index.assigned
       .select(col("vec_id").as("corpus_id"), col("embedding").as("ea"), col("cluster"))
       .join(broadcast(nb), Seq("cluster"))
@@ -1038,10 +833,10 @@ object Similarity {
     * linear in the corpus by definition (7.5× at 100×, §6), so at
     * scale the radius query should pay only its probed cells. The
     * trained Lloyd coarse quantizer assigns the corpus once; each
-    * query probes its `nprobe` nearest cells ([[assignTopCells]] —
-    * shuffle-free per-row sort+slice) and the exact-threshold verify
-    * runs over those cells' members only (candidates ≈ nprobe/nlist
-    * of the corpus). A corpus vector lives in exactly ONE cell, so no
+    * query probes its `nprobe` nearest cells ([[nearestCells]] —
+    * one shuffle-free top-nprobe kernel call per row) and the
+    * exact-threshold verify runs over those cells' members only
+    * (candidates ≈ nprobe/nlist of the corpus). A corpus vector lives in exactly ONE cell, so no
     * result can duplicate across probed cells. RECALL trades at the
     * cell boundary like every IVF layout — nprobe buys it back, and
     * nprobe = nlist recovers [[annRange]] bit-for-bit (spec-pinned).
@@ -1053,11 +848,10 @@ object Similarity {
                   nprobe: Int = 2,
                   queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     // train + corpus assignment share one materialized corpus frame
-    val (centroids, corpusA) = trainAssignAuto(embeddings, nlist, ivfIters)
+    val (centroids, corpusA) = trainAssign(embeddings, nlist, ivfIters)
     val corpus = corpusA
       .select(col("vec_id"), col("embedding"), col("cluster"))
-    val qs = assignTopCellsAuto(
-        queries.getOrElse(defaultQueries(embeddings)).select(col("vec_id"), col("embedding")),
+    val qs = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
         centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
     corpus.join(broadcast(qs), Seq("cluster"))
@@ -1081,7 +875,7 @@ object Similarity {
     * probed cells' partitions) — reused verbatim, which buys the
     * whole lifecycle for free: build-if-absent with the sourceStamp
     * fingerprint, crash-safe staged publish, delta append/ingest/
-    * compact. Serve = [[assignTopCells]] over the LOADED centroids +
+    * compact. Serve = [[nearestCells]] over the LOADED centroids +
     * the same exact-threshold verify, so the result is bit-identical
     * to [[annRangeIvf]] at equal params (integer units survive the
     * parquet round trip) and it shares ann_range_ivf's FULL oracle.
@@ -1095,14 +889,10 @@ object Similarity {
     val params = s"rangeivf;nlist=$nlist;ivfIt=$ivfIters;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
     val meta = buildIfAbsent(spark, indexDir, params, n, semanticIndexVersion) { staging =>
-      semanticIndexSave(
-        if (nlist > assignKernelBudget) semanticIndexBuildWide(embeddings, nlist, ivfIters)
-        else semanticIndexBuild(embeddings, nlist, ivfIters),
-        staging, params, n)
+      semanticIndexSave(semanticIndexBuild(embeddings, nlist, ivfIters), staging, params, n)
     }
     val index = semanticIndexLoad(spark, indexDir, Some(meta))
-    val qs = assignTopCellsAuto(
-        queries.getOrElse(defaultQueries(embeddings)).select(col("vec_id"), col("embedding")),
+    val qs = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
         index.centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
     index.assigned.join(broadcast(qs), Seq("cluster"))
@@ -1156,12 +946,12 @@ object Similarity {
     * cluster instead of a given one).
     *
     * Distributed shape: centroids are model parameters (k×dim
-    * integers — kilobytes), so they live in plan literals broadcast
-    * with the closure; each iteration is ONE scan computing the
-    * argmin-distance assignment (k fold expressions, no join, no
-    * shuffle) plus one partial-aggregated per-cluster mean (shuffle
-    * carries k×dim rows). Init is the first k vectors in
-    * md5(vec_id) order — seeded, reproducible anywhere.
+    * integers — kilobytes) riding the plan as data; each iteration
+    * is ONE scan computing the argmin-distance assignment (one fused
+    * kernel call per row, no join, no shuffle) plus one
+    * partial-aggregated per-cluster mean (shuffle carries k×dim
+    * rows). Init is the first k vectors in md5(vec_id) order —
+    * seeded, reproducible anywhere ([[lloyd]]).
     *
     * ALL arithmetic is exact integer fixed-point (see [[units]]):
     * components quantize to 1e-8 units, squared distances and
@@ -1172,7 +962,7 @@ object Similarity {
     * CTE chain, the fin_ridge technique).
     */
   def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 5): DataFrame =
-    trainAssignAuto(embeddings, k, iters, wide = Some(false))._2
+    trainAssign(embeddings, k, iters)._2
       .select(col("vec_id"), col("cluster"),
         (expr("(2 * du + 10000000000) DIV 20000000000").cast("double") / lit(1e6)
           + lit(0.0)).as("dist"))
@@ -1196,110 +986,6 @@ object Similarity {
   private def units(e: Column): Column =
     graft.plans.IntegerUnits.quantizeUnits(e)
 
-  /** Nearest-centroid assignment of any (vec_id, embedding) frame —
-    * one scan: quantize once per row, then `centroids.size` codegen
-    * integer-L2 kernels, argmin with lowest-cluster tiebreak (same
-    * chain shape as langId). `du` is the squared distance in 1e-16
-    * units; `u` (the quantized vector) rides along for the trainer's
-    * mean step.
-    */
-  private def assignCells(df: DataFrame, centroids: Seq[Array[Long]]): DataFrame =
-    assignCellsPre(
-      df.select(col("vec_id"), col("embedding"), units(col("embedding")).as("u")),
-      centroids)
-
-  /** [[assignCells]] over a frame that ALREADY carries the quantized
-    * `u` column (a [[corpusFrame]] checkpoint) — skips the
-    * re-quantize so shared-frame callers don't pay it per pass.
-    */
-  private def assignCellsPre(withU: DataFrame, centroids: Seq[Array[Long]]): DataFrame = {
-    import graft.plans.IntegerUnits.l2Units
-    if (centroids.isEmpty)
-      // no centroids ⇒ the training corpus was empty; degrade to an
-      // empty assignment of the right shape instead of least() of
-      // zero columns (advisor round 12: empty-input SemDeDup family).
-      return withU
-        .withColumn("cluster", lit(null).cast("long"))
-        .withColumn("du", lit(null).cast("long"))
-        .limit(0)
-    val ds = centroids.indices.map(i => l2Units(col("u"), lit(centroids(i))).as(s"d$i"))
-    val scored = withU.select(col("vec_id") +: col("embedding") +: col("u") +: ds: _*)
-    val cluster = centroids.indices.init.foldRight(lit(centroids.size - 1)) { (i, rest) =>
-      when(col(s"d$i") <= (i + 1 until centroids.size).map(j => col(s"d$j")).reduce(least(_, _)), i)
-        .otherwise(rest)
-    }
-    scored.withColumn("cluster", cluster.cast("long"))
-      .withColumn("du", least(centroids.indices.map(i => col(s"d$i")): _*))
-      .select(col("vec_id"), col("embedding"), col("u"), col("cluster"), col("du"))
-  }
-
-  /** Top-`nprobe` nearest-centroid assignments — one row per probed
-    * cell, (du, cluster) ascending, so nprobe=1 reduces exactly to
-    * [[assignCells]]' argmin (same lowest-cluster tiebreak). This is
-    * the IVF recall knob: imbalanced cells put true neighbors just
-    * across a Voronoi boundary, and probing the next-nearest cells
-    * buys recall back at candidate cost nprobe/nlist of the corpus.
-    * Shuffle-free: the per-row (du, cluster) struct array sorts
-    * lexicographically (du first) and slices — no window needed, so
-    * probing a billion queries costs one map pass.
-    */
-  private def assignTopCells(df: DataFrame, centroids: Seq[Array[Long]], nprobe: Int): DataFrame = {
-    import graft.plans.IntegerUnits.l2Units
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
-    val withU = df.select(col("vec_id"), col("embedding"), units(col("embedding")).as("u"))
-    val ds = centroids.indices.map(i => l2Units(col("u"), lit(centroids(i))).as(s"d$i"))
-    val pairs = array(centroids.indices.map(i =>
-      struct(col(s"d$i").as("du"), lit(i.toLong).as("cluster"))): _*)
-    withU.select(col("vec_id") +: col("embedding") +: ds: _*)
-      .select(col("vec_id"), col("embedding"),
-        explode(slice(array_sort(pairs), 1, nprobe)).as("p"))
-      .select(col("vec_id"), col("embedding"),
-        col("p.cluster").as("cluster"), col("p.du").as("du"))
-  }
-
-  /** Lloyd's training loop — returns the trained centroids in 1e-8
-    * units (k×dim model parameters; the only thing the driver ever
-    * collects). Means are integer half-up (sign split so DIV only
-    * ever sees nonnegative operands); an empty cluster keeps its
-    * previous centroid.
-    */
-  private def train(embeddings: DataFrame, k: Int, iters: Int): Seq[Array[Long]] =
-    trainOn(corpusFrame(embeddings, spread = false), k, iters)
-
-  /** [[train]]'s Lloyd loop over a pre-materialized [[corpusFrame]] —
-    * every iteration reads the checkpointed (vec_id, u) blocks
-    * instead of re-running the source scan (previously iters+1
-    * corpus scans per train: init + one per iteration).
-    */
-  private def trainOn(vecs: DataFrame, k: Int, iters: Int): Seq[Array[Long]] = {
-    var centroids: Seq[Array[Long]] = vecs
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
-      .select(col("u"))
-      .collect().map(_.getSeq[Long](0).toArray).toSeq
-    for (_ <- 1 to iters) {
-      val means = assignCellsPre(vecs, centroids)
-        .select(col("cluster"), posexplode(col("u")).as(Seq("dim", "u")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(sum(col("u")).as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("dim"),
-          when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
-            .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"))
-        // the frame is k·dim rows (MODEL parameters) from here on —
-        // pin the final fold to a few partitions instead of paying
-        // spark.sql.shuffle.partitions-way task dispatch per
-        // iteration (the p=2048 sweep texture; answers unchanged:
-        // hash aggs are partitioning-agnostic)
-        .repartition(modelAggPartitions, col("cluster"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("ms"))
-        .select(col("cluster"), col("ms.m").as("centroid"))
-        .collect().map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
-      centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
-    }
-    centroids
-  }
-
   /** Partition count for MODEL-PARAMETER-sized aggregation tails
     * (k·dim / k₁·k₂·dim rows): small and fixed — these frames are
     * bounded by the model, not the corpus, so inheriting the
@@ -1309,124 +995,37 @@ object Similarity {
     */
   private val modelAggPartitions = 8
 
-  /** Plan-literal kernel budget: the number of centroid L2 kernels a
-    * single plan may encode before the JIT code cache becomes the
-    * binding constraint (k = 400 measured as code-cache exhaustion,
-    * SURVEY §6; 64 leaves headroom below the first observed cliff).
-    * Past it, centroids travel as DATA ([[assignCellsData]] /
-    * [[trainData]]) — bit-identical, plan size O(1) in k.
-    */
-  private[graft] val assignKernelBudget = 64
-
-  /** Budget-aware assignment: the plan-literal kernels
-    * ([[assignCells]]) within [[assignKernelBudget]], the broadcast
-    * centroid frame ([[assignCellsData]]) past it — so every
-    * lifecycle path (delta append, stream ingest, hier coarse level)
-    * works on the wide (k > budget) indexes the wide trainer builds,
-    * instead of re-entering the JIT cap it exists to avoid.
-    * Bit-identical either way (spec-pinned). `wide` forces a side
-    * (spec parity harness); `spread` pre-spreads a corpus-sized
-    * input over the session's parallelism before the n×k fan
-    * ([[spreadForFan]] — skip for broadcast-bound probe batches).
-    */
-  private[graft] def assignCellsAuto(df: DataFrame, centroids: Seq[Array[Long]],
-                                     wide: Option[Boolean] = None,
-                                     spread: Boolean = false): DataFrame =
-    if (wide.getOrElse(centroids.size > assignKernelBudget))
-      assignCellsData(if (spread) spreadForFan(df) else df, centroids)
-    else assignCells(df, centroids)
-
-  /** Budget-aware Lloyd trainer — [[train]] within the kernel
-    * budget, [[trainData]] (centroids-as-data) past it; same
-    * contract, bit-identical (spec-pinned).
-    */
-  private[graft] def trainAuto(embeddings: DataFrame, k: Int, iters: Int,
-                               wide: Option[Boolean] = None): Seq[Array[Long]] =
-    if (wide.getOrElse(k > assignKernelBudget)) trainData(embeddings, k, iters)
-    else train(embeddings, k, iters)
-
-  /** [[assignTopCells]] with CENTROIDS AS DATA — the top-`nprobe`
-    * probe for nlist past [[assignKernelBudget]] (production FAISS
-    * sizes nlist ≈ 4√n–16√n: 10⁴–10⁵ cells at 10⁹ vectors, three
-    * decades past the ~64-kernel JIT budget). The centroid frame is
-    * ONE broadcast row carrying `array<struct<cluster, cu>>`; each
-    * input row maps that array through a `transform` lambda (a
-    * single [[graft.plans.IntegerUnits.l2Units]] kernel evaluated
-    * per element — plan size O(1) in nlist, vs nlist kernel
-    * instantiations in the literal form), then the same
-    * array_sort + slice as [[assignTopCells]]. No shuffle, no n×k
-    * row fan: the per-row pairs array never leaves the map task, so
-    * this keeps assignTopCells' "probing a billion queries costs one
-    * map pass" property at any nlist. Bit-identical to the literal
-    * form (struct(du, cluster) sorts lexicographically either way;
-    * spec-pinned).
-    */
-  private def assignTopCellsData(df: DataFrame, centroids: Seq[Array[Long]],
-                                 nprobe: Int): DataFrame = {
-    import graft.plans.IntegerUnits.l2Units
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
-    df.select(col("vec_id"), col("embedding"), units(col("embedding")).as("u"))
-      .select(col("vec_id"), col("embedding"),
-        explode(slice(array_sort(transform(centsLit(centroids), c =>
-          struct(l2Units(col("u"), c.getField("cu")).as("du"),
-            c.getField("cluster").as("cluster")))), 1, nprobe)).as("p"))
-      .select(col("vec_id"), col("embedding"),
-        col("p.cluster").as("cluster"), col("p.du").as("du"))
-  }
-
-  /** Budget-aware top-`nprobe` probe — [[assignTopCells]]' literal
-    * kernels within [[assignKernelBudget]], the broadcast centroid
-    * array ([[assignTopCellsData]]) past it; `wide` forces a side
-    * (spec parity harness). Completes the wide dispatch family
-    * ([[assignCellsAuto]]/[[trainAuto]]) for the IVF probe side.
-    */
-  private[graft] def assignTopCellsAuto(df: DataFrame, centroids: Seq[Array[Long]],
-                                        nprobe: Int,
-                                        wide: Option[Boolean] = None): DataFrame =
-    if (wide.getOrElse(centroids.size > assignKernelBudget))
-      assignTopCellsData(df, centroids, nprobe)
-    else assignTopCells(df, centroids, nprobe)
-
   /** FULL IVF search: the coarse quantizer is the TRAINED k-means
     * model (vs [[annIvf]], which uses the pre-given label column as
-    * its cell assignment). The trained centroids are plan literals:
-    * the corpus is assigned in ONE scan, and the (small) query frame
-    * is assigned independently against the same centroids — external
-    * query vectors that are not corpus members work, and the corpus
-    * assignment scan runs exactly once per action. Shares kmeans'
-    * exact integer-units arithmetic, so the trained labels — and the
-    * whole search — carry a full DuckDB oracle (the unrolled Lloyd
-    * CTE chain feeding the ann_ivf ranking SQL); the spec also
-    * asserts determinism and recall@k against the exact scan.
+    * its cell assignment): the corpus is assigned in ONE scan, and
+    * the (small) query frame is assigned independently against the
+    * same centroids — external query vectors that are not corpus
+    * members work, and the corpus assignment scan runs exactly once
+    * per action. Shares kmeans' exact integer-units arithmetic, so the
+    * trained labels — and the whole search — carry a full DuckDB
+    * oracle (the unrolled Lloyd CTE chain feeding the ann_ivf ranking
+    * SQL); the spec also asserts determinism and recall@k against the
+    * exact scan. Centroids are data in one fused kernel, so
+    * FAISS-sized nlist (4√n–16√n: tens of thousands at 10⁹ vectors)
+    * plans at O(1) size.
     *
     * `nprobe` probes the query's nearest `nprobe` cells
-    * ([[assignTopCells]]): candidates grow to nprobe/nlist of the
+    * ([[nearestCells]]): candidates grow to nprobe/nlist of the
     * corpus and recall@k is monotonically non-decreasing in nprobe
     * (candidate sets are nested — SimilaritySpec pins this, and that
     * nprobe = nlist recovers the exact brute-force result). Each
     * (query, neighbor) pair still appears once: a corpus vector lives
     * in exactly one cell. Output `label` is the NEIGHBOR's cell.
-    *
-    * The whole quantizer is BUDGET-AWARE ([[trainAuto]] /
-    * [[assignCellsAuto]] / [[assignTopCellsAuto]]): nlist within
-    * [[assignKernelBudget]] runs the plan-literal kernels, nlist past
-    * it routes centroids as data — so FAISS-sized nlist (4√n–16√n:
-    * tens of thousands at 10⁹ vectors) plans at O(1) size instead of
-    * exhausting the JIT code cache. `wide` forces a side (the
-    * `ann_ivf_trained_wide` registration + spec parity harness);
-    * results are bit-identical either way.
     */
   def annIvfTrained(embeddings: DataFrame, queries: Option[DataFrame] = None,
                     k: Int = 5, nlist: Int = 8, iters: Int = 3,
-                    nprobe: Int = 1, wide: Option[Boolean] = None): DataFrame = {
+                    nprobe: Int = 1): DataFrame = {
     // train + corpus assignment share one materialized corpus frame
-    val (centroids, corpusA) = trainAssignAuto(embeddings, nlist, iters, wide)
+    val (centroids, corpusA) = trainAssign(embeddings, nlist, iters)
     val corpus = corpusA
       .select(col("vec_id"), col("embedding"), col("cluster").as("label"))
-    val qsBase = queries.getOrElse(defaultQueries(embeddings))
-    val probed = assignTopCellsAuto(qsBase.select(col("vec_id"), col("embedding")),
-        centroids, nprobe, wide)
+    val probed = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
+        centroids, nprobe)
       .select(col("vec_id"), col("embedding"), col("cluster").as("label"))
     // self-exclusion follows OUR caller's query provenance, not the
     // always-Some frame handed to annIvf (see notSelf)
@@ -1521,12 +1120,13 @@ object Similarity {
     * and search reads CODES, not vectors.
     *
     * Train: the embedding splits into `m` contiguous subspaces; each
-    * gets its own k-means codebook via [[train]] on the sliced frame
-    * (deterministic seed, model = m×k×(dim/m) doubles — plan
-    * literals, like the IVF centroids). Encode: ONE corpus scan
-    * projects all m×k subspace distances and folds each subspace's
-    * argmin into a code array. Search (ADC): each query precomputes
-    * its m×k partial-distance table (tiny frame, broadcast); the
+    * gets its own k-means codebook, all m trained jointly
+    * ([[pqTrainCodebooks]]: deterministic seed, model = m×k×(dim/m)
+    * longs riding the plan as data, like the IVF centroids). Encode:
+    * ONE corpus scan computes each subspace's argmin code in one
+    * fused kernel ([[graft.plans.PqEncodeI64]]). Search (ADC): each
+    * query precomputes its m×k partial-distance table (tiny frame,
+    * broadcast); the
     * approximate distance of a corpus vector is m TABLE LOOKUPS —
     * the fused [[graft.plans.PqAdcSumI64]] codegen kernel, one
     * compiled loop over Σ_j qtable[j][codes[j]] — instead
@@ -2094,7 +1694,7 @@ object Similarity {
     */
   def ivfSqIndexBuild(embeddings: DataFrame, nlist: Int = 8,
                       ivfIters: Int = 3): IvfSqIndex = {
-    val (centroids, corpusA) = trainAssignAuto(embeddings, nlist, ivfIters)
+    val (centroids, corpusA) = trainAssign(embeddings, nlist, ivfIters)
     val sq = sqIndexBuild(embeddings)
     val codes = sq.codes.join(
       corpusA.select(col("vec_id"), col("cluster").as("label")), "vec_id")
@@ -2110,8 +1710,7 @@ object Similarity {
                   excludeSelf: Boolean = false): DataFrame = {
     val qs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("qun"))
-      .join(assignTopCellsAuto(queries.select(col("vec_id"), col("embedding")),
-          index.centroids, nprobe)
+      .join(nearestCells(withUnits(queries), "u", index.centroids, nprobe)
         .select(col("vec_id").as("query_id"), col("cluster").as("qlabel")), "query_id")
     // rerank window cuts across all probed cells at once (a corpus
     // vector lives in exactly one cell, so no pair duplicates)
@@ -2382,7 +1981,7 @@ object Similarity {
   def ivfBqIndexBuild(embeddings: DataFrame, nlist: Int = 8,
                       ivfIters: Int = 3): IvfBqIndex = {
     import graft.plans.BinarySig.signPack
-    val (centroids, corpusA) = trainAssignAuto(embeddings, nlist, ivfIters)
+    val (centroids, corpusA) = trainAssign(embeddings, nlist, ivfIters)
     val sigs = corpusA
       .select(col("vec_id"), signPack(col("embedding")).as("sig"),
         col("cluster").as("label"))
@@ -2402,8 +2001,7 @@ object Similarity {
     import graft.plans.BinarySig.{hammingPacked, signPack}
     val qs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         signPack(col("embedding")).as("qsig"))
-      .join(assignTopCellsAuto(queries.select(col("vec_id"), col("embedding")),
-          index.centroids, nprobe)
+      .join(nearestCells(withUnits(queries), "u", index.centroids, nprobe)
         .select(col("vec_id").as("query_id"), col("cluster").as("qlabel")), "query_id")
     val wH = Window.partitionBy(col("query_id")).orderBy(col("hamming"), col("vec_id"))
     val cands = index.sigs.join(broadcast(qs),
@@ -2608,14 +2206,14 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** IVF-PQ composite search — the billion-vector layout: the trained
-    * Lloyd coarse quantizer ([[train]], raw-vector integer units)
+    * Lloyd coarse quantizer ([[lloyd]], raw-vector integer units)
     * restricts each query to its own cell (1/nlist of the corpus),
     * and within the cell ranking reads PQ CODES only (global
     * codebooks on normalized vectors, like [[annPq]]) before the
     * exact decimal re-rank. At 100 TB the scan touches `codes`+`label`
     * (9 bytes/vector) for nprobe/nlist of the corpus — the two
     * pruning axes compose multiplicatively, and `nprobe` (the
-    * [[assignTopCells]] recall knob) trades candidate volume back
+    * [[nearestCells]] recall knob) trades candidate volume back
     * for recall when cells are imbalanced. (Production refinement — per-cell
     * RESIDUAL codebooks — changes the trained model, not the plan
     * shape.)
@@ -2656,7 +2254,7 @@ object Similarity {
   def ivfPqIndexBuild(embeddings: DataFrame, nlist: Int = 8, ivfIters: Int = 3,
                       m: Int = 8, codebookSize: Int = 8, pqIters: Int = 3): IvfPqIndex = {
     val dsub = pqDsub(m)
-    val (centroids, corpusA) = trainAssignAuto(embeddings, nlist, ivfIters)
+    val (centroids, corpusA) = trainAssign(embeddings, nlist, ivfIters)
     val corpusU = pqCorpusUnits(embeddings)
     val codebooks = pqTrainCodebooks(corpusU, m, codebookSize, pqIters, dsub)
     val codes = pqEncode(corpusU, codebooks, dsub)
@@ -2674,12 +2272,11 @@ object Similarity {
     require(!index.residual,
       "this index holds residual codebooks — search it with ivfPqResidualSearch")
     val dsub = pqDsub(index.m)
-    // nprobe rows per query (assignTopCells): the ADC scan reads
+    // nprobe rows per query (nearestCells): the ADC scan reads
     // codes from the query's nprobe nearest cells; the per-query
     // rerank window then cuts across all probed cells at once.
     val qs = pqQueries(queries, index.codebooks, dsub)
-      .join(assignTopCellsAuto(queries.select(col("vec_id"), col("embedding")),
-          index.centroids, nprobe)
+      .join(nearestCells(withUnits(queries), "u", index.centroids, nprobe)
         .select(col("vec_id").as("query_id"), col("cluster").as("qlabel")), "query_id")
     val cands = pqAdcCandidates(
       index.codes.join(broadcast(qs),
@@ -2745,8 +2342,8 @@ object Similarity {
                               pqIters: Int = 3): IvfPqIndex = {
     val dsub = pqDsub(m)
     val corpusU = pqCorpusUnits(embeddings)
-    val centroids = trainUnitsFrame(corpusU, nlist, ivfIters)
-    val labeled = assignUnitsCells(corpusU, centroids)
+    val centroids = lloyd(corpusU, "un", nlist, ivfIters)
+    val labeled = nearestCells(corpusU, "un", centroids)
       .select(col("vec_id"), col("cluster").as("label"))
     // residual frame, materialized once: the zip_with subtraction is
     // an interpreted HOF and every training scan references the
@@ -2781,7 +2378,7 @@ object Similarity {
       graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
     // one row per (query, probed cell), each with its OWN residual
     // ADC table against that cell's centroid
-    val qProbe = assignTopCellsUnits(qU, index.centroids, nprobe)
+    val qProbe = nearestCells(qU, "un", index.centroids, nprobe)
       .select(col("vec_id"), col("embedding"), col("un"), col("cluster").as("qlabel"))
       .withColumn("qres",
         zip_with(col("un"), centroidOf(index.centroids, col("qlabel")), (a, b) => a - b))
@@ -2818,71 +2415,6 @@ object Similarity {
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
     ivfPqResidualSearch(index, defaultQueries(embeddings), k, rerank, nprobe,
       excludeSelf = true)
-  }
-
-  /** Lloyd's loop over a precomputed (vec_id, un) units frame — the
-    * [[train]] math (md5-order init, lowest-index argmin, sign-split
-    * half-up integer means, empty cells keep their centroid) applied
-    * to NORMALIZED units, for quantizers that must live in the same
-    * space as PQ residuals.
-    */
-  private def trainUnitsFrame(unitsDf: DataFrame, k: Int, iters: Int): Seq[Array[Long]] = {
-    import graft.plans.IntegerUnits.l2Units
-    var centroids: Seq[Array[Long]] = unitsDf
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
-      .collect().map(_.getSeq[Long](1).toArray).toSeq
-    for (_ <- 1 to iters) {
-      val ds = centroids.indices.map(i => l2Units(col("un"), lit(centroids(i))).as(s"d$i"))
-      val scored = unitsDf.select(col("vec_id") +: col("un") +: ds: _*)
-      val cluster = centroids.indices.init.foldRight(lit(centroids.size - 1)) { (i, rest) =>
-        when(col(s"d$i") <= (i + 1 until centroids.size).map(j => col(s"d$j")).reduce(least(_, _)), i)
-          .otherwise(rest)
-      }
-      val means = scored.withColumn("cluster", cluster.cast("long"))
-        .select(col("cluster"), posexplode(col("un")).as(Seq("dim", "u")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(sum(col("u")).as("s"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("dim"),
-          when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
-            .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("ms"))
-        .select(col("cluster"), col("ms.m").as("centroid"))
-        .collect().map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
-      centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
-    }
-    centroids
-  }
-
-  /** [[assignCells]]' argmin over a units frame (single cell). */
-  private def assignUnitsCells(unitsDf: DataFrame, centroids: Seq[Array[Long]]): DataFrame = {
-    import graft.plans.IntegerUnits.l2Units
-    val ds = centroids.indices.map(i => l2Units(col("un"), lit(centroids(i))).as(s"d$i"))
-    val scored = unitsDf.select(col("vec_id") +: col("un") +: ds: _*)
-    val cluster = centroids.indices.init.foldRight(lit(centroids.size - 1)) { (i, rest) =>
-      when(col(s"d$i") <= (i + 1 until centroids.size).map(j => col(s"d$j")).reduce(least(_, _)), i)
-        .otherwise(rest)
-    }
-    scored.withColumn("cluster", cluster.cast("long"))
-      .select(col("vec_id"), col("un"), col("cluster"))
-  }
-
-  /** [[assignTopCells]] over a units frame: top-`nprobe`
-    * (du, cluster)-ordered cells per row, shuffle-free.
-    */
-  private def assignTopCellsUnits(unitsDf: DataFrame, centroids: Seq[Array[Long]],
-                                  nprobe: Int): DataFrame = {
-    import graft.plans.IntegerUnits.l2Units
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
-    val ds = centroids.indices.map(i => l2Units(col("un"), lit(centroids(i))).as(s"d$i"))
-    val pairs = array(centroids.indices.map(i =>
-      struct(col(s"d$i").as("du"), lit(i.toLong).as("cluster"))): _*)
-    unitsDf.select(col("vec_id") +: col("embedding") +: col("un") +: ds: _*)
-      .select(col("vec_id"), col("embedding"), col("un"),
-        explode(slice(array_sort(pairs), 1, nprobe)).as("p"))
-      .select(col("vec_id"), col("embedding"), col("un"),
-        col("p.cluster").as("cluster"), col("p.du").as("du"))
   }
 
   /** Persist / load / serve-from a frozen IVF-PQ index — the
@@ -2964,7 +2496,7 @@ object Similarity {
     val delta =
       if (index.residual) {
         val u = pqCorpusUnits(newVectors)
-        val labeled = assignUnitsCells(u, index.centroids)
+        val labeled = nearestCells(u, "un", index.centroids)
           .select(col("vec_id"), col("cluster").as("label"))
         // materialized: pqEncode references `un` m×cb times and the
         // zip_with subtraction is an interpreted HOF — same barrier
@@ -2976,8 +2508,7 @@ object Similarity {
         pqEncode(rx, index.codebooks, dsub).join(labeled, "vec_id")
       } else {
         pqEncode(pqCorpusUnits(newVectors), index.codebooks, dsub)
-          .join(assignCellsAuto(newVectors.select(col("vec_id"), col("embedding")),
-              index.centroids)
+          .join(nearestCells(withUnits(newVectors), "u", index.centroids)
             .select(col("vec_id"), col("cluster").as("label")), "vec_id")
       }
     delta.select(col("vec_id"), col("codes"), col("label"))
@@ -3327,9 +2858,18 @@ object Similarity {
       .select(col("vec_id"), graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
       .honestCheckpoint()
 
-  /** Shared projection/argmin machinery: every subspace distance is
-    * projected ONCE (no re-evaluation inside the fold), and the fold
-    * picks the lowest index on ties (same rule as assignCells).
+  /** The plan-literal PQ argmin — the independent parity reference
+    * of the fused codebooks-as-data kernels ([[graft.plans.PqQuant]]),
+    * reached only through `wide = false` on [[pqTrainCodebooks]] /
+    * [[pqEncode]]. The fused kernels run at every shape: this path
+    * plans m·cb l2 kernels plus m O(cb²) when/least argmin folds even
+    * at the SMALLEST registered codebook (m=8, cb=8 → 64 kernels,
+    * ~512-ref folds), and since the trainer re-plans that tree every
+    * Lloyd iteration its analyzer + codegen cost measured 24-26% of
+    * whole-query wall (sf0.1 min-of-2 A/B: ann_pq 2.53 → 1.93 s,
+    * ann_ivfpq 3.25 → 2.44 s). Every subspace distance is projected
+    * ONCE (no re-evaluation inside the fold), and the fold picks the
+    * lowest index on ties.
     */
   private def pqDistCols(books: IndexedSeq[IndexedSeq[Array[Long]]], u: String, dsub: Int) = {
     import graft.plans.IntegerUnits.l2Units
@@ -3342,22 +2882,6 @@ object Similarity {
         (c + 1 until codebookSize).map(cc => col(s"d${j}_$cc")).reduce(least(_, _)), c)
         .otherwise(rest)
     }
-
-  /** PQ dispatch: the fused codebooks-as-data kernels
-    * ([[graft.plans.PqQuant]]) now run at EVERY shape. The literal
-    * path ([[pqDistCols]]/[[pqArgmin]]) plans m·cb l2 kernels plus m
-    * O(cb²) when/least argmin folds even at the SMALLEST registered
-    * codebook (m=8, cb=8 → 64 kernels, ~512-ref folds), and since
-    * the trainer re-plans that tree every Lloyd iteration, its
-    * analyzer + codegen cost measured 24-26% of whole-query wall
-    * (sf0.1 min-of-2 A/B: ann_pq 2.53 → 1.93 s, ann_ivfpq
-    * 3.25 → 2.44 s, ann_ivfpq_residual 2.74 → 2.04 s, ann_opq
-    * 3.71 → 2.80 s) — on top of the JIT-ceiling argument that
-    * forced FAISS-standard cb = 256 to the fused side all along.
-    * The literal path remains as the independent parity reference,
-    * spec-pinned bit-identical via wide = Some(false).
-    */
-  private val pqWide: Boolean = true
 
   /** Codebook j AS DATA: one array<struct<cl, cu>> literal in code
     * order (zipWithIndex) — plan DATA (a single Literal in the
@@ -3391,16 +2915,15 @@ object Similarity {
 
   /** JOINT per-subspace k-means: all m codebooks advance in ONE scan
     * + one (m×k×dsub)-row shuffle per iteration. Training each
-    * subspace through [[train]] would cost m×iters full scans and m
+    * subspace through [[lloyd]] would cost m×iters full scans and m
     * init collects for the identical math (same md5-order init rows,
     * same argmin tie rule, same mean update) — measured 35.9 s vs
     * ~4 s at bench SF for no result difference.
     */
   private[graft] def pqTrainCodebooks(corpusU: DataFrame, m: Int, codebookSize: Int,
                                iters: Int, dsub: Int,
-                               wide: Option[Boolean] = None): IndexedSeq[IndexedSeq[Array[Long]]] = {
+                               wide: Boolean = true): IndexedSeq[IndexedSeq[Array[Long]]] = {
     def sub(u: Column, j: Int): Column = slice(u, j * dsub + 1, dsub)
-    val useWide = wide.getOrElse(pqWide)
     val initRows = corpusU.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(codebookSize).collect()
       .map(_.getSeq[Long](1).toArray)
@@ -3416,7 +2939,7 @@ object Similarity {
       // folds over codebook-as-data) — init, tiebreak, and the mean
       // step are shared, so the two are bit-identical (spec-pinned)
       val assigned =
-        if (useWide) corpusU
+        if (wide) corpusU
           .select(col("un"),
             graft.plans.PqQuant.pqEncodeCodes(col("un"), books, dsub).as("codes"))
           .select((0 until m).map(j =>
@@ -3426,36 +2949,26 @@ object Similarity {
           .select(col("un") +: pqDistCols(books, "un", dsub): _*)
           .select((0 until m).map(j =>
             struct(pqArgmin(j, codebookSize).as("cl"), sub(col("un"), j).as("sv")).as(s"a$j")): _*)
-      val means = assigned
-        .select(posexplode(array((0 until m).map(j => col(s"a$j")): _*)).as(Seq("j", "a")))
-        .select(col("j"), col("a.cl").as("cl"), posexplode(col("a.sv")).as(Seq("dim", "u")))
-        .groupBy(col("j"), col("cl"), col("dim"))
-        .agg(sum(col("u")).as("s"), count(lit(1)).as("n"))
-        // half-up integer mean, sign-split like train()
-        .select(col("j"), col("cl"), col("dim"),
-          when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
-            .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("mu"))
-        .groupBy(col("j"), col("cl"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("mu")))).as("ms"))
-        .select(col("j"), col("cl"), col("ms.mu").as("centroid"))
-        .collect()
+      val means = centroidMeans(assigned
+          .select(posexplode(array((0 until m).map(j => col(s"a$j")): _*)).as(Seq("j", "a")))
+          .select(col("j"), col("a.cl").as("cl"), col("a.sv").as("sv")),
+          Seq("j", "cl"), "sv")
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toArray).toMap
-      // empty cells keep their previous centroid (like train())
+      // empty cells keep their previous centroid (like lloyd())
       books = IndexedSeq.tabulate(m, codebookSize)((j, c) => means.getOrElse((j, c), books(j)(c)))
     }
     books
   }
 
-  /** One corpus scan → (vec_id, codes): per-subspace argmin code.
-    * Auto-dispatches on the codebook shape: plan-literal l2 kernels
-    * within the JIT budget, the fused codebooks-as-data kernel
+  /** One corpus scan → (vec_id, codes): per-subspace argmin code
+    * through the fused codebooks-as-data kernel
     * ([[graft.plans.PqEncodeI64]] — one compiled m×cb×dsub loop,
-    * plan size O(1) in cb) past it — bit-identical either way
-    * (spec-pinned).
+    * plan size O(1) in cb); `wide = false` is the plan-literal parity
+    * reference ([[pqDistCols]]), bit-identical (spec-pinned).
     */
   private[graft] def pqEncode(corpusU: DataFrame, books: IndexedSeq[IndexedSeq[Array[Long]]],
-                       dsub: Int, wide: Option[Boolean] = None): DataFrame =
-    if (wide.getOrElse(pqWide))
+                       dsub: Int, wide: Boolean = true): DataFrame =
+    if (wide)
       corpusU.select(col("vec_id"),
         graft.plans.PqQuant.pqEncodeCodes(col("un"), books, dsub).as("codes"))
     else corpusU
@@ -3472,22 +2985,12 @@ object Similarity {
   private[graft] def pqQueries(qs: DataFrame, books: IndexedSeq[IndexedSeq[Array[Long]]],
                         dsub: Int,
                         rot: Column => Column = identity): DataFrame = {
-    import graft.plans.IntegerUnits.l2Units
-    // past the kernel budget the whole m×cb table is ONE fused
-    // kernel with the codebooks as a reference object
-    // (plans/PqQuant.PqQTableI64): the previous per-subspace
+    // the whole m×cb table is ONE fused kernel with the codebooks as
+    // a reference object (plans/PqQuant.PqQTableI64): a per-subspace
     // `transform` over a typedlit codebook literal embedded m·cb
     // struct literals in the plan — 2048 at FAISS cb=256, ~2 s of
     // analysis/serialization per execution before any row moved.
-    // Work is query-count sized either way; the kernel is
-    // bit-identical to both table builds (same exact long Σ(Δ²),
-    // same (j, c) order — spec-pinned).
-    val qtable =
-      if (pqWide)
-        graft.plans.PqQuant.pqQTable(col("qun"), books, dsub)
-      else array(books.indices.map(j =>
-        array(books(j).indices.map(c =>
-          l2Units(slice(col("qun"), j * dsub + 1, dsub), lit(books(j)(c)))): _*)): _*)
+    val qtable = graft.plans.PqQuant.pqQTable(col("qun"), books, dsub)
     qs.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         rot(graft.plans.IntegerUnits.normalizeUnits(col("embedding"))).as("qun"))
       .withColumn("qtable", qtable)

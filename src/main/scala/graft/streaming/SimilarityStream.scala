@@ -195,43 +195,10 @@ object SimilarityStream {
       .start()
   }
 
-  /** [[semanticNearDupServeFrozen]] over the WIDE (centroids-as-data)
-    * flat index — the serve loop for k past the plan-literal kernel
-    * budget on ONE level: the one-time build is
-    * [[Similarity.semanticIndexBuildWide]] (broadcast centroid frame,
-    * plan size O(1) in k) and each micro-batch assigns through
-    * [[Similarity.semanticProbeWide]]'s data-join argmin. Same frozen
-    * contract: a restarted loop LOADS the complete on-disk index,
-    * drift rebuilds via the shared staged publish.
-    */
-  def semanticNearDupServeWideFrozen(newVectors: DataFrame, corpus: DataFrame,
-                                     indexDir: String, k: Int = 8, iters: Int = 3,
-                                     threshold: Double = 0.45,
-                                     excludeSelf: Boolean = false)
-                                    (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = corpus.sparkSession
-    val params = s"semwide;k=$k;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val n = corpus.count()
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.semanticIndexVersion) { staging =>
-      Similarity.semanticIndexSave(Similarity.semanticIndexBuildWide(corpus, k, iters),
-        staging, params, n)
-    }
-    val index = Similarity.semanticIndexLoad(spark, indexDir, Some(meta))
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(Similarity.semanticProbeWide(index, batch, threshold, excludeSelf), id)
-        ()
-      }
-      .start()
-  }
-
-  /** [[semanticNearDupServeFrozen]] over the TWO-LEVEL index — the
-    * serve loop that still works when k ∝ corpus pushes total
-    * clusters past the flat index's plan-literal cap: each
-    * micro-batch assigns through k₁ coarse kernels + a broadcast
-    * fine-centroid join ([[Similarity.semanticProbeHier]]), never an
-    * O(k₁·k₂) literal chain. Same frozen contract: a restarted loop
+  /** [[semanticNearDupServeFrozen]] over the TWO-LEVEL index — each
+    * micro-batch assigns to a coarse cell and then to that cell's
+    * nearest fine centroid ([[Similarity.semanticProbeHier]]), so a
+    * row scans k₁ + k₂ centroids, not k₁·k₂. Same frozen contract: a restarted loop
     * LOADS the complete on-disk index (grouped trainer runs once,
     * offline), drift rebuilds via the shared staged publish.
     */

@@ -114,20 +114,18 @@ class IntegerUnitsSpec extends SparkSpec {
     // model: 7 real quantized vectors + a DUPLICATE of centroid 2 at
     // index 5 (forced tie — the kernel must keep the FIRST minimal,
     // i.e. lowest cluster id, exactly array_min over struct(du, id))
-    val base = emb.orderBy(col("vec_id")).limit(7)
-      .select(quantizeUnits(col("embedding")))
-      .collect().map(_.getSeq[Long](0).toArray).toSeq
-    val model = base.updated(5, base(2).clone())
-    // the HOF reference — the exact expression argminOver built
+    val model = tieModel
+    // the HOF reference: a transform + array_min over the model as a
+    // typedlit array of (cluster, cu) structs
     val cl = typedlit(model.zipWithIndex.map { case (cu, i) => (i.toLong, cu.toSeq) }
       .map { case (c, cu) => ArgminRef(c, cu) })
     val reference = array_min(transform(cl, c =>
       struct(l2Units(quantizeUnits(col("embedding")), c.getField("cu")).as("du"),
         c.getField("cluster").as("cluster"))))
     val got = emb.select(col("vec_id"),
-        ArgminL2.argminUnits(quantizeUnits(col("embedding")), model).as("k"),
+        ArgminL2.argminUnits(quantizeUnits(col("embedding")), model).getItem(0).as("k"),
         reference.as("r"))
-      .select(col("vec_id"), col("k").getItem(0).as("kdu"), col("k").getItem(1).as("kcl"),
+      .select(col("vec_id"), col("k.du").as("kdu"), col("k.cluster").as("kcl"),
         col("r.du").as("rdu"), col("r.cluster").as("rcl"))
     assert(got.filter(col("kdu") =!= col("rdu") || col("kcl") =!= col("rcl")).count() === 0L)
     // the tie is actually exercised: vectors nearest centroid 2 must
@@ -143,6 +141,103 @@ class IntegerUnitsSpec extends SparkSpec {
     }
     assert((e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse(""))
       .contains("argmin_l2"), s"unexpected failure: $e")
+  }
+
+  /** 7 real quantized corpus vectors with a DUPLICATE of centroid 2
+    * at index 5 — a forced (du, cluster) tie.
+    */
+  private lazy val tieModel: Seq[Array[Long]] = {
+    val base = emb.orderBy(col("vec_id")).limit(7)
+      .select(quantizeUnits(col("embedding")))
+      .collect().map(_.getSeq[Long](0).toArray).toSeq
+    base.updated(5, base(2).clone())
+  }
+
+  /** The corpus as (vec_id, quantized units). */
+  private lazy val embUnits: Seq[(Long, Array[Long])] =
+    emb.select(col("vec_id"), quantizeUnits(col("embedding"))).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
+
+  /** Driver-side reference: (du, local cluster) of every centroid in
+    * `cents`, nearest first, ties to the lower cluster.
+    */
+  private def refOrder(u: Array[Long], cents: Seq[Array[Long]]): Seq[(Long, Long)] =
+    cents.zipWithIndex.map { case (c, i) =>
+      (u.indices.map { d => val x = u(d) - c(d); x * x }.sum, i.toLong)
+    }.sorted
+
+  /** The test session plus a session that evaluates every expression
+    * interpreted (no whole-stage or expression codegen).
+    */
+  private def bothEvalModes: Seq[org.apache.spark.sql.SparkSession] = {
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    Seq(spark, interpreted)
+  }
+
+  private def pairs(r: org.apache.spark.sql.Row, i: Int): Seq[(Long, Long)] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[org.apache.spark.sql.Row](i).map(p => (p.getLong(0), p.getLong(1)))
+
+  test("argminUnits top-nprobe is the driver-side (du, cluster) order, ties to the lower cluster") {
+    import graft.plans.ArgminL2
+    val model = tieModel
+    for (session <- bothEvalModes; nprobe <- Seq(1, 3, model.size)) {
+      import session.implicits._
+      val got = embUnits.toDF("vec_id", "u")
+        .select(col("vec_id"), ArgminL2.argminUnits(col("u"), model, nprobe).as("p"))
+        .collect().map(r => r.getLong(0) -> pairs(r, 1)).toMap
+      embUnits.foreach { case (id, u) =>
+        assert(got(id) === refOrder(u, model).take(nprobe), s"vec $id at nprobe=$nprobe")
+      }
+      if (nprobe == model.size)
+        assert(got.values.exists(_.map(_._2).containsSlice(Seq(2L, 5L))),
+          "tie case never exercised — no full order puts the duplicate pair side by side")
+      // a vector of the wrong dimension fails loudly, never truncates
+      val e = intercept[Exception] {
+        Seq(Tuple1(Array.fill(8)(1L))).toDF("u")
+          .select(ArgminL2.argminUnits(col("u"), model, nprobe)).collect()
+      }
+      assert((e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse(""))
+        .contains("argmin_l2"), s"unexpected failure: $e")
+    }
+  }
+
+  test("argminUnitsPerCell scans only the row's own cell; a dead or unknown cell is null") {
+    import graft.plans.ArgminL2
+    val model = tieModel
+    // cell 0 = centroids 0-2, cell 1 = dead, cell 2 = centroids 3-6;
+    // rows address cells 0-3 by vec_id % 4 (cell 3 is not in the model)
+    val cells = Seq(model.take(3), Seq.empty, model.drop(3))
+    for (session <- bothEvalModes) {
+      import session.implicits._
+      val got = embUnits.map { case (id, u) => (id, u, id % 4) }.toDF("vec_id", "u", "cell")
+        .select(col("vec_id"), ArgminL2.argminUnitsPerCell(col("u"), col("cell"), cells, 2).as("p"))
+        .collect().map(r => r.getLong(0) -> pairs(r, 1)).toMap
+      embUnits.foreach { case (id, u) =>
+        val want = (id % 4).toInt match {
+          case 0 => refOrder(u, cells(0)).take(2)
+          case 2 => refOrder(u, cells(2)).take(2)
+          case _ => null
+        }
+        assert(got(id) === want, s"vec $id in cell ${id % 4}")
+      }
+    }
+  }
+
+  test("argmin_l2 kernels built separately over equal centroids are semanticEquals") {
+    import graft.plans.{ArgminL2, ArgminL2I64}
+    import spark.implicits._
+    val model = tieModel
+    val plan = embUnits.toDF("vec_id", "u").select(
+        ArgminL2.argminUnits(col("u"), model.map(_.clone()), 2).as("a"),
+        ArgminL2.argminUnits(col("u"), model.map(_.clone()), 2).as("b"),
+        ArgminL2.argminUnits(col("u"), model.updated(0, model(1)), 2).as("c"))
+      .queryExecution.analyzed
+    val Seq(a, b, c) = plan.expressions.flatMap(_.collect { case k: ArgminL2I64 => k })
+    assert(a === b && a.semanticEquals(b), "equal models must give equal kernels")
+    assert(!a.semanticEquals(c), "different models must give different kernels")
   }
 
   test("argminUnits rejects array<long> input that may hold nulls at analysis") {

@@ -28,6 +28,48 @@ class SimilaritySpec extends SparkSpec {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
   }
 
+  /** Driver-side nearest-centroid reference: the `nprobe` nearest
+    * centroids of `u` as (du, cluster), in plain Long arithmetic with
+    * the lowest-cluster tiebreak.
+    */
+  private def refTop(u: Array[Long], cents: Seq[Array[Long]], nprobe: Int): Seq[(Long, Long)] =
+    cents.zipWithIndex.map { case (c, i) =>
+      (u.indices.map { d => val x = u(d) - c(d); x * x }.sum, i.toLong)
+    }.sorted.take(nprobe)
+
+  /** Driver-side Lloyd reference: the first k vectors in
+    * (md5(vec_id), vec_id) order seed the model, each iteration
+    * assigns by [[refTop]] and moves every non-empty cluster to the
+    * sign-split half-up integer mean of its members.
+    */
+  private def refLloyd(vecs: Seq[(Long, Array[Long])], k: Int, iters: Int): Seq[Array[Long]] = {
+    def md5(id: Long): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    var cents = vecs.sortBy { case (id, _) => (md5(id), id) }.take(k).map(_._2)
+    for (_ <- 1 to iters) {
+      val groups = vecs.groupBy { case (_, u) => refTop(u, cents, 1).head._2.toInt }
+      cents = cents.indices.map { i =>
+        groups.get(i).fold(cents(i)) { members =>
+          val n = members.size.toLong
+          Array.tabulate(cents(i).length) { d =>
+            val s = members.map(_._2(d)).sum
+            if (s < 0) -((2 * -s + n) / (2 * n)) else (2 * s + n) / (2 * n)
+          }
+        }
+      }
+    }
+    cents
+  }
+
+  /** The gate corpus in quantized units, (vec_id, u). */
+  private lazy val corpusUnits: Seq[(Long, Array[Long])] =
+    embeddings.select(col("vec_id"), graft.plans.IntegerUnits.quantizeUnits(col("embedding")))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
+
+  /** Re-keyed copies (vec_id + 1e6) of every 50th corpus vector. */
+  private def twinBatch: DataFrame = embeddings.filter(col("vec_id") % 50 === 0)
+    .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+
   test("pruned annBruteForce equals the single-phase exact scan") {
     val got = Similarity.annBruteForce(embeddings).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
@@ -249,11 +291,20 @@ class SimilaritySpec extends SparkSpec {
     // The gate configuration AND an asymmetric one (k1 ≠ k2 exercises
     // cells of different sizes, short init lists, and the
     // empty-fine-cluster keep-previous rule under a different split).
+    // The driver loop trains each occupied coarse cell's k2-means on
+    // its own members, one cell after another — the per-cell algebra
+    // the grouped build runs for every cell in one program.
     for ((k1, k2) <- Seq((2, 2), (3, 2))) {
-      val looped = Similarity.dedupSemanticHier(embeddings, k1 = k1, k2 = k2)
-        .collect().map(_.toString).toSeq
-      val grouped = Similarity.dedupSemanticHierGrouped(embeddings, k1 = k1, k2 = k2)
-        .collect().map(_.toString).toSeq
+      val coarse = refLloyd(corpusUnits, k1, 3)
+      val coarseOf = corpusUnits.map { case (id, u) => id -> refTop(u, coarse, 1).head._2 }.toMap
+      val looped = corpusUnits.groupBy { case (id, _) => coarseOf(id) }.toSeq
+        .flatMap { case (c, members) =>
+          val fine = refLloyd(members, k2, 3)
+          members.map { case (id, u) => id -> (c * k2 + refTop(u, fine, 1).head._2) }
+        }.toMap
+      val grouped = Similarity.semanticIndexBuildHier(embeddings, k1, k2).assigned
+        .select(col("vec_id"), col("cluster")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(grouped === looped,
         s"grouped-vs-looped fine training diverged at k1=$k1 k2=$k2 — " +
           "init order, argmin tiebreak, or the half-up mean drifted")
@@ -1050,32 +1101,24 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("wide (centroids-as-data) trainer is bit-identical to the plan-literal one and runs past the kernel cap") {
-    // bit parity at every k both trainers can run
-    for (k <- Seq(4, 8)) {
-      val a = Similarity.dedupSemantic(embeddings, k = k).collect().map(_.toString).toSeq
-      val b = Similarity.dedupSemanticWide(embeddings, k = k).collect().map(_.toString).toSeq
-      assert(b === a, s"wide trainer diverged from the literal trainer at k=$k")
-    }
-    // the point of the layout: k = 128 — double the plan-literal
-    // budget that melted the JIT at 400 — trains, assigns, and probes
-    // through O(1)-size plans
-    val wide = Similarity.semanticIndexBuildWide(embeddings, k = 128)
-    assert(wide.centroids.size === 128)
-    val used = wide.assigned.select(col("cluster")).distinct().count()
-    assert(used > 64, s"only $used clusters used — the wide set isn't doing anything")
-    val cells = wide.assigned.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id"), col("cluster")).collect()
+  test("k=80 flat semantic index trains, assigns and probes like a driver-side Lloyd") {
+    val k = 80
+    val want = refLloyd(corpusUnits, k, 3)
+    val index = Similarity.semanticIndexBuild(embeddings, k = k)
+    assert(index.centroids.map(_.toSeq) === want.map(_.toSeq),
+      "trained centroids diverged from the driver-side Lloyd")
+    val cells = index.assigned.select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val batch = embeddings.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    val probed = Similarity.semanticProbeWide(wide, batch).collect()
-    cells.keys.foreach { twin =>
+    assert(cells === corpusUnits.map { case (id, u) => id -> refTop(u, want, 1).head._2 }.toMap,
+      "corpus assignment diverged from the driver-side argmin")
+    assert(cells.values.toSet.size > 40, s"only ${cells.values.toSet.size} clusters used")
+    // probe: a re-keyed twin lands in its twin's trained cell at cosine 1.0
+    val probed = Similarity.semanticProbe(index, twinBatch).collect()
+    twinBatch.select(col("vec_id")).collect().map(_.getLong(0) - 1000000L).foreach { twin =>
       val hit = probed.find(r => r.getLong(0) == twin + 1000000L && r.getLong(1) == twin)
-      assert(hit.isDefined, s"re-keyed twin of $twin missing from the wide probe")
+      assert(hit.isDefined, s"re-keyed twin of $twin missing from the probe")
       assert(hit.get.getDouble(3) === 1.0)
-      assert(hit.get.getLong(2) === cells(twin),
-        s"wide probe assignment of $twin diverged from its trained cell")
+      assert(hit.get.getLong(2) === cells(twin), s"probe assignment of $twin diverged from its trained cell")
     }
   }
 
@@ -1203,19 +1246,16 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("wide (k=128) index append/stream-ingest/compact assign deltas past the kernel budget") {
-    // round-13 gap: semanticCommitDelta assigned deltas through k
-    // plan-literal kernels unconditionally, so appending into the
-    // WIDE index the wide trainer builds re-entered the JIT cap it
-    // exists to avoid. The delta assignment must now run
-    // centroids-as-data at k past the budget AND stay bit-identical
-    // to an independent frozen-model argmin computed here in local
-    // Long arithmetic (quantize -> integer L2 -> lowest-cluster tie).
+    // A delta appended into a k=128 index (spread like a training
+    // corpus of that k) must stay bit-identical to an independent
+    // frozen-model argmin computed here in local Long arithmetic
+    // (quantize -> integer L2 -> lowest-cluster tie).
     import graft.plans.IntegerUnits.quantizeUnits
     val base = embeddings.filter(col("vec_id") % 10 =!= 0)
     val fresh = embeddings.filter(col("vec_id") % 10 === 0)
     val f1 = fresh.filter(col("vec_id") % 20 === 0)
     val f2 = fresh.filter(col("vec_id") % 20 =!= 0)
-    val wide = Similarity.semanticIndexBuildWide(base, k = 128)
+    val wide = Similarity.semanticIndexBuild(base, k = 128)
     assert(wide.centroids.size === 128)
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_wide_app").toString
     Similarity.semanticIndexSave(wide, dir, "sem-wide-app-spec", base.count())
@@ -1252,64 +1292,66 @@ class SimilaritySpec extends SparkSpec {
       "a replayed committed batch after compaction must still skip")
   }
 
-  test("hier wide-coarse path is bit-identical to the kernel path and lifts the k1 cap") {
-    // parity at overlapping k1: the forced centroids-as-data coarse
-    // level must reproduce the plan-literal build bit-for-bit (the
-    // registered dedup_semantic_hier_wide shares the hier oracle on
-    // exactly this claim)
-    val a = Similarity.dedupSemanticHierGrouped(embeddings, k1 = 2, k2 = 2)
-      .collect().map(_.toString).toSeq
-    val b = Similarity.dedupSemanticHierGrouped(embeddings, k1 = 2, k2 = 2,
-        wideCoarse = Some(true)).collect().map(_.toString).toSeq
-    assert(b === a, "wide-coarse hier build diverged from the kernel-path build")
-    assert(a.nonEmpty)
-    // probe parity on a re-keyed batch across both coarse paths
-    val builtA = Similarity.semanticIndexBuildHier(embeddings, 4, 2, 3, Some(false))
-    val builtB = Similarity.semanticIndexBuildHier(embeddings, 4, 2, 3, Some(true))
-    assert(builtB.coarse.map(_.toSeq) === builtA.coarse.map(_.toSeq))
-    assert(builtB.fine === builtA.fine)
-    val batch = embeddings.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    val pa = Similarity.semanticProbeHier(builtA, batch).collect().map(_.toString).toSeq
-    val pb = Similarity.semanticProbeHier(builtB, batch, wideCoarse = Some(true))
-      .collect().map(_.toString).toSeq
-    assert(pb === pa, "wide-coarse probe diverged from the kernel-path probe")
-    // the point of the branch: k1 PAST the kernel budget (auto-routes
-    // to centroids-as-data) trains, assigns, and probes through
-    // O(1)-size coarse plans
-    val k1 = Similarity.assignKernelBudget + 16
-    val wide = Similarity.semanticIndexBuildHier(embeddings, k1, 2, 3)
-    assert(wide.coarse.size === k1)
-    val usedCoarse = wide.assigned
-      .select((col("cluster") / lit(2L)).cast("long")).distinct().count()
-    assert(usedCoarse > Similarity.assignKernelBudget / 2,
-      s"only $usedCoarse coarse cells used — the wide coarse set isn't doing anything")
-    assert(Similarity.semanticProbeHier(wide, batch).count() > 0)
+  test("k1=80 hier index trains, assigns and probes through the per-cell kernel like a driver-side Lloyd") {
+    val (k1, k2) = (80, 2)
+    val built = Similarity.semanticIndexBuildHier(embeddings, k1, k2, 3)
+    assert(built.coarse.map(_.toSeq) === refLloyd(corpusUnits, k1, 3).map(_.toSeq),
+      "coarse centroids diverged from the driver-side Lloyd")
+    val coarseOf = corpusUnits.map { case (id, u) => id -> refTop(u, built.coarse, 1).head._2 }.toMap
+    // every occupied coarse cell trains its own k2-means over its members
+    val fineByCell = built.fine.groupBy(_._1).map { case (c, fs) => c -> fs.sortBy(_._2).map(_._3.toArray) }
+    corpusUnits.groupBy { case (id, _) => coarseOf(id) }.foreach { case (c, members) =>
+      assert(fineByCell(c).map(_.toSeq) === refLloyd(members, k2, 3).map(_.toSeq),
+        s"fine centroids of coarse cell $c diverged from the driver-side Lloyd")
+    }
+    val cells = built.assigned.select(col("vec_id"), col("cluster")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(cells === corpusUnits.map { case (id, u) =>
+      id -> (coarseOf(id) * k2 + refTop(u, fineByCell(coarseOf(id)), 1).head._2) }.toMap,
+      "two-level assignment diverged from the driver-side argmins")
+    assert(coarseOf.values.toSet.size > k1 / 2, s"only ${coarseOf.values.toSet.size} coarse cells used")
+    val probed = Similarity.semanticProbeHier(built, twinBatch).collect()
+    twinBatch.select(col("vec_id")).collect().map(_.getLong(0) - 1000000L).foreach { twin =>
+      val hit = probed.find(r => r.getLong(0) == twin + 1000000L && r.getLong(1) == twin)
+      assert(hit.isDefined, s"re-keyed twin of $twin missing from the hier probe")
+      assert(hit.get.getLong(2) === cells(twin), s"hier probe assignment of $twin diverged")
+    }
   }
 
-  test("ann_ivf_trained wide quantizer is bit-identical to the literal kernels and lifts the nlist cap") {
-    // the wide dispatch (trainAuto + assignCellsAuto + the NEW
-    // assignTopCellsData probe) must reproduce the plan-literal
-    // search exactly — this is what lets ann_ivf_trained_wide share
-    // ann_ivf_trained's full oracle
-    val lit8 = Similarity.annIvfTrained(embeddings, nprobe = 2, wide = Some(false))
-      .collect().map(_.toString).toSeq
-    val wide8 = Similarity.annIvfTrained(embeddings, nprobe = 2, wide = Some(true))
-      .collect().map(_.toString).toSeq
-    assert(wide8 === lit8, "wide IVF quantizer diverged from the literal kernels at nlist=8")
-    assert(wide8.nonEmpty)
-    // past the kernel budget (FAISS-sized nlist) the auto dispatch
-    // must pick the wide side on its own and still match a forced
-    // literal run (80 kernels is safe in a single spec; the cap
-    // cliff is ~400)
-    val nlist = Similarity.assignKernelBudget + 16
-    val auto = Similarity.annIvfTrained(embeddings, nlist = nlist, iters = 1, nprobe = 2)
-      .collect().map(_.toString).toSeq
-    val lit80 = Similarity.annIvfTrained(embeddings, nlist = nlist, iters = 1, nprobe = 2,
-        wide = Some(false))
-      .collect().map(_.toString).toSeq
-    assert(auto === lit80, s"auto(wide) IVF search diverged from forced-literal at nlist=$nlist")
-    assert(auto.nonEmpty)
+  test("nlist=80 kmeans assigns and ann_ivf_trained probes the driver-side top-nprobe cells") {
+    val want = refLloyd(corpusUnits, 80, 1)
+    val units = corpusUnits.toMap
+    val km = Similarity.kmeans(embeddings, k = 80, iters = 1).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(km === units.map { case (id, u) => id -> refTop(u, want, 1).head._2 },
+      "kmeans assignment diverged from the driver-side argmin")
+    // every neighbor sits in one of its query's two nearest cells
+    val ivf = Similarity.annIvfTrained(embeddings, nlist = 80, iters = 1, nprobe = 2).collect()
+    assert(ivf.nonEmpty)
+    ivf.foreach { r =>
+      assert(refTop(units(r.getLong(0)), want, 2).map(_._2).contains(r.getLong(1)),
+        s"query ${r.getLong(0)} returned a neighbor from unprobed cell ${r.getLong(1)}")
+    }
+    // probing every cell is the exact scan, bit for bit
+    val all = Similarity.annIvfTrained(embeddings, nlist = 80, iters = 1, nprobe = 80).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
+    assert(all === exactTopK(5).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet,
+      "nprobe = nlist must recover the exact brute-force result")
+  }
+
+  test("every k-means train, assign and probe returns an empty frame with its schema on an empty corpus") {
+    val none = embeddings.filter(col("vec_id") < 0)
+    def emptyWith(df: DataFrame, cols: String*): Unit = {
+      assert(df.columns.toSeq === cols)
+      assert(df.collect().isEmpty)
+    }
+    emptyWith(Similarity.kmeans(none, k = 4), "vec_id", "cluster", "dist")
+    emptyWith(Similarity.dedupSemantic(none, k = 80), "a", "b", "cluster", "cosine")
+    for (nlist <- Seq(8, 80))
+      emptyWith(Similarity.annIvfTrained(none, nlist = nlist),
+        "query_id", "label", "neighbor_id", "rank", "cosine")
+    emptyWith(Similarity.dedupSemanticHierGrouped(none, k1 = 80), "a", "b", "cluster", "cosine")
   }
 
   test("wide PQ codebooks are bit-identical to the literal kernels and lift recall at FAISS sizes") {
@@ -1318,13 +1360,13 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), normalizeUnits(col("embedding")).as("un"))
       .localCheckpoint(true)
     // bit parity of the whole train/encode path at a size both run
-    val bK = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8, wide = Some(false))
-    val bD = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8, wide = Some(true))
+    val bK = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8, wide = false)
+    val bD = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8, wide = true)
     assert(bD.map(_.map(_.toSeq)) === bK.map(_.map(_.toSeq)),
       "codebooks-as-data trainer diverged from the literal kernels")
-    val cK = Similarity.pqEncode(corpusU, bK, 8, wide = Some(false))
+    val cK = Similarity.pqEncode(corpusU, bK, 8, wide = false)
       .orderBy(col("vec_id")).collect().map(_.toString).toSeq
-    val cD = Similarity.pqEncode(corpusU, bK, 8, wide = Some(true))
+    val cD = Similarity.pqEncode(corpusU, bK, 8, wide = true)
       .orderBy(col("vec_id")).collect().map(_.toString).toSeq
     assert(cD === cK, "codebooks-as-data encode diverged from the literal kernels")
     // FAISS-sized codebooks (auto-wide at m*cb = 512) beat the

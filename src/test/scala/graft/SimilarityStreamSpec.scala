@@ -270,12 +270,11 @@ class SimilarityStreamSpec extends SparkSpec {
     assert(newRows.nonEmpty)
     val dir = java.nio.file.Files.createTempDirectory("graft_semwide_serve").toString
 
-    // k = 96: past the plan-literal kernel budget — only the wide
-    // build/probe path can serve this index at all
+    // k = 96: a wide single-level index (the training corpus spreads)
     def serveOnce(): Seq[String] = {
       val input = MemoryStream[(Long, Array[Float])]
       val served = scala.collection.mutable.ArrayBuffer.empty[String]
-      val q = graft.streaming.SimilarityStream.semanticNearDupServeWideFrozen(
+      val q = graft.streaming.SimilarityStream.semanticNearDupServeFrozen(
         input.toDF().toDF("vec_id", "embedding"), corpus, dir, k = 96) {
         (df, _) => served.synchronized { served ++= df.collect().map(_.toString) }
       }
@@ -284,8 +283,8 @@ class SimilarityStreamSpec extends SparkSpec {
     }
 
     val first = serveOnce()
-    val index = Similarity.semanticIndexBuildWide(corpus, k = 96)
-    val want = Similarity.semanticProbeWide(index, newRows.toDF("vec_id", "embedding"))
+    val index = Similarity.semanticIndexBuild(corpus, k = 96)
+    val want = Similarity.semanticProbe(index, newRows.toDF("vec_id", "embedding"))
       .collect().map(_.toString).toSeq
     assert(first === want, "frozen wide serve must equal the static wide probe bit-for-bit")
     // every re-keyed twin still lands in its trained cell at cosine 1.0
