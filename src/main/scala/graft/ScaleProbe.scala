@@ -331,7 +331,7 @@ object ScaleProbe {
       "ann_pq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_pq_index"
         val (params, n) = ("pq;m=8;cb=8;it=3", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.pqIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.pqMeta) { staging =>
           operators.Similarity.pqIndexSave(operators.Similarity.pqIndexBuild(em), staging,
             params, n)
         }
@@ -345,7 +345,7 @@ object ScaleProbe {
       "ann_sq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sq_index"
         val (params, n) = ("sq8", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.sqIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.sqMeta) { staging =>
           operators.Similarity.sqIndexSave(operators.Similarity.sqIndexBuild(em), staging,
             params, n)
         }
@@ -360,7 +360,7 @@ object ScaleProbe {
       "ann_bq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_bq_index"
         val (params, n) = ("bq;w=32", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.bqIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.bqMeta) { staging =>
           operators.Similarity.bqIndexSave(operators.Similarity.bqIndexBuild(em), staging,
             params, n)
         }
@@ -374,7 +374,7 @@ object ScaleProbe {
       "ann_ivfsq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfsq_index"
         val (params, n) = ("ivfsq;nlist=8;ivfIt=3", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfSqIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfSqMeta) { staging =>
           operators.Similarity.ivfSqIndexSave(operators.Similarity.ivfSqIndexBuild(em),
             staging, params, n)
         }
@@ -385,7 +385,7 @@ object ScaleProbe {
       "ann_ivfpq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_index"
         val (params, n) = ("ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqMeta) { staging =>
           operators.Similarity.ivfPqIndexSave(operators.Similarity.ivfPqIndexBuild(em),
             staging, params, n)
         }
@@ -406,7 +406,7 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_add_ix"
         val params = "ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;probe=append"
         val ok = try {
-          val m = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+          val m = operators.Similarity.ivfPqMeta.read(spark, dir).head()
           m.getAs[Int]("version") == operators.Similarity.ivfPqIndexVersion &&
             m.getAs[String]("params") == params
         } catch { case _: Exception => false }
@@ -427,7 +427,7 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_rm_ix"
         val params = "ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;probe=remove"
         val ok = try {
-          val m = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+          val m = operators.Similarity.ivfPqMeta.read(spark, dir).head()
           m.getAs[Int]("version") == operators.Similarity.ivfPqIndexVersion &&
             m.getAs[String]("params") == params
         } catch { case _: Exception => false }
@@ -470,7 +470,7 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sem_index"
         val kk = 4 * k.toInt
         val (params, n) = (s"sem;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
           operators.Similarity.semanticIndexSave(
             operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
         }
@@ -490,7 +490,7 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semcap_index"
         val kk = math.min(4 * k.toInt, 64)
         val (params, n) = (s"semcap;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
           operators.Similarity.semanticIndexSave(
             operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
         }
@@ -524,7 +524,7 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semwide_index"
         val kk = 4 * k.toInt
         val (params, n) = (s"semwide;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
           operators.Similarity.semanticIndexSave(
             operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
         }
@@ -544,7 +544,7 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semhier_index"
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
         val (params, n) = (s"semhier;k1=$side;k2=$side;it=3;src=${operators.Similarity.sourceStamp(em)}", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.hierIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.hierMeta) { staging =>
           operators.Similarity.semanticIndexSaveHier(
             operators.Similarity.semanticIndexBuildHier(em, side, side), staging, params, n)
         }
@@ -687,7 +687,7 @@ object ScaleProbe {
       "ann_ivfpq_residual_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_res_index"
         val (params, n) = ("ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", em.count())
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqIndexVersion) { staging =>
+        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqMeta) { staging =>
           operators.Similarity.ivfPqIndexSave(
             operators.Similarity.ivfPqResidualIndexBuild(em), staging, params, n)
         }

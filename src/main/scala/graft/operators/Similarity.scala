@@ -4,6 +4,7 @@ import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.plans.HonestCheckpoint._
 
 /** Embedding similarity — near-dup pairs and nearest-neighbor search
@@ -252,7 +253,7 @@ object Similarity {
       .collect().map(_.getSeq[Long](0).toArray).toSeq
     if (centroids.nonEmpty) for (_ <- 1 to iters) {
       val means = centroidMeans(nearestCells(vecs, units, centroids), Seq("cluster"), units)
-        .map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
+        .map { case (key, m) => key.getLong(0).toInt -> m }.toMap
       centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
     }
     centroids
@@ -260,23 +261,24 @@ object Similarity {
 
   /** One Lloyd mean step: the integer half-up mean of `units` per
     * `keys` (sign split, so DIV only ever sees nonnegative operands),
-    * collected as (keys..., centroid) rows. The frame is model-sized
-    * (keys × dim rows) after the first aggregate, so the final fold is
-    * pinned to [[modelAggPartitions]].
+    * as (keys row, centroid) pairs. One aggregate, one shuffle: its
+    * output is model-sized (keys × dim rows of (keys..., dim, m)), so
+    * the driver collects it as is and assembles each centroid in `dim`
+    * order — a second shuffle to fold the rows into arrays would move
+    * the same data and cost two more jobs per step.
     */
   private def centroidMeans(assigned: DataFrame, keys: Seq[String],
-                            units: String): Array[Row] = {
+                            units: String): Seq[(Row, Array[Long])] = {
     val ks = keys.map(col)
+    val nk = keys.size
     assigned.select(ks :+ posexplode(col(units)).as(Seq("dim", "uu")): _*)
       .groupBy(ks :+ col("dim"): _*)
       .agg(sum(col("uu")).as("s"), count(lit(1)).as("n"))
       .select(ks :+ col("dim") :+ when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
         .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"): _*)
-      .repartition(modelAggPartitions, ks: _*)
-      .groupBy(ks: _*)
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("ms"))
-      .select(ks :+ col("ms.m"): _*)
       .collect()
+      .groupBy(r => Row.fromSeq(r.toSeq.take(nk)))
+      .toSeq.map { case (key, rs) => key -> rs.sortBy(_.getInt(nk)).map(_.getLong(nk + 1)) }
   }
 
   /** The one nearest-centroid assign/probe: `df`'s columns plus
@@ -321,19 +323,17 @@ object Similarity {
       .parquet(s"$dir/assigned.parquet")
     index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
       .toDF("cell", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
     // meta LAST = commit marker; last_batch is the streaming-ingest
     // high-water mark (same contract as the IVF-PQ meta): delta dirs
     // with a higher id are UNCOMMITTED and skipped by the loader.
-    Seq((semanticIndexVersion, params, corpusCount, -1L))
-      .toDF("version", "params", "n", "last_batch")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    semanticMeta.write(spark, s"$dir/meta.parquet", semanticIndexVersion, params, corpusCount, -1L)
   }
 
   def semanticIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                         preReadMeta: Option[org.apache.spark.sql.Row] = None): SemanticIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      semanticMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == semanticIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $semanticIndexVersion")
     val cents = spark.read.parquet(s"$dir/centroids.parquet").collect()
@@ -386,7 +386,7 @@ object Similarity {
                           newVectors: DataFrame): Long = {
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = semanticMeta.read(spark, dir).head()
       semanticCommitDelta(spark, dir, meta, newVectors,
         meta.getAs[Long]("last_batch") + 1)
     }
@@ -408,7 +408,7 @@ object Similarity {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = semanticMeta.read(spark, dir).head()
       if (batchId <= meta.getAs[Long]("last_batch")) meta.getAs[Long]("n") // committed replay
       else semanticCommitDelta(spark, dir, meta, batch, batchId)
     }
@@ -422,7 +422,6 @@ object Similarity {
   private def semanticCommitDelta(spark: org.apache.spark.sql.SparkSession,
                                   dir: String, meta: org.apache.spark.sql.Row,
                                   batch: DataFrame, batchId: Long): Long = {
-    import spark.implicits._
     require(meta.getAs[Int]("version") == semanticIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $semanticIndexVersion")
     val cnt = batch.count()
@@ -442,9 +441,8 @@ object Similarity {
     }
     val n = meta.getAs[Long]("n") + cnt
     stagedMetaWrite(spark, dir) { staging =>
-      Seq((semanticIndexVersion, meta.getAs[String]("params"), n, batchId))
-        .toDF("version", "params", "n", "last_batch")
-        .repartition(1).write.mode("overwrite").parquet(staging)
+      semanticMeta.write(spark, staging,
+        semanticIndexVersion, meta.getAs[String]("params"), n, batchId)
     }
     n
   }
@@ -463,7 +461,7 @@ object Similarity {
   def semanticIndexCompact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = semanticMeta.read(spark, dir).head()
       require(meta.getAs[Int]("version") == semanticIndexVersion,
         s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $semanticIndexVersion")
       if (committedDeltaPaths(spark, dir, meta.getAs[Long]("last_batch")).nonEmpty) {
@@ -472,12 +470,9 @@ object Similarity {
           merged.write.mode("overwrite").partitionBy("cluster")
             .parquet(s"$staging/assigned.parquet")
           spark.read.parquet(s"$dir/centroids.parquet")
-            .repartition(1).write.mode("overwrite").parquet(s"$staging/centroids.parquet")
-          import spark.implicits._
-          Seq((semanticIndexVersion, meta.getAs[String]("params"),
-              meta.getAs[Long]("n"), meta.getAs[Long]("last_batch")))
-            .toDF("version", "params", "n", "last_batch")
-            .repartition(1).write.mode("overwrite").parquet(s"$staging/meta.parquet")
+            .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids.parquet")
+          semanticMeta.write(spark, s"$staging/meta.parquet", semanticIndexVersion,
+            meta.getAs[String]("params"), meta.getAs[Long]("n"), meta.getAs[Long]("last_batch"))
         }
       }
     }
@@ -506,7 +501,7 @@ object Similarity {
       .agg(count(lit(1)), count(when(col("vec_id") % 10 === 0, 1))).collect()(0)
     val n = cnts.getLong(0)
     val nFresh = cnts.getLong(1)
-    val meta = buildIfAbsent(spark, indexDir, params, n, semanticIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, semanticMeta) { staging =>
       semanticIndexSave(semanticIndexBuild(base, k, iters), staging, params, n - nFresh)
       semanticIndexAppend(spark, staging, fresh)
     }
@@ -527,7 +522,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"sem;k=$k;it=$iters;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, semanticIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, semanticMeta) { staging =>
       semanticIndexSave(semanticIndexBuild(embeddings, k, iters), staging, params, n)
     }
     withinClusterPairs(semanticIndexLoad(spark, indexDir, Some(meta)).assigned,
@@ -618,8 +613,8 @@ object Similarity {
     * per-cell kernel ([[graft.plans.ArgminL2.argminUnitsPerCell]])
     * scans only the row's own coarse cell's centroids, and the mean
     * step is [[centroidMeans]] keyed by (coarse, fine). Job count per
-    * fine iteration: 1, independent of k₁. Each cell's init is its
-    * first ≤ k₂ vectors in (md5(vec_id), vec_id) order, all cells in
+    * fine iteration: the mean step's two, independent of k₁. Each
+    * cell's init is its first ≤ k₂ vectors in (md5(vec_id), vec_id) order, all cells in
     * one window pass, and an empty fine cluster keeps its previous
     * centroid — the flat trainer's rules, cell by cell, which is what
     * dedup_semantic_hier's oracle replays.
@@ -648,7 +643,7 @@ object Similarity {
     def assign = vecs.withColumn("fine", fineCluster(coarseCentroids.size, cents))
     for (_ <- 1 to iters) {
       val means = centroidMeans(assign, Seq("coarse", "fine"), "u")
-        .map(r => ((r.getLong(0), r.getLong(1)), r.getSeq[Long](2))).toMap
+        .map { case (key, m) => (key.getLong(0), key.getLong(1)) -> m.toSeq }.toMap
       cents = cents.map { case (c, f, prev) => (c, f, means.getOrElse((c, f), prev)) }
     }
     val assigned = assign
@@ -724,18 +719,16 @@ object Similarity {
       .parquet(s"$dir/assigned.parquet")
     index.coarse.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
       .toDF("cell", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
     index.fine.toDF("coarse", "fine", "cu")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/fine_centroids.parquet")
-    Seq((hierIndexVersion, index.k2, params, corpusCount))
-      .toDF("version", "k2", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/fine_centroids.parquet")
+    hierMeta.write(spark, s"$dir/meta.parquet", hierIndexVersion, index.k2, params, corpusCount)
   }
 
   def semanticIndexLoadHier(spark: org.apache.spark.sql.SparkSession, dir: String,
                             preReadMeta: Option[org.apache.spark.sql.Row] = None): HierSemanticIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      hierMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == hierIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $hierIndexVersion")
     val coarse = spark.read.parquet(s"$dir/centroids.parquet").collect()
@@ -758,7 +751,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, hierIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, hierMeta) { staging =>
       semanticIndexSaveHier(semanticIndexBuildHier(embeddings, k1, k2, iters),
         staging, params, n)
     }
@@ -888,7 +881,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"rangeivf;nlist=$nlist;ivfIt=$ivfIters;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, semanticIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, semanticMeta) { staging =>
       semanticIndexSave(semanticIndexBuild(embeddings, nlist, ivfIters), staging, params, n)
     }
     val index = semanticIndexLoad(spark, indexDir, Some(meta))
@@ -985,15 +978,6 @@ object Similarity {
     */
   private def units(e: Column): Column =
     graft.plans.IntegerUnits.quantizeUnits(e)
-
-  /** Partition count for MODEL-PARAMETER-sized aggregation tails
-    * (k·dim / k₁·k₂·dim rows): small and fixed — these frames are
-    * bounded by the model, not the corpus, so inheriting the
-    * corpus-scale spark.sql.shuffle.partitions only buys scheduler
-    * overhead per Lloyd iteration (measured 3.07× at p=2048 in the
-    * round-12 partition sweep).
-    */
-  private val modelAggPartitions = 8
 
   /** FULL IVF search: the coarse quantizer is the TRAINED k-means
     * model (vs [[annIvf]], which uses the pre-given label column as
@@ -1376,8 +1360,11 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** OPQ index layout version ([[opqIndexSave]]). */
+  /** OPQ index layout version ([[opqIndexSave]]) and its meta table. */
   private[graft] val opqIndexVersion = 1
+  private[graft] val opqMeta = IndexMeta(opqIndexVersion,
+    "m" -> IntegerType, "refine_iters" -> IntegerType, "version" -> IntegerType,
+    "params" -> StringType, "n" -> LongType)
 
   /** Persist a trained [[OpqIndex]]: codes + codebooks like
     * [[pqIndexSave]], plus the rotation model as one small table —
@@ -1396,17 +1383,16 @@ object Similarity {
       (units, code) <- subCbs.zipWithIndex
     } yield (sub, code, units.toSeq)
     cbRows.toDF("subspace", "code", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
     val rotRows =
       index.signs.zipWithIndex.map { case (s, j) => (0L, j.toLong, s, 0L) } ++
         index.perms.zipWithIndex.flatMap { case ((perm, psign), t) =>
           perm.indices.map(r => ((t + 1).toLong, r.toLong, perm(r).toLong, psign(r)))
         }
     rotRows.toDF("step", "idx", "a", "b")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/rotation.parquet")
-    Seq((index.m, index.perms.size, opqIndexVersion, params, corpusCount))
-      .toDF("m", "refine_iters", "version", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation.parquet")
+    opqMeta.write(spark, s"$dir/meta.parquet",
+      index.m, index.perms.size, opqIndexVersion, params, corpusCount)
   }
 
   /** Load a persisted OPQ index and re-bind it to its corpus. The
@@ -1419,7 +1405,7 @@ object Similarity {
                    corpus: DataFrame,
                    preReadMeta: Option[org.apache.spark.sql.Row] = None): OpqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      opqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == opqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $opqIndexVersion")
     val m = meta.getAs[Int]("m")
@@ -1452,7 +1438,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"opq;m=$m;cb=$codebookSize;it=$iters;ref=$refineIters;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, opqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, opqMeta) { staging =>
       opqIndexSave(opqIndexBuild(embeddings, m, codebookSize, iters, refineIters),
         staging, params, n)
     }
@@ -1478,12 +1464,10 @@ object Similarity {
       (units, code) <- subCbs.zipWithIndex
     } yield (sub, code, units.toSeq)
     cbRows.toDF("subspace", "code", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
     // meta LAST: its _SUCCESS is the whole-index commit marker.
     // params/n are the build fingerprint frozenIndexComplete checks.
-    Seq((index.m, pqIndexVersion, params, corpusCount))
-      .toDF("m", "version", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    pqMeta.write(spark, s"$dir/meta.parquet", index.m, pqIndexVersion, params, corpusCount)
   }
 
   /** Load a persisted PQ index and re-bind it to its corpus table.
@@ -1496,7 +1480,7 @@ object Similarity {
                   corpus: DataFrame,
                   preReadMeta: Option[org.apache.spark.sql.Row] = None): PqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      pqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == pqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $pqIndexVersion")
     val m = meta.getAs[Int]("m")
@@ -1530,7 +1514,7 @@ object Similarity {
     // from parquet footers — no data scan)
     val params = s"pq;m=$m;cb=$codebookSize;it=$iters;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, pqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, pqMeta) { staging =>
       pqIndexSave(pqIndexBuild(embeddings, m, codebookSize, iters), staging, params, n)
     }
     val index = pqIndexLoad(spark, indexDir, embeddings, Some(meta))
@@ -1618,17 +1602,15 @@ object Similarity {
     index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
     index.mins.indices.map(d => (d, index.mins(d), index.spans(d)))
       .toDF("dim", "vmin", "span")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/bounds.parquet")
-    Seq((sqIndexVersion, params, corpusCount))
-      .toDF("version", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bounds.parquet")
+    sqMeta.write(spark, s"$dir/meta.parquet", sqIndexVersion, params, corpusCount)
   }
 
   def sqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                   corpus: DataFrame,
                   preReadMeta: Option[org.apache.spark.sql.Row] = None): SqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      sqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == sqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $sqIndexVersion")
     val b = spark.read.parquet(s"$dir/bounds.parquet").collect()
@@ -1647,7 +1629,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"sq8;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, sqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, sqMeta) { staging =>
       sqIndexSave(sqIndexBuild(embeddings), staging, params, n)
     }
     sqSearch(sqIndexLoad(spark, indexDir, embeddings, Some(meta)),
@@ -1740,20 +1722,18 @@ object Similarity {
     index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
     index.mins.indices.map(d => (d, index.mins(d), index.spans(d)))
       .toDF("dim", "vmin", "span")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/bounds.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bounds.parquet")
     index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
       .toDF("cell", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    Seq((ivfSqIndexVersion, params, corpusCount))
-      .toDF("version", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    ivfSqMeta.write(spark, s"$dir/meta.parquet", ivfSqIndexVersion, params, corpusCount)
   }
 
   def ivfSqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                      corpus: DataFrame,
                      preReadMeta: Option[org.apache.spark.sql.Row] = None): IvfSqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      ivfSqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == ivfSqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfSqIndexVersion")
     val b = spark.read.parquet(s"$dir/bounds.parquet").collect()
@@ -1775,7 +1755,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"ivfsq;nlist=8;ivfIt=3;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfSqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, ivfSqMeta) { staging =>
       ivfSqIndexSave(ivfSqIndexBuild(embeddings), staging, params, n)
     }
     ivfSqSearch(ivfSqIndexLoad(spark, indexDir, embeddings, Some(meta)),
@@ -1847,18 +1827,15 @@ object Similarity {
   def bqIndexSave(index: BqIndex, dir: String, params: String = "",
                   corpusCount: Long = -1L): Unit = {
     val spark = index.sigs.sparkSession
-    import spark.implicits._
     index.sigs.write.mode("overwrite").parquet(s"$dir/sigs.parquet")
-    Seq((bqIndexVersion, params, corpusCount))
-      .toDF("version", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    bqMeta.write(spark, s"$dir/meta.parquet", bqIndexVersion, params, corpusCount)
   }
 
   def bqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                   corpus: DataFrame,
                   preReadMeta: Option[org.apache.spark.sql.Row] = None): BqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      bqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == bqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $bqIndexVersion")
     BqIndex(spark.read.parquet(s"$dir/sigs.parquet"),
@@ -1874,7 +1851,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"bq;w=32;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, bqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, bqMeta) { staging =>
       bqIndexSave(bqIndexBuild(embeddings), staging, params, n)
     }
     bqSearch(bqIndexLoad(spark, indexDir, embeddings, Some(meta)),
@@ -2036,17 +2013,15 @@ object Similarity {
     index.sigs.write.mode("overwrite").parquet(s"$dir/sigs.parquet")
     index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
       .toDF("cell", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    Seq((ivfBqIndexVersion, params, corpusCount))
-      .toDF("version", "params", "n")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    ivfBqMeta.write(spark, s"$dir/meta.parquet", ivfBqIndexVersion, params, corpusCount)
   }
 
   def ivfBqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                      corpus: DataFrame,
                      preReadMeta: Option[org.apache.spark.sql.Row] = None): IvfBqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      ivfBqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == ivfBqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfBqIndexVersion")
     val cents = spark.read.parquet(s"$dir/centroids.parquet").collect()
@@ -2064,11 +2039,32 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"ivfbq;nlist=8;ivfIt=3;w=32;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfBqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, ivfBqMeta) { staging =>
       ivfBqIndexSave(ivfBqIndexBuild(embeddings), staging, params, n)
     }
     ivfBqSearch(ivfBqIndexLoad(spark, indexDir, embeddings, Some(meta)),
       defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
+  }
+
+  /** One frozen-index kind's one-row meta table: its layout version
+    * and the schema its saver writes (every column nullable, as Spark
+    * reads any parquet file back). Declaring the schema lets every
+    * reader skip parquet schema inference — a footer-reading job per
+    * read — for a file graft wrote itself.
+    */
+  private[graft] final case class IndexMeta(version: Int, schema: StructType) {
+    /** Write the one meta row (`values` in schema order) as one file. */
+    def write(spark: org.apache.spark.sql.SparkSession, path: String, values: Any*): Unit =
+      spark.createDataFrame(java.util.List.of(Row(values: _*)), schema)
+        .coalesce(1).write.mode("overwrite").parquet(path)
+
+    /** `<dir>/meta.parquet` with the declared schema. */
+    def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+      spark.read.schema(schema).parquet(s"$dir/meta.parquet")
+  }
+  private[graft] object IndexMeta {
+    def apply(version: Int, fields: (String, DataType)*): IndexMeta =
+      IndexMeta(version, StructType(fields.map { case (name, t) => StructField(name, t) }))
   }
 
   /** Frozen-index layout versions, persisted in every index's meta
@@ -2093,6 +2089,28 @@ object Similarity {
   private[graft] val ivfBqIndexVersion = 5
   private[graft] val ivfPqIndexVersion = 5
 
+  /** Each family's meta table, declared once beside its version: the
+    * saver writes the row with this schema and every reader reads it
+    * back with it (see [[IndexMeta]]).
+    */
+  private[graft] val semanticMeta = IndexMeta(semanticIndexVersion,
+    "version" -> IntegerType, "params" -> StringType, "n" -> LongType, "last_batch" -> LongType)
+  private[graft] val hierMeta = IndexMeta(hierIndexVersion,
+    "version" -> IntegerType, "k2" -> IntegerType, "params" -> StringType, "n" -> LongType)
+  private[graft] val pqMeta = IndexMeta(pqIndexVersion,
+    "m" -> IntegerType, "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
+  private[graft] val sqMeta = IndexMeta(sqIndexVersion,
+    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
+  private[graft] val bqMeta = IndexMeta(bqIndexVersion,
+    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
+  private[graft] val ivfSqMeta = IndexMeta(ivfSqIndexVersion,
+    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
+  private[graft] val ivfBqMeta = IndexMeta(ivfBqIndexVersion,
+    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
+  private[graft] val ivfPqMeta = IndexMeta(ivfPqIndexVersion,
+    "m" -> IntegerType, "residual" -> BooleanType, "version" -> IntegerType,
+    "params" -> StringType, "n" -> LongType, "last_batch" -> LongType)
+
   /** On-disk completeness check for a frozen index dir. The meta
     * table is written LAST in every save, so its `_SUCCESS` marker
     * implies the codes/codebooks/centroids tables all committed —
@@ -2112,8 +2130,8 @@ object Similarity {
     */
   private[graft] def frozenIndexComplete(spark: org.apache.spark.sql.SparkSession,
                                          dir: String, params: String, corpusCount: Long,
-                                         version: Int): Boolean =
-    frozenIndexMeta(spark, dir, params, corpusCount, version).isDefined
+                                         kind: IndexMeta): Boolean =
+    frozenIndexMeta(spark, dir, params, corpusCount, kind).isDefined
 
   /** Zero-scan content stamp of a frame's file-backed source: an MD5
     * over the sorted (path, byte length, modification time) of its
@@ -2144,21 +2162,31 @@ object Similarity {
     * complete, matching index dir, or None if the dir is missing, a
     * partial save (meta is written LAST — no `_SUCCESS`, no index),
     * a pre-version layout, or a fingerprint/corpus-count mismatch.
-    * Callers thread the returned row into the load so meta.parquet
-    * is read exactly once per serve (it carries m + the residual
-    * flag the loaders need).
+    * The row is read with the kind's declared schema (no inference
+    * job), so a column the file lacks reads as null: a meta with a
+    * null column — a missing `version`, another kind's columns — or
+    * with a column of another type reads as absent too. Callers
+    * thread the returned row into the load so meta.parquet is read
+    * exactly once per serve (it carries m + the residual flag the
+    * loaders need).
     */
   private[graft] def frozenIndexMeta(spark: org.apache.spark.sql.SparkSession,
                                      dir: String, params: String, corpusCount: Long,
-                                     version: Int): Option[org.apache.spark.sql.Row] = {
+                                     kind: IndexMeta): Option[org.apache.spark.sql.Row] = {
     val marker = new org.apache.hadoop.fs.Path(s"$dir/meta.parquet/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) None
     else {
-      val meta = spark.read.parquet(s"$dir/meta.parquet")
-      if (!Seq("version", "params", "n").forall(meta.columns.contains)) None
-      else meta.collect().headOption.filter { r =>
-        r.getAs[Int]("version") == version &&
+      // a column of another type than the declared one: the parquet
+      // reader refuses the file
+      val rows =
+        try kind.read(spark, dir).collect()
+        catch {
+          case e: org.apache.spark.SparkException
+              if Option(e.getCondition).exists(_.startsWith("FAILED_READ_FILE")) => Array.empty[Row]
+        }
+      rows.headOption.filter { r =>
+        !r.anyNull && r.getAs[Int]("version") == kind.version &&
           r.getAs[String]("params") == params && r.getAs[Long]("n") == corpusCount
       }
     }
@@ -2177,11 +2205,11 @@ object Similarity {
     * exactly once.
     */
   private[graft] def buildIfAbsent(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                   params: String, corpusCount: Long, version: Int)
+                                   params: String, corpusCount: Long, kind: IndexMeta)
                                   (build: String => Unit): org.apache.spark.sql.Row = {
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      frozenIndexMeta(spark, dir, params, corpusCount, version).getOrElse {
+      frozenIndexMeta(spark, dir, params, corpusCount, kind).getOrElse {
         val dest = new org.apache.hadoop.fs.Path(dir)
         val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val staging = new org.apache.hadoop.fs.Path(
@@ -2193,11 +2221,11 @@ object Similarity {
         // matching index appeared, serve it and drop our staging.
         if (fs.exists(dest)) fs.delete(dest, true)
         if (!fs.rename(staging, dest)) {
-          val theirs = frozenIndexMeta(spark, dir, params, corpusCount, version)
+          val theirs = frozenIndexMeta(spark, dir, params, corpusCount, kind)
           fs.delete(staging, true)
           theirs.getOrElse(sys.error(
             s"failed to publish index to $dir and no complete index is present"))
-        } else frozenIndexMeta(spark, dir, params, corpusCount, version).getOrElse(
+        } else frozenIndexMeta(spark, dir, params, corpusCount, kind).getOrElse(
           sys.error(s"index published to $dir failed its own completeness check"))
       }
     }
@@ -2323,10 +2351,13 @@ object Similarity {
   }
 
   /** Cell centroid as a label-dispatched plan literal (nlist × dim
-    * longs — bounded model parameters, like the codebooks).
+    * longs — bounded model parameters, like the codebooks). No
+    * centroids (an empty training corpus) is a null: no row has a
+    * cell to ask for.
     */
   private def centroidOf(centroids: Seq[Array[Long]], label: Column): Column =
-    centroids.indices.init.foldRight(lit(centroids.last)) { (i, rest) =>
+    if (centroids.isEmpty) lit(null).cast("array<long>")
+    else centroids.indices.init.foldRight(lit(centroids.last)) { (i, rest) =>
       when(label === i, lit(centroids(i))).otherwise(rest)
     }
 
@@ -2409,7 +2440,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqResidualIndexBuild defaults
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
       ivfPqIndexSave(ivfPqResidualIndexBuild(embeddings), staging, params, n)
     }
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
@@ -2434,10 +2465,10 @@ object Similarity {
       (units, code) <- subCbs.zipWithIndex
     } yield (sub, code, units.toSeq)
     cbRows.toDF("subspace", "code", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
     index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
       .toDF("cell", "units")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
     // meta LAST: its _SUCCESS is the whole-index commit marker. The
     // residual flag persists WITH the index so a loader can never
     // decode residual codes through the raw-vector search (or vice
@@ -2446,9 +2477,8 @@ object Similarity {
     // streaming-ingest high-water mark ([[ivfPqIndexStreamAppend]]) —
     // delta dirs with a higher id are UNCOMMITTED and ignored by the
     // loader.
-    Seq((index.m, index.residual, ivfPqIndexVersion, params, corpusCount, lastBatch))
-      .toDF("m", "residual", "version", "params", "n", "last_batch")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    ivfPqMeta.write(spark, s"$dir/meta.parquet",
+      index.m, index.residual, ivfPqIndexVersion, params, corpusCount, lastBatch)
   }
 
   /** The codes paths a loader may read: the base `codes.parquet`
@@ -2467,20 +2497,35 @@ object Similarity {
                      corpus: DataFrame,
                      preReadMeta: Option[org.apache.spark.sql.Row] = None): IvfPqIndex = {
     val meta = preReadMeta.getOrElse(
-      spark.read.parquet(s"$dir/meta.parquet").collect()(0))
+      ivfPqMeta.read(spark, dir).head())
     require(meta.getAs[Int]("version") == ivfPqIndexVersion,
       s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
-    val cbs = spark.read.parquet(s"$dir/codebooks.parquet").collect()
+    val cbs = spark.read.schema(codebooksSchema).parquet(s"$dir/codebooks.parquet").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
     val codebooks = cbs.groupBy(_._1).toIndexedSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toIndexedSeq }
-    val centroids = spark.read.parquet(s"$dir/centroids.parquet").collect()
+    val centroids = spark.read.schema(centroidsSchema).parquet(s"$dir/centroids.parquet")
+      .collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1).map(_._2).toSeq
     val codePaths = committedCodesPaths(spark, dir, meta.getAs[Long]("last_batch"))
-    IvfPqIndex(codebooks, centroids, spark.read.parquet(codePaths: _*),
+    IvfPqIndex(codebooks, centroids,
+      spark.read.schema(ivfPqCodesSchema(corpus)).parquet(codePaths: _*),
       corpus.select(col("vec_id"), col("embedding")), meta.getAs[Int]("m"),
       residual = meta.getAs[Boolean]("residual"))
   }
+
+  /** The model and codes tables [[ivfPqIndexSave]] writes, as Spark
+    * reads them back: (subspace, code, units) codebook rows, (cell,
+    * units) centroid rows, and (vec_id, codes, label) code rows whose
+    * `vec_id` has the corpus's type.
+    */
+  private[graft] val codebooksSchema = StructType(Seq(StructField("subspace", IntegerType),
+    StructField("code", IntegerType), StructField("units", ArrayType(LongType))))
+  private[graft] val centroidsSchema = StructType(Seq(StructField("cell", IntegerType),
+    StructField("units", ArrayType(LongType))))
+  private[graft] def ivfPqCodesSchema(corpus: DataFrame): StructType =
+    StructType(Seq(StructField("vec_id", corpus.schema("vec_id").dataType),
+      StructField("codes", ArrayType(IntegerType)), StructField("label", LongType)))
 
   /** Encode new vectors under a FROZEN model — the shared `add()`
     * math for both IVF-PQ layouts: cell assignment with the frozen
@@ -2551,7 +2596,7 @@ object Similarity {
                        newVectors: DataFrame): Long = {
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = ivfPqMeta.read(spark, dir).head()
       require(meta.getAs[Int]("version") == ivfPqIndexVersion,
         s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
       val index = ivfPqIndexLoad(spark, dir,
@@ -2573,12 +2618,9 @@ object Similarity {
   private def rewriteMeta(spark: org.apache.spark.sql.SparkSession, dir: String,
                           meta: org.apache.spark.sql.Row, n: Long,
                           lastBatch: Long): Unit = {
-    import spark.implicits._
     stagedMetaWrite(spark, dir) { staging =>
-      Seq((meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"), ivfPqIndexVersion,
-          meta.getAs[String]("params"), n, lastBatch))
-        .toDF("m", "residual", "version", "params", "n", "last_batch")
-        .repartition(1).write.mode("overwrite").parquet(staging)
+      ivfPqMeta.write(spark, staging, meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"),
+        ivfPqIndexVersion, meta.getAs[String]("params"), n, lastBatch)
     }
   }
 
@@ -2634,7 +2676,7 @@ object Similarity {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = ivfPqMeta.read(spark, dir).head()
       require(meta.getAs[Int]("version") == ivfPqIndexVersion,
         s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
       val lastBatch = meta.getAs[Long]("last_batch")
@@ -2695,7 +2737,7 @@ object Similarity {
                        removeIds: DataFrame): Long = {
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = ivfPqMeta.read(spark, dir).head()
       require(meta.getAs[Int]("version") == ivfPqIndexVersion,
         s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
       val paths = committedCodesPaths(spark, dir, meta.getAs[Long]("last_batch"))
@@ -2724,7 +2766,7 @@ object Similarity {
   def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").collect()(0)
+      val meta = ivfPqMeta.read(spark, dir).head()
       require(meta.getAs[Int]("version") == ivfPqIndexVersion,
         s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
       val paths = committedCodesPaths(spark, dir, meta.getAs[Long]("last_batch"))
@@ -2748,7 +2790,7 @@ object Similarity {
                               src: String, staging: String): Unit =
     Seq("codebooks.parquet", "centroids.parquet").foreach { t =>
       spark.read.parquet(s"$src/$t")
-        .repartition(1).write.mode("overwrite").parquet(s"$staging/$t")
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/$t")
     }
 
   /** The frozen lifecycle WITH corpus growth — the sequence
@@ -2771,7 +2813,7 @@ object Similarity {
     val fresh = embeddings.filter(col("vec_id") % 10 === 0)
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;base=mod10;src=${sourceStamp(embeddings)}"
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
       ivfPqIndexSave(ivfPqIndexBuild(base), staging, params, n - fresh.count())
       ivfPqIndexAppend(spark, staging, fresh)
     }
@@ -2797,7 +2839,7 @@ object Similarity {
     val tombstones = embeddings.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;rm=mod5eq2;src=${sourceStamp(embeddings)}"
     val nAll = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, nAll - tombstones.count(), ivfPqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, nAll - tombstones.count(), ivfPqMeta) { staging =>
       ivfPqIndexSave(ivfPqIndexBuild(embeddings), staging, params, nAll)
       ivfPqIndexRemove(spark, staging, tombstones)
     }
@@ -2815,7 +2857,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqIndexBuild defaults
     val n = embeddings.count()
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqIndexVersion) { staging =>
+    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
       ivfPqIndexSave(ivfPqIndexBuild(embeddings), staging, params, n)
     }
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
@@ -2927,7 +2969,11 @@ object Similarity {
     val initRows = corpusU.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(codebookSize).collect()
       .map(_.getSeq[Long](1).toArray)
-    require(initRows.nonEmpty, "annPq needs a non-empty corpus")
+    // an empty corpus has nothing to encode: all-zero codebooks of the
+    // right shape keep every encode and search an empty frame of its
+    // usual schema
+    if (initRows.isEmpty)
+      return IndexedSeq.fill(m, codebookSize)(new Array[Long](dsub))
     // a corpus smaller than the codebook pads by reuse: duplicate
     // centroids never win the lowest-index argmin, so they are
     // permanently-empty cells rather than a driver crash
@@ -2953,7 +2999,7 @@ object Similarity {
           .select(posexplode(array((0 until m).map(j => col(s"a$j")): _*)).as(Seq("j", "a")))
           .select(col("j"), col("a.cl").as("cl"), col("a.sv").as("sv")),
           Seq("j", "cl"), "sv")
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toArray).toMap
+        .map { case (key, mean) => (key.getInt(0), key.getInt(1)) -> mean }.toMap
       // empty cells keep their previous centroid (like lloyd())
       books = IndexedSeq.tabulate(m, codebookSize)((j, c) => means.getOrElse((j, c), books(j)(c)))
     }

@@ -29,6 +29,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * per-element `round`) evaluated one BigDecimal round per component
   * PER CENTROID and dispatched two lambdas per element outside
   * whole-stage codegen — the round-7 ann_kmeans 5.6× regression.
+  *
+  * The exact-decimal kernels ([[NormalizeUnitsI64]], [[DecDotF32]])
+  * round the DECIMAL form of each component instead (`dec8`, see
+  * [[NormalizeUnitsI64.dec8Unscaled]]). The argument above does not
+  * carry over to them, so `dec8` keeps a guard band around every
+  * half-way point and hands those components to `BigDecimal`.
   */
 
 /** `array<float>` → `array<long>`: quantize every component to 1e-8
@@ -176,9 +182,10 @@ case class L2UnitsI64(left: Expression, right: Expression)
   * budget. Equality argument, step by step:
   *  - `dec8(x)` is `round(double(x), 8)` (Spark: `BigDecimal.valueOf`
   *    + `setScale(8, HALF_UP)`) cast losslessly to DECIMAL(14,8) —
-  *    here the same `valueOf/setScale` call, keeping the unscaled
-  *    long `n` directly (|x| < 1 → n < 1e8; the ≤15-significant-digit
-  *    round-trip makes unscaled-of-double-of-n·1e-8 = n).
+  *    here [[NormalizeUnitsI64.dec8Unscaled]], which returns the
+  *    unscaled long `n` of that same rounding directly (|x| < 1 →
+  *    n < 1e8; the ≤15-significant-digit round-trip makes
+  *    unscaled-of-double-of-n·1e-8 = n).
   *  - Σ dec8(x)² in DECIMAL(30,16) ≡ Σ n² · 1e-16 with Σ n² exact in
   *    Long (64 · (6e7)² < 2.4e17; addExact is the loud guard).
   *  - Decimal→double cast ≡ `BigDecimal.valueOf(Σn², 16).doubleValue()`
@@ -253,10 +260,50 @@ case class NormalizeUnitsI64(child: Expression) extends UnaryExpression {
 }
 
 object NormalizeUnitsI64 {
-  /** Unscaled long of `round(double(x), 8)` as DECIMAL(_, 8) — the
-    * exact `dec8` digits (see class doc).
+  /** |x·1e8| bound of the [[dec8Unscaled]] fast path. */
+  private val FastBound = 1.0e12
+
+  /** Half-width of the band around a half-way point in which
+    * [[dec8Unscaled]] defers to `BigDecimal`.
     */
-  def dec8Unscaled(x: Float): Long =
+  private val TieBand = 1.0e-3
+
+  /** Unscaled long of `round(double(x), 8)` as DECIMAL(_, 8) — the
+    * exact `dec8` digits (see class doc): the half-up (away from zero)
+    * rounding of `D·1e8`, where `D` is the decimal `Double.toString`
+    * gives for `d = double(x)`, since that is what `BigDecimal.valueOf`
+    * reads. `D` is not the binary value of `d`, so the
+    * [[QuantizeUnitsI64]] argument does not apply; the fast path rounds
+    * `v = d·1e8` instead and keeps a guard band.
+    *
+    * Error bound. `D` parses back to `d`, so |D − d| ≤ ulp(d)/2, and the
+    * product is one correctly rounded op, so |v − d·1e8| ≤ ulp(v)/2.
+    * Below the bound |v| < 1e12 we have |d| < 1e4, ulp(d) ≤ 2^-39 and
+    * ulp(v) ≤ 2^-13, so |v − D·1e8| ≤ 1e8·2^-40 + 2^-14 < 1.6e-4. Half-up
+    * rounding is constant on each open interval (n − ½, n + ½); when the
+    * exact fraction of v lies more than [[TieBand]] = 1e-3 from ½, v and
+    * D·1e8 sit in the same interval and round to the same integer,
+    * which is `t` or `t ± 1` from `t = trunc(v)`. Inside the band (every
+    * exact decimal tie lands there), past the bound, or for NaN/±Inf,
+    * the `BigDecimal` reference runs, so those inputs round or throw
+    * exactly as it does.
+    */
+  def dec8Unscaled(x: Float): Long = {
+    val v = x.toDouble * 1.0e8
+    if (math.abs(v) < FastBound) {
+      val t = v.toLong
+      val f = v - t.toDouble
+      val a = math.abs(f)
+      if (a < 0.5 - TieBand) t
+      else if (a > 0.5 + TieBand) { if (f > 0.0) t + 1 else t - 1 }
+      else dec8Reference(x)
+    } else dec8Reference(x)
+  }
+
+  /** `dec8` through `BigDecimal` — Spark's own `round(double(x), 8)`;
+    * the fallback of [[dec8Unscaled]] and its spec reference.
+    */
+  private[graft] def dec8Reference(x: Float): Long =
     java.math.BigDecimal.valueOf(x.toDouble)
       .setScale(8, java.math.RoundingMode.HALF_UP)
       .unscaledValue().longValueExact()
@@ -267,11 +314,11 @@ object NormalizeUnitsI64 {
   * [[graft.functions.VectorFunctions.decDot]]'s HOF fold
   * (`Σ dec8(aᵢ)·dec8(bᵢ)` accumulated in DECIMAL(30,16)), via the
   * same unscaled-long argument as [[NormalizeUnitsI64]]: each dec8
-  * is an integer n·1e-8 with |n| < 1e8 (one `BigDecimal.valueOf` +
-  * `setScale(8, HALF_UP)` per element — Spark's own `round`), the
-  * product grid sums exactly in Long (64·(6e7)² < 2.4e17, addExact
-  * as the loud guard), and the result is the scale-16 decimal of the
-  * sum. The interpreted fold ran at ~15 µs/row and was re-evaluated
+  * is an integer n·1e-8 with |n| < 1e8 (Spark's own `round`, computed
+  * by [[NormalizeUnitsI64.dec8Unscaled]] without `BigDecimal` outside
+  * its guard band), the product grid sums exactly in Long
+  * (64·(6e7)² < 2.4e17, addExact as the loud guard), and the result
+  * is the scale-16 decimal of the sum. The interpreted fold ran at ~15 µs/row and was re-evaluated
   * by WindowGroupLimit prepasses in every exact re-rank — the
   * dominant cost of ann_lsh's ranking stage. Mismatched lengths
   * throw, like [[L2UnitsI64]].

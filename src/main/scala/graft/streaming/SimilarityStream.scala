@@ -61,7 +61,7 @@ object SimilarityStream {
     val spark = corpus.sparkSession
     val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${Similarity.sourceStamp(corpus)}" // ivfPqResidualIndexBuild defaults
     val n = corpus.count()
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.ivfPqIndexVersion) { staging =>
+    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.ivfPqMeta) { staging =>
       Similarity.ivfPqIndexSave(Similarity.ivfPqResidualIndexBuild(corpus), staging,
         params, n)
     }
@@ -181,7 +181,7 @@ object SimilarityStream {
     val spark = corpus.sparkSession
     val params = s"sem;k=$k;it=$iters;src=${Similarity.sourceStamp(corpus)}"
     val n = corpus.count()
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.semanticIndexVersion) { staging =>
+    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.semanticMeta) { staging =>
       Similarity.semanticIndexSave(Similarity.semanticIndexBuild(corpus, k, iters),
         staging, params, n)
     }
@@ -210,7 +210,7 @@ object SimilarityStream {
     val spark = corpus.sparkSession
     val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${Similarity.sourceStamp(corpus)}"
     val n = corpus.count()
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.hierIndexVersion) { staging =>
+    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.hierMeta) { staging =>
       Similarity.semanticIndexSaveHier(
         Similarity.semanticIndexBuildHier(corpus, k1, k2, iters), staging, params, n)
     }

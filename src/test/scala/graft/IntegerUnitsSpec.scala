@@ -63,6 +63,54 @@ class IntegerUnitsSpec extends SparkSpec {
     assert(diff.count() === 0L)
   }
 
+  /** Floats whose fast `dec8` differs from the `BigDecimal` reference,
+    * over `n` inputs spread across the cores.
+    */
+  private def dec8Mismatches(n: Int)(x: Int => Float): Seq[Float] = {
+    import scala.jdk.CollectionConverters._
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[Float]()
+    java.util.stream.IntStream.range(0, n).parallel().forEach { i =>
+      val f = x(i)
+      if (graft.plans.NormalizeUnitsI64.dec8Unscaled(f) !=
+          graft.plans.NormalizeUnitsI64.dec8Reference(f)) bad.add(f)
+    }
+    bad.asScala.take(5).toSeq
+  }
+
+  test("fast dec8 equals BigDecimal on every float of the [1/8, 1/4) binade, both signs") {
+    // 1/8 is the typical component magnitude of a unit 64-dim vector
+    val lo = java.lang.Float.floatToRawIntBits(0.125f)
+    val n = java.lang.Float.floatToRawIntBits(0.25f) - lo
+    assert(dec8Mismatches(2 * n)(i =>
+      java.lang.Float.intBitsToFloat(lo + i / 2) * (if (i % 2 == 0) 1f else -1f)).isEmpty)
+  }
+
+  test("fast dec8 equals BigDecimal on every exact decimal tie below its bound") {
+    // x·1e8 = a·5^8·2^8 / 2^k is a half-way point exactly when k = 9
+    // and a is odd: x = a/512, here for every such float with |x| < 1e4
+    val odd = 5120000 / 2
+    assert(dec8Mismatches(2 * odd)(i =>
+      (2 * (i / 2) + 1).toFloat / 512f * (if (i % 2 == 0) 1f else -1f)).isEmpty)
+  }
+
+  test("fast dec8 equals BigDecimal on 1M seeded random floats with |x| < 4") {
+    // random bit patterns, so every magnitude down to the subnormals
+    val rng = new scala.util.Random(20261017L)
+    val xs = Iterator.continually(java.lang.Float.intBitsToFloat(rng.nextInt()))
+      .filter(x => math.abs(x) < 4f).take(1000000).toArray
+    assert(dec8Mismatches(xs.length)(i => xs(i)).isEmpty)
+  }
+
+  test("fast dec8 throws exactly what BigDecimal throws on NaN, infinities and 1e12") {
+    def outcome(f: Float => Long, x: Float): Either[(Class[_], String), Long] =
+      try Right(f(x)) catch { case e: Exception => Left((e.getClass, e.getMessage)) }
+    for (x <- Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, 1e12f, -1e12f)) {
+      val fast = outcome(graft.plans.NormalizeUnitsI64.dec8Unscaled, x)
+      assert(fast.isLeft, s"dec8($x) must throw")
+      assert(fast === outcome(graft.plans.NormalizeUnitsI64.dec8Reference, x), s"dec8($x)")
+    }
+  }
+
   test("normalizeUnits passes a zero vector through unnormalized") {
     import spark.implicits._
     val z = Seq(Tuple1(Array.fill(4)(0.0f))).toDF("embedding")

@@ -691,9 +691,9 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfPqIndexSave(built, dir, params, nBase)
       val nAfter = Similarity.ivfPqIndexAppend(spark, dir, fresh)
       assert(nAfter === nBase + fresh.count(), "meta n must grow by exactly |delta|")
-      assert(Similarity.frozenIndexComplete(spark, dir, params, nAfter, Similarity.ivfPqIndexVersion),
+      assert(Similarity.frozenIndexComplete(spark, dir, params, nAfter, Similarity.ivfPqMeta),
         "an appended index must read as complete at the GROWN corpus count")
-      assert(!Similarity.frozenIndexComplete(spark, dir, params, nBase, Similarity.ivfPqIndexVersion),
+      assert(!Similarity.frozenIndexComplete(spark, dir, params, nBase, Similarity.ivfPqMeta),
         "an appended index must no longer match the pre-append count")
       val loaded = Similarity.ivfPqIndexLoad(spark, dir, embeddings)
       assert(search(loaded) === want,
@@ -1340,18 +1340,120 @@ class SimilaritySpec extends SparkSpec {
       "nprobe = nlist must recover the exact brute-force result")
   }
 
+  private def emptyWith(df: DataFrame, cols: String*): Unit = {
+    assert(df.columns.toSeq === cols)
+    assert(df.collect().isEmpty)
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
   test("every k-means train, assign and probe returns an empty frame with its schema on an empty corpus") {
     val none = embeddings.filter(col("vec_id") < 0)
-    def emptyWith(df: DataFrame, cols: String*): Unit = {
-      assert(df.columns.toSeq === cols)
-      assert(df.collect().isEmpty)
-    }
     emptyWith(Similarity.kmeans(none, k = 4), "vec_id", "cluster", "dist")
     emptyWith(Similarity.dedupSemantic(none, k = 80), "a", "b", "cluster", "cosine")
     for (nlist <- Seq(8, 80))
       emptyWith(Similarity.annIvfTrained(none, nlist = nlist),
         "query_id", "label", "neighbor_id", "rank", "cosine")
     emptyWith(Similarity.dedupSemanticHierGrouped(none, k1 = 80), "a", "b", "cluster", "cosine")
+  }
+
+  test("every PQ-family build, save and search returns an empty frame with its schema on an empty corpus") {
+    val none = embeddings.filter(col("vec_id") < 0)
+    val flat = Seq("query_id", "neighbor_id", "rank", "cosine")
+    val ivf = Seq("query_id", "label", "neighbor_id", "rank", "cosine")
+    emptyWith(Similarity.annPq(none), flat: _*)
+    emptyWith(Similarity.annOpq(none), flat: _*)
+    emptyWith(Similarity.annIvfPq(none), ivf: _*)
+    emptyWith(Similarity.annIvfPqResidual(none), ivf: _*)
+    emptyWith(Similarity.annPqServed(none, tempDir("graft_pq_none")), flat: _*)
+    emptyWith(Similarity.annOpqServed(none, tempDir("graft_opq_none")), flat: _*)
+    emptyWith(Similarity.annIvfPqServed(none, tempDir("graft_ivfpq_none")), ivf: _*)
+    emptyWith(Similarity.annIvfPqResidualServed(none, tempDir("graft_ivfpqres_none")), ivf: _*)
+  }
+
+  test("every frozen index kind's declared meta schema is the schema its saver writes") {
+    val base = embeddings.filter(col("vec_id") % 5 === 0)
+    def saved(save: String => Unit): String = {
+      val dir = tempDir("graft_meta_schema")
+      save(dir)
+      dir
+    }
+    val kinds = Seq(
+      Similarity.semanticMeta ->
+        saved(Similarity.semanticIndexSave(Similarity.semanticIndexBuild(base, k = 4), _)),
+      Similarity.hierMeta ->
+        saved(Similarity.semanticIndexSaveHier(Similarity.semanticIndexBuildHier(base), _)),
+      Similarity.pqMeta -> saved(Similarity.pqIndexSave(Similarity.pqIndexBuild(base), _)),
+      Similarity.opqMeta -> saved(Similarity.opqIndexSave(Similarity.opqIndexBuild(base), _)),
+      Similarity.sqMeta -> saved(Similarity.sqIndexSave(Similarity.sqIndexBuild(base), _)),
+      Similarity.ivfSqMeta -> saved(Similarity.ivfSqIndexSave(Similarity.ivfSqIndexBuild(base), _)),
+      Similarity.bqMeta -> saved(Similarity.bqIndexSave(Similarity.bqIndexBuild(base), _)),
+      Similarity.ivfBqMeta -> saved(Similarity.ivfBqIndexSave(Similarity.ivfBqIndexBuild(base), _)),
+      Similarity.ivfPqMeta -> saved(Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(base), _)))
+    for ((kind, dir) <- kinds)
+      assert(spark.read.parquet(s"$dir/meta.parquet").schema === kind.schema, dir)
+    // the IVF-PQ loader reads its model and codes tables with declared schemas too
+    val ivfPq = kinds.last._2
+    assert(spark.read.parquet(s"$ivfPq/codebooks.parquet").schema === Similarity.codebooksSchema)
+    assert(spark.read.parquet(s"$ivfPq/centroids.parquet").schema === Similarity.centroidsSchema)
+    assert(spark.read.parquet(s"$ivfPq/codes.parquet").schema === Similarity.ivfPqCodesSchema(base))
+  }
+
+  test("a meta without version, with another kind's columns, mistyped or uncommitted reads as absent") {
+    import spark.implicits._
+    def metaDir(meta: DataFrame): String = {
+      val dir = tempDir("graft_meta_absent")
+      meta.coalesce(1).write.parquet(s"$dir/meta.parquet")
+      dir
+    }
+    def present(dir: String): Boolean =
+      Similarity.frozenIndexComplete(spark, dir, "p", 10L, Similarity.ivfPqMeta)
+    val v = Similarity.ivfPqIndexVersion
+    val good = metaDir(Seq((8, false, v, "p", 10L, -1L))
+      .toDF("m", "residual", "version", "params", "n", "last_batch"))
+    assert(present(good), "a matching meta must read as present")
+    assert(!present(metaDir(Seq((8, false, "p", 10L, -1L))
+      .toDF("m", "residual", "params", "n", "last_batch"))), "no version column")
+    assert(!present(metaDir(Seq((8, false, Option.empty[Int], "p", 10L, -1L))
+      .toDF("m", "residual", "version", "params", "n", "last_batch"))), "null version")
+    assert(!present(metaDir(Seq((v, "p", 10L, -1L))
+      .toDF("version", "params", "n", "last_batch"))), "the semantic kind's columns")
+    assert(!present(metaDir(Seq((8, false, v.toString, "p", 10L, -1L))
+      .toDF("m", "residual", "version", "params", "n", "last_batch"))), "string version")
+    assert(!present(metaDir(Seq((8, false, v.toLong, "p", 10L, -1L))
+      .toDF("m", "residual", "version", "params", "n", "last_batch"))), "long version")
+    assert(new java.io.File(s"$good/meta.parquet/_SUCCESS").delete())
+    assert(!present(good), "a meta without _SUCCESS is an uncommitted save")
+  }
+
+  test("serving a committed IVF-PQ index starts no schema-inference jobs") {
+    import scala.jdk.CollectionConverters._
+    val dir = tempDir("graft_ivfpq_jobs")
+    Similarity.annIvfPqServed(embeddings, dir) // builds and commits the index
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Similarity.annIvfPqServed(embeddings, dir)
+      // listener events arrive in order: once this job is seen, every
+      // job the frame build started has been counted
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.range(1).collect()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.contains("sentinel"))
+    val built = jobs.asScala.takeWhile(_ != "sentinel").size
+    // the corpus count's two jobs, then one collect each for meta,
+    // codebooks and centroids; inferring the schemas of those tables
+    // and of the codes costs a job per read (9 jobs in all)
+    assert(built <= 5, s"serving a committed index started $built jobs")
   }
 
   test("wide PQ codebooks are bit-identical to the literal kernels and lift recall at FAISS sizes") {

@@ -20,6 +20,8 @@ ONLY = set(sys.argv[2:])
 # different SF dirs must not clobber each other's dumps mid-compare
 # (a shared dir once turned an sf0.1 sweep into 40 phantom fails).
 OUT = "/tmp/graft_verify_" + os.path.basename(SF.rstrip("/"))
+# the checkout this script lives in, so a worktree checks its own classes
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 ADD_OPENS = []
@@ -37,7 +39,7 @@ def run_verify():
             "-cp", "target/scala-2.13/classes:/opt/spark/jars/*",
             "graft.Verify", SF, OUT])
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    r = subprocess.run(cmd, cwd="/root/repo", env=env, capture_output=True, text=True)
+    r = subprocess.run(cmd, cwd=ROOT, env=env, capture_output=True, text=True)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
             print(line)

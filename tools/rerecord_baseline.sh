@@ -3,7 +3,7 @@
 # Each sample is the exact driver program (graft.Bench, min-of-2 per
 # query); detail snapshots land in /tmp/bench_sample_N.json for
 # tools/baseline_agg.py.
-cd /root/repo
+cd "$(dirname "$0")/.."
 OPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do echo --add-opens java.base/$p=ALL-UNNAMED; done)
 for i in $(seq 1 8); do
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_BUDGET_S=3000 \
