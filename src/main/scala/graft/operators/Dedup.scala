@@ -159,11 +159,14 @@ object Dedup {
     *
     * Dedup within a doc is `array_distinct` BEFORE the explode — a
     * per-row operation, not a 260M-row global `distinct()` shuffle.
-    * The repartition on doc_id (a) parallelizes the explode even when
-    * the scan yields few input splits, and (b) establishes the hash
-    * partitioning that every downstream groupBy(doc_id) /
-    * Window(doc_id) in the sketch pipelines reuses shuffle-free —
-    * text moves once, pre-explosion, at ~1/5 the shingle volume.
+    * The repartition on doc_id parallelizes the explode even when the
+    * scan yields few input splits; text moves once, pre-explosion, at
+    * ~1/5 the shingle volume. Its hash partitioning reaches only a
+    * consumer that reads this frame directly, as [[simhash]] does. The
+    * other callers `honestCheckpoint` the frame, and under AQE a plain
+    * checkpoint reports Unknown partitioning, so a groupBy(doc_id) over
+    * it shuffles again: `minhashPairs`' signature aggregation runs its
+    * own map stage.
     */
   private def shingleRows(documents: DataFrame, w: Int): DataFrame = {
     // Explicit partition count: hashing/shingling is CPU-bound on

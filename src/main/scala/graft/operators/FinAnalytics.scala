@@ -391,6 +391,8 @@ object FinAnalytics {
     * day-of-week, month (plot_cyclical_feature_engineering.py's
     * periodic encodings). Rounded to 6 decimals: inputs are discrete
     * so the value set is small and verified equal across engines.
+    * The event_id sort runs on the scan rows and the encodings above
+    * it, so the sort's range sampler evaluates none of them.
     */
   def cyclicalFeatures(events: DataFrame): DataFrame = {
     // + 0.0 normalizes IEEE −0.0 to 0.0 so engines can't disagree on
@@ -398,14 +400,13 @@ object FinAnalytics {
     def enc(c: org.apache.spark.sql.Column, period: Int, name: String) = Seq(
       (round(sin(c * (lit(2.0) * lit(math.Pi) / period)), 6) + lit(0.0)).as(s"${name}_sin"),
       (round(cos(c * (lit(2.0) * lit(math.Pi) / period)), 6) + lit(0.0)).as(s"${name}_cos"))
-    events.select(
+    events.orderBy(col("event_id")).select(
       Seq(col("event_id"), hour(col("ts")).cast("long").as("hour"),
           (dayofweek(col("ts")) - 1).cast("long").as("dow"),
           month(col("ts")).cast("long").as("month")) ++
         enc(hour(col("ts")), 24, "hour") ++
         enc(dayofweek(col("ts")) - 1, 7, "dow") ++
         enc(month(col("ts")), 12, "month"): _*)
-      .orderBy(col("event_id"))
   }
 
   /** Periodic cubic B-spline encodings of hour-of-day — the
@@ -419,6 +420,8 @@ object FinAnalytics {
     * features. Piecewise cubics are written with the SAME literal
     * operation order as the oracle SQL so both engines produce
     * identical doubles; rounded to 6 decimals, −0.0-normalized.
+    * Sorted on the scan rows, below the basis projection: the range
+    * sampler reads the narrow (event_id, ts) rows, not the bases.
     */
   def splineFeatures(events: DataFrame, nSplines: Int = 12, period: Int = 24): DataFrame = {
     val h = period.toDouble / nSplines
@@ -434,8 +437,8 @@ object FinAnalytics {
       val u = ((hr / h - lit(j.toDouble)) % k + k) % k
       (round(b3(u), 6) + lit(0.0)).as(f"spline_h$j%02d")
     }
-    events.select(col("event_id") +: hour(col("ts")).cast("long").as("hour") +: basisCols: _*)
-      .orderBy(col("event_id"))
+    events.orderBy(col("event_id"))
+      .select(col("event_id") +: hour(col("ts")).cast("long").as("hour") +: basisCols: _*)
   }
 
   /** Bollinger bands over the daily close: 20-bar moving average ±

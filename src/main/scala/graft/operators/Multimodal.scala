@@ -98,8 +98,16 @@ object Multimodal {
     * like the other containers. Digest is md5 of the hex (DuckDB's
     * md5 is VARCHAR-only, so the oracle-parity digest hashes the hex
     * form).
+    *
+    * The doc_id sort runs on the scan rows, before the synthesis and
+    * the parse (the [[TextOps]] rule): the sort's range sampler then
+    * evaluates neither, and both run once, after the shuffle.
     */
-  def binaryMeta(documents: DataFrame): DataFrame = {
+  def binaryMeta(documents: DataFrame): DataFrame =
+    binaryMetaCols(documents.orderBy(col("doc_id")))
+
+  /** [[binaryMeta]]'s per-row parse, in the input's row order. */
+  private def binaryMetaCols(documents: DataFrame): DataFrame = {
     val media = synthesize(documents)
     val hx = hex(col("payload"))
     def be(startByte: Int, nBytes: Int): Column =
@@ -131,7 +139,6 @@ object Multimodal {
           .when(isWebp, when(be(21, 1).bitwiseAND(16) =!= 0, 4L).otherwise(3L))
           .when(isTiff, le(43, 2)).as("channels"))
       .withColumn("n_pixels", (col("width") * col("height")).cast("long"))
-      .orderBy(col("doc_id"))
   }
 
   /** Decode-free resize PLANNER — the metadata half of the resize
@@ -147,7 +154,7 @@ object Multimodal {
     */
   def resizePlan(documents: DataFrame, target: Int = 224): DataFrame = {
     val t = lit(target.toLong)
-    binaryMeta(documents)
+    binaryMetaCols(documents.orderBy(col("doc_id")))
       .select(col("doc_id"), col("format"), col("width"), col("height"),
         when(col("width") >= col("height"), t)
           .otherwise(greatest(lit(1L), expr(s"(2 * width * $target + height) DIV (2 * height)")))
@@ -160,7 +167,6 @@ object Multimodal {
         expr(s"($target - out_w) DIV 2").as("pad_left"),
         expr(s"($target - out_h) DIV 2").as("pad_top"),
         (col("width") < t && col("height") < t).as("upscale"))
-      .orderBy(col("doc_id"))
   }
 
   /** Feature-extraction stub with REAL distributed plumbing: a 16-bin
@@ -486,10 +492,11 @@ object Multimodal {
     * codec packet starts @29 after the 1-segment BOS page header —
     * OpusHead channels u8 @38, rate u32le @41; ␁vorbis channels u8
     * @40, rate u32le @41 (bit_depth stays 0: lossy codecs have no
-    * fixed sample width).
+    * fixed sample width). Like [[binaryMeta]], it sorts the scan rows
+    * first, so synthesis and parse run once, after the sort.
     */
   def avMeta(documents: DataFrame): DataFrame = {
-    val media = synthesizeAv(documents)
+    val media = synthesizeAv(documents.orderBy(col("doc_id")))
     val hx = hex(col("payload"))
     def be(startByte: Int, nBytes: Int): Column =
       conv(substring(hx, (startByte - 1) * 2 + 1, nBytes * 2), 16, 10).cast("long")
@@ -529,7 +536,6 @@ object Multimodal {
           .otherwise(0L).as("bit_depth"),
         when(col("format") === "mp4", expr("wfix DIV 65536")).otherwise(0L).as("width"),
         when(col("format") === "mp4", expr("hfix DIV 65536")).otherwise(0L).as("height"))
-      .orderBy(col("doc_id"))
   }
 
   /** Frame sampling over binary payloads: split each payload into

@@ -11,6 +11,15 @@ import graft.plans.HonestCheckpoint._
   * and content fingerprints. Everything is per-row Column algebra —
   * no UDFs, no shuffles except the caller's, fully codegen'd — so
   * these run at scan speed over 100 TB of documents.
+  *
+  * The per-document scan → kernel operators that return rows in
+  * doc_id order sort their narrow input rows BEFORE the kernel
+  * projection (`documents.orderBy(doc_id).select(kernel…)`). A global
+  * sort plans as a range exchange whose `RangePartitioner` first
+  * samples the exchange's whole child in a job of its own, so a kernel
+  * below the sort would run twice per answer. Above the sort it runs
+  * once, in the post-shuffle stage; the shuffle carries the kernel's
+  * input, not its output.
   */
 object TextOps {
 
@@ -94,9 +103,8 @@ object TextOps {
   }
 
   def langId(documents: DataFrame): DataFrame =
-    withLangCols(documents)
+    withLangCols(documents.orderBy(col("doc_id")))
       .select(col("doc_id") +: col("lang") +: langs.map(l => col(s"s_$l")) :+ col("pred_lang"): _*)
-      .orderBy(col("doc_id"))
 
   /** Quality features: counts, ratios, and a keep flag — the
     * classic length/punctuation/stopword heuristics.
@@ -138,11 +146,10 @@ object TextOps {
   }
 
   def quality(documents: DataFrame): DataFrame =
-    withQualityCols(documents)
+    withQualityCols(documents.orderBy(col("doc_id")))
       .select(col("doc_id"), col("n_chars"), col("n_words"), col("sum_word_len"),
         col("n_punct"), col("n_stop"), col("avg_word_len"), col("punct_ratio"),
         col("stop_ratio"), col("keep"))
-      .orderBy(col("doc_id"))
 
   /** Script character classes as EXPLICIT codepoint ranges — named
     * unicode properties spell differently in java.util.regex
@@ -163,9 +170,9 @@ object TextOps {
     * first-wins tiebreak like [[langId]]). A corpus crawler uses
     * this to route docs to script-appropriate pipelines and to flag
     * mixed-script spam (e.g. Latin text stuffed with CJK SEO
-    * tokens). Pure per-row Column algebra on the scan — no shuffle,
-    * no UDFs; ratios round half-up in exact integer arithmetic (the
-    * fin_vwap tie lesson).
+    * tokens). Pure per-row Column algebra, no UDFs, run once above
+    * the doc_id sort of the scan rows; ratios round half-up in exact
+    * integer arithmetic (the fin_vwap tie lesson).
     */
   def scripts(documents: DataFrame): DataFrame = {
     val counts = scriptClasses.map { case (n, p) =>
@@ -174,7 +181,7 @@ object TextOps {
     def ratio(n: String): Column = when(col("n_chars") > 0,
       (expr(s"(2 * $n * 1000000 + n_chars) DIV (2 * n_chars)").cast("double")
         / lit(1e6)) + lit(0.0))
-    documents
+    documents.orderBy(col("doc_id"))
       .select(col("doc_id") +: length(col("text")).cast("long").as("n_chars") +: counts: _*)
       .withColumn("n_other",
         col("n_chars") - col("n_latin") - col("n_digit") - col("n_cjk") - col("n_space"))
@@ -190,14 +197,13 @@ object TextOps {
           .when(col("n_latin") >= greatest(col("n_digit"), col("n_other")), "latin")
           .when(col("n_digit") >= col("n_other"), "digit")
           .otherwise("other"))
-      .orderBy(col("doc_id"))
   }
 
   /** Token statistics: whitespace tokens vs a BPE-ish pre-tokenizer
     * (letter runs / digit runs / single punctuation marks).
     */
   def tokenStats(documents: DataFrame): DataFrame =
-    documents.select(
+    documents.orderBy(col("doc_id")).select(
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars"),
         size(tokens(col("text"))).cast("long").as("ws_tokens"),
@@ -206,7 +212,6 @@ object TextOps {
         when(col("bpe_tokens") > 0,
           (expr("(2 * n_chars * 1000000 + bpe_tokens) DIV (2 * bpe_tokens)").cast("double")
             / lit(1e6)) + lit(0.0)))
-      .orderBy(col("doc_id"))
 
   /** Corpus vocabulary: global token frequencies, top-k by count.
     * Explode → hash-aggregate (map-side partial combine collapses to
@@ -656,15 +661,15 @@ object TextOps {
     * IP inside a URL counts in both n_urls and n_ips; only the
     * REPLACEMENT chain is ordered, URL first so the replaced span is
     * the whole URL — the oracle computes both the same way). Pure
-    * per-row Column
-    * algebra (regexp_count + a regexp_replace chain — codegen, scan
-    * speed, no shuffle); output carries the counts, the cleaned
-    * length, and the md5 of the cleaned text, which pins the entire
-    * scrub byte-for-byte under the DuckDB oracle without shipping
-    * the full text.
+    * per-row Column algebra (regexp_count + a regexp_replace chain,
+    * codegen'd). The presentation sort shuffles the scan rows, and the
+    * synthesis and the scrub run once, after the sort; output carries
+    * the counts, the cleaned length, and the md5 of the cleaned text,
+    * which pins the entire scrub byte-for-byte under the DuckDB oracle
+    * without shipping the full text.
     */
   def piiScrub(documents: DataFrame): DataFrame = {
-    val withPii = synthesizePii(documents)
+    val withPii = synthesizePii(documents.orderBy(col("doc_id")))
     val counts = piiPatterns.map { case (name, pat, _) =>
       regexp_count(col("text"), lit(pat)).cast("long").as(s"n_${name}s")
     }
@@ -675,7 +680,6 @@ object TextOps {
       .select(col("doc_id"), col("n_urls"), col("n_emails"), col("n_phones"),
         col("n_ips"), length(col("clean")).cast("long").as("clean_len"),
         md5(col("clean")).as("clean_md5"))
-      .orderBy(col("doc_id"))
   }
 
   /** Markup-removal patterns shared verbatim between the Spark
@@ -739,11 +743,12 @@ object TextOps {
     * per-pattern over the RAW html (independent, the [[piiScrub]]
     * convention); only the removal chain is ordered. Pure per-row
     * Column algebra — regexp chains + one bounded line filter per
-    * doc — one scan, no shuffle; output pins the whole extraction
+    * doc — run once, like the page synthesis, after the presentation
+    * sort of the scan rows; output pins the whole extraction
     * byte-for-byte via length + md5 without shipping the text.
     */
   def htmlExtract(documents: DataFrame): DataFrame = {
-    val withHtml = synthesizeHtml(documents)
+    val withHtml = synthesizeHtml(documents.orderBy(col("doc_id")))
     val counts = htmlPatterns.map { case (name, pat) =>
       regexp_count(col("html"), lit(pat)).cast("long").as(s"n_${name}s")
     } :+ regexp_count(col("html"), lit("&[A-Za-z]+;|&#[0-9]+;")).cast("long").as("n_entities")
@@ -765,14 +770,12 @@ object TextOps {
         col("n_tags"), col("n_entities"), col("n_lines"), col("n_kept"),
         length(col("extract")).cast("long").as("extract_len"),
         md5(col("extract")).as("extract_md5"))
-      .orderBy(col("doc_id"))
   }
 
   def fingerprint(documents: DataFrame): DataFrame =
-    documents
+    documents.orderBy(col("doc_id"))
       .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         coalesce(array_min(transform(shinglesOf(col("toks"), 5), s => md5(s))), md5(col("text")))
           .as("fingerprint"))
-      .orderBy(col("doc_id"))
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** Parquet table catalog over a scale-factor directory.
   *
@@ -10,9 +10,18 @@ import org.apache.spark.sql.types.StructType
   * scan options stay in one place. Readers return unexecuted
   * DataFrames — Catalyst sees the whole downstream plan and pushes
   * filters/projections into the parquet scan.
+  *
+  * Readers start no Spark job: every table but `events` is read with
+  * its declared schema ([[Tables.schemas]]), where inference would run
+  * a one-task parquet footer job per read (the [[Formats]] rule, for
+  * parquet). `events` keeps inference because its `ts` column has
+  * shipped in two parquet encodings, and [[events]] branches on the
+  * type the file resolves to.
   */
 final class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame =
+    Tables.schemas.get(name).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$dir/$name.parquet")
 
   def region: DataFrame = table("region")
   def nation: DataFrame = table("nation")
@@ -117,6 +126,38 @@ object Formats {
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
+
+  private def schema(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (name, t) => StructField(name, t) })
+
+  /** The declared schema of every table but `events`: exactly what
+    * parquet inference resolves on the testdata (every column
+    * nullable; the `TIMESTAMP(MICROS)` dates are not UTC-adjusted, so
+    * they resolve to TimestampNTZType). TablesSpec holds the two equal.
+    */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> schema("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> schema("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> schema("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType, "c_mktsegment" -> StringType),
+    "supplier" -> schema("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> schema("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+      "p_retailprice" -> DoubleType),
+    "orders" -> schema("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> schema("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType, "l_quantity" -> DoubleType,
+      "l_extendedprice" -> DoubleType, "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "documents" -> schema("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> schema("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType, containsNull = true), "label" -> IntegerType))
 
   /** Normalize the `ts` column of an events frame to TimestampType.
     *

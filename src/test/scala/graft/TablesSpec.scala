@@ -61,4 +61,42 @@ class TablesSpec extends SparkSpec {
     val got = Tables.normalizeEventsTs(raw).select("ts").as[Timestamp].collect()
     assert(got.head === Timestamp.valueOf("2025-01-01 00:00:00.123456"))
   }
+
+  test("every declared schema is the schema parquet inference resolves") {
+    val testdata = new java.io.File(PlanGate.defaultSf).getParent
+    for (sf <- Seq("sf0.001", "sf0.01"); (name, declared) <- Tables.schemas) {
+      val path = s"$testdata/$sf/$name.parquet"
+      // StructType equality covers names, types, nullability, element
+      // nullability (containsNull) and field metadata
+      assert(declared === spark.read.parquet(path).schema, s"$sf/$name")
+      assert(Tables(spark, s"$testdata/$sf").table(name).schema === declared, s"$sf/$name")
+    }
+    assert(!Tables.schemas.contains("events"), "events resolves its ts encoding by inference")
+  }
+
+  test("reading a declared table starts no Spark job") {
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t = Tables(spark, PlanGate.defaultSf)
+      t.documents.schema
+      Tables.schemas.keys.foreach(n => t.table(n).schema)
+      // listener events arrive in order: once this job is seen, every
+      // job the reads started has been counted
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.range(1).collect()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.contains("sentinel"))
+    val started = jobs.asScala.takeWhile(_ != "sentinel").size
+    assert(started === 0, s"reading the declared tables started $started jobs")
+  }
 }
