@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.plans.HonestCheckpoint._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Embedding similarity — near-dup pairs and nearest-neighbor search
   * over an `array<float>` column (SURVEY §2 #25-27).
@@ -208,16 +210,19 @@ object Similarity {
   private def withUnits(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"), units(col("embedding")).as("u"))
 
-  /** The TRAINING CORPUS as ONE materialized frame:
+  /** The k-means TRAINING CORPUS as ONE materialized frame:
     * (vec_id, embedding, u), quantized once, spread once when k calls
     * for it ([[spreadForK]]), then localCheckpointed — so the Lloyd
-    * init, every iteration's mean pass, and the final corpus
+    * init, every iteration's [[meanStep]] fold, and the final corpus
     * assignment read the materialized blocks instead of each
     * re-running the source scan (and the spread exchange): the guide
     * §2.4/§5 recompute-vs-materialize trade at its most lopsided (the
-    * frame is reused iters+2 times per build). Eager checkpoint cost:
-    * one corpus pass + (vec_id, embedding, u) blocks; blocks are
-    * ContextCleaner-freed when the frame goes out of scope.
+    * frame is reused iters+2 times per build). `embedding` rides along
+    * because the k-means family returns it with each assignment; the
+    * IVF-PQ build, which does not, checkpoints (vec_id, u, un) instead
+    * ([[ivfPqIndexBuild]]). Eager checkpoint cost: one corpus pass +
+    * (vec_id, embedding, u) blocks; blocks are ContextCleaner-freed
+    * when the frame goes out of scope.
     */
   private def corpusFrame(embeddings: DataFrame, k: Int): DataFrame =
     withUnits(spreadForK(embeddings.select(col("vec_id"), col("embedding")), k))
@@ -231,54 +236,136 @@ object Similarity {
   private def trainAssign(embeddings: DataFrame, k: Int,
                           iters: Int): (Seq[Array[Long]], DataFrame) = {
     val vecs = corpusFrame(embeddings, k)
-    val cents = lloyd(vecs, "u", k, iters)
+    val cents = lloyd(vecs, "u", unitsOf(initRows(vecs, k, "u"), 0), iters)
     (cents, nearestCells(vecs, "u", cents))
   }
+
+  /** The first `n` rows of `vecs` in (md5(vec_id), vec_id) order, as
+    * the `units` columns — the seeded, reproducible init of every
+    * trainer. One collect.
+    */
+  private def initRows(vecs: DataFrame, n: Int, units: String*): Array[Row] =
+    vecs.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(n)
+      .select(units.map(col): _*)
+      .collect()
+
+  /** Column `i` of init rows as centroids. */
+  private def unitsOf(rows: Array[Row], i: Int): Seq[Array[Long]] =
+    rows.toSeq.map(_.getSeq[Long](i).toArray)
 
   /** Lloyd's training loop over a materialized (vec_id, `units`)
     * frame — the one k-means trainer: raw-vector units `u` for the
     * IVF/SemDeDup quantizers, normalized units `un` for the residual
-    * IVF-PQ cells. Init is the first k vectors in md5(vec_id) order
-    * (seeded, reproducible anywhere); each iteration is one
-    * [[nearestCells]] pass (lowest-cluster tiebreak) feeding
-    * [[centroidMeans]]; an empty cluster keeps its previous centroid.
-    * Returns the trained centroids in 1e-8 units (k×dim model
-    * parameters — the only thing the driver ever collects), none for
-    * an empty corpus.
+    * IVF-PQ cells. `init` is the model before the first step (the
+    * caller's [[initRows]]); each iteration is one [[meanStep]] job
+    * (lowest-cluster tiebreak, an empty cluster keeps its previous
+    * centroid). Returns the trained centroids in 1e-8 units (k×dim
+    * model parameters), none for an empty init.
     */
-  private def lloyd(vecs: DataFrame, units: String, k: Int, iters: Int): Seq[Array[Long]] = {
-    var centroids: Seq[Array[Long]] = vecs
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
-      .select(col(units))
-      .collect().map(_.getSeq[Long](0).toArray).toSeq
-    if (centroids.nonEmpty) for (_ <- 1 to iters) {
-      val means = centroidMeans(nearestCells(vecs, units, centroids), Seq("cluster"), units)
-        .map { case (key, m) => key.getLong(0).toInt -> m }.toMap
-      centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
-    }
-    centroids
+  private[graft] def lloyd(vecs: DataFrame, units: String, init: Seq[Array[Long]],
+                           iters: Int): Seq[Array[Long]] = {
+    if (init.isEmpty) return init
+    val rows = vecs.select(col(units)).queryExecution.toRdd
+    var cells = Seq(init)
+    for (_ <- 1 to iters) cells = meanStep(rows, cells, keyed = false)
+    cells.head
   }
 
-  /** One Lloyd mean step: the integer half-up mean of `units` per
-    * `keys` (sign split, so DIV only ever sees nonnegative operands),
-    * as (keys row, centroid) pairs. One aggregate, one shuffle: its
-    * output is model-sized (keys × dim rows of (keys..., dim, m)), so
-    * the driver collects it as is and assembles each centroid in `dim`
-    * order — a second shuffle to fold the rows into arrays would move
-    * the same data and cost two more jobs per step.
+  /** One Lloyd step as ONE job: a fold over `rows` (a materialized
+    * frame's `toRdd`, planned once per train, so a step plans nothing)
+    * that assigns every row with [[graft.plans.ArgminL2.scan]] — the
+    * loop the assign and encode kernels run — and returns the model
+    * moved to the integer half-up mean of its members. An empty
+    * centroid keeps its place.
+    *
+    * The model is `cells` of centroids of one dim. Row ordinal 0 is the
+    * units array. With `keyed`, ordinal 1 is the row's cell (the hier
+    * fine level: a cell outside the model or without centroids skips
+    * the row, as the per-cell kernel gives null); otherwise slice j of
+    * the units scans cell j (one cell for flat k-means, m codebooks for
+    * PQ). A null units row is skipped, as the kernels give null; a null
+    * element or a wrong length throws.
+    *
+    * Each partition allocates its sums and counts inside the task (no
+    * model-sized zero value ships with it) and fills them in exact
+    * `long`s: `addExact` fails loudly where ANSI `sum` did, and the
+    * partials merge with `treeAggregate`. Long sums do not depend on
+    * order, so the model is bit-identical on any partitioning. Rows
+    * from `toRdd` are reused objects: every value is read at once and
+    * no row is kept.
     */
-  private def centroidMeans(assigned: DataFrame, keys: Seq[String],
-                            units: String): Seq[(Row, Array[Long])] = {
-    val ks = keys.map(col)
-    val nk = keys.size
-    assigned.select(ks :+ posexplode(col(units)).as(Seq("dim", "uu")): _*)
-      .groupBy(ks :+ col("dim"): _*)
-      .agg(sum(col("uu")).as("s"), count(lit(1)).as("n"))
-      .select(ks :+ col("dim") :+ when(col("s") < 0, -expr("(2 * (-s) + n) DIV (2 * n)"))
-        .otherwise(expr("(2 * s + n) DIV (2 * n)")).cast("long").as("m"): _*)
-      .collect()
-      .groupBy(r => Row.fromSeq(r.toSeq.take(nk)))
-      .toSeq.map { case (key, rs) => key -> rs.sortBy(_.getInt(nk)).map(_.getLong(nk + 1)) }
+  private def meanStep(rows: RDD[InternalRow], cells: Seq[Seq[Array[Long]]],
+                       keyed: Boolean): Seq[Seq[Array[Long]]] = {
+    val all = cells.flatten
+    val dim = all.head.length
+    val cents = Array.concat(all: _*)
+    val starts = cells.scanLeft(0)(_ + _.size).toArray
+    val numCells = cells.size
+    val parts = if (keyed) 1 else numCells
+    val total = all.size
+    val (sums, counts) = rows.mapPartitions { it =>
+      val sums = new Array[Long](total * dim)
+      val counts = new Array[Long](total)
+      val bestD = new Array[Long](1)
+      val bestC = new Array[Long](1)
+      while (it.hasNext) {
+        val row = it.next()
+        if (!row.isNullAt(0) && !(keyed && row.isNullAt(1))) {
+          val u = row.getArray(0)
+          graft.plans.IntegerUnits.requireSameLength(u.numElements(), parts * dim, "lloyd")
+          var i = 0
+          while (i < parts * dim) {
+            if (u.isNullAt(i)) throw new IllegalArgumentException(s"lloyd: null element at $i")
+            i += 1
+          }
+          val first = if (keyed) row.getLong(1) else 0L
+          var j = 0
+          while (j < parts) {
+            val cell = first + j
+            if (cell >= 0 && cell < numCells && starts(cell.toInt) < starts(cell.toInt + 1)) {
+              val lo = starts(cell.toInt)
+              graft.plans.ArgminL2.scan(u, j * dim, cents, lo, starts(cell.toInt + 1), dim,
+                bestD, bestC)
+              val g = lo + bestC(0).toInt
+              counts(g) += 1
+              var d = 0
+              while (d < dim) {
+                sums(g * dim + d) = Math.addExact(sums(g * dim + d), u.getLong(j * dim + d))
+                d += 1
+              }
+            }
+            j += 1
+          }
+        }
+      }
+      Iterator.single((sums, counts))
+    }.treeAggregate((null: Array[Long], null: Array[Long]))(addPartial, addPartial)
+    if (sums == null) return cells
+    def mean(g: Int): Array[Long] =
+      if (counts(g) == 0) all(g)
+      else Array.tabulate(dim)(d => halfUpMean(sums(g * dim + d), counts(g)))
+    cells.indices.map(c => (starts(c) until starts(c + 1)).map(mean))
+  }
+
+  /** Merge two partial (sums, counts) pairs in place; null is empty. */
+  private def addPartial(a: (Array[Long], Array[Long]),
+                         b: (Array[Long], Array[Long])): (Array[Long], Array[Long]) =
+    if (a._1 == null) b
+    else if (b._1 == null) a
+    else {
+      for (i <- a._1.indices) a._1(i) = Math.addExact(a._1(i), b._1(i))
+      for (i <- a._2.indices) a._2(i) += b._2(i)
+      a
+    }
+
+  /** The integer half-up mean s / n, sign split so the division only
+    * ever sees nonnegative operands: `(2s + n) DIV 2n`, negated for
+    * s < 0. Exact arithmetic, so an overflow throws.
+    */
+  private def halfUpMean(s: Long, n: Long): Long = {
+    val twoN = Math.multiplyExact(2L, n)
+    if (s < 0) -(Math.addExact(Math.multiplyExact(2L, Math.negateExact(s)), n) / twoN)
+    else Math.addExact(Math.multiplyExact(2L, s), n) / twoN
   }
 
   /** The one nearest-centroid assign/probe: `df`'s columns plus
@@ -585,7 +672,7 @@ object Similarity {
     *
     * Physical shape: [[semanticIndexBuildHier]]'s grouped build, whose
     * fine level trains every per-cell k₂-means concurrently in one
-    * dataframe program per Lloyd iteration, then the same
+    * job per Lloyd iteration, then the same
     * largest-cluster-sized block-pair triangle as the flat operator.
     */
   def dedupSemanticHier(embeddings: DataFrame, k1: Int = 4, k2: Int = 4,
@@ -608,12 +695,13 @@ object Similarity {
     * longs — model parameters), so total clusters k₁·k₂ can track the
     * corpus while every per-row argmin scans only k₁ + k₂ centroids.
     *
-    * The build trains the fine level as ONE dataframe program per
-    * Lloyd iteration — every per-cell k₂-means runs CONCURRENTLY: the
-    * per-cell kernel ([[graft.plans.ArgminL2.argminUnitsPerCell]])
-    * scans only the row's own coarse cell's centroids, and the mean
-    * step is [[centroidMeans]] keyed by (coarse, fine). Job count per
-    * fine iteration: the mean step's two, independent of k₁. Each
+    * The build trains the fine level as ONE job per Lloyd
+    * iteration — every per-cell k₂-means runs CONCURRENTLY: the
+    * fine step is one [[meanStep]] job keyed by the row's coarse cell,
+    * whose scan covers only that cell's centroids — the loop of the
+    * per-cell kernel ([[graft.plans.ArgminL2.argminUnitsPerCell]]) that
+    * assigns the corpus afterwards. One job per fine iteration,
+    * independent of k₁. Each
     * cell's init is its first ≤ k₂ vectors in (md5(vec_id), vec_id) order, all cells in
     * one window pass, and an empty fine cluster keeps its previous
     * centroid — the flat trainer's rules, cell by cell, which is what
@@ -640,13 +728,13 @@ object Similarity {
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k2)
       .select(col("coarse"), (col("rn") - 1).cast("long").as("fine"), col("u"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSeq
-    def assign = vecs.withColumn("fine", fineCluster(coarseCentroids.size, cents))
-    for (_ <- 1 to iters) {
-      val means = centroidMeans(assign, Seq("coarse", "fine"), "u")
-        .map { case (key, m) => (key.getLong(0), key.getLong(1)) -> m.toSeq }.toMap
-      cents = cents.map { case (c, f, prev) => (c, f, means.getOrElse((c, f), prev)) }
+    if (cents.nonEmpty) {
+      val rows = vecs.select(col("u"), col("coarse")).queryExecution.toRdd
+      var cells = fineCells(coarseCentroids.size, cents)
+      for (_ <- 1 to iters) cells = meanStep(rows, cells, keyed = true)
+      cents = cents.map { case (c, f, _) => (c, f, cells(c.toInt)(f.toInt).toSeq) }
     }
-    val assigned = assign
+    val assigned = vecs.withColumn("fine", fineCluster(coarseCentroids.size, cents))
       .select(col("vec_id"), col("embedding"),
         (col("coarse") * k2 + col("fine")).as("cluster"))
       .honestCheckpoint()
@@ -665,17 +753,21 @@ object Similarity {
     */
   private def fineCluster(k1: Int, fine: Seq[(Long, Long, Seq[Long])]): Column =
     if (fine.isEmpty) lit(null).cast("long")
-    else {
-      val byCell = fine.groupBy(_._1)
-      val cells = (0 until k1).map { c =>
-        val fs = byCell.getOrElse(c.toLong, Nil).sortBy(_._2)
-        require(fs.map(_._2) == fs.indices.map(_.toLong),
-          s"fine centroid ids of coarse cell $c are not 0 until ${fs.size}")
-        fs.map(_._3.toArray)
-      }
-      graft.plans.ArgminL2.argminUnitsPerCell(col("u"), col("coarse"), cells)
-        .getItem(0).getField("cluster")
+    else graft.plans.ArgminL2.argminUnitsPerCell(col("u"), col("coarse"), fineCells(k1, fine))
+      .getItem(0).getField("cluster")
+
+  /** The fine model as per-coarse-cell centroid lists, fine id =
+    * position (the per-cell kernel's and [[meanStep]]'s layout).
+    */
+  private def fineCells(k1: Int, fine: Seq[(Long, Long, Seq[Long])]): Seq[Seq[Array[Long]]] = {
+    val byCell = fine.groupBy(_._1)
+    (0 until k1).map { c =>
+      val fs = byCell.getOrElse(c.toLong, Nil).sortBy(_._2)
+      require(fs.map(_._2) == fs.indices.map(_.toLong),
+        s"fine centroid ids of coarse cell $c are not 0 until ${fs.size}")
+      fs.map(_._3.toArray)
     }
+  }
 
   /** Ingestion-time probe against a [[HierSemanticIndex]] — the
     * two-level serve mate of [[semanticProbe]]: a batch vector
@@ -2277,16 +2369,30 @@ object Similarity {
       residual: Boolean = false)
 
   /** Train the coarse quantizer + codebooks and encode/label the
-    * corpus ONCE — the index-build half of [[annIvfPq]].
+    * corpus ONCE — the index-build half of [[annIvfPq]]. Both trainers
+    * read ONE (vec_id, u, un) checkpoint (raw units for the cells,
+    * normalized units for PQ, spread like [[corpusFrame]]) and share
+    * ONE init collect of the first max(nlist, cb) rows in md5 order.
+    * The codes are one projection over the same checkpoint: the PQ
+    * code kernel over `un` and the coarse argmin of `u` as `label`.
     */
   def ivfPqIndexBuild(embeddings: DataFrame, nlist: Int = 8, ivfIters: Int = 3,
                       m: Int = 8, codebookSize: Int = 8, pqIters: Int = 3): IvfPqIndex = {
     val dsub = pqDsub(m)
-    val (centroids, corpusA) = trainAssign(embeddings, nlist, ivfIters)
-    val corpusU = pqCorpusUnits(embeddings)
-    val codebooks = pqTrainCodebooks(corpusU, m, codebookSize, pqIters, dsub)
-    val codes = pqEncode(corpusU, codebooks, dsub)
-      .join(corpusA.select(col("vec_id"), col("cluster").as("label")), "vec_id")
+    val vecs = spreadForK(embeddings.select(col("vec_id"), col("embedding")), nlist)
+      .select(col("vec_id"), units(col("embedding")).as("u"),
+        graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
+      .honestCheckpoint()
+    val init = initRows(vecs, math.max(nlist, codebookSize), "u", "un")
+    val centroids = lloyd(vecs, "u", unitsOf(init.take(nlist), 0), ivfIters)
+    val codebooks = pqTrainFrom(vecs, "un", unitsOf(init.take(codebookSize), 1),
+      m, codebookSize, pqIters, dsub)
+    val label =
+      if (centroids.isEmpty) lit(null).cast("long")
+      else graft.plans.ArgminL2.argminUnits(col("u"), centroids).getItem(0).getField("cluster")
+    val codes = vecs.select(col("vec_id"),
+      graft.plans.PqQuant.pqEncodeCodes(col("un"), codebooks, dsub).as("codes"),
+      label.as("label"))
     IvfPqIndex(codebooks, centroids, codes,
       embeddings.select(col("vec_id"), col("embedding")), m)
   }
@@ -2373,7 +2479,7 @@ object Similarity {
                               pqIters: Int = 3): IvfPqIndex = {
     val dsub = pqDsub(m)
     val corpusU = pqCorpusUnits(embeddings)
-    val centroids = lloyd(corpusU, "un", nlist, ivfIters)
+    val centroids = lloyd(corpusU, "un", unitsOf(initRows(corpusU, nlist, "un"), 0), ivfIters)
     val labeled = nearestCells(corpusU, "un", centroids)
       .select(col("vec_id"), col("cluster").as("label"))
     // residual frame, materialized once: the zip_with subtraction is
@@ -2888,12 +2994,15 @@ object Similarity {
     * budget); IntegerUnitsSpec pins the kernel to the reference chain
     * value-for-value.
     *
-    * MATERIALIZED once (localCheckpoint): `un` is referenced by all
-    * m×cb distance columns — without a hard barrier CollapseProject
-    * inlines the kernel into every reference and every training scan
-    * re-runs it. The units frame is the PQ working set (n × dim
-    * longs — 512 B/row); an iterative trainer would persist exactly
-    * this projection on a cluster too.
+    * MATERIALIZED once (localCheckpoint): the PQ trainer's init
+    * collect, each of its [[meanStep]] folds and the encode all read
+    * `un`, and without the barrier each of them would re-run the
+    * normalize kernel over the source scan. The units frame is the PQ
+    * working set (n × dim longs — 512 B/row); an iterative trainer
+    * would persist exactly this projection on a cluster too. Flat PQ,
+    * OPQ's first pass, SQ and the residual IVF-PQ build read it; the
+    * raw-units IVF-PQ build folds `un` into its one (vec_id, u, un)
+    * checkpoint instead ([[ivfPqIndexBuild]]).
     */
   private def pqCorpusUnits(embeddings: DataFrame): DataFrame =
     embeddings
@@ -2901,15 +3010,15 @@ object Similarity {
       .honestCheckpoint()
 
   /** The plan-literal PQ argmin — the independent parity reference
-    * of the fused codebooks-as-data kernels ([[graft.plans.PqQuant]]),
-    * reached only through `wide = false` on [[pqTrainCodebooks]] /
-    * [[pqEncode]]. The fused kernels run at every shape: this path
-    * plans m·cb l2 kernels plus m O(cb²) when/least argmin folds even
-    * at the SMALLEST registered codebook (m=8, cb=8 → 64 kernels,
-    * ~512-ref folds), and since the trainer re-plans that tree every
-    * Lloyd iteration its analyzer + codegen cost measured 24-26% of
-    * whole-query wall (sf0.1 min-of-2 A/B: ann_pq 2.53 → 1.93 s,
-    * ann_ivfpq 3.25 → 2.44 s). Every subspace distance is projected
+    * of the fused codebooks-as-data kernel ([[graft.plans.PqEncodeI64]]),
+    * reached only through `wide = false` on [[pqEncode]]. The fused
+    * kernel runs at every shape: this path plans m·cb l2 kernels plus
+    * m O(cb²) when/least argmin folds even at the SMALLEST registered
+    * codebook (m=8, cb=8 → 64 kernels, ~512-ref folds), and when the
+    * trainer re-planned that tree every Lloyd iteration its analyzer
+    * + codegen cost measured 24-26% of whole-query wall (sf0.1
+    * min-of-2 A/B: ann_pq 2.53 → 1.93 s, ann_ivfpq 3.25 → 2.44 s).
+    * Every subspace distance is projected
     * ONCE (no re-evaluation inside the fold), and the fold picks the
     * lowest index on ties.
     */
@@ -2939,13 +3048,14 @@ object Similarity {
     * the lexicographic (du, cl) sort-head: the same lowest-code
     * tiebreak as [[pqArgmin]], bit-identical (spec-pinned).
     *
-    * RETAINED AS THE REFERENCE SEMANTICS ONLY: the corpus-sized wide
-    * paths ([[pqEncode]]/[[pqTrainCodebooks]]) now run the fused
-    * [[graft.plans.PqEncodeI64]] codegen kernel — the per-element
+    * RETAINED AS THE REFERENCE SEMANTICS ONLY: no operator calls
+    * it. The corpus encode ([[pqEncode]]) runs the fused
+    * [[graft.plans.PqEncodeI64]] codegen kernel and the trainer
+    * ([[pqTrainCodebooks]]) its scan loop — the per-element
     * `transform` lambda here is interpreted (m·cb dispatches per
-    * row), which priced the 100 TB encode pass; the spec pins the
-    * kernel bit-identical to this path. Still serves the query-side
-    * ADC table ([[pqQueries]]), where rows are query-count sized.
+    * row), which priced the 100 TB encode pass — and the query-side
+    * ADC table ([[pqQueries]]) is [[graft.plans.PqQTableI64]]. The
+    * spec pins the encode kernel bit-identical to this path.
     */
   private[graft] def pqCodeData(un: Column, books: IndexedSeq[IndexedSeq[Array[Long]]],
                          j: Int, dsub: Int): Column = {
@@ -2955,55 +3065,38 @@ object Similarity {
         e.getField("_1").as("cl")))), 1).getField("cl").cast("int")
   }
 
-  /** JOINT per-subspace k-means: all m codebooks advance in ONE scan
-    * + one (m×k×dsub)-row shuffle per iteration. Training each
-    * subspace through [[lloyd]] would cost m×iters full scans and m
-    * init collects for the identical math (same md5-order init rows,
-    * same argmin tie rule, same mean update) — measured 35.9 s vs
-    * ~4 s at bench SF for no result difference.
+  /** JOINT per-subspace k-means: all m codebooks advance in ONE
+    * [[meanStep]] job per iteration (slice j of a row scans codebook
+    * j). Training each subspace through [[lloyd]] would cost m×iters
+    * full scans and m init collects for the identical math (same
+    * md5-order init rows, same argmin tie rule, same mean update) —
+    * measured 35.9 s vs ~4 s at bench SF for no result difference.
+    * Init is the first `codebookSize` rows of `corpusU` in md5 order.
     */
   private[graft] def pqTrainCodebooks(corpusU: DataFrame, m: Int, codebookSize: Int,
-                               iters: Int, dsub: Int,
-                               wide: Boolean = true): IndexedSeq[IndexedSeq[Array[Long]]] = {
-    def sub(u: Column, j: Int): Column = slice(u, j * dsub + 1, dsub)
-    val initRows = corpusU.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(codebookSize).collect()
-      .map(_.getSeq[Long](1).toArray)
+                                      iters: Int, dsub: Int): IndexedSeq[IndexedSeq[Array[Long]]] =
+    pqTrainFrom(corpusU, "un", unitsOf(initRows(corpusU, codebookSize, "un"), 0),
+      m, codebookSize, iters, dsub)
+
+  /** [[pqTrainCodebooks]] from given init rows (md5 order, at most
+    * `codebookSize`) of the `units` column.
+    */
+  private def pqTrainFrom(corpusU: DataFrame, units: String, init: Seq[Array[Long]],
+                          m: Int, codebookSize: Int, iters: Int,
+                          dsub: Int): IndexedSeq[IndexedSeq[Array[Long]]] = {
     // an empty corpus has nothing to encode: all-zero codebooks of the
     // right shape keep every encode and search an empty frame of its
     // usual schema
-    if (initRows.isEmpty)
+    if (init.isEmpty)
       return IndexedSeq.fill(m, codebookSize)(new Array[Long](dsub))
     // a corpus smaller than the codebook pads by reuse: duplicate
     // centroids never win the lowest-index argmin, so they are
     // permanently-empty cells rather than a driver crash
-    var books = IndexedSeq.tabulate(m, codebookSize)((j, c) =>
-      initRows(c % initRows.length).slice(j * dsub, (j + 1) * dsub))
-    for (_ <- 1 to iters) {
-      // the kernels/data regimes differ ONLY in how the per-subspace
-      // argmin is computed (m×cb codegen kernels vs m transform
-      // folds over codebook-as-data) — init, tiebreak, and the mean
-      // step are shared, so the two are bit-identical (spec-pinned)
-      val assigned =
-        if (wide) corpusU
-          .select(col("un"),
-            graft.plans.PqQuant.pqEncodeCodes(col("un"), books, dsub).as("codes"))
-          .select((0 until m).map(j =>
-            struct(element_at(col("codes"), j + 1).as("cl"),
-              sub(col("un"), j).as("sv")).as(s"a$j")): _*)
-        else corpusU
-          .select(col("un") +: pqDistCols(books, "un", dsub): _*)
-          .select((0 until m).map(j =>
-            struct(pqArgmin(j, codebookSize).as("cl"), sub(col("un"), j).as("sv")).as(s"a$j")): _*)
-      val means = centroidMeans(assigned
-          .select(posexplode(array((0 until m).map(j => col(s"a$j")): _*)).as(Seq("j", "a")))
-          .select(col("j"), col("a.cl").as("cl"), col("a.sv").as("sv")),
-          Seq("j", "cl"), "sv")
-        .map { case (key, mean) => (key.getInt(0), key.getInt(1)) -> mean }.toMap
-      // empty cells keep their previous centroid (like lloyd())
-      books = IndexedSeq.tabulate(m, codebookSize)((j, c) => means.getOrElse((j, c), books(j)(c)))
-    }
-    books
+    var books: Seq[Seq[Array[Long]]] = IndexedSeq.tabulate(m, codebookSize)((j, c) =>
+      init(c % init.length).slice(j * dsub, (j + 1) * dsub))
+    val rows = corpusU.select(col(units)).queryExecution.toRdd
+    for (_ <- 1 to iters) books = meanStep(rows, books, keyed = false)
+    books.map(_.toIndexedSeq).toIndexedSeq
   }
 
   /** One corpus scan → (vec_id, codes): per-subspace argmin code

@@ -64,19 +64,20 @@ object TextOps {
     * every whitespace run to one space + trim, plus the md5 of the
     * canonical form — the normalization pass that runs BEFORE exact
     * dedup so trivially-reformatted copies (case, line wrapping)
-    * collapse into one hash group. Pure per-row Column algebra on
-    * the scan, no shuffle; `changed` marks docs the normalization
+    * collapse into one hash group. Pure per-row Column algebra over
+    * the sorted scan rows; `changed` marks docs the normalization
     * actually rewrote.
     */
   def normalize(documents: DataFrame): DataFrame = {
     val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
     documents
+      .select(col("doc_id"), col("text"))
+      .orderBy(col("doc_id"))
       .select(col("doc_id"), col("text"), norm.as("norm"))
       .select(col("doc_id"),
         length(col("norm")).cast("long").as("norm_chars"),
         md5(col("norm")).as("norm_hash"),
         (col("norm") =!= col("text")).as("changed"))
-      .orderBy(col("doc_id"))
   }
 
   /** Language ID by marker-token counting (with multiplicity),

@@ -78,27 +78,7 @@ case class ArgminL2I64(child: Expression, cell: Expression, cents: ArraySeq.ofLo
     val cap = math.min(nprobe, hi - lo)
     val bestD = new Array[Long](cap)
     val bestC = new Array[Long](cap)
-    var filled = 0
-    var c = lo
-    while (c < hi) {
-      var acc = 0L
-      val base = c * dim
-      var d = 0
-      while (d < dim) {
-        val diff = u.getLong(d) - cents(base + d)
-        acc = Math.addExact(acc, Math.multiplyExact(diff, diff))
-        d += 1
-      }
-      if (filled < cap || acc < bestD(cap - 1)) {
-        if (filled < cap) filled += 1
-        var pos = filled - 1
-        while (pos > 0 && acc < bestD(pos - 1)) {
-          bestD(pos) = bestD(pos - 1); bestC(pos) = bestC(pos - 1); pos -= 1
-        }
-        bestD(pos) = acc; bestC(pos) = (c - lo).toLong
-      }
-      c += 1
-    }
+    val filled = ArgminL2.scan(u, 0, cents.unsafeArray, lo, hi, dim, bestD, bestC)
     new GenericArrayData(Array.tabulate[Any](filled)(i =>
       new GenericInternalRow(Array[Any](bestD(i), bestC(i)))))
   }
@@ -166,6 +146,47 @@ object ArgminL2 {
   val OutputType: DataType = ArrayType(StructType(Seq(
     StructField("du", LongType, nullable = false),
     StructField("cluster", LongType, nullable = false))), containsNull = false)
+
+  /** The nearest-centroid scan every argmin in graft runs — this
+    * kernel's interpreted eval, [[PqEncodeI64]]'s per-subspace search
+    * and the k-means and PQ training folds in
+    * [[graft.operators.Similarity]] — written once so that all of them
+    * assign a row alike. It scans centroids `lo until hi` of the flat
+    * model `cents` (centroid c at `cents(c·dim)`) ASCENDING against the
+    * `dim` components of `u` starting at `off`, and keeps the
+    * `bestD.length` nearest in (du, cluster) order in `bestD`/`bestC`,
+    * cluster ids local to `lo`: an insertion only passes entries with a
+    * strictly larger distance, so equal distances keep the lower
+    * cluster first. The distance is the exact overflow-checked long
+    * Σ(Δ²). Returns how many slots it filled, min(capacity, hi − lo).
+    * The caller checks `u`'s length; nothing is allocated.
+    */
+  def scan(u: ArrayData, off: Int, cents: Array[Long], lo: Int, hi: Int, dim: Int,
+           bestD: Array[Long], bestC: Array[Long]): Int = {
+    val cap = bestD.length
+    var filled = 0
+    var c = lo
+    while (c < hi) {
+      var acc = 0L
+      val base = c * dim
+      var d = 0
+      while (d < dim) {
+        val diff = u.getLong(off + d) - cents(base + d)
+        acc = Math.addExact(acc, Math.multiplyExact(diff, diff))
+        d += 1
+      }
+      if (filled < cap || acc < bestD(cap - 1)) {
+        if (filled < cap) filled += 1
+        var pos = filled - 1
+        while (pos > 0 && acc < bestD(pos - 1)) {
+          bestD(pos) = bestD(pos - 1); bestC(pos) = bestC(pos - 1); pos -= 1
+        }
+        bestD(pos) = acc; bestC(pos) = (c - lo).toLong
+      }
+      c += 1
+    }
+    filled
+  }
 
   /** Column API: the `nprobe` nearest centroids of `u` as
     * `array<struct<du, cluster>>` (see [[ArgminL2I64]]).

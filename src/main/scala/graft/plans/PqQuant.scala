@@ -31,7 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * exact overflow-checked long Σ(Δ²), and scanning codes ASCENDING
   * with a strict `<` keeps the FIRST minimal distance — exactly the
   * `array_sort`-by-(du, cl) lowest-code tiebreak and `pqArgmin`'s
-  * when-chain rule. Overflow: normalized units |u| ≤ 1e8, centroids
+  * when-chain rule. The interpreted eval runs that search as
+  * [[ArgminL2.scan]] once per subspace, the loop the PQ training fold
+  * shares. Overflow: normalized units |u| ≤ 1e8, centroids
   * are means of units, so per-term Δ² ≤ 4e16 and a dsub ≤ 64 sum
   * stays < 2.6e18 < 2⁶³; addExact/multiplyExact fail loudly beyond.
   *
@@ -54,24 +56,12 @@ case class PqEncodeI64(child: Expression, books: Array[Long],
     val u = a.asInstanceOf[ArrayData]
     IntegerUnits.requireSameLength(u.numElements(), m * dsub, "pq_encode")
     val out = new Array[Int](m)
+    val bestD = new Array[Long](1)
+    val bestC = new Array[Long](1)
     var j = 0
     while (j < m) {
-      var bestD = Long.MaxValue
-      var bestC = 0
-      var c = 0
-      while (c < cb) {
-        var acc = 0L
-        val base = (j * cb + c) * dsub
-        var d = 0
-        while (d < dsub) {
-          val diff = u.getLong(j * dsub + d) - books(base + d)
-          acc = Math.addExact(acc, Math.multiplyExact(diff, diff))
-          d += 1
-        }
-        if (acc < bestD) { bestD = acc; bestC = c }
-        c += 1
-      }
-      out(j) = bestC
+      ArgminL2.scan(u, j * dsub, books, j * cb, (j + 1) * cb, dsub, bestD, bestC)
+      out(j) = bestC(0).toInt
       j += 1
     }
     new GenericArrayData(out)

@@ -60,10 +60,12 @@ class KernelOnceSpec extends SparkSpec {
   // sort: fin_spline_features 2282, mm_av_meta 581, mm_binary_meta 406,
   // mm_resize_plan 361, text_html_extract 95, text_quality 88,
   // text_langid 83, text_pii_scrub 55, fin_cyclical_features 51,
-  // text_scripts 46, text_fingerprint 30, text_tokens 24.
+  // text_scripts 46, text_fingerprint 30, text_tokens 24,
+  // text_normalize 9.
   Seq("fin_spline_features", "mm_av_meta", "mm_binary_meta", "mm_resize_plan",
     "text_html_extract", "text_quality", "text_langid", "text_pii_scrub",
-    "fin_cyclical_features", "text_scripts", "text_fingerprint", "text_tokens")
+    "fin_cyclical_features", "text_scripts", "text_fingerprint", "text_tokens",
+    "text_normalize")
     .foreach { name =>
       test(s"the range sampler of $name evaluates no kernel expression") {
         val ranges = rangeExchanges(SparkEntry.queries(name)(gated, PlanGate.defaultSf))

@@ -42,10 +42,20 @@ class SimilaritySpec extends SparkSpec {
     * assigns by [[refTop]] and moves every non-empty cluster to the
     * sign-split half-up integer mean of its members.
     */
-  private def refLloyd(vecs: Seq[(Long, Array[Long])], k: Int, iters: Int): Seq[Array[Long]] = {
+  private def refLloyd(vecs: Seq[(Long, Array[Long])], k: Int, iters: Int): Seq[Array[Long]] =
+    refLloydFrom(vecs, md5Order(vecs).take(k).map(_._2), iters)
+
+  /** `vecs` in the trainers' (md5(vec_id), vec_id) init order. */
+  private def md5Order(vecs: Seq[(Long, Array[Long])]): Seq[(Long, Array[Long])] = {
     def md5(id: Long): String = java.security.MessageDigest.getInstance("MD5")
       .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    var cents = vecs.sortBy { case (id, _) => (md5(id), id) }.take(k).map(_._2)
+    vecs.sortBy { case (id, _) => (md5(id), id) }
+  }
+
+  /** [[refLloyd]]'s iterations from a given initial model. */
+  private def refLloydFrom(vecs: Seq[(Long, Array[Long])], init: Seq[Array[Long]],
+                           iters: Int): Seq[Array[Long]] = {
+    var cents = init
     for (_ <- 1 to iters) {
       val groups = vecs.groupBy { case (_, u) => refTop(u, cents, 1).head._2.toInt }
       cents = cents.indices.map { i =>
@@ -59,6 +69,47 @@ class SimilaritySpec extends SparkSpec {
       }
     }
     cents
+  }
+
+  /** Driver-side joint PQ reference: the first cb vectors in
+    * (md5(vec_id), vec_id) order seed every codebook (reused cyclically
+    * when the corpus has fewer than cb vectors), and each subspace runs
+    * [[refLloydFrom]] on its slices: lowest-code tiebreak, an empty
+    * code keeps its codebook entry.
+    */
+  private def refPqTrain(vecs: Seq[(Long, Array[Long])], m: Int, cb: Int, iters: Int,
+                         dsub: Int): Seq[Seq[Array[Long]]] = {
+    val init = md5Order(vecs).take(cb).map(_._2)
+    (0 until m).map { j =>
+      def sub(u: Array[Long]): Array[Long] = u.slice(j * dsub, (j + 1) * dsub)
+      refLloydFrom(vecs.map { case (id, u) => (id, sub(u)) },
+        (0 until cb).map(c => sub(init(c % init.size))), iters)
+    }
+  }
+
+  /** Jobs that `body` starts, counted by a listener up to a sentinel
+    * job: listener events arrive in order, so once the sentinel is seen
+    * every job `body` started has been counted.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.range(1).collect()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.contains("sentinel"))
+    jobs.asScala.takeWhile(_ != "sentinel").size
   }
 
   /** The gate corpus in quantized units, (vec_id, u). */
@@ -1428,32 +1479,92 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("serving a committed IVF-PQ index starts no schema-inference jobs") {
-    import scala.jdk.CollectionConverters._
     val dir = tempDir("graft_ivfpq_jobs")
     Similarity.annIvfPqServed(embeddings, dir) // builds and commits the index
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.annIvfPqServed(embeddings, dir)
-      // listener events arrive in order: once this job is seen, every
-      // job the frame build started has been counted
-      spark.sparkContext.setJobDescription("sentinel")
-      spark.range(1).collect()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.contains("sentinel"))
-    val built = jobs.asScala.takeWhile(_ != "sentinel").size
+    val built = jobsStartedBy(Similarity.annIvfPqServed(embeddings, dir))
     // the corpus count's two jobs, then one collect each for meta,
     // codebooks and centroids; inferring the schemas of those tables
     // and of the codes costs a job per read (9 jobs in all)
     assert(built <= 5, s"serving a committed index started $built jobs")
+  }
+
+  private def normUnitsFrame(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
+      .localCheckpoint(true)
+
+  test("one Lloyd step and one PQ training step each start exactly one job") {
+    val vecs = embeddings
+      .select(col("vec_id"), graft.plans.IntegerUnits.quantizeUnits(col("embedding")).as("u"))
+      .localCheckpoint(true)
+    val init = md5Order(corpusUnits).take(8).map(_._2)
+    assert(jobsStartedBy(Similarity.lloyd(vecs, "u", init, 1)) === 1)
+    assert(jobsStartedBy(Similarity.lloyd(vecs, "u", init, 2)) === 2)
+    val un = normUnitsFrame(embeddings)
+    val pq1 = jobsStartedBy(Similarity.pqTrainCodebooks(un, 8, 8, 1, 8))
+    val pq2 = jobsStartedBy(Similarity.pqTrainCodebooks(un, 8, 8, 2, 8))
+    assert(pq2 - pq1 === 1, s"PQ: $pq1 jobs at 1 iteration, $pq2 at 2")
+  }
+
+  test("an IVF-PQ build and save starts at least 8 fewer jobs than with two jobs per training step") {
+    val dir = tempDir("graft_ivfpq_build_jobs")
+    val jobs = jobsStartedBy(
+      Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(embeddings), dir))
+    // with a two-job mean step per Lloyd and PQ iteration, a
+    // (vec_id, embedding, u) and a (vec_id, un) checkpoint, two init
+    // collects and a codes-to-labels join, this same count read 21
+    // (22 in a fresh session)
+    assert(jobs <= 21 - 8, s"IVF-PQ build + save started $jobs jobs")
+  }
+
+  test("pqTrainCodebooks trains like a driver-side joint PQ k-means") {
+    val all = normUnitsFrame(embeddings)
+    // fewer vectors than codes: the init reuses them cyclically
+    val few = normUnitsFrame(embeddings.filter(col("vec_id") % 10 === 0))
+    for ((frame, cb) <- Seq(all -> 8, few -> 64)) {
+      val rows = frame.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
+      if (cb == 64) assert(rows.size < cb)
+      assert(Similarity.pqTrainCodebooks(frame, 8, cb, 3, 8).map(_.map(_.toSeq)) ===
+        refPqTrain(rows, 8, cb, 3, 8).map(_.map(_.toSeq)),
+        s"codebooks at cb=$cb diverged from the driver-side joint PQ k-means")
+    }
+  }
+
+  /** The exception of `body`, or of a cause of it, of type `T`. */
+  private def thrownCause[T <: Throwable](body: => Any)(implicit t: scala.reflect.ClassTag[T]): T = {
+    val e = intercept[Throwable](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: T => x }
+      .getOrElse(fail(s"expected a ${t.runtimeClass.getSimpleName}, got $e", e))
+  }
+
+  test("the training fold fails loudly on overflow, null elements and wrong lengths") {
+    import spark.implicits._
+    val big = 5000000000000000000L
+    // one row: the sum fits, the half-up mean's 2s does not
+    val one = Seq((1L, Seq(big, 0L))).toDF("vec_id", "u")
+    // two rows: their sum overflows
+    val two = Seq((1L, Seq(big, 0L)), (2L, Seq(big, 0L))).toDF("vec_id", "u").repartition(1)
+    for (df <- Seq(one, two)) {
+      thrownCause[ArithmeticException](Similarity.lloyd(df, "u", Seq(Array(big, 0L)), 1))
+      thrownCause[ArithmeticException](
+        Similarity.pqTrainCodebooks(df.withColumnRenamed("u", "un"), 1, 1, 1, 2))
+    }
+    val withNull = Seq((1L, Seq(Some(1L), None)), (2L, Seq(Some(1L), Some(2L)))).toDF("vec_id", "u")
+    val ragged = Seq((1L, Seq(1L, 2L)), (2L, Seq(1L, 2L, 3L))).toDF("vec_id", "u")
+    for (df <- Seq(withNull, ragged)) {
+      thrownCause[IllegalArgumentException](Similarity.lloyd(df, "u", Seq(Array(1L, 2L)), 1))
+      thrownCause[IllegalArgumentException](
+        Similarity.pqTrainCodebooks(df.withColumnRenamed("u", "un"), 1, 1, 1, 2))
+    }
+    // an empty corpus trains no centroids and all-zero codebooks
+    val none = embeddings.filter(col("vec_id") < 0)
+    val ix = Similarity.ivfPqIndexBuild(none)
+    assert(ix.centroids.isEmpty)
+    assert(ix.codebooks.size === 8 && ix.codebooks.forall(_.size === 8))
+    assert(ix.codebooks.flatten.forall(_.toSeq === Seq.fill(8)(0L)))
+    assert(Similarity.pqTrainCodebooks(normUnitsFrame(none), 8, 8, 3, 8).flatten
+      .forall(_.toSeq === Seq.fill(8)(0L)))
+    assert(ix.codes.collect().isEmpty)
   }
 
   test("wide PQ codebooks are bit-identical to the literal kernels and lift recall at FAISS sizes") {
@@ -1461,11 +1572,9 @@ class SimilaritySpec extends SparkSpec {
     val corpusU = embeddings
       .select(col("vec_id"), normalizeUnits(col("embedding")).as("un"))
       .localCheckpoint(true)
-    // bit parity of the whole train/encode path at a size both run
-    val bK = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8, wide = false)
-    val bD = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8, wide = true)
-    assert(bD.map(_.map(_.toSeq)) === bK.map(_.map(_.toSeq)),
-      "codebooks-as-data trainer diverged from the literal kernels")
+    // bit parity of the encode at a size both run (the trainer is
+    // pinned to a driver-side reference by its own test)
+    val bK = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8)
     val cK = Similarity.pqEncode(corpusU, bK, 8, wide = false)
       .orderBy(col("vec_id")).collect().map(_.toString).toSeq
     val cD = Similarity.pqEncode(corpusU, bK, 8, wide = true)
