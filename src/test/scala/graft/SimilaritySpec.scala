@@ -1442,12 +1442,19 @@ class SimilaritySpec extends SparkSpec {
       Similarity.bqMeta -> saved(Similarity.bqIndexSave(Similarity.bqIndexBuild(base), _)),
       Similarity.ivfBqMeta -> saved(Similarity.ivfBqIndexSave(Similarity.ivfBqIndexBuild(base), _)),
       Similarity.ivfPqMeta -> saved(Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(base), _)))
-    for ((kind, dir) <- kinds)
+    // the payload tables, which the loaders bind to the corpus
+    val payloads = Set("meta.parquet", "codes.parquet", "sigs.parquet", "assigned.parquet")
+    for ((kind, dir) <- kinds) {
       assert(spark.read.parquet(s"$dir/meta.parquet").schema === kind.schema, dir)
-    // the IVF-PQ loader reads its model and codes tables with declared schemas too
+      // every other table the saver writes is a model table with a declared schema
+      val models = new java.io.File(dir).list().filter(_.endsWith(".parquet")).toSet -- payloads
+      assert(models === kind.models.keySet, dir)
+      for ((table, schema) <- kind.models)
+        assert(spark.read.parquet(s"$dir/$table").schema === schema, s"$dir/$table")
+    }
+    // IVF-PQ's model rides its meta row; its codes are read with a declared schema too
     val ivfPq = kinds.last._2
-    assert(spark.read.parquet(s"$ivfPq/codebooks.parquet").schema === Similarity.codebooksSchema)
-    assert(spark.read.parquet(s"$ivfPq/centroids.parquet").schema === Similarity.centroidsSchema)
+    assert(Similarity.ivfPqMeta.models.isEmpty)
     assert(spark.read.parquet(s"$ivfPq/codes.parquet").schema === Similarity.ivfPqCodesSchema(base))
   }
 
@@ -1461,31 +1468,138 @@ class SimilaritySpec extends SparkSpec {
     def present(dir: String): Boolean =
       Similarity.frozenIndexComplete(spark, dir, "p", 10L, Similarity.ivfPqMeta)
     val v = Similarity.ivfPqIndexVersion
-    val good = metaDir(Seq((8, false, v, "p", 10L, -1L))
-      .toDF("m", "residual", "version", "params", "n", "last_batch"))
+    // a one-cell, one-code model: codebooks [m][cb][dsub], centroids [cell][dim]
+    val (books, cents) = (Seq(Seq(Seq(1L, 2L))), Seq(Seq(3L, 4L)))
+    val good = metaDir(Seq((8, false, v, "p", 10L, -1L, books, cents))
+      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))
     assert(present(good), "a matching meta must read as present")
-    assert(!present(metaDir(Seq((8, false, "p", 10L, -1L))
-      .toDF("m", "residual", "params", "n", "last_batch"))), "no version column")
-    assert(!present(metaDir(Seq((8, false, Option.empty[Int], "p", 10L, -1L))
-      .toDF("m", "residual", "version", "params", "n", "last_batch"))), "null version")
+    assert(!present(metaDir(Seq((8, false, "p", 10L, -1L, books, cents))
+      .toDF("m", "residual", "params", "n", "last_batch", "codebooks", "centroids"))),
+      "no version column")
+    assert(!present(metaDir(Seq((8, false, Option.empty[Int], "p", 10L, -1L, books, cents))
+      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))),
+      "null version")
     assert(!present(metaDir(Seq((v, "p", 10L, -1L))
       .toDF("version", "params", "n", "last_batch"))), "the semantic kind's columns")
-    assert(!present(metaDir(Seq((8, false, v.toString, "p", 10L, -1L))
-      .toDF("m", "residual", "version", "params", "n", "last_batch"))), "string version")
-    assert(!present(metaDir(Seq((8, false, v.toLong, "p", 10L, -1L))
-      .toDF("m", "residual", "version", "params", "n", "last_batch"))), "long version")
+    assert(!present(metaDir(Seq((8, false, v.toString, "p", 10L, -1L, books, cents))
+      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))),
+      "string version")
+    assert(!present(metaDir(Seq((8, false, v.toLong, "p", 10L, -1L, books, cents))
+      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))),
+      "long version")
+    assert(!present(metaDir(Seq((8, false, v, "p", 10L, -1L))
+      .toDF("m", "residual", "version", "params", "n", "last_batch"))),
+      "no model columns (the v5 layout's meta)")
     assert(new java.io.File(s"$good/meta.parquet/_SUCCESS").delete())
     assert(!present(good), "a meta without _SUCCESS is an uncommitted save")
   }
 
+  private def noopWrite(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** Jobs of a warm serve from `dir`: (building the frame, its `noop` write). */
+  private def warmServeJobs(dir: String, serve: String => DataFrame): (Int, Int) = {
+    noopWrite(serve(dir)) // builds and commits the index
+    var served: DataFrame = null
+    val frame = jobsStartedBy { served = serve(dir) }
+    (frame, jobsStartedBy(noopWrite(served)))
+  }
+
   test("serving a committed IVF-PQ index starts no schema-inference jobs") {
-    val dir = tempDir("graft_ivfpq_jobs")
-    Similarity.annIvfPqServed(embeddings, dir) // builds and commits the index
-    val built = jobsStartedBy(Similarity.annIvfPqServed(embeddings, dir))
-    // the corpus count's two jobs, then one collect each for meta,
-    // codebooks and centroids; inferring the schemas of those tables
-    // and of the codes costs a job per read (9 jobs in all)
-    assert(built <= 5, s"serving a committed index started $built jobs")
+    val (frame, write) =
+      warmServeJobs(tempDir("graft_ivfpq_jobs"), Similarity.annIvfPqServed(embeddings, _))
+    // the corpus count, then the meta collect, which also returns the
+    // model. With Dataset.count() (two jobs) and the model in
+    // codebooks/centroids tables (a collect each) this read 5;
+    // inferring the schemas of those tables and of the codes costs a
+    // job per read
+    assert(frame <= 2, s"building the served frame started $frame jobs")
+    // with the query side joined to its own probe rows on query_id
+    // (one more broadcast) this read 7
+    assert(write <= 6, s"the served search's write started $write jobs")
+  }
+
+  test("a warm IVF-SQ and IVF-BQ served search write each starts one job fewer") {
+    // measured with this listener on the same data, with the query
+    // side joined to its own probe rows on query_id (one more
+    // broadcast): IVF-SQ 7 jobs, IVF-BQ 7
+    val (_, sq) = warmServeJobs(tempDir("graft_ivfsq_jobs"), Similarity.annIvfSqServed(embeddings, _))
+    assert(sq <= 7 - 1, s"the IVF-SQ served search's write started $sq jobs")
+    val (_, bq) = warmServeJobs(tempDir("graft_ivfbq_jobs"), Similarity.annIvfBqServed(embeddings, _))
+    assert(bq <= 7 - 1, s"the IVF-BQ served search's write started $bq jobs")
+  }
+
+  test("an IVF-PQ directory in the v5 layout reads as absent and is rebuilt with the same answer") {
+    import spark.implicits._
+    val dir = tempDir("graft_ivfpq_v5")
+    val first = Similarity.annIvfPqServed(embeddings, dir).collect().map(_.toString).toSeq
+    assert(first.nonEmpty)
+    // rewrite it as v5 wrote it: the model in codebooks and centroids
+    // tables, and a meta row with the same fingerprint but no model
+    val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${Similarity.sourceStamp(embeddings)}"
+    val n = embeddings.count()
+    val built = Similarity.ivfPqIndexBuild(embeddings)
+    (for ((books, j) <- built.codebooks.zipWithIndex; (u, c) <- books.zipWithIndex)
+      yield (j, c, u.toSeq)).toDF("subspace", "code", "units")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
+    built.centroids.zipWithIndex.map { case (u, c) => (c, u.toSeq) }.toDF("cell", "units")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    Seq((8, false, 5, params, n, -1L)).toDF("m", "residual", "version", "params", "n", "last_batch")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+    assert(!Similarity.frozenIndexComplete(spark, dir, params, n, Similarity.ivfPqMeta),
+      "a v5 directory must read as absent")
+    val marker = java.nio.file.Paths.get(dir, "meta.parquet", "_SUCCESS")
+    val v5At = java.nio.file.Files.getLastModifiedTime(marker)
+    val rebuilt = Similarity.annIvfPqServed(embeddings, dir).collect().map(_.toString).toSeq
+    assert(rebuilt === first, "the rebuilt index must serve the same answer")
+    assert(java.nio.file.Files.getLastModifiedTime(marker) !== v5At, "a v5 directory must be rebuilt")
+    assert(Similarity.frozenIndexComplete(spark, dir, params, n, Similarity.ivfPqMeta))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "codebooks.parquet")),
+      "the rebuilt directory is the current layout, with no model tables")
+  }
+
+  test("ivfPqIndexLoad returns exactly the saved model for both layouts and an empty corpus") {
+    val none = embeddings.filter(col("vec_id") < 0)
+    for (corpus <- Seq(embeddings, none); residual <- Seq(false, true)) {
+      val built =
+        if (residual) Similarity.ivfPqResidualIndexBuild(corpus)
+        else Similarity.ivfPqIndexBuild(corpus)
+      val dir = tempDir("graft_ivfpq_model")
+      Similarity.ivfPqIndexSave(built, dir)
+      val loaded = Similarity.ivfPqIndexLoad(spark, dir, corpus)
+      val what = s"residual=$residual, empty=${corpus eq none}"
+      assert(loaded.codebooks.map(_.map(_.toSeq)) === built.codebooks.map(_.map(_.toSeq)), what)
+      assert(loaded.centroids.map(_.toSeq) === built.centroids.map(_.toSeq), what)
+      assert(loaded.m === built.m && loaded.residual === residual, what)
+      if (corpus eq none) {
+        assert(loaded.centroids.isEmpty, what)
+        assert(loaded.codebooks.map(_.map(_.toSeq)) === Seq.fill(8, 8)(Seq.fill(8)(0L)), what)
+      } else assert(loaded.centroids.size === 8, what)
+    }
+  }
+
+  test("append, stream-append, compact and remove carry meta's model through unchanged") {
+    val base = embeddings.filter(col("vec_id") % 10 > 1)
+    for (residual <- Seq(false, true)) {
+      val built =
+        if (residual) Similarity.ivfPqResidualIndexBuild(base)
+        else Similarity.ivfPqIndexBuild(base)
+      val dir = tempDir("graft_ivfpq_frozen_model")
+      Similarity.ivfPqIndexSave(built, dir, s"model-spec;res=$residual", base.count())
+      def model(): (Any, Any) = {
+        val meta = Similarity.ivfPqMeta.read(spark, dir).head()
+        (meta.getAs[collection.Seq[_]]("codebooks"), meta.getAs[collection.Seq[_]]("centroids"))
+      }
+      val saved = model()
+      assert(saved === (built.codebooks.map(_.map(_.toSeq)), built.centroids.map(_.toSeq)))
+      Similarity.ivfPqIndexAppend(spark, dir, embeddings.filter(col("vec_id") % 10 === 0))
+      assert(model() === saved, s"append (residual=$residual)")
+      Similarity.ivfPqIndexStreamAppend(spark, dir, embeddings.filter(col("vec_id") % 10 === 1), 0L)
+      assert(model() === saved, s"stream-append (residual=$residual)")
+      Similarity.ivfPqIndexCompact(spark, dir)
+      assert(model() === saved, s"compact (residual=$residual)")
+      Similarity.ivfPqIndexRemove(spark, dir, embeddings.filter(col("vec_id") % 5 === 2))
+      assert(model() === saved, s"remove (residual=$residual)")
+    }
   }
 
   private def normUnitsFrame(df: DataFrame): DataFrame =
@@ -1512,8 +1626,9 @@ class SimilaritySpec extends SparkSpec {
     // with a two-job mean step per Lloyd and PQ iteration, a
     // (vec_id, embedding, u) and a (vec_id, un) checkpoint, two init
     // collects and a codes-to-labels join, this same count read 21
-    // (22 in a fresh session)
-    assert(jobs <= 21 - 8, s"IVF-PQ build + save started $jobs jobs")
+    // (22 in a fresh session); with the model saved as codebooks and
+    // centroids tables beside the meta row, it read 12
+    assert(jobs <= 11, s"IVF-PQ build + save started $jobs jobs")
   }
 
   test("pqTrainCodebooks trains like a driver-side joint PQ k-means") {
