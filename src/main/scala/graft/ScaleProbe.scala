@@ -330,7 +330,7 @@ object ScaleProbe {
           + col("clean_len"))).collect()(0).getLong(0)),
       "ann_pq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_pq_index"
-        val (params, n) = ("pq;m=8;cb=8;it=3", operators.Similarity.countRows(em))
+        val (params, n) = ("pq;m=8;cb=8;it=3", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.pqMeta) { staging =>
           operators.Similarity.pqIndexSave(operators.Similarity.pqIndexBuild(em), staging,
             params, n)
@@ -344,7 +344,7 @@ object ScaleProbe {
       // the IVF layouts are the scale path when it matters.
       "ann_sq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sq_index"
-        val (params, n) = ("sq8", operators.Similarity.countRows(em))
+        val (params, n) = ("sq8", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.sqMeta) { staging =>
           operators.Similarity.sqIndexSave(operators.Similarity.sqIndexBuild(em), staging,
             params, n)
@@ -359,7 +359,7 @@ object ScaleProbe {
       // — the probe documents how far that pushes the linear class.
       "ann_bq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_bq_index"
-        val (params, n) = ("bq;w=32", operators.Similarity.countRows(em))
+        val (params, n) = ("bq;w=32", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.bqMeta) { staging =>
           operators.Similarity.bqIndexSave(operators.Similarity.bqIndexBuild(em), staging,
             params, n)
@@ -373,7 +373,7 @@ object ScaleProbe {
       // query batch are nprobe/nlist of the corpus at dim B/vector).
       "ann_ivfsq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfsq_index"
-        val (params, n) = ("ivfsq;nlist=8;ivfIt=3", operators.Similarity.countRows(em))
+        val (params, n) = ("ivfsq;nlist=8;ivfIt=3", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfSqMeta) { staging =>
           operators.Similarity.ivfSqIndexSave(operators.Similarity.ivfSqIndexBuild(em),
             staging, params, n)
@@ -384,9 +384,9 @@ object ScaleProbe {
       }),
       "ann_ivfpq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_index"
-        val (params, n) = ("ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", operators.Similarity.countRows(em))
+        val (params, n) = ("ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqMeta) { staging =>
-          operators.Similarity.ivfPqIndexSave(operators.Similarity.ivfPqIndexBuild(em),
+          operators.Similarity.ivfPqSaveBuilt(operators.Similarity.ivfPqIndexBuild(em),
             staging, params, n)
         }
         operators.Similarity.ivfPqSearch(
@@ -410,8 +410,8 @@ object ScaleProbe {
           m.getAs[Int]("version") == operators.Similarity.ivfPqIndexVersion &&
             m.getAs[String]("params") == params
         } catch { case _: Exception => false }
-        if (!ok) operators.Similarity.ivfPqIndexSave(
-          operators.Similarity.ivfPqIndexBuild(em), dir, params, operators.Similarity.countRows(em))
+        if (!ok) operators.Similarity.ivfPqSaveBuilt(
+          operators.Similarity.ivfPqIndexBuild(em), dir, params, plans.HonestCheckpoint.countRows(em))
         val delta = fixedQ.get.select((col("vec_id") + lit(10000000000L)).as("vec_id"),
           col("embedding"))
         operators.Similarity.ivfPqIndexAppend(spark, dir, delta)
@@ -431,8 +431,8 @@ object ScaleProbe {
           m.getAs[Int]("version") == operators.Similarity.ivfPqIndexVersion &&
             m.getAs[String]("params") == params
         } catch { case _: Exception => false }
-        if (!ok) operators.Similarity.ivfPqIndexSave(
-          operators.Similarity.ivfPqIndexBuild(em), dir, params, operators.Similarity.countRows(em))
+        if (!ok) operators.Similarity.ivfPqSaveBuilt(
+          operators.Similarity.ivfPqIndexBuild(em), dir, params, plans.HonestCheckpoint.countRows(em))
         operators.Similarity.ivfPqIndexRemove(spark, dir,
           em.filter(col("vec_id") % 1000 === 7).select(col("vec_id")))
       }),
@@ -469,7 +469,7 @@ object ScaleProbe {
       "sem_probe_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sem_index"
         val kk = 4 * k.toInt
-        val (params, n) = (s"sem;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", operators.Similarity.countRows(em))
+        val (params, n) = (s"sem;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
           operators.Similarity.semanticIndexSave(
             operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
@@ -489,7 +489,7 @@ object ScaleProbe {
       "sem_probe_flat_cap" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semcap_index"
         val kk = math.min(4 * k.toInt, 64)
-        val (params, n) = (s"semcap;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", operators.Similarity.countRows(em))
+        val (params, n) = (s"semcap;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
           operators.Similarity.semanticIndexSave(
             operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
@@ -523,7 +523,7 @@ object ScaleProbe {
       "sem_probe_wide_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semwide_index"
         val kk = 4 * k.toInt
-        val (params, n) = (s"semwide;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", operators.Similarity.countRows(em))
+        val (params, n) = (s"semwide;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
           operators.Similarity.semanticIndexSave(
             operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
@@ -543,7 +543,7 @@ object ScaleProbe {
       "sem_probe_hier_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semhier_index"
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
-        val (params, n) = (s"semhier;k1=$side;k2=$side;it=3;src=${operators.Similarity.sourceStamp(em)}", operators.Similarity.countRows(em))
+        val (params, n) = (s"semhier;k1=$side;k2=$side;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.hierMeta) { staging =>
           operators.Similarity.semanticIndexSaveHier(
             operators.Similarity.semanticIndexBuildHier(em, side, side), staging, params, n)
@@ -686,9 +686,9 @@ object ScaleProbe {
       }),
       "ann_ivfpq_residual_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_res_index"
-        val (params, n) = ("ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", operators.Similarity.countRows(em))
+        val (params, n) = ("ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", plans.HonestCheckpoint.countRows(em))
         val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqMeta) { staging =>
-          operators.Similarity.ivfPqIndexSave(
+          operators.Similarity.ivfPqSaveBuilt(
             operators.Similarity.ivfPqResidualIndexBuild(em), staging, params, n)
         }
         operators.Similarity.ivfPqResidualSearch(

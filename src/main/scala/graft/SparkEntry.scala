@@ -26,8 +26,9 @@ object SparkEntry {
     * doubled the suite's top cost (round-5 gate: 41 s). The labels
     * are lineage-free: `components` returns a sort over the last
     * label-propagation round's checkpoint, and has already released
-    * the superseded rounds' and the edge frame's blocks. So the memo
-    * holds one label-sized checkpoint per (session, dir), never a plan
+    * the superseded rounds', the edge frame's and the MinHash chain's
+    * per-document (doc_id, sh, sig) blocks. So the memo holds one
+    * label-sized checkpoint per (session, dir), never a plan
     * or a cache entry; a lost block of it fails the reading query
     * loudly, like every localCheckpoint (the executor-loss
     * materialization policy covers it through honestCheckpoint).

@@ -1,7 +1,9 @@
 package graft.functions
 
+import graft.plans.{MinHashSig, Shingles}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Hashing primitives shared by the dedup/fingerprint operators.
   *
@@ -10,7 +12,9 @@ import org.apache.spark.sql.functions._
   * reproduce these signatures, which makes every dedup operator
   * oracle-checkable and makes signatures portable across engine
   * versions — important when a 100 TB dedup run is incremental and
-  * signatures persist between runs.
+  * signatures persist between runs. The one exception is [[minhash]],
+  * Spark's xxhash64: MinHash signatures only pick candidates, which
+  * are then verified exactly, so no oracle reproduces them.
   */
 object Hashing {
   /** 60-bit non-negative hash: first 15 hex chars of md5 → long.
@@ -33,28 +37,22 @@ object Hashing {
   /** Distinct sorted token set — the unit for Jaccard similarity. */
   def tokenSet(text: Column): Column = array_sort(array_distinct(tokens(text)))
 
-  /** w-token shingles over an ALREADY-BOUND token-array column.
-    *
-    * The argument must be a plain column reference, not an inline
-    * expression: anything inlined here appears inside the transform
-    * lambda and is re-evaluated once PER SHINGLE OFFSET (an O(n²)
-    * blowup — callers project `tokens(text)` into its own column
-    * first; a multiply-referenced non-cheap alias survives
-    * CollapseProject). One `when` guard outside the transform
-    * (sequence(1, 0) would count DOWN, so short docs need the
-    * explicit empty-array branch).
+  /** w-token shingles: element i is `concat_ws(" ", toks[i .. i+w-1])`,
+    * and fewer than `w` tokens (or a null array) give the empty array.
+    * One codegen'd kernel ([[graft.plans.Shingles]]) that evaluates
+    * `toks` once per row, so the argument may be an inline expression
+    * such as `tokens(text)`.
     */
-  def shinglesOf(toks: Column, w: Int): Column = {
-    val n = size(toks)
-    when(n >= w,
-      transform(sequence(lit(1), n - lit(w - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(w)))))
-      .otherwise(array().cast("array<string>"))
-  }
+  def shinglesOf(toks: Column, w: Int): Column =
+    ColumnBridge.column(Shingles(ColumnBridge.expression(toks), w))
 
-  /** Convenience form — ONLY for one-shot expressions where the
-    * token array can't be projected first; prefer
-    * `select(tokens(text).as("toks"))` + [[shinglesOf]] in hot paths.
-    */
+  /** Shingles of raw text: [[shinglesOf]] over [[tokens]]. */
   def shingles(text: Column, w: Int): Column = shinglesOf(tokens(text), w)
+
+  /** The `numHashes`-slot MinHash signature of a shingle array:
+    * element i is min over s of `xxhash64(i, s)`, and an empty array
+    * gives null ([[graft.plans.MinHashSig]]).
+    */
+  def minhash(sh: Column, numHashes: Int): Column =
+    ColumnBridge.column(MinHashSig(ColumnBridge.expression(sh), numHashes))
 }

@@ -32,15 +32,10 @@ object Dedup {
     * distinct eval-shingle set BROADCASTS and the train side is one
     * scan + shingle explode + map-side-combined count; nothing
     * corpus-sized crosses a shuffle except the contaminated doc ids.
-    * The token array is projected before [[shinglesOf]] (the HOF
-    * lambda-inlining rule — re-splitting the doc per offset is
-    * O(n²)).
     */
   def decontaminate(documents: DataFrame, evalSource: String = "src0", w: Int = 8): DataFrame = {
-    val sh = documents
-      .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(shinglesOf(col("toks"), w))).as("shingle"))
+    val sh = documents.select(col("doc_id"), col("source"),
+      explode(array_distinct(shingles(col("text"), w))).as("shingle"))
     val evalSh = sh.filter(col("source") === evalSource).select(col("shingle")).distinct()
     sh.filter(col("source") =!= evalSource)
       .join(broadcast(evalSh), "shingle")
@@ -155,32 +150,28 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
       .orderBy(col("text_hash"))
 
-  /** Distinct w-token shingles, one row per (doc_id, shingle).
-    *
-    * Dedup within a doc is `array_distinct` BEFORE the explode — a
-    * per-row operation, not a 260M-row global `distinct()` shuffle.
-    * The repartition on doc_id parallelizes the explode even when the
-    * scan yields few input splits; text moves once, pre-explosion, at
-    * ~1/5 the shingle volume. Its hash partitioning reaches only a
-    * consumer that reads this frame directly, as [[simhash]] does. The
-    * other callers `honestCheckpoint` the frame, and under AQE a plain
-    * checkpoint reports Unknown partitioning, so a groupBy(doc_id) over
-    * it shuffles again: `minhashPairs`' signature aggregation runs its
-    * own map stage.
+  /** One row per document, (doc_id, sh): `sh` holds the document's
+    * DISTINCT w-token shingles, empty below w tokens. Shingling is one
+    * codegen'd kernel per row ([[shingles]]); the repartition on
+    * doc_id parallelizes it even when the scan yields few input
+    * splits. Its hash partitioning reaches only a consumer that reads
+    * this frame directly, as [[simhash]] does; the other callers
+    * `honestCheckpoint` it, and the ones that rank shingles explode
+    * the checkpoint into (doc_id, s) rows.
     */
-  private def shingleRows(documents: DataFrame, w: Int): DataFrame = {
-    // Explicit partition count: hashing/shingling is CPU-bound on
-    // narrow rows, and AQE's byte-based coalescing would shrink a
-    // small-byte shuffle to ~1 partition and serialize it. A
-    // user-numbered repartition is exempt from AQE coalescing.
+  private def shingleSets(documents: DataFrame, w: Int): DataFrame = {
+    // Explicit partition count: shingling is CPU-bound on small
+    // rows, and AQE's byte-based coalescing would shrink a small-byte
+    // shuffle to ~1 partition and serialize it. A user-numbered
+    // repartition is exempt from AQE coalescing.
     val parallelism = documents.sparkSession.sparkContext.defaultParallelism
     documents.repartition(parallelism, col("doc_id"))
-      // tokens projected into its own column so the shingle lambda
-      // references an attribute (inline, the regex split would rerun
-      // once per shingle offset — O(n²) per doc).
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(array_distinct(shinglesOf(col("toks"), w))).as("s"))
+      .select(col("doc_id"), array_distinct(shingles(col("text"), w)).as("sh"))
   }
+
+  /** The (doc_id, s) rows of a [[shingleSets]] frame. */
+  private def shingleRows(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("sh")).as("s"))
 
   /** Batch reconciliation for STREAMING near-dup candidates: exact
     * shingle-set Jaccard over the flagged (a, b) pairs only — the
@@ -193,73 +184,65 @@ object Dedup {
   def verifyPairs(documents: DataFrame, pairs: DataFrame,
                   threshold: Double = 0.8, w: Int = 3): DataFrame =
     verifyJaccard(pairs.select(col("a"), col("b")).distinct(),
-      shingleRows(documents, w).honestCheckpoint(), threshold).orderBy(col("a"), col("b"))
+      shingleSets(documents, w).honestCheckpoint(), threshold).orderBy(col("a"), col("b"))
 
   /** Exact Jaccard verification of candidate (a, b) pairs against the
-    * full shingle sets; emits pairs with round(j, 6) ≥ threshold.
+    * documents' shingle sets (a (doc_id, sh) frame); emits pairs with
+    * round(j, 6) ≥ threshold. Unsorted: [[components]] needs no order,
+    * the public callers sort.
     *
-    * Count-based, NOT set-shipping: a collect_set verify would
-    * materialize every candidate doc's whole shingle set into one
-    * array row and replicate it per candidate pair — row width
-    * unbounded, so one 10 MB document becomes a skew amplifier at
-    * 100 TB. Instead the candidate pairs join to the NARROW
-    * (doc_id, shingle) rows: shingles of `a` fan out per pair, the
-    * (b, s) equi-join keeps exactly the shared shingles, and a
-    * count per pair is the intersection size. Every shuffled row is
-    * a few dozen bytes regardless of document size; total work stays
-    * candidate-bounded (the LSH / pigeonhole / prefix-filter
-    * guarantee). Union sizes come from per-doc shingle counts.
-    * Unsorted: [[components]] needs no order, the public callers sort.
+    * Set-based: each pair joins to both documents' shingle sets by id,
+    * so a scored row is two shingle arrays wide, and |A ∩ B| is one
+    * `array_intersect` over the exact strings. That is about the
+    * volume the earlier narrow form moved too — it fanned out one
+    * (pair, shingle) row per shingle of `a` and matched them against
+    * `b`'s rows on (b, s) — but as one row per pair instead of a
+    * fan-out, a second join and a count per pair, and over the one
+    * per-document checkpoint instead of a corpus-wide
+    * (doc_id, shingle) frame. A candidate is a near-duplicate pair,
+    * so its width is bounded by the two documents it verifies, and
+    * the work stays candidate-bounded (the LSH / pigeonhole /
+    * prefix-filter guarantee).
     */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // LEFT joins throughout (not an inner join + re-join of cands,
-    // which would reference the candidate frame twice — unresolvable
-    // on streaming memory-sink plans) so a disjoint pair still
-    // aggregates to inter=0 and gets its J=0 verdict (verifyPairs is
-    // called with threshold 0 by the streaming reconciliation tests).
-    // That includes the SIZE joins: a candidate doc with < w tokens
-    // has zero shingles and no sizes row, so an inner join would
-    // silently drop the pair instead of scoring it — left join +
-    // coalesce(n, 0) keeps it, and J is defined 0 when the union is
-    // empty. Join strategy is left to size statistics: at bench SF
-    // the checkpointed shingle frame's stats are small, so it rides
-    // the BUILD side of BroadcastHashJoins (no shuffle at all); at
-    // corpus scale the stats grow past the broadcast threshold and
-    // the same plan degrades to shuffled equi-joins — linear either
-    // way, and never a nested-loop (DedupPlanSpec pins both the
-    // bench-SF broadcast shape and the equi-join-only guarantee). An
-    // explicit candidate-id semi-prune of sh was measured SLOWER at
-    // bench SF (two extra materialization jobs) — revisit only if a
-    // profile shows the (b, s) join shuffling at scale.
-    scoredPairCounts(cands, sh, sizes)
+  private def verifyJaccard(cands: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
+    scoredPairCounts(cands, sets)
       .withColumn("jaccard",
         when(col("na") + col("nb") - col("inter") === 0, lit(0.0))
           .otherwise(round(col("inter").cast("double")
             / (col("na") + col("nb") - col("inter")), 6) + lit(0.0)))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
-  }
 
-  /** The shared count-based pair-intersection core behind
-    * [[verifyJaccard]] and [[containment]]'s verify: candidate
-    * (a, b) pairs → (a, b, inter, na, nb) via the narrow-row
-    * shingle joins described above. Scoring (Jaccard vs overlap
-    * coefficient) stays at the call site; the join/agg machinery and
-    * its left-join/coalesce conventions live in exactly one place.
+  /** The one pair-scoring core behind [[verifyJaccard]] and
+    * [[containment]]: candidate (a, b) pairs → (a, b, inter, na, nb),
+    * with inter = |A ∩ B| over the exact shingle strings (never their
+    * hashes) and na, nb the set sizes. Scoring (Jaccard vs overlap
+    * coefficient) stays at the call site.
+    *
+    * LEFT joins (not an inner join + re-join of cands, which would
+    * reference the candidate frame twice — unresolvable on streaming
+    * memory-sink plans), so a disjoint pair still scores inter = 0 and
+    * gets its J = 0 verdict (verifyPairs is called with threshold 0
+    * by the streaming reconciliation tests), and a candidate document
+    * with no shingles — or no row at all — has n = 0 instead of
+    * silently dropping the pair. The joins are equi-joins on doc ids
+    * whose strategy follows size statistics: the checkpointed sets
+    * ride the build side of broadcast hash joins while they are
+    * small, and the same plan degrades to shuffled equi-joins past
+    * the broadcast threshold — linear either way, never a nested-loop
+    * (DedupPlanSpec pins both).
     */
-  private def scoredPairCounts(cands: DataFrame, sh: DataFrame,
-                               sizes: DataFrame): DataFrame =
+  private def scoredPairCounts(cands: DataFrame, sets: DataFrame): DataFrame = {
+    // an id without a row has the empty set
+    def set(c: String): Column = coalesce(col(c), array().cast("array<string>")).as(c)
     cands
-      .join(sh.select(col("doc_id").as("a"), col("s")), Seq("a"), "left")
-      .join(sh.select(col("doc_id").as("b2"), col("s").as("s2")),
-        col("b") === col("b2") && col("s") === col("s2"), "left")
-      .groupBy(col("a"), col("b"))
-      .agg(sum(when(col("s2").isNotNull, 1L).otherwise(0L)).as("inter"))
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"), "left")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"), "left")
-      .withColumn("na", coalesce(col("na"), lit(0L)))
-      .withColumn("nb", coalesce(col("nb"), lit(0L)))
+      .join(sets.select(col("doc_id").as("a"), col("sh").as("sa")), Seq("a"), "left")
+      .join(sets.select(col("doc_id").as("b"), col("sh").as("sb")), Seq("b"), "left")
+      .select(col("a"), col("b"), set("sa"), set("sb"))
+      .select(col("a"), col("b"),
+        size(array_intersect(col("sa"), col("sb"))).cast("long").as("inter"),
+        size(col("sa")).cast("long").as("na"), size(col("sb")).cast("long").as("nb"))
+  }
 
   /** MinHash + LSH near-dup pairs (w=3 shingles, 32 permutations,
     * 16 bands × 2 rows, exact-Jaccard verify ≥ 0.8).
@@ -271,43 +254,45 @@ object Dedup {
     */
   def minhashLsh(documents: DataFrame, numHashes: Int = 32, bands: Int = 16,
                  threshold: Double = 0.8): DataFrame =
-    minhashPairs(documents, numHashes, bands, threshold).orderBy(col("a"), col("b"))
+    minhashPairs(signedSets(documents, numHashes), numHashes, bands, threshold)
+      .orderBy(col("a"), col("b"))
 
-  private def minhashPairs(documents: DataFrame, numHashes: Int, bands: Int,
+  /** The MinHash chain's one materialized frame: (doc_id, sh, sig),
+    * one row per document with its distinct w=3 shingles and their
+    * `numHashes`-slot signature ([[minhash]]: hᵢ = min xxhash64(i, s),
+    * null for a document with no shingles), built in one projection
+    * and checkpointed once (eager localCheckpoint, ContextCleaner-
+    * freed, MEMORY_AND_DISK so 100 TB spills rather than OOMs). Both
+    * sides of the band self-join and both verify joins read it, so
+    * the corpus is tokenized, shingled and hashed once. Signatures
+    * are internal (the oracle is the brute-force Jaccard answer, not
+    * the sketch), hence codegen'd seeded xxhash64 instead of md5.
+    */
+  private def signedSets(documents: DataFrame, numHashes: Int): DataFrame =
+    shingleSets(documents, 3).withColumn("sig", minhash(col("sh"), numHashes))
+      .honestCheckpoint()
+
+  /** Verified near-dup pairs of a [[signedSets]] frame: band each
+    * signed document (bands × rows slots, band hash = xxhash64 over
+    * the band's slots), self-join on equal band hashes, verify the
+    * candidates exactly against the same frame's shingle sets.
+    * Documents with a null signature are never banded.
+    */
+  private def minhashPairs(docs: DataFrame, numHashes: Int, bands: Int,
                            threshold: Double): DataFrame = {
     val rows = numHashes / bands
-    // The shingle frame feeds the signature aggregation AND three
-    // verify-stage references (both candidate sides + per-doc sizes);
-    // materializing it once (eager localCheckpoint, ContextCleaner-
-    // freed, MEMORY_AND_DISK so 100 TB spills rather than OOMs) turns
-    // four corpus tokenize+explode scans into one.
-    val sh = shingleRows(documents, 3).honestCheckpoint()
-    // Signatures are internal (the oracle is the brute-force Jaccard
-    // answer, not the sketch), so use codegen'd seeded xxhash64 —
-    // hᵢ = xxhash64(i, s) — instead of 32 md5 rounds per shingle.
-    // No arithmetic derivation: wrapping long math would trip ANSI
-    // overflow checks (Spark 4 default), and xxhash64 with a literal
-    // seed column is just as cheap inside whole-stage codegen.
-    def hi(i: Int): Column = xxhash64(lit(i), col("s"))
-    val sigs = sh.groupBy(col("doc_id")).agg(
-      min(hi(0)).as("h0"),
-      (1 until numHashes).map(i => min(hi(i)).as(s"h$i")): _*)
-      // One row per doc (32 longs). The banded frame feeds BOTH sides
-      // of the candidate self-join; without materializing, each side
-      // recomputes the 32-min signature aggregation from the shingle
-      // blocks (round-6 plan audit: 12 RDD-block reads).
-      .honestCheckpoint()
     val bandCols = (0 until bands).map { j =>
       struct(lit(j).as("band_id"),
-        xxhash64((0 until rows).map(r => col(s"h${j * rows + r}")): _*).as("bh"))
+        xxhash64((0 until rows).map(r => col("sig")(j * rows + r)): _*).as("bh"))
     }
-    val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
+    val banded = docs.filter(col("sig").isNotNull)
+      .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
       .select(col("doc_id"), col("band.band_id"), col("band.bh"))
     val cands = banded.as("x").join(banded.as("y"),
         col("x.band_id") === col("y.band_id") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    verifyJaccard(cands, sh, threshold)
+    verifyJaccard(cands, docs, threshold)
   }
 
   /** SimHash near-dup pairs: 60-bit signature over w=3 shingles,
@@ -323,7 +308,7 @@ object Dedup {
     * on thousands of docs, catastrophic at 100 TB.)
     */
   def simhash(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sh = shingleRows(documents, 3)
+    val sh = shingleRows(shingleSets(documents, 3))
     val h = sh.select(col("doc_id"), hex60(col("s")).as("h"))
     // Per-bit balance: +1 when bit set, −1 otherwise, summed per doc.
     val bitSums = (0 until 60).map(i =>
@@ -372,9 +357,16 @@ object Dedup {
     * diameter — tiny for dup clusters (pairs are near-cliques), so
     * the loop is 2-3 shuffle rounds of |E| rows. The driver only
     * ever sees one change-count per round, never data.
+    *
+    * The MinHash chain's per-document checkpoint ([[signedSets]]) is
+    * released once the labels are computed: the edge checkpoint holds
+    * the verified pairs, and nothing else reads it.
     */
-  def components(documents: DataFrame, threshold: Double = 0.8): DataFrame =
-    componentsFromPairs(minhashPairs(documents, 32, 16, threshold))
+  def components(documents: DataFrame, threshold: Double = 0.8): DataFrame = {
+    val docs = signedSets(documents, 32)
+    try componentsFromPairs(minhashPairs(docs, 32, 16, threshold))
+    finally docs.releaseCheckpoint()
+  }
 
   /** Connected components over an explicit near-dup pair frame
     * (columns `a`, `b`) — the reusable second stage of [[components]],
@@ -399,8 +391,10 @@ object Dedup {
     * materialization policy covers it through honestCheckpoint.
     */
   def componentsFromPairs(pairs: DataFrame): DataFrame = {
-    val p = pairs.select(col("a"), col("b"))
-    val edges = p.unionByName(p.select(col("b").as("a"), col("a").as("b"))).honestCheckpoint()
+    // both orientations from one pass over the pairs: a union would
+    // run the pair chain (MinHash → verify) once per branch
+    val edges = pairs.select(inline(array(struct(col("a"), col("b")),
+      struct(col("b").as("a"), col("a").as("b"))))).honestCheckpoint()
     def propagate(labels: DataFrame): DataFrame = {
       val viaNeighbors = labels.join(edges, col("node") === col("a"))
         .groupBy(col("b")).agg(min(col("comp")).as("ncomp"))
@@ -417,7 +411,7 @@ object Dedup {
     var changed = 1L
     while (changed > 0) {
       val next = propagate(propagate(labels)).honestCheckpoint()
-      changed = next.filter(col("comp") =!= col("prev")).count()
+      changed = countRows(next.filter(col("comp") =!= col("prev")))
       labels.releaseCheckpoint() // no-op on the initial, unmaterialized labels
       labels = next
     }
@@ -491,17 +485,16 @@ object Dedup {
     // even on a tiny vocabulary, so the prefix-filter join stays
     // near-linear (w=2 on a 40-word vocab put hundreds of docs in
     // every bucket → a quadratic candidate join).
-    // Five consumers (freq, the ranked join, and three verify-stage
-    // references) — one materialized scan, same rationale as
-    // [[minhashLsh]].
-    val sh = shingleRows(documents, 4).honestCheckpoint()
+    // Four consumers (freq, the ranked join and both verify joins) —
+    // one materialized scan, same rationale as [[signedSets]].
+    val sets = shingleSets(documents, 4).honestCheckpoint()
+    val sh = shingleRows(sets)
     // Prefix ordering only has to be SOME consistent total order —
     // the PPJoin bound holds for any — so exact global counts are
     // only needed where they differ from 1. The repeated-shingle
     // table (count ≥ 2) is bounded by the duplicate mass, not the
     // corpus: broadcast it and default unseen shingles to f=1. This
-    // keeps sh's doc_id partitioning intact straight into the
-    // row_number window (no shuffle on s for the corpus side).
+    // keeps the corpus side of the ranked join unshuffled on s.
     val freq = sh.groupBy(col("s")).agg(count(lit(1)).as("f")).filter(col("f") >= 2)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("f"), col("s"))
@@ -524,7 +517,7 @@ object Dedup {
     val cands = prefix.as("x").join(prefix.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    verifyJaccard(cands, sh, threshold).orderBy(col("a"), col("b"))
+    verifyJaccard(cands, sets, threshold).orderBy(col("a"), col("b"))
   }
 
   /** Asymmetric containment pairs: overlap coefficient
@@ -550,11 +543,13 @@ object Dedup {
     * Candidate volume stays near-linear because the prefix holds the
     * doc's globally RAREST shingles — small inverted-index buckets —
     * and the size constraint (nx ≤ ny) halves the probe space.
-    * Verification is the same count-based narrow-row join as
-    * [[verifyJaccard]], scored as inter/min instead of inter/union.
+    * Verification is the same set-based core as [[verifyJaccard]]
+    * ([[scoredPairCounts]]), scored as inter/min instead of
+    * inter/union.
     */
   def containment(documents: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val sh = shingleRows(documents, 4).honestCheckpoint()
+    val sets = shingleSets(documents, 4).honestCheckpoint()
+    val sh = shingleRows(sets)
     val freq = sh.groupBy(col("s")).agg(count(lit(1)).as("f")).filter(col("f") >= 2)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("f"), col("s"))
@@ -577,8 +572,7 @@ object Dedup {
       .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
       .distinct()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    scoredPairCounts(cands, sh, sizes)
+    scoredPairCounts(cands, sets)
       .withColumn("containment",
         round(col("inter").cast("double") / least(col("na"), col("nb")), 6) + lit(0.0))
       .filter(col("containment") >= threshold)

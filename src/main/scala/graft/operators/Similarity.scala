@@ -1615,9 +1615,9 @@ object Similarity {
     * query streams) therefore read the steady-state serving cost:
     * parquet codes scan + ADC + exact re-rank, no training. A warm
     * serve builds its frame with one job each for the corpus count
-    * ([[countRows]]), the meta collect and the codebooks collect
-    * (every model table is read with its declared schema, so no
-    * read infers one). Results
+    * ([[graft.plans.HonestCheckpoint.countRows]]), the meta collect
+    * and the codebooks collect (every model table is read with its
+    * declared schema, so no read infers one). Results
     * are bit-identical to [[annPq]] with the same parameters
     * (integer units survive the parquet round trip), so it shares
     * ann_pq's oracle.
@@ -2314,17 +2314,6 @@ object Similarity {
     }
   }
 
-  /** Row count of `df` as ONE job with no exchange: every partition
-    * counts its rows of an empty projection (a parquet scan reads no
-    * column for it) and the driver sums the partition counts.
-    * `Dataset.count()` plans a global aggregate instead, which under
-    * AQE runs as two jobs (a map stage, then the final stage) with a
-    * round trip between them. Every served entry counts its corpus
-    * with this for the [[frozenIndexMeta]] fingerprint.
-    */
-  private[graft] def countRows(df: DataFrame): Long =
-    df.select().queryExecution.toRdd.count()
-
   /** The one meta read every serve pays: the collected meta ROW of a
     * complete, matching index dir, or None if the dir is missing, a
     * partial save (meta is written LAST — no `_SUCCESS`, no index),
@@ -2442,7 +2431,30 @@ object Similarity {
       codebooks: IndexedSeq[IndexedSeq[Array[Long]]],
       centroids: Seq[Array[Long]],
       codes: DataFrame, corpus: DataFrame, m: Int,
-      residual: Boolean = false)
+      residual: Boolean = false) {
+
+    /** Frees the build's working checkpoint, the leaf `codes` projects
+      * over, once a save has written the codes: nothing reads it after
+      * that, and otherwise its blocks stay until the ContextCleaner
+      * sees the frame collected. The index must not be searched
+      * afterwards. A loaded index reads its codes from disk, so this
+      * is a no-op on it.
+      */
+    private[graft] def releaseBuild(): Unit =
+      codes.queryExecution.analyzed.collectLeaves().foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+  }
+
+  /** Save a freshly built index to `dir`, then release its build
+    * checkpoint — the cold path of every IVF-PQ build-then-save caller.
+    */
+  private[graft] def ivfPqSaveBuilt(index: IvfPqIndex, dir: String, params: String,
+                                    corpusCount: Long): Unit = {
+    ivfPqIndexSave(index, dir, params, corpusCount)
+    index.releaseBuild()
+  }
 
   /** Train the coarse quantizer + codebooks and encode/label the
     * corpus ONCE — the index-build half of [[annIvfPq]]. Both trainers
@@ -2575,6 +2587,7 @@ object Similarity {
     // an interpreted HOF, and the PQ init, every training step and
     // the encode read the residuals — same rationale as pqCorpusUnits.
     val rx = residuals(corpusU, centroids).honestCheckpoint()
+    corpusU.releaseCheckpoint() // trained on and superseded by rx
     val books = pqTrainCodebooks(rx.select(col("vec_id"), col("un")), m, codebookSize,
       pqIters, dsub)
     IvfPqIndex(books, centroids, ivfPqCodes(rx, books, dsub, col("label")),
@@ -2641,7 +2654,7 @@ object Similarity {
     val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqResidualIndexBuild defaults
     val n = countRows(embeddings)
     val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
-      ivfPqIndexSave(ivfPqResidualIndexBuild(embeddings), staging, params, n)
+      ivfPqSaveBuilt(ivfPqResidualIndexBuild(embeddings), staging, params, n)
     }
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
     ivfPqResidualSearch(index, defaultQueries(embeddings), k, rerank, nprobe,
@@ -2983,7 +2996,7 @@ object Similarity {
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;base=mod10;src=${sourceStamp(embeddings)}"
     val n = countRows(embeddings)
     val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
-      ivfPqIndexSave(ivfPqIndexBuild(base), staging, params, n - countRows(fresh))
+      ivfPqSaveBuilt(ivfPqIndexBuild(base), staging, params, n - countRows(fresh))
       ivfPqIndexAppend(spark, staging, fresh)
     }
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
@@ -3009,7 +3022,7 @@ object Similarity {
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;rm=mod5eq2;src=${sourceStamp(embeddings)}"
     val nAll = countRows(embeddings)
     val meta = buildIfAbsent(spark, indexDir, params, nAll - countRows(tombstones), ivfPqMeta) { staging =>
-      ivfPqIndexSave(ivfPqIndexBuild(embeddings), staging, params, nAll)
+      ivfPqSaveBuilt(ivfPqIndexBuild(embeddings), staging, params, nAll)
       ivfPqIndexRemove(spark, staging, tombstones)
     }
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
@@ -3021,9 +3034,10 @@ object Similarity {
     * disk lifecycle as [[annPqServed]] so a repeated-measure bench
     * (and any later JVM) reads the steady serve-only cost. A warm
     * serve builds its frame with two jobs: the corpus count
-    * ([[countRows]]) and the meta collect, which validates the index
-    * and returns its model; the load reads no other table. The
-    * search's query side is one projection ([[probedQueries]]).
+    * ([[graft.plans.HonestCheckpoint.countRows]]) and the meta
+    * collect, which validates the index and returns its model; the
+    * load reads no other table. The search's query side is one
+    * projection ([[probedQueries]]).
     */
   def annIvfPqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      nprobe: Int = 1, rerank: Int = 50): DataFrame = {
@@ -3031,7 +3045,7 @@ object Similarity {
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqIndexBuild defaults
     val n = countRows(embeddings)
     val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
-      ivfPqIndexSave(ivfPqIndexBuild(embeddings), staging, params, n)
+      ivfPqSaveBuilt(ivfPqIndexBuild(embeddings), staging, params, n)
     }
     val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
     ivfPqSearch(index, defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)

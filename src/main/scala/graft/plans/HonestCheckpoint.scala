@@ -12,6 +12,15 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * fine for frames that are only scanned/written.
   */
 object HonestCheckpoint {
+  /** Row count of `df` as ONE job with no exchange: every partition
+    * counts its rows of an empty projection (a parquet scan reads no
+    * column for it) and the driver sums the partition counts.
+    * `Dataset.count()` plans a global aggregate instead, which under
+    * AQE runs as two jobs (a map stage, then the final stage) with a
+    * round trip between them.
+    */
+  def countRows(df: DataFrame): Long = df.select().queryExecution.toRdd.count()
+
   implicit class HonestCheckpointOps(private val df: DataFrame) extends AnyVal {
     def honestCheckpoint(): DataFrame = ColumnBridge.honestCheckpoint(df)
 

@@ -251,22 +251,19 @@ object DedupStream {
                          bucket: Long, sig: Seq[Long])
 
   /** Stateless signature + banding stage shared by both near-dup
-    * variants. Tokens AND shingles each projected to their own
-    * column: an inlined token split would re-run the regex once per
-    * shingle offset (the O(n²) HOF trap, Hashing.shinglesOf's
-    * contract), and the signature slots each reference the shingle
-    * array `numHashes`×.
+    * variants: one projection per document — the batch operator's
+    * shingle and MinHash kernels ([[graft.functions.Hashing.minhash]]
+    * over [[graft.functions.Hashing.shingles]]), so both detectors
+    * sign a document identically — then one row per band. A document
+    * with no shingles has a null signature and is never banded.
     */
   private def bandedSigs(docs: DataFrame, numHashes: Int, bands: Int,
                          tsCol: Option[String] = None): DataFrame = {
-    import graft.functions.Hashing.{tokens, shinglesOf}
+    import graft.functions.Hashing.{minhash, shingles}
     val rows = numHashes / bands
     val withSig = docs
-      .withColumn("toks", tokens(col("text")))
-      .withColumn("sh", array_distinct(shinglesOf(col("toks"), 3)))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", array((0 until numHashes).map(i =>
-        array_min(transform(col("sh"), s => xxhash64(lit(i), s)))): _*))
+      .withColumn("sig", minhash(shingles(col("text"), 3), numHashes))
+      .filter(col("sig").isNotNull)
     // encoders resolve by name, so no reorder projection is needed
     withSig.select(Seq(col("doc_id")) ++ tsCol.map(c => col(c).as("ts")).toSeq ++ Seq(col("sig"),
         posexplode(array((0 until bands).map(j =>

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
+import graft.plans.HonestCheckpoint.countRows
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -60,9 +61,9 @@ object SimilarityStream {
                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = corpus.sparkSession
     val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${Similarity.sourceStamp(corpus)}" // ivfPqResidualIndexBuild defaults
-    val n = Similarity.countRows(corpus)
+    val n = countRows(corpus)
     val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.ivfPqMeta) { staging =>
-      Similarity.ivfPqIndexSave(Similarity.ivfPqResidualIndexBuild(corpus), staging,
+      Similarity.ivfPqSaveBuilt(Similarity.ivfPqResidualIndexBuild(corpus), staging,
         params, n)
     }
     val index = Similarity.ivfPqIndexLoad(spark, indexDir, corpus, Some(meta))
@@ -180,7 +181,7 @@ object SimilarityStream {
                                 (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = corpus.sparkSession
     val params = s"sem;k=$k;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val n = Similarity.countRows(corpus)
+    val n = countRows(corpus)
     val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.semanticMeta) { staging =>
       Similarity.semanticIndexSave(Similarity.semanticIndexBuild(corpus, k, iters),
         staging, params, n)
@@ -209,7 +210,7 @@ object SimilarityStream {
                                     (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = corpus.sparkSession
     val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val n = Similarity.countRows(corpus)
+    val n = countRows(corpus)
     val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.hierMeta) { staging =>
       Similarity.semanticIndexSaveHier(
         Similarity.semanticIndexBuildHier(corpus, k1, k2, iters), staging, params, n)

@@ -3,24 +3,27 @@ package graft
 import graft.operators.Dedup
 import graft.sources.Tables
 
-/** Plan gate for the count-based Jaccard verify (Dedup.verifyJaccard
+/** Plan gate for the set-based Jaccard verify (Dedup.verifyJaccard
   * via minhashLsh): the candidate verification must stay an EQUI-join
   * pipeline — hash or sort-merge, chosen by size statistics — and can
   * never silently degrade to a nested-loop/cartesian shape, which
   * would be all-pairs over the corpus. At bench SF the checkpointed
-  * shingle frame is stats-small and rides the build side of
-  * BroadcastHashJoins (zero extra shuffles of the shingle scan);
-  * at 100 TB the stats push the same joins to shuffled equi-joins —
-  * both linear. These assertions protect the round-5 skew fix from a
-  * future stats/AQE drift re-planning the verify as a non-equi join.
+  * per-document (doc_id, sh, sig) frame is stats-small and rides the
+  * build side of BroadcastHashJoins; at 100 TB the stats push the same
+  * joins to shuffled equi-joins — both linear. These assertions
+  * protect the verify from a future stats/AQE drift re-planning it as
+  * a non-equi join, and the MinHash chain from growing back its
+  * corpus-wide (doc_id, shingle) frame.
   */
-class DedupPlanSpec extends SparkSpec {
+class DedupPlanSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
-  private lazy val verifiedPlan: String = {
+  private lazy val verified = {
     val df = Dedup.minhashLsh(Tables(spark, "/root/testdata/sf0.01").documents)
     df.collect() // force AQE to settle on the final plan
-    df.queryExecution.executedPlan.toString
+    df
   }
+  private lazy val verifiedPlan: String = verified.queryExecution.executedPlan.toString
 
   test("verify stage never plans a nested-loop or cartesian join") {
     assert(!verifiedPlan.contains("BroadcastNestedLoopJoin")
@@ -37,22 +40,39 @@ class DedupPlanSpec extends SparkSpec {
       s"non-equi join in the containment plan:\n$plan")
   }
 
-  test("the (b, s) intersection join is a broadcast hash join at bench SF") {
-    // The exact join of the skew fix: candidate (b, s) rows against
-    // the narrow shingle frame. BuildRight = the shingle side while
-    // its stats stay under the threshold; the LEFT (candidate) side
-    // streams, so no candidate-row ever widens past a few dozen bytes.
-    val bs = """BroadcastHashJoin \[b#\d+L?, s#\d+\], \[b2#\d+L?, s2#\d+\]""".r
-    assert(bs.findFirstIn(verifiedPlan).isDefined,
-      s"(b,s) x (b2,s2) BroadcastHashJoin not found in:\n$verifiedPlan")
+  test("the MinHash candidate and verify plan reads only the per-document checkpoint") {
+    // Both band self-join sides and both verify joins read the one
+    // (doc_id, sh, sig) checkpoint: no corpus re-scan, no second
+    // materialized frame.
+    val rdds = verified.queryExecution.analyzed.collectLeaves().map {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        assert(l.output.map(_.name) === Seq("doc_id", "sh", "sig"))
+        l.rdd.id
+      case other => fail(s"unexpected source $other")
+    }
+    assert(rdds.distinct.size === 1, s"expected one checkpoint source, got $rdds")
+    val scanned = collect(verified.queryExecution.executedPlan) {
+      case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.id
+    }
+    assert(scanned.nonEmpty && scanned.toSet === rdds.toSet,
+      s"expected every scan to read the checkpoint in:\n$verifiedPlan")
+    assert(!verifiedPlan.contains("Scan parquet"),
+      s"corpus re-scanned in the MinHash candidate plan:\n$verifiedPlan")
+  }
+
+  test("the MinHash candidate and verify plan explodes no shingle array") {
+    // The verify scores each pair on its two shingle sets; the only
+    // Generate left is the 16-band explode over `sig` (once per band
+    // self-join side).
+    assert(!"""explode\(sh#""".r.findFirstIn(verifiedPlan).isDefined,
+      s"shingle explode in the MinHash candidate plan:\n$verifiedPlan")
   }
 
   test("the banded self-join reads checkpointed signatures, not a replayed min-aggregation") {
-    // sigs is an eager localCheckpoint: the 32-min signature
-    // aggregation runs once at materialization, and neither side of
-    // the band-bucket self-join may replay it (round 6: 12 RDD-block
-    // reads through two copies of the aggregation).
-    assert(!verifiedPlan.contains("min(xxhash64"),
+    // The signatures are computed once, by the MinHash kernel inside
+    // the per-document checkpoint: the plan over it neither aggregates
+    // xxhash64 nor re-runs the kernel.
+    assert(!verifiedPlan.contains("min(xxhash64") && !verifiedPlan.contains("minhash("),
       s"signature aggregation replayed in the candidate plan:\n$verifiedPlan")
   }
 
@@ -107,18 +127,5 @@ class DedupPlanSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
         s"expected shuffled equi-joins in the degraded plan:\n$plan")
     } finally spark.conf.set(thresholdKey, prev)
-  }
-
-  test("the checkpointed shingle frame shuffles at most once (its doc_id repartition)") {
-    // Every Exchange directly over the ExistingRDD scan is the
-    // user-numbered repartition from shingleRows; the verify joins
-    // must not add shuffles of the corpus-sized shingle rows on top
-    // (they either broadcast-build or reuse the existing partitioning).
-    val shingleShuffles =
-      """Exchange hashpartitioning\(doc_id#\d+L?, \d+\)""".r.findAllIn(verifiedPlan).length
-    val shingleScans = "Scan ExistingRDD".r.findAllIn(verifiedPlan).length
-    assert(shingleScans >= 3, s"expected the checkpointed shingle RDD to feed >=3 consumers")
-    assert(shingleShuffles <= shingleScans,
-      s"shingle scans re-shuffled beyond the doc_id repartition:\n$verifiedPlan")
   }
 }

@@ -188,16 +188,28 @@ class DedupSpec extends SparkSpec {
     val before = stored()
     val comps = Dedup.components(corpus.toDF("doc_id", "text"))
     assert(spark.sharedState.cacheManager.isEmpty)
-    // Besides the result's own checkpoint, only the MinHash shingle
-    // and signature checkpoints (ContextCleaner-managed) may hold
-    // blocks: no superseded round, no edge frame.
-    assert((stored() -- before - checkpointRdd(comps)).size <= 2)
+    // The result's own checkpoint is all that holds blocks: no
+    // superseded round, no edge frame, no per-document
+    // (doc_id, sh, sig) checkpoint of the MinHash chain.
+    assert((stored() -- before).subsetOf(Set(checkpointRdd(comps))))
     // A bare pair frame has no other checkpoints, and the path runs
     // four superseded rounds: the result's blocks are all that remain.
     val beforePath = stored()
     val pathComps = Dedup.componentsFromPairs(path8.toDF("a", "b"))
     assert(spark.sharedState.cacheManager.isEmpty)
     assert((stored() -- beforePath).subsetOf(Set(checkpointRdd(pathComps))))
+  }
+
+  test("a label-propagation double round counts its changed labels in one job") {
+    // path8 converges in five double rounds, a single pair in two, so
+    // the difference is three rounds' jobs. Measured with this
+    // listener: path8 37 jobs and one pair 10, 9 per double round;
+    // with the count as Dataset.count() (two jobs under AQE), path8
+    // 41 and one pair 11, 10 per double round.
+    def jobs(pairs: Seq[(Long, Long)]): Int =
+      jobsStartedBy(Dedup.componentsFromPairs(pairs.toDF("a", "b")))
+    val (long, short) = (jobs(path8), jobs(Seq(1L -> 2L)))
+    assert((long - short) / 3.0 === 9.0, s"path8 $long jobs, one pair $short")
   }
 
   test("applyDedup maps every doc to its cluster keeper and keeps exactly the keepers") {

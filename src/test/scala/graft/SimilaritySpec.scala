@@ -87,31 +87,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  /** Jobs that `body` starts, counted by a listener up to a sentinel
-    * job: listener events arrive in order, so once the sentinel is seen
-    * every job `body` started has been counted.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    import scala.jdk.CollectionConverters._
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription("sentinel")
-      spark.range(1).collect()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.contains("sentinel"))
-    jobs.asScala.takeWhile(_ != "sentinel").size
-  }
-
   /** The gate corpus in quantized units, (vec_id, u). */
   private lazy val corpusUnits: Seq[(Long, Array[Long])] =
     embeddings.select(col("vec_id"), graft.plans.IntegerUnits.quantizeUnits(col("embedding")))
@@ -1518,6 +1493,30 @@ class SimilaritySpec extends SparkSpec {
     assert(write <= 6, s"the served search's write started $write jobs")
   }
 
+  test("IVF-PQ build-then-save and a cold serve leave no build checkpoint blocks") {
+    def stored(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    // each build checkpoints its working frame ((vec_id, u, un), or the
+    // residual rows) and its codes project over it; once the save has
+    // written the codes nothing reads it. The index stays reachable
+    // here, so only the release (not the ContextCleaner) can free it.
+    for (index <- Seq(Similarity.ivfPqIndexBuild(embeddings),
+        Similarity.ivfPqResidualIndexBuild(embeddings))) {
+      val build = index.codes.queryExecution.analyzed.collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      assert(build.nonEmpty && build.subsetOf(stored()))
+      Similarity.ivfPqSaveBuilt(index, tempDir("graft_ivfpq_release"), "release", 1L)
+      assert((build & stored()).isEmpty, s"build checkpoint $build still holds blocks")
+    }
+    for (serve <- Seq[String => DataFrame](Similarity.annIvfPqServed(embeddings, _),
+        Similarity.annIvfPqResidualServed(embeddings, _))) {
+      val before = stored()
+      noopWrite(serve(tempDir("graft_ivfpq_release")))
+      assert((stored() -- before).isEmpty,
+        s"blocks left after a cold serve: ${spark.sparkContext.getRDDStorageInfo.toSeq}")
+    }
+  }
+
   test("a warm IVF-SQ and IVF-BQ served search write each starts one job fewer") {
     // measured with this listener on the same data, with the query
     // side joined to its own probe rows on query_id (one more
@@ -1642,14 +1641,6 @@ class SimilaritySpec extends SparkSpec {
         refPqTrain(rows, 8, cb, 3, 8).map(_.map(_.toSeq)),
         s"codebooks at cb=$cb diverged from the driver-side joint PQ k-means")
     }
-  }
-
-  /** The exception of `body`, or of a cause of it, of type `T`. */
-  private def thrownCause[T <: Throwable](body: => Any)(implicit t: scala.reflect.ClassTag[T]): T = {
-    val e = intercept[Throwable](body)
-    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .collectFirst { case x: T => x }
-      .getOrElse(fail(s"expected a ${t.runtimeClass.getSimpleName}, got $e", e))
   }
 
   test("the training fold fails loudly on overflow, null elements and wrong lengths") {
