@@ -331,12 +331,9 @@ object ScaleProbe {
       "ann_pq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_pq_index"
         val (params, n) = ("pq;m=8;cb=8;it=3", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.pqMeta) { staging =>
-          operators.Similarity.pqIndexSave(operators.Similarity.pqIndexBuild(em), staging,
-            params, n)
-        }
         operators.Similarity.pqSearch(
-          operators.Similarity.pqIndexLoad(spark, dir, em, Some(meta)), fixedQ.get,
+          operators.FrozenIndex.served(operators.Similarity.PqKind, dir, params, em, n)(
+            operators.Similarity.pqIndexBuild(em)), fixedQ.get,
           excludeSelf = true).count()
       }),
       // SQ8 serve probe: like flat PQ, the ADC scan is linear in the
@@ -345,12 +342,9 @@ object ScaleProbe {
       "ann_sq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sq_index"
         val (params, n) = ("sq8", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.sqMeta) { staging =>
-          operators.Similarity.sqIndexSave(operators.Similarity.sqIndexBuild(em), staging,
-            params, n)
-        }
         operators.Similarity.sqSearch(
-          operators.Similarity.sqIndexLoad(spark, dir, em, Some(meta)), fixedQ.get,
+          operators.FrozenIndex.served(operators.Similarity.SqKind, dir, params, em, n)(
+            operators.Similarity.sqIndexBuild(em)), fixedQ.get,
           excludeSelf = true).count()
       }),
       // BQ serve probe: the Hamming scan is linear in the corpus
@@ -360,12 +354,9 @@ object ScaleProbe {
       "ann_bq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_bq_index"
         val (params, n) = ("bq;w=32", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.bqMeta) { staging =>
-          operators.Similarity.bqIndexSave(operators.Similarity.bqIndexBuild(em), staging,
-            params, n)
-        }
         operators.Similarity.bqSearch(
-          operators.Similarity.bqIndexLoad(spark, dir, em, Some(meta)), fixedQ.get,
+          operators.FrozenIndex.served(operators.Similarity.BqKind, dir, params, em, n)(
+            operators.Similarity.bqIndexBuild(em)), fixedQ.get,
           excludeSelf = true).count()
       }),
       // IVF-SQ serve probe: the cell prune should hold the serve
@@ -374,23 +365,17 @@ object ScaleProbe {
       "ann_ivfsq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfsq_index"
         val (params, n) = ("ivfsq;nlist=8;ivfIt=3", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfSqMeta) { staging =>
-          operators.Similarity.ivfSqIndexSave(operators.Similarity.ivfSqIndexBuild(em),
-            staging, params, n)
-        }
         operators.Similarity.ivfSqSearch(
-          operators.Similarity.ivfSqIndexLoad(spark, dir, em, Some(meta)), fixedQ.get,
+          operators.FrozenIndex.served(operators.Similarity.IvfSqKind, dir, params, em, n)(
+            operators.Similarity.ivfSqIndexBuild(em)), fixedQ.get,
           nprobe = 2, excludeSelf = true).count()
       }),
       "ann_ivfpq_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_index"
         val (params, n) = ("ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqMeta) { staging =>
-          operators.Similarity.ivfPqSaveBuilt(operators.Similarity.ivfPqIndexBuild(em),
-            staging, params, n)
-        }
         operators.Similarity.ivfPqSearch(
-          operators.Similarity.ivfPqIndexLoad(spark, dir, em, Some(meta)), fixedQ.get,
+          operators.FrozenIndex.served(operators.Similarity.IvfPqKind, dir, params, em, n)(
+            operators.Similarity.ivfPqIndexBuild(em)), fixedQ.get,
           excludeSelf = true).count()
       }),
       // add() probe: append a FIXED-size delta (the 1x fixed query
@@ -401,17 +386,15 @@ object ScaleProbe {
       // corpus grows (the claim: append cost ∝ |delta|, not corpus).
       // Detection here matches params/version but IGNORES n, because
       // every append bumps meta n by design; repeated appends into
-      // this timing-only dir are harmless (append never reads codes).
+      // this timing-only dir are harmless (each commits one more
+      // delta, and append lists neither the codes nor the deltas).
       "ann_ivfpq_append" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_add_ix"
         val params = "ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;probe=append"
-        val ok = try {
-          val m = operators.Similarity.ivfPqMeta.read(spark, dir).head()
-          m.getAs[Int]("version") == operators.Similarity.ivfPqIndexVersion &&
-            m.getAs[String]("params") == params
-        } catch { case _: Exception => false }
-        if (!ok) operators.Similarity.ivfPqSaveBuilt(
-          operators.Similarity.ivfPqIndexBuild(em), dir, params, plans.HonestCheckpoint.countRows(em))
+        val kind = operators.Similarity.IvfPqKind
+        if (!operators.FrozenIndex.meta(spark, kind, dir).exists(_.getAs[String]("params") == params))
+          operators.FrozenIndex.save(kind, operators.Similarity.ivfPqIndexBuild(em), dir, params,
+            plans.HonestCheckpoint.countRows(em))
         val delta = fixedQ.get.select((col("vec_id") + lit(10000000000L)).as("vec_id"),
           col("embedding"))
         operators.Similarity.ivfPqIndexAppend(spark, dir, delta)
@@ -426,13 +409,10 @@ object ScaleProbe {
       "ann_ivfpq_remove" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_rm_ix"
         val params = "ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;probe=remove"
-        val ok = try {
-          val m = operators.Similarity.ivfPqMeta.read(spark, dir).head()
-          m.getAs[Int]("version") == operators.Similarity.ivfPqIndexVersion &&
-            m.getAs[String]("params") == params
-        } catch { case _: Exception => false }
-        if (!ok) operators.Similarity.ivfPqSaveBuilt(
-          operators.Similarity.ivfPqIndexBuild(em), dir, params, plans.HonestCheckpoint.countRows(em))
+        val kind = operators.Similarity.IvfPqKind
+        if (!operators.FrozenIndex.meta(spark, kind, dir).exists(_.getAs[String]("params") == params))
+          operators.FrozenIndex.save(kind, operators.Similarity.ivfPqIndexBuild(em), dir, params,
+            plans.HonestCheckpoint.countRows(em))
         operators.Similarity.ivfPqIndexRemove(spark, dir,
           em.filter(col("vec_id") % 1000 === 7).select(col("vec_id")))
       }),
@@ -470,12 +450,9 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sem_index"
         val kk = 4 * k.toInt
         val (params, n) = (s"sem;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
-          operators.Similarity.semanticIndexSave(
-            operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
-        }
         operators.Similarity.semanticProbe(
-          operators.Similarity.semanticIndexLoad(spark, dir, Some(meta)),
+          operators.FrozenIndex.served(operators.Similarity.SemanticKind, dir, params, em, n)(
+            operators.Similarity.semanticIndexBuild(em, kk)),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
@@ -490,12 +467,9 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semcap_index"
         val kk = math.min(4 * k.toInt, 64)
         val (params, n) = (s"semcap;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
-          operators.Similarity.semanticIndexSave(
-            operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
-        }
         operators.Similarity.semanticProbe(
-          operators.Similarity.semanticIndexLoad(spark, dir, Some(meta)),
+          operators.FrozenIndex.served(operators.Similarity.SemanticKind, dir, params, em, n)(
+            operators.Similarity.semanticIndexBuild(em, kk)),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
@@ -524,12 +498,9 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semwide_index"
         val kk = 4 * k.toInt
         val (params, n) = (s"semwide;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.semanticMeta) { staging =>
-          operators.Similarity.semanticIndexSave(
-            operators.Similarity.semanticIndexBuild(em, kk), staging, params, n)
-        }
         operators.Similarity.semanticProbe(
-          operators.Similarity.semanticIndexLoad(spark, dir, Some(meta)),
+          operators.FrozenIndex.served(operators.Similarity.SemanticKind, dir, params, em, n)(
+            operators.Similarity.semanticIndexBuild(em, kk)),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
@@ -544,12 +515,9 @@ object ScaleProbe {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semhier_index"
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
         val (params, n) = (s"semhier;k1=$side;k2=$side;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.hierMeta) { staging =>
-          operators.Similarity.semanticIndexSaveHier(
-            operators.Similarity.semanticIndexBuildHier(em, side, side), staging, params, n)
-        }
         operators.Similarity.semanticProbeHier(
-          operators.Similarity.semanticIndexLoadHier(spark, dir, Some(meta)),
+          operators.FrozenIndex.served(operators.Similarity.HierKind, dir, params, em, n)(
+            operators.Similarity.semanticIndexBuildHier(em, side, side)),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
@@ -687,12 +655,9 @@ object ScaleProbe {
       "ann_ivfpq_residual_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_ivfpq_res_index"
         val (params, n) = ("ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", plans.HonestCheckpoint.countRows(em))
-        val meta = operators.Similarity.buildIfAbsent(spark, dir, params, n, operators.Similarity.ivfPqMeta) { staging =>
-          operators.Similarity.ivfPqSaveBuilt(
-            operators.Similarity.ivfPqResidualIndexBuild(em), staging, params, n)
-        }
         operators.Similarity.ivfPqResidualSearch(
-          operators.Similarity.ivfPqIndexLoad(spark, dir, em, Some(meta)), fixedQ.get,
+          operators.FrozenIndex.served(operators.Similarity.IvfPqKind, dir, params, em, n)(
+            operators.Similarity.ivfPqResidualIndexBuild(em)), fixedQ.get,
           excludeSelf = true).count()
       }))
 

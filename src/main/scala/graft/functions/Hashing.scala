@@ -28,11 +28,12 @@ object Hashing {
     */
   def hex60Seeded(seed: Int, c: Column): Column = hex60(concat(lit(s"$seed:"), c))
 
-  /** Whitespace tokenization (the engine's canonical split). */
-  def tokens(text: Column): Column = {
-    val t = split(trim(text), "\\s+")
-    filter(t, x => length(x) > 0)
-  }
+  /** Whitespace tokenization (the engine's canonical split): the
+    * non-empty pieces of the space-trimmed text split on whitespace
+    * runs. `array_remove` drops the empty pieces (a leading tab or
+    * newline, an empty text) in generated code.
+    */
+  def tokens(text: Column): Column = array_remove(split(trim(text), "\\s+"), "")
 
   /** Distinct sorted token set — the unit for Jaccard similarity. */
   def tokenSet(text: Column): Column = array_sort(array_distinct(tokens(text)))

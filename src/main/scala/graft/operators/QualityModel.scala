@@ -167,47 +167,28 @@ object QualityModel {
     * coefficients are the model, bit-exact through parquet doubles).
     * One row: version, a caller fingerprint, and β₀..β₆.
     *
-    * STAGED write (the frozen-index publish discipline, same Hadoop
-    * FileSystem machinery as [[Similarity.buildIfAbsent]] — so the
-    * model dir may live on ANY hadoop scheme the index dirs do:
-    * hdfs://, s3a://, file://): the row lands in a pid-unique
-    * `model.parquet.staging-…`, then replaces `model.parquet` by
-    * `fs.rename`. A crash mid-write leaves the PREVIOUS model intact
-    * (staging is invisible to [[load]]); a crash inside the
-    * delete-rename window leaves no `model.parquet`, which load
-    * rejects LOUDLY via the `_SUCCESS` marker check — never a torn
-    * or half-old model served silently.
+    * STAGED write through the frozen indexes' one publish step
+    * ([[FrozenIndex.publish]], Hadoop FileSystem calls — so the model
+    * dir may live on ANY hadoop scheme the index dirs do: hdfs://,
+    * s3a://, file://): the row lands in a pid-unique staging dir, then
+    * replaces `model.parquet` by `fs.rename`, and a rename that landed
+    * inside a `model.parquet` a racing saver recreated fails loudly.
+    * A crash mid-write leaves the PREVIOUS model intact (staging is
+    * invisible to [[load]]); a crash inside the delete-rename window
+    * leaves no `model.parquet`, which load rejects LOUDLY via the
+    * `_SUCCESS` marker check — never a torn or half-old model served
+    * silently.
     */
   def save(spark: org.apache.spark.sql.SparkSession, beta: Array[Double],
            dir: String, params: String = ""): Unit = {
     require(beta.length == Ridge.D - 1, s"expected ${Ridge.D - 1} coefficients, got ${beta.length}")
     import spark.implicits._
-    val target = new org.apache.hadoop.fs.Path(s"$dir/model.parquet")
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dir/model.parquet.staging-${ProcessHandle.current.pid}-${System.nanoTime}")
-    Seq((modelFormatVersion, params, beta.toSeq))
-      .toDF("version", "params", "beta")
-      .repartition(1).write.mode("overwrite").parquet(staging.toString)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(staging, target)) {
-      fs.delete(staging, true)
-      sys.error(s"failed to publish quality model to $target")
+    val published = FrozenIndex.publish(spark, s"$dir/model.parquet") { staging =>
+      Seq((modelFormatVersion, params, beta.toSeq))
+        .toDF("version", "params", "beta")
+        .repartition(1).write.mode("overwrite").parquet(staging)
     }
-    // Post-publish shape check: with pid-unique staging names
-    // inviting concurrent savers, a racing saver can recreate
-    // `model.parquet` between this writer's delete and rename — and
-    // HDFS rename onto an EXISTING directory moves the staging dir
-    // INSIDE it (silent "success", nested dir) where the local-FS
-    // Files.move threw loudly. The publish is single-writer by
-    // intent; a violated race must fail here, not serve a torn model.
-    val marker = new org.apache.hadoop.fs.Path(target, "_SUCCESS")
-    val nested = fs.listStatus(target).map(_.getPath.getName)
-      .filter(_.startsWith("model.parquet.staging-"))
-    if (!fs.exists(marker) || nested.nonEmpty)
-      sys.error(s"quality model publish to $target raced a concurrent saver " +
-        s"(marker=${fs.exists(marker)}, nested staging dirs=${nested.mkString(",")}) — " +
-        "the publish is single-writer; retry the save")
+    if (!published) sys.error(s"failed to publish quality model to $dir/model.parquet")
   }
 
   /** Load persisted coefficients; fails loudly on a missing/partial

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -185,6 +185,7 @@ object Similarity {
     val assigned = a
       .select(col("vec_id"), col("embedding"), col("cluster"))
       .honestCheckpoint()
+    a.releaseSources() // the corpus checkpoint, superseded by assigned
     SemanticIndex(centroids, assigned)
   }
 
@@ -411,177 +412,48 @@ object Similarity {
         col("cluster").as("qlabel")) ++ names.map(col): _*)
   }
 
-  /** Persist a [[SemanticIndex]] — the same frozen-index contract as
-    * the ANN family (meta written LAST as the commit marker, version
-    * + params + corpus-count fingerprint), with one layout choice
-    * that matters at serve time: the assignment table is written
-    * `partitionBy(cluster)`, so a probe against the LOADED index
-    * joins a cluster-partitioned fact with a broadcast batch side —
-    * the shape Spark's dynamic partition pruning exists for — where
-    * the in-memory checkpoint could only ever scan everything.
-    */
-  def semanticIndexSave(index: SemanticIndex, dir: String, params: String = "",
-                        corpusCount: Long = -1L): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.assigned.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$dir/assigned.parquet")
-    index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
-      .toDF("cell", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    // meta LAST = commit marker; last_batch is the streaming-ingest
-    // high-water mark (same contract as the IVF-PQ meta): delta dirs
-    // with a higher id are UNCOMMITTED and skipped by the loader.
-    semanticMeta.write(spark, s"$dir/meta.parquet", semanticIndexVersion, params, corpusCount, -1L)
-  }
-
-  def semanticIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        preReadMeta: Option[org.apache.spark.sql.Row] = None): SemanticIndex = {
-    val meta = preReadMeta.getOrElse(
-      semanticMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == semanticIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $semanticIndexVersion")
-    val cents = semanticMeta.readModel(spark, dir, "centroids.parquet").collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1).map(_._2).toSeq
-    val base = spark.read.parquet(s"$dir/assigned.parquet")
-      .select(col("vec_id"), col("embedding"), col("cluster").cast("long").as("cluster"))
-    // committed streaming/append deltas join the scan (plain parquet,
-    // cluster as a data column — the base table keeps its partition
-    // pruning; deltas are micro-batch-sized until compaction folds
-    // them into the partitioned base).
-    val deltas = committedDeltaPaths(spark, dir, meta.getAs[Long]("last_batch"))
-    val assigned =
-      if (deltas.isEmpty) base
-      else base.unionByName(spark.read.parquet(deltas: _*)
-        .select(col("vec_id"), col("embedding"), col("cluster").cast("long").as("cluster")))
-    SemanticIndex(cents, assigned)
-  }
-
-  /** The committed delta dirs of an incrementally-grown index:
-    * `delta_<id>.parquet` with id ≤ meta's `last_batch` — the shared
-    * listing logic of [[committedCodesPaths]], parameterized by dir.
-    * An uncommitted delta (crashed writer: dir exists, meta rewrite
-    * never ran) has id > last_batch and is skipped; its replay
-    * overwrites it. One FS listing, no data read.
-    */
-  private def committedDeltaPaths(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, lastBatch: Long): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaRe = "delta_(\\d+)\\.parquet".r
-    if (lastBatch < 0 || !fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.map(_.getPath.getName).collect {
-      case name @ deltaRe(id) if id.toLong <= lastBatch => (id.toLong, name)
-    }.sortBy(_._1).map { case (_, name) => s"$dir/$name" }
-  }
-
   /** FAISS-style `add()` for the frozen semantic index — corpus
     * growth WITHOUT retraining: NEW vectors are assigned under the
-    * FROZEN centroids (one scan, no Lloyd) and land in their own
-    * `delta_<id>.parquet` dir; the meta rewrite (n += |delta|,
-    * last_batch = id) is the commit, written LAST. Crash-safe: a
-    * killed append leaves an UNCOMMITTED delta (id > last_batch)
-    * that every loader skips and a retry overwrites — the round-12
-    * advisor's orphan-rows hazard (the old partitioned-table
-    * mode(append) was only safe for buildIfAbsent-gated readers).
-    * Append cost ∝ the delta, never the corpus: the existing
-    * partition files are byte-untouched.
+    * FROZEN centroids (one scan, no Lloyd) and committed as the next
+    * delta ([[FrozenIndex.append]]). Append cost ∝ the delta, never the
+    * corpus: the existing partition files are byte-untouched.
     */
-  def semanticIndexAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                          newVectors: DataFrame): Long = {
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = semanticMeta.read(spark, dir).head()
-      semanticCommitDelta(spark, dir, meta, newVectors,
-        meta.getAs[Long]("last_batch") + 1)
-    }
-  }
+  def semanticIndexAppend(spark: SparkSession, dir: String, newVectors: DataFrame): Long =
+    FrozenIndex.append(spark, SemanticKind, dir, newVectors, None)(semanticAssign(_, newVectors))
 
   /** Streaming `add()` for the semantic index — the exactly-once
     * micro-batch append [[graft.streaming.SimilarityStream.semanticNearDupIngest]]
-    * calls from `foreachBatch`; the same idempotence contract as
-    * [[ivfPqIndexStreamAppend]]: delta dirs are keyed by batchId and
-    * written mode(overwrite) (an in-flight replay rewrites, never
-    * double-appends), the meta rewrite is the commit (written LAST),
-    * and a replayed ALREADY-COMMITTED batch (id ≤ last_batch) is
-    * skipped outright. Batches must commit in increasing batchId
-    * order — one streaming query per index dir. Returns the
-    * committed corpus count.
+    * calls from `foreachBatch`, with [[ivfPqIndexStreamAppend]]'s
+    * contract: a replayed in-flight batch overwrites its own
+    * uncommitted delta and a replayed committed batch is skipped.
+    * Batches must commit in increasing batchId order — one streaming
+    * query per index dir. Returns the committed corpus count.
     */
-  def semanticIndexStreamAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def semanticIndexStreamAppend(spark: SparkSession, dir: String,
                                 batch: DataFrame, batchId: Long): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = semanticMeta.read(spark, dir).head()
-      if (batchId <= meta.getAs[Long]("last_batch")) meta.getAs[Long]("n") // committed replay
-      else semanticCommitDelta(spark, dir, meta, batch, batchId)
-    }
+    FrozenIndex.append(spark, SemanticKind, dir, batch, Some(batchId))(semanticAssign(_, batch))
   }
 
-  /** Shared delta-commit step of both semantic appends: frozen-model
-    * assignment of the batch → `delta_<id>.parquet` (mode overwrite =
-    * idempotent under replay) → meta rewrite LAST with the advanced
-    * high-water mark. Caller holds the per-dir lock.
+  /** (vec_id, embedding, cluster) of new vectors under the frozen
+    * centroids of `index`. Bulk appends can be corpus-sized
+    * single-split frames, so they spread like a training corpus of
+    * the same k.
     */
-  private def semanticCommitDelta(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, meta: org.apache.spark.sql.Row,
-                                  batch: DataFrame, batchId: Long): Long = {
-    require(meta.getAs[Int]("version") == semanticIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $semanticIndexVersion")
-    val cnt = countRows(batch)
-    // An EMPTY batch must still advance the high-water mark (so its
-    // replay skips) but must NOT write a delta dir: an empty parquet
-    // write is _SUCCESS with zero data files, and a later multi-path
-    // read dies on schema inference — the loader's listing tolerates
-    // a MISSING committed id, not a data-less one.
-    if (cnt > 0) {
-      val index = semanticIndexLoad(spark, dir, Some(meta))
-      // bulk appends can be corpus-sized single-split frames: spread
-      // them like a training corpus of the same k
-      nearestCells(withUnits(spreadForK(batch.select(col("vec_id"), col("embedding")),
-          index.centroids.size)), "u", index.centroids)
-        .select(col("vec_id"), col("embedding"), col("cluster"))
-        .write.mode("overwrite").parquet(s"$dir/delta_$batchId.parquet")
-    }
-    val n = meta.getAs[Long]("n") + cnt
-    stagedMetaWrite(spark, dir) { staging =>
-      semanticMeta.write(spark, staging,
-        semanticIndexVersion, meta.getAs[String]("params"), n, batchId)
-    }
-    n
-  }
+  private def semanticAssign(index: SemanticIndex, vecs: DataFrame): DataFrame =
+    nearestCells(withUnits(spreadForK(vecs.select(col("vec_id"), col("embedding")),
+        index.centroids.size)), "u", index.centroids)
+      .select(col("vec_id"), col("embedding"), col("cluster"))
 
   /** Fold committed deltas into the cluster-partitioned base
-    * assignment table — the semantic index's maintenance mate of
-    * [[ivfPqIndexCompact]]: repeated appends otherwise accumulate one
-    * plain-parquet dir per batch, each an FS listing + un-pruned scan
-    * relation at probe time. The folded assignment is bit-identical
-    * (same rows, one partitioned table — probes regain partition
-    * pruning over the appended rows too); meta `n` AND `last_batch`
-    * are PRESERVED so a replayed pre-compaction batch still reads as
-    * committed and skips. No-op without committed deltas. Crash-safe
-    * via [[stagedReplace]].
+    * assignment table ([[FrozenIndex.compact]]): repeated appends
+    * otherwise accumulate one plain-parquet dir per batch, each an FS
+    * listing + un-pruned scan relation at probe time. The folded
+    * assignment is bit-identical, and probes regain partition pruning
+    * over the appended rows too.
     */
-  def semanticIndexCompact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = semanticMeta.read(spark, dir).head()
-      require(meta.getAs[Int]("version") == semanticIndexVersion,
-        s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $semanticIndexVersion")
-      if (committedDeltaPaths(spark, dir, meta.getAs[Long]("last_batch")).nonEmpty) {
-        val merged = semanticIndexLoad(spark, dir, Some(meta)).assigned.honestCheckpoint()
-        stagedReplace(spark, dir) { staging =>
-          merged.write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$staging/assigned.parquet")
-          semanticMeta.readModel(spark, dir, "centroids.parquet")
-            .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids.parquet")
-          semanticMeta.write(spark, s"$staging/meta.parquet", semanticIndexVersion,
-            meta.getAs[String]("params"), meta.getAs[Long]("n"), meta.getAs[Long]("last_batch"))
-        }
-      }
-    }
-  }
+  def semanticIndexCompact(spark: SparkSession, dir: String): Unit =
+    FrozenIndex.compact(spark, SemanticKind, dir)
 
   /** The frozen semantic lifecycle WITH corpus growth, as one oracled
     * query — build once on the BASE corpus (vec_id % 10 ≠ 0), append
@@ -596,41 +468,32 @@ object Similarity {
   def dedupSemanticAppended(embeddings: DataFrame, indexDir: String, k: Int = 4,
                             iters: Int = 3, threshold: Double = 0.45,
                             blocks: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
     val base = embeddings.filter(col("vec_id") % 10 =!= 0)
     val fresh = embeddings.filter(col("vec_id") % 10 === 0)
     val params = s"sem;k=$k;it=$iters;base=mod10;src=${sourceStamp(embeddings)}"
-    // ONE corpus scan for both counts (total + fresh split) — the
-    // previous embeddings.count() + fresh.count() pair cost two.
+    // ONE corpus scan for both counts (total + fresh split)
     val cnts = embeddings
       .agg(count(lit(1)), count(when(col("vec_id") % 10 === 0, 1))).collect()(0)
     val n = cnts.getLong(0)
-    val nFresh = cnts.getLong(1)
-    val meta = buildIfAbsent(spark, indexDir, params, n, semanticMeta) { staging =>
-      semanticIndexSave(semanticIndexBuild(base, k, iters), staging, params, n - nFresh)
-      semanticIndexAppend(spark, staging, fresh)
-    }
-    withinClusterPairs(semanticIndexLoad(spark, indexDir, Some(meta)).assigned,
-      threshold, blocks)
+    val index = FrozenIndex.served(SemanticKind, indexDir, params, embeddings, n)(
+      semanticIndexBuild(base, k, iters), n - cnts.getLong(1),
+      semanticIndexAppend(embeddings.sparkSession, _, fresh))
+    withinClusterPairs(index.assigned, threshold, blocks)
   }
 
   /** Frozen-lifecycle SemDeDup pairs: build-if-absent → load → the
     * same within-cluster pair verify — bit-identical to
     * [[dedupSemantic]] (assignment survives the parquet round trip
     * exactly), so it shares dedup_semantic's oracle. The serve-side
-    * win is [[semanticIndexSave]]'s cluster-partitioned layout plus
+    * win is [[SemanticKind]]'s cluster-partitioned layout plus
     * skipping the per-run Lloyd train.
     */
   def dedupSemanticServed(embeddings: DataFrame, indexDir: String, k: Int = 8,
                           iters: Int = 3, threshold: Double = 0.45,
                           blocks: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"sem;k=$k;it=$iters;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, semanticMeta) { staging =>
-      semanticIndexSave(semanticIndexBuild(embeddings, k, iters), staging, params, n)
-    }
-    withinClusterPairs(semanticIndexLoad(spark, indexDir, Some(meta)).assigned,
+    withinClusterPairs(FrozenIndex.served(SemanticKind, indexDir, params, embeddings,
+        countRows(embeddings))(semanticIndexBuild(embeddings, k, iters)).assigned,
       threshold, blocks)
   }
 
@@ -740,6 +603,7 @@ object Similarity {
     val vecs = coarseA
       .select(col("vec_id"), col("embedding"), col("u"), col("cluster").as("coarse"))
       .honestCheckpoint()
+    coarseA.releaseSources() // the corpus checkpoint, superseded by vecs
     val w = Window.partitionBy(col("coarse"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
     var cents: Seq[(Long, Long, Seq[Long])] = vecs
@@ -756,6 +620,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         (col("coarse") * k2 + col("fine")).as("cluster"))
       .honestCheckpoint()
+    vecs.releaseCheckpoint() // assigned and superseded
     HierSemanticIndex(coarseCentroids, cents, k2, assigned)
   }
 
@@ -815,41 +680,6 @@ object Similarity {
       .orderBy(col("new_id"), col("corpus_id"))
   }
 
-  /** Persist / load a [[HierSemanticIndex]] — the flat semantic
-    * lifecycle ([[semanticIndexSave]]) extended with the fine
-    * centroid table; the assignment keeps the cluster-partitioned
-    * layout (the serve-side pruning shape) and meta (with k2) lands
-    * LAST as the commit marker.
-    */
-  def semanticIndexSaveHier(index: HierSemanticIndex, dir: String,
-                            params: String = "", corpusCount: Long = -1L): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.assigned.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$dir/assigned.parquet")
-    index.coarse.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
-      .toDF("cell", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    index.fine.toDF("coarse", "fine", "cu")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/fine_centroids.parquet")
-    hierMeta.write(spark, s"$dir/meta.parquet", hierIndexVersion, index.k2, params, corpusCount)
-  }
-
-  def semanticIndexLoadHier(spark: org.apache.spark.sql.SparkSession, dir: String,
-                            preReadMeta: Option[org.apache.spark.sql.Row] = None): HierSemanticIndex = {
-    val meta = preReadMeta.getOrElse(
-      hierMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == hierIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $hierIndexVersion")
-    val coarse = hierMeta.readModel(spark, dir, "centroids.parquet").collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1).map(_._2).toSeq
-    val fine = hierMeta.readModel(spark, dir, "fine_centroids.parquet").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(t => (t._1, t._2)).toSeq
-    val assigned = spark.read.parquet(s"$dir/assigned.parquet")
-      .select(col("vec_id"), col("embedding"), col("cluster").cast("long").as("cluster"))
-    HierSemanticIndex(coarse, fine, meta.getAs[Int]("k2"), assigned)
-  }
-
   /** Frozen-lifecycle hierarchical SemDeDup pairs — bit-identical to
     * [[dedupSemanticHierGrouped]] (assignment and centroids survive
     * the parquet round trip exactly), so it shares
@@ -858,14 +688,9 @@ object Similarity {
   def dedupSemanticHierServed(embeddings: DataFrame, indexDir: String,
                               k1: Int = 4, k2: Int = 4, iters: Int = 3,
                               threshold: Double = 0.45, blocks: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, hierMeta) { staging =>
-      semanticIndexSaveHier(semanticIndexBuildHier(embeddings, k1, k2, iters),
-        staging, params, n)
-    }
-    withinClusterPairs(semanticIndexLoadHier(spark, indexDir, Some(meta)).assigned,
+    withinClusterPairs(FrozenIndex.served(HierKind, indexDir, params, embeddings,
+        countRows(embeddings))(semanticIndexBuildHier(embeddings, k1, k2, iters)).assigned,
       threshold, blocks)
   }
 
@@ -973,7 +798,7 @@ object Similarity {
     * vs flat ann_range's 0.43 — FAISS serves `range_search` from a
     * BUILT IndexIVF for exactly this reason). The frozen structure IS
     * the flat [[SemanticIndex]] — trained coarse centroids + the
-    * cluster-PARTITIONED corpus assignment ([[semanticIndexSave]]'s
+    * cluster-PARTITIONED corpus assignment ([[SemanticKind]]'s
     * layout, so a probe joining on `cluster` prunes the scan to the
     * probed cells' partitions) — reused verbatim, which buys the
     * whole lifecycle for free: build-if-absent with the sourceStamp
@@ -988,13 +813,9 @@ object Similarity {
                         threshold: Double = 0.4, nlist: Int = 8, ivfIters: Int = 3,
                         nprobe: Int = 2,
                         queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"rangeivf;nlist=$nlist;ivfIt=$ivfIters;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, semanticMeta) { staging =>
-      semanticIndexSave(semanticIndexBuild(embeddings, nlist, ivfIters), staging, params, n)
-    }
-    val index = semanticIndexLoad(spark, indexDir, Some(meta))
+    val index = FrozenIndex.served(SemanticKind, indexDir, params, embeddings,
+      countRows(embeddings))(semanticIndexBuild(embeddings, nlist, ivfIters))
     val qs = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
         index.centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
@@ -1270,8 +1091,9 @@ object Similarity {
     val dsub = pqDsub(m)
     val corpusU = pqCorpusUnits(embeddings)
     val codebooks = pqTrainCodebooks(corpusU, m, codebookSize, iters, dsub)
-    PqIndex(codebooks, pqEncode(corpusU, codebooks, dsub).honestCheckpoint(),
-      embeddings.select(col("vec_id"), col("embedding")), m)
+    val codes = pqEncode(corpusU, codebooks, dsub).honestCheckpoint()
+    corpusU.releaseCheckpoint() // encoded and superseded by the codes
+    PqIndex(codebooks, codes, vectors(embeddings), m)
   }
 
   /** Search a trained [[PqIndex]] with any (vec_id, embedding) query
@@ -1446,14 +1268,16 @@ object Similarity {
     for (_ <- 1 to refineIters) {
       val (perm, psign) = opqProcrustes(corpusR, books, m, dsub)
       perms = perms :+ (perm, psign)
-      corpusR = corpusR
+      val rotated = corpusR
         .select(col("vec_id"), permuteSigns(col("un"), perm, psign).as("un"))
         .honestCheckpoint()
+      corpusR.releaseCheckpoint() // superseded by this round's rotation
+      corpusR = rotated
       books = pqTrainCodebooks(corpusR, m, codebookSize, iters, dsub)
     }
-    OpqIndex(signs, perms, books,
-      pqEncode(corpusR, books, dsub).honestCheckpoint(),
-      embeddings.select(col("vec_id"), col("embedding")), m)
+    val codes = pqEncode(corpusR, books, dsub).honestCheckpoint()
+    corpusR.releaseCheckpoint() // encoded and superseded by the codes
+    OpqIndex(signs, perms, books, codes, vectors(embeddings), m)
   }
 
   /** Search a trained [[OpqIndex]]: rotate the queries into the
@@ -1470,172 +1294,47 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** OPQ index layout version ([[opqIndexSave]]) and its meta table. */
-  private[graft] val opqIndexVersion = 1
-  private[graft] val opqMeta = IndexMeta(opqIndexVersion,
-    "m" -> IntegerType, "refine_iters" -> IntegerType, "version" -> IntegerType,
-    "params" -> StringType, "n" -> LongType)
-    .withModels("codebooks.parquet" -> codebookRows,
-      "rotation.parquet" -> IndexMeta.struct(
-        "step" -> LongType, "idx" -> LongType, "a" -> LongType, "b" -> LongType))
-
-  /** Persist a trained [[OpqIndex]]: codes + codebooks like
-    * [[pqIndexSave]], plus the rotation model as one small table —
-    * step 0 rows carry the Hadamard pre-signs (idx = j, a = s_j),
-    * step t ≥ 1 rows a refinement's signed permutation (idx = r,
-    * a = π(r), b = sign_r). Meta (with refine_iters) LAST — its
-    * _SUCCESS is the commit marker, like every frozen index here.
-    */
-  def opqIndexSave(index: OpqIndex, dir: String, params: String = "",
-                   corpusCount: Long = -1L): Unit = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
-    val cbRows = for {
-      (subCbs, sub) <- index.codebooks.zipWithIndex
-      (units, code) <- subCbs.zipWithIndex
-    } yield (sub, code, units.toSeq)
-    cbRows.toDF("subspace", "code", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    val rotRows =
-      index.signs.zipWithIndex.map { case (s, j) => (0L, j.toLong, s, 0L) } ++
-        index.perms.zipWithIndex.flatMap { case ((perm, psign), t) =>
-          perm.indices.map(r => ((t + 1).toLong, r.toLong, perm(r).toLong, psign(r)))
-        }
-    rotRows.toDF("step", "idx", "a", "b")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation.parquet")
-    opqMeta.write(spark, s"$dir/meta.parquet",
-      index.m, index.perms.size, opqIndexVersion, params, corpusCount)
-  }
-
-  /** Load a persisted OPQ index and re-bind it to its corpus. The
-    * rotation model is O(d·(1+refine_iters)) rows — model parameters,
-    * same collect class as the codebooks. Loaded results are
-    * bit-exact equal to the fresh build (integer model through
-    * parquet) — spec-gated.
-    */
-  def opqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   corpus: DataFrame,
-                   preReadMeta: Option[org.apache.spark.sql.Row] = None): OpqIndex = {
-    val meta = preReadMeta.getOrElse(
-      opqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == opqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $opqIndexVersion")
-    val m = meta.getAs[Int]("m")
-    val refineIters = meta.getAs[Int]("refine_iters")
-    val rot = opqMeta.readModel(spark, dir, "rotation.parquet").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val signs = rot.filter(_._1 == 0L).sortBy(_._2).map(_._3).toSeq
-    val perms = (1 to refineIters).map { t =>
-      val rows = rot.filter(_._1 == t.toLong).sortBy(_._2)
-      (rows.map(_._3.toInt).toArray, rows.map(_._4).toArray)
-    }
-    val cbs = opqMeta.readModel(spark, dir, "codebooks.parquet").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-    val codebooks = cbs.groupBy(_._1).toIndexedSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toIndexedSeq }
-    OpqIndex(signs, perms, codebooks, spark.read.parquet(s"$dir/codes.parquet"),
-      corpus.select(col("vec_id"), col("embedding")), m)
-  }
-
-  /** Serve-from-frozen-index OPQ — the [[annPqServed]] lifecycle for
-    * the rotated layout: build-if-absent decided on disk, then the
-    * steady-state serving cost (codes scan + rotated-query ADC +
-    * exact re-rank, no training). Bit-identical to [[annOpq]] at
-    * equal params (the integer rotation model and codebooks survive
-    * parquet), so it shares ann_opq's FULL oracle.
+  /** Serve from a frozen OPQ index ([[OpqKind]]): codes like
+    * [[PqKind]]'s, and the rotation model — O(d) pre-signs and
+    * permutations, model parameters like the codebooks — in the meta
+    * row. Served results are bit-identical to [[annOpq]] at equal
+    * params (the integer rotation model and codebooks survive parquet),
+    * so ann_opq_served shares ann_opq's FULL oracle.
     */
   def annOpqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                    m: Int = 8, codebookSize: Int = 8, iters: Int = 3,
                    rerank: Int = 50, refineIters: Int = 1): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"opq;m=$m;cb=$codebookSize;it=$iters;ref=$refineIters;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, opqMeta) { staging =>
-      opqIndexSave(opqIndexBuild(embeddings, m, codebookSize, iters, refineIters),
-        staging, params, n)
-    }
-    val index = opqIndexLoad(spark, indexDir, embeddings, Some(meta))
-    opqSearch(index, defaultQueries(embeddings), k, rerank, excludeSelf = true)
-  }
-
-  /** Persist a trained [[PqIndex]] — the frozen-index lifecycle's
-    * write half. `codes` lands as a parquet table (the thing a
-    * 100 TB deployment actually serves from: 9 bytes/vector next to
-    * the raw corpus), the m×cb×dsub codebook units as a single-file
-    * parquet of (subspace, code, units) rows, and `m` in a one-row
-    * meta table. The raw corpus is NOT copied — it is the source
-    * table, re-bound at load.
-    */
-  def pqIndexSave(index: PqIndex, dir: String, params: String = "",
-                  corpusCount: Long = -1L): Unit = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
-    val cbRows = for {
-      (subCbs, sub) <- index.codebooks.zipWithIndex
-      (units, code) <- subCbs.zipWithIndex
-    } yield (sub, code, units.toSeq)
-    cbRows.toDF("subspace", "code", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    // meta LAST: its _SUCCESS is the whole-index commit marker.
-    // params/n are the build fingerprint frozenIndexComplete checks.
-    pqMeta.write(spark, s"$dir/meta.parquet", index.m, pqIndexVersion, params, corpusCount)
-  }
-
-  /** Load a persisted PQ index and re-bind it to its corpus table.
-    * Codebooks are bounded model parameters (m×cb×dsub longs), so
-    * the collect here is the same class as the training collects.
-    * Results from a loaded index are BIT-EXACT equal to the freshly
-    * built one (integer units end-to-end) — spec-gated.
-    */
-  def pqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  corpus: DataFrame,
-                  preReadMeta: Option[org.apache.spark.sql.Row] = None): PqIndex = {
-    val meta = preReadMeta.getOrElse(
-      pqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == pqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $pqIndexVersion")
-    val m = meta.getAs[Int]("m")
-    val cbs = pqMeta.readModel(spark, dir, "codebooks.parquet").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-    val codebooks = cbs.groupBy(_._1).toIndexedSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toIndexedSeq }
-    PqIndex(codebooks, spark.read.parquet(s"$dir/codes.parquet"),
-      corpus.select(col("vec_id"), col("embedding")), m)
+    opqSearch(FrozenIndex.served(OpqKind, indexDir, params, embeddings, countRows(embeddings))(
+        opqIndexBuild(embeddings, m, codebookSize, iters, refineIters)),
+      defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
   /** Serve-from-frozen-index batch ANN — the lifecycle composition
-    * (train → save → load → serve) as one oracled query. Build-if-
-    * absent is decided ON DISK ([[frozenIndexComplete]]): a fresh JVM
+    * (train → save → load → serve, [[FrozenIndex.served]]) as one
+    * oracled query. Build-if-absent is decided ON DISK: a fresh JVM
     * pointed at a dir holding a complete index LOADS it instead of
-    * silently rebuilding over it — the lifecycle contract a
-    * production consumer assumes — while a missing/partial/stale-
-    * format dir triggers one build+save. Repeated calls (bench,
-    * query streams) therefore read the steady-state serving cost:
-    * parquet codes scan + ADC + exact re-rank, no training. A warm
-    * serve builds its frame with one job each for the corpus count
-    * ([[graft.plans.HonestCheckpoint.countRows]]), the meta collect
-    * and the codebooks collect (every model table is read with its
-    * declared schema, so no read infers one). Results
-    * are bit-identical to [[annPq]] with the same parameters
-    * (integer units survive the parquet round trip), so it shares
-    * ann_pq's oracle.
+    * silently rebuilding over it, while a missing, partial, stale-
+    * layout or fingerprint-mismatched dir triggers one build and a
+    * staged publish. Repeated calls (bench, query streams) therefore
+    * read the steady-state serving cost: parquet codes scan + ADC +
+    * exact re-rank, no training. A warm serve builds its frame with
+    * two jobs, the corpus count
+    * ([[graft.plans.HonestCheckpoint.countRows]]) and the meta
+    * collect, which returns the codebooks too. Results are
+    * bit-identical to [[annPq]] with the same parameters (integer
+    * units survive the parquet round trip), so it shares ann_pq's
+    * oracle.
     */
   def annPqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                   m: Int = 8, codebookSize: Int = 8, iters: Int = 3,
                   rerank: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
     // build-parameter fingerprint (k/rerank are search-time knobs —
-    // not part of the frozen model) + corpus row count (answered
-    // from parquet footers — no data scan)
+    // not part of the frozen model) + the corpus row count
     val params = s"pq;m=$m;cb=$codebookSize;it=$iters;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, pqMeta) { staging =>
-      pqIndexSave(pqIndexBuild(embeddings, m, codebookSize, iters), staging, params, n)
-    }
-    val index = pqIndexLoad(spark, indexDir, embeddings, Some(meta))
-    pqSearch(index, defaultQueries(embeddings), k, rerank, excludeSelf = true)
+    pqSearch(FrozenIndex.served(PqKind, indexDir, params, embeddings,
+        countRows(embeddings))(pqIndexBuild(embeddings, m, codebookSize, iters)),
+      defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
   /** A trained SQ8 scalar-quantizer index — FAISS's OTHER production
@@ -1669,8 +1368,8 @@ object Similarity {
         graft.plans.ScalarQuant.sqEncode(col("un"),
           bounds.map(_._2), bounds.map(t => t._3 - t._2)).as("codes"))
       .honestCheckpoint()
-    SqIndex(bounds.map(_._2), bounds.map(t => t._3 - t._2), codes,
-      embeddings.select(col("vec_id"), col("embedding")))
+    corpusU.releaseCheckpoint() // encoded and superseded by the codes
+    SqIndex(bounds.map(_._2), bounds.map(t => t._3 - t._2), codes, vectors(embeddings))
   }
 
   /** Two-phase SQ search: the fused asymmetric integer distance
@@ -1707,49 +1406,16 @@ object Similarity {
       excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
   }
 
-  /** Persist / load / serve-from a frozen SQ8 index — the same
-    * lifecycle contract as the PQ family: codes as the served parquet
-    * table, the 2×dim bounds as a one-file parquet, meta written LAST
-    * as the commit marker with the [[frozenIndexMeta]] fingerprint.
-    */
-  def sqIndexSave(index: SqIndex, dir: String, params: String = "",
-                  corpusCount: Long = -1L): Unit = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
-    index.mins.indices.map(d => (d, index.mins(d), index.spans(d)))
-      .toDF("dim", "vmin", "span")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bounds.parquet")
-    sqMeta.write(spark, s"$dir/meta.parquet", sqIndexVersion, params, corpusCount)
-  }
-
-  def sqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  corpus: DataFrame,
-                  preReadMeta: Option[org.apache.spark.sql.Row] = None): SqIndex = {
-    val meta = preReadMeta.getOrElse(
-      sqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == sqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $sqIndexVersion")
-    val b = sqMeta.readModel(spark, dir, "bounds.parquet").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    SqIndex(b.map(_._2), b.map(_._3), spark.read.parquet(s"$dir/codes.parquet"),
-      corpus.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Serve-from-frozen-index SQ8 — train → save → load → serve with
-    * the shared build-if-absent lifecycle; bit-identical to [[annSq]]
-    * (integer units survive the parquet round trip), so it shares
-    * ann_sq's oracle.
+  /** Serve from a frozen SQ8 index ([[SqKind]]: the codes a serve
+    * scans, the 2×dim bounds in the meta row) — bit-identical to
+    * [[annSq]] (integer units survive the parquet round trip), so it
+    * shares ann_sq's oracle.
     */
   def annSqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                   rerank: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"sq8;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, sqMeta) { staging =>
-      sqIndexSave(sqIndexBuild(embeddings), staging, params, n)
-    }
-    sqSearch(sqIndexLoad(spark, indexDir, embeddings, Some(meta)),
+    sqSearch(FrozenIndex.served(SqKind, indexDir, params, embeddings,
+        countRows(embeddings))(sqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
@@ -1797,8 +1463,7 @@ object Similarity {
     val sq = sqIndexBuild(embeddings)
     val codes = sq.codes.join(
       corpusA.select(col("vec_id"), col("cluster").as("label")), "vec_id")
-    IvfSqIndex(sq.mins, sq.spans, centroids, codes,
-      embeddings.select(col("vec_id"), col("embedding")))
+    IvfSqIndex(sq.mins, sq.spans, centroids, codes, vectors(embeddings))
   }
 
   /** Search a trained [[IvfSqIndex]] — the serve half of
@@ -1825,55 +1490,16 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Persist / load / serve-from a frozen IVF-SQ index — the shared
-    * lifecycle contract: cell-labeled codes + 2×dim bounds +
-    * centroids as parquet, meta written LAST as the commit marker
-    * with the [[frozenIndexMeta]] fingerprint.
-    */
-  def ivfSqIndexSave(index: IvfSqIndex, dir: String, params: String = "",
-                     corpusCount: Long = -1L): Unit = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
-    index.mins.indices.map(d => (d, index.mins(d), index.spans(d)))
-      .toDF("dim", "vmin", "span")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bounds.parquet")
-    index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
-      .toDF("cell", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    ivfSqMeta.write(spark, s"$dir/meta.parquet", ivfSqIndexVersion, params, corpusCount)
-  }
-
-  def ivfSqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     corpus: DataFrame,
-                     preReadMeta: Option[org.apache.spark.sql.Row] = None): IvfSqIndex = {
-    val meta = preReadMeta.getOrElse(
-      ivfSqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == ivfSqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfSqIndexVersion")
-    val b = ivfSqMeta.readModel(spark, dir, "bounds.parquet").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val cents = ivfSqMeta.readModel(spark, dir, "centroids.parquet").collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1).map(_._2).toSeq
-    IvfSqIndex(b.map(_._2), b.map(_._3), cents,
-      spark.read.parquet(s"$dir/codes.parquet"),
-      corpus.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Serve-from-frozen-index IVF-SQ — train → save → load → serve
-    * with the shared build-if-absent lifecycle; bit-identical to
-    * [[annIvfSq]] (integer units survive the parquet round trip), so
-    * it shares ann_ivfsq's oracle.
+  /** Serve from a frozen IVF-SQ index ([[IvfSqKind]]: cell-labeled
+    * codes; the 2×dim bounds and the centroids in the meta row) —
+    * bit-identical to [[annIvfSq]] (integer units survive the parquet
+    * round trip), so it shares ann_ivfsq's oracle.
     */
   def annIvfSqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      rerank: Int = 50, nprobe: Int = 1): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"ivfsq;nlist=8;ivfIt=3;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfSqMeta) { staging =>
-      ivfSqIndexSave(ivfSqIndexBuild(embeddings), staging, params, n)
-    }
-    ivfSqSearch(ivfSqIndexLoad(spark, indexDir, embeddings, Some(meta)),
+    ivfSqSearch(FrozenIndex.served(IvfSqKind, indexDir, params, embeddings,
+        countRows(embeddings))(ivfSqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
@@ -1935,41 +1561,15 @@ object Similarity {
     bqSearch(bqIndexBuild(embeddings), queries.getOrElse(defaultQueries(embeddings)),
       k, rerank, excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
 
-  /** Persist a [[BqIndex]]: the signature table (the thing a serve
-    * scans — dim/8 bytes per vector) + the meta commit marker. No
-    * model tables: BQ's encode is parameter-free.
-    */
-  def bqIndexSave(index: BqIndex, dir: String, params: String = "",
-                  corpusCount: Long = -1L): Unit = {
-    val spark = index.sigs.sparkSession
-    index.sigs.write.mode("overwrite").parquet(s"$dir/sigs.parquet")
-    bqMeta.write(spark, s"$dir/meta.parquet", bqIndexVersion, params, corpusCount)
-  }
-
-  def bqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  corpus: DataFrame,
-                  preReadMeta: Option[org.apache.spark.sql.Row] = None): BqIndex = {
-    val meta = preReadMeta.getOrElse(
-      bqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == bqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $bqIndexVersion")
-    BqIndex(spark.read.parquet(s"$dir/sigs.parquet"),
-      corpus.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Serve-from-frozen-index BQ — the shared build-if-absent
-    * lifecycle; bit-identical to [[annBq]] (sign bits trivially
-    * survive the parquet round trip), so it shares ann_bq's oracle.
+  /** Serve from a frozen BQ index ([[BqKind]]: the signature table a
+    * serve scans — dim/8 bytes per vector — and a meta row with no
+    * model, BQ's encode being parameter-free) — bit-identical to [[annBq]], so it shares ann_bq's oracle.
     */
   def annBqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                   rerank: Int = 20): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"bq;w=32;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, bqMeta) { staging =>
-      bqIndexSave(bqIndexBuild(embeddings), staging, params, n)
-    }
-    bqSearch(bqIndexLoad(spark, indexDir, embeddings, Some(meta)),
+    bqSearch(FrozenIndex.served(BqKind, indexDir, params, embeddings,
+        countRows(embeddings))(bqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
@@ -2078,7 +1678,8 @@ object Similarity {
       .select(col("vec_id"), signPack(col("embedding")).as("sig"),
         col("cluster").as("label"))
       .honestCheckpoint()
-    IvfBqIndex(centroids, sigs, embeddings.select(col("vec_id"), col("embedding")))
+    corpusA.releaseSources() // the corpus checkpoint, superseded by sigs
+    IvfBqIndex(centroids, sigs, vectors(embeddings))
   }
 
   /** Search a trained [[IvfBqIndex]]: query-side top-`nprobe` cell
@@ -2114,189 +1715,168 @@ object Similarity {
       queries.getOrElse(defaultQueries(embeddings)), k, rerank, nprobe,
       excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
 
-  /** Persist / load / serve-from a frozen IVF-BQ index — the shared
-    * lifecycle contract (cell-labeled signatures + centroids, meta
-    * written LAST).
-    */
-  def ivfBqIndexSave(index: IvfBqIndex, dir: String, params: String = "",
-                     corpusCount: Long = -1L): Unit = {
-    val spark = index.sigs.sparkSession
-    import spark.implicits._
-    index.sigs.write.mode("overwrite").parquet(s"$dir/sigs.parquet")
-    index.centroids.zipWithIndex.map { case (units, cell) => (cell, units.toSeq) }
-      .toDF("cell", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    ivfBqMeta.write(spark, s"$dir/meta.parquet", ivfBqIndexVersion, params, corpusCount)
-  }
-
-  def ivfBqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     corpus: DataFrame,
-                     preReadMeta: Option[org.apache.spark.sql.Row] = None): IvfBqIndex = {
-    val meta = preReadMeta.getOrElse(
-      ivfBqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == ivfBqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfBqIndexVersion")
-    val cents = ivfBqMeta.readModel(spark, dir, "centroids.parquet").collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1).map(_._2).toSeq
-    IvfBqIndex(cents, spark.read.parquet(s"$dir/sigs.parquet"),
-      corpus.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Serve-from-frozen-index IVF-BQ — bit-identical to [[annIvfBq]]
-    * (sign bits and Lloyd labels survive the parquet round trip), so
-    * it shares ann_ivfbq's oracle.
+  /** Serve from a frozen IVF-BQ index ([[IvfBqKind]]: cell-labeled
+    * signatures, centroids in the meta row) — bit-identical to
+    * [[annIvfBq]] (sign bits and Lloyd labels survive the parquet
+    * round trip), so it shares ann_ivfbq's oracle.
     */
   def annIvfBqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      rerank: Int = 20, nprobe: Int = 1): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"ivfbq;nlist=8;ivfIt=3;w=32;src=${sourceStamp(embeddings)}"
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfBqMeta) { staging =>
-      ivfBqIndexSave(ivfBqIndexBuild(embeddings), staging, params, n)
-    }
-    ivfBqSearch(ivfBqIndexLoad(spark, indexDir, embeddings, Some(meta)),
+    ivfBqSearch(FrozenIndex.served(IvfBqKind, indexDir, params, embeddings,
+        countRows(embeddings))(ivfBqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
-  /** One frozen-index kind's one-row meta table: its layout version
-    * and the schema its saver writes (every column nullable, as Spark
-    * reads any parquet file back), plus the schemas of the small model
-    * tables the kind writes beside it (file name → schema). Declaring
-    * the schemas lets every reader skip parquet schema inference — a
-    * footer-reading job per read — for a file graft wrote itself.
+  /** The nine frozen-index kinds of [[FrozenIndex]]: each declares
+    * its layout version, payload table and model columns once, and
+    * binds a committed meta row and its payload back to its index.
+    * Versions are per kind — a layout change bumps only the kind whose
+    * layout changed (an engine-wide bump once invalidated every
+    * on-disk index whose bytes had not changed: at 100 TB a silent
+    * full-fleet rebuild). Every kind moved its model into the meta
+    * row and records its payload schema there, so each bumped once
+    * (IVF-PQ 6 → 7, OPQ 1 → 2, the others 5 → 6): a directory of the
+    * previous layout reads as absent and is rebuilt.
     */
-  private[graft] final case class IndexMeta(version: Int, schema: StructType,
-                                            models: Map[String, StructType] = Map.empty) {
-    /** Write the one meta row (`values` in schema order) as one file. */
-    def write(spark: org.apache.spark.sql.SparkSession, path: String, values: Any*): Unit =
-      spark.createDataFrame(java.util.List.of(Row(values: _*)), schema)
-        .coalesce(1).write.mode("overwrite").parquet(path)
-
-    /** `<dir>/meta.parquet` with the declared schema. */
-    def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-      spark.read.schema(schema).parquet(s"$dir/meta.parquet")
-
-    /** `<dir>/<table>`, one of this kind's model tables, with its declared schema. */
-    def readModel(spark: org.apache.spark.sql.SparkSession, dir: String, table: String): DataFrame =
-      spark.read.schema(models(table)).parquet(s"$dir/$table")
-
-    /** This kind with its model tables declared. */
-    def withModels(tables: (String, StructType)*): IndexMeta = copy(models = tables.toMap)
-  }
-  private[graft] object IndexMeta {
-    def apply(version: Int, fields: (String, DataType)*): IndexMeta =
-      IndexMeta(version, struct(fields: _*))
-
-    /** All-nullable columns, as Spark reads any parquet file back. */
-    def struct(fields: (String, DataType)*): StructType =
-      StructType(fields.map { case (name, t) => StructField(name, t) })
+  /** The assignment table is written `partitionBy(cluster)`, so a
+    * probe against the LOADED index joins a cluster-partitioned fact
+    * with a broadcast batch side — the shape Spark's dynamic partition
+    * pruning exists for — where the in-memory checkpoint could only
+    * ever scan everything. The centroids ride the meta row.
+    */
+  private[graft] object SemanticKind extends FrozenIndex.Kind[SemanticIndex](
+      6, "assigned.parquet", "centroids" -> FrozenIndex.cells) {
+    override def partitionBy: Option[String] = Some("cluster")
+    def model(ix: SemanticIndex): Seq[Any] = Seq(ix.centroids.map(_.toSeq))
+    def payloadOf(ix: SemanticIndex): DataFrame = ix.assigned
+    def bind(meta: Row, assigned: DataFrame, corpus: DataFrame): SemanticIndex =
+      SemanticIndex(FrozenIndex.cellsOf(meta, "centroids"), assigned)
   }
 
-  /** The model tables the savers write (`toDF` over driver-side
-    * model rows), as Spark reads them back: (cell, units) coarse
-    * centroids, (subspace, code, units) PQ codebook entries and
-    * (dim, vmin, span) SQ8 bounds. Lazy: [[opqMeta]], declared beside
-    * the OPQ code above, reads them during object initialization.
+  /** The flat semantic layout — the cluster-partitioned assignment,
+    * the serve-side pruning shape — with k2 and the coarse centroids
+    * in the meta row, and the fine model as per-coarse-cell centroid
+    * lists ([[fineCells]]' layout: fine id = position, a dead cell
+    * empty).
     */
-  private lazy val centroidRows =
-    IndexMeta.struct("cell" -> IntegerType, "units" -> ArrayType(LongType))
-  private lazy val codebookRows = IndexMeta.struct(
-    "subspace" -> IntegerType, "code" -> IntegerType, "units" -> ArrayType(LongType))
-  private lazy val boundRows =
-    IndexMeta.struct("dim" -> IntegerType, "vmin" -> LongType, "span" -> LongType)
+  private[graft] object HierKind extends FrozenIndex.Kind[HierSemanticIndex](
+      6, "assigned.parquet", "k2" -> IntegerType, "coarse" -> FrozenIndex.cells,
+      "fine" -> FrozenIndex.books) {
+    override def partitionBy: Option[String] = Some("cluster")
+    def model(ix: HierSemanticIndex): Seq[Any] = Seq(ix.k2, ix.coarse.map(_.toSeq),
+      fineCells(ix.coarse.size, ix.fine).map(_.map(_.toSeq)))
+    def payloadOf(ix: HierSemanticIndex): DataFrame = ix.assigned
+    def bind(meta: Row, assigned: DataFrame, corpus: DataFrame): HierSemanticIndex = {
+      val fine = FrozenIndex.booksOf(meta, "fine").zipWithIndex.flatMap { case (cell, c) =>
+        cell.zipWithIndex.map { case (cu, f) => (c.toLong, f.toLong, cu.toSeq) }
+      }
+      HierSemanticIndex(FrozenIndex.cellsOf(meta, "coarse"), fine, meta.getAs[Int]("k2"), assigned)
+    }
+  }
 
-  /** Frozen-index layout versions, persisted in every index's meta
-    * table and checked at detection/load time: an index written by an
-    * incompatible layout (or a pre-version save) reads as ABSENT, so
-    * the serve path rebuilds instead of mis-decoding it.
-    *
-    * PER FAMILY, not engine-wide: the round-13 engine-wide 4→5 bump
-    * (the semantic meta gained last_batch) also invalidated every
-    * on-disk PQ/SQ/BQ/IVF index whose bytes had not changed — at
-    * 100 TB a silent full-fleet rebuild, not a hiccup. Each family
-    * versions independently, and a layout change bumps only the
-    * family whose layout changed: IVF-PQ is at 6 (its model moved
-    * from the codebooks/centroids tables into the meta row, so a v5
-    * directory reads as absent and is rebuilt); the others sit at 5.
+  /** `codes` is the payload (the thing a 100 TB deployment actually
+    * serves from: 9 bytes/vector next to the raw corpus), the
+    * m×cb×dsub codebook units and `m` ride the meta row. The raw
+    * corpus is NOT copied — it is the source table, re-bound at load.
+    * A loaded index answers BIT-EXACT like the freshly built one
+    * (integer units end-to-end) — spec-gated.
     */
-  private[graft] val semanticIndexVersion = 5 // flat SemanticIndex (+ annRangeIvfServed reuse)
-  private[graft] val hierIndexVersion = 5
-  private[graft] val pqIndexVersion = 5
-  private[graft] val sqIndexVersion = 5
-  private[graft] val bqIndexVersion = 5
-  private[graft] val ivfSqIndexVersion = 5
-  private[graft] val ivfBqIndexVersion = 5
-  private[graft] val ivfPqIndexVersion = 6
+  private[graft] object PqKind extends FrozenIndex.Kind[PqIndex](
+      6, "codes.parquet", "m" -> IntegerType, "codebooks" -> FrozenIndex.books) {
+    def model(ix: PqIndex): Seq[Any] = Seq(ix.m, bookUnits(ix.codebooks))
+    def payloadOf(ix: PqIndex): DataFrame = ix.codes
+    def bind(meta: Row, codes: DataFrame, corpus: DataFrame): PqIndex =
+      PqIndex(FrozenIndex.booksOf(meta, "codebooks"), codes, vectors(corpus), meta.getAs[Int]("m"))
+  }
 
-  /** Each family's meta table, declared once beside its version: the
-    * saver writes the row with this schema and every reader reads it
-    * back with it (see [[IndexMeta]]).
+  /** The rotation rides as the Hadamard pre-signs and one signed
+    * permutation (`perms` row, `psigns` row) per refinement round.
     */
-  private[graft] val semanticMeta = IndexMeta(semanticIndexVersion,
-    "version" -> IntegerType, "params" -> StringType, "n" -> LongType, "last_batch" -> LongType)
-    .withModels("centroids.parquet" -> centroidRows)
-  private[graft] val hierMeta = IndexMeta(hierIndexVersion,
-    "version" -> IntegerType, "k2" -> IntegerType, "params" -> StringType, "n" -> LongType)
-    .withModels("centroids.parquet" -> centroidRows,
-      "fine_centroids.parquet" -> IndexMeta.struct(
-        "coarse" -> LongType, "fine" -> LongType, "cu" -> ArrayType(LongType)))
-  private[graft] val pqMeta = IndexMeta(pqIndexVersion,
-    "m" -> IntegerType, "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
-    .withModels("codebooks.parquet" -> codebookRows)
-  private[graft] val sqMeta = IndexMeta(sqIndexVersion,
-    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
-    .withModels("bounds.parquet" -> boundRows)
-  private[graft] val bqMeta = IndexMeta(bqIndexVersion,
-    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
-  private[graft] val ivfSqMeta = IndexMeta(ivfSqIndexVersion,
-    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
-    .withModels("bounds.parquet" -> boundRows, "centroids.parquet" -> centroidRows)
-  private[graft] val ivfBqMeta = IndexMeta(ivfBqIndexVersion,
-    "version" -> IntegerType, "params" -> StringType, "n" -> LongType)
-    .withModels("centroids.parquet" -> centroidRows)
-  /** IVF-PQ writes no model table: its bounded model (m×cb×dsub
-    * codebook units, nlist×dim centroid units) rides the commit row
-    * itself, so the one meta collect that validates an index also
-    * returns its model.
-    */
-  private[graft] val ivfPqMeta = IndexMeta(ivfPqIndexVersion,
-    "m" -> IntegerType, "residual" -> BooleanType, "version" -> IntegerType,
-    "params" -> StringType, "n" -> LongType, "last_batch" -> LongType,
-    "codebooks" -> ArrayType(ArrayType(ArrayType(LongType))),
-    "centroids" -> ArrayType(ArrayType(LongType)))
+  private[graft] object OpqKind extends FrozenIndex.Kind[OpqIndex](
+      2, "codes.parquet", "m" -> IntegerType, "codebooks" -> FrozenIndex.books,
+      "signs" -> FrozenIndex.longs, "perms" -> FrozenIndex.cells, "psigns" -> FrozenIndex.cells) {
+    def model(ix: OpqIndex): Seq[Any] = Seq(ix.m, bookUnits(ix.codebooks), ix.signs,
+      ix.perms.map(_._1.toSeq.map(_.toLong)), ix.perms.map(_._2.toSeq))
+    def payloadOf(ix: OpqIndex): DataFrame = ix.codes
+    def bind(meta: Row, codes: DataFrame, corpus: DataFrame): OpqIndex =
+      OpqIndex(FrozenIndex.longsOf(meta, "signs").toSeq,
+        FrozenIndex.cellsOf(meta, "perms").map(_.map(_.toInt))
+          .zip(FrozenIndex.cellsOf(meta, "psigns")),
+        FrozenIndex.booksOf(meta, "codebooks"), codes, vectors(corpus), meta.getAs[Int]("m"))
+  }
 
-  /** On-disk completeness check for a frozen index dir. The meta
-    * table is written LAST in every save, so its `_SUCCESS` marker
-    * implies every table written before it committed (the payload
-    * table and any model tables; IVF-PQ's model rides the meta row
-    * itself) — a partial save (killed writer) never reads as
-    * complete. Beyond
-    * the layout version, the check compares the BUILD-PARAMETER
-    * fingerprint and the corpus row count recorded at save time: an
-    * index built with different hyperparameters, or over a corpus
-    * that has since changed size (regenerated data, grown table),
-    * reads as absent and is rebuilt rather than silently served.
-    * Every served entry additionally folds [[sourceStamp]] — the
-    * corpus files' (path, length, mtime) digest, answered from FS
-    * metadata with no data scan — into its params, so an EQUAL-COUNT
-    * regenerated corpus also rebuilds (previously the documented
-    * residual); what remains is only an in-place rewrite preserving
-    * every file's byte length AND mtime, which no parquet writer
-    * performs.
+  private[graft] object SqKind extends FrozenIndex.Kind[SqIndex](
+      6, "codes.parquet", "mins" -> FrozenIndex.longs, "spans" -> FrozenIndex.longs) {
+    def model(ix: SqIndex): Seq[Any] = Seq(ix.mins.toSeq, ix.spans.toSeq)
+    def payloadOf(ix: SqIndex): DataFrame = ix.codes
+    def bind(meta: Row, codes: DataFrame, corpus: DataFrame): SqIndex =
+      SqIndex(FrozenIndex.longsOf(meta, "mins"), FrozenIndex.longsOf(meta, "spans"),
+        codes, vectors(corpus))
+  }
+
+  private[graft] object IvfSqKind extends FrozenIndex.Kind[IvfSqIndex](
+      6, "codes.parquet", "mins" -> FrozenIndex.longs, "spans" -> FrozenIndex.longs,
+      "centroids" -> FrozenIndex.cells) {
+    def model(ix: IvfSqIndex): Seq[Any] =
+      Seq(ix.mins.toSeq, ix.spans.toSeq, ix.centroids.map(_.toSeq))
+    def payloadOf(ix: IvfSqIndex): DataFrame = ix.codes
+    def bind(meta: Row, codes: DataFrame, corpus: DataFrame): IvfSqIndex =
+      IvfSqIndex(FrozenIndex.longsOf(meta, "mins"), FrozenIndex.longsOf(meta, "spans"),
+        FrozenIndex.cellsOf(meta, "centroids"), codes, vectors(corpus))
+  }
+
+  /** BQ's encode is parameter-free: no model columns. */
+  private[graft] object BqKind extends FrozenIndex.Kind[BqIndex](6, "sigs.parquet") {
+    def model(ix: BqIndex): Seq[Any] = Nil
+    def payloadOf(ix: BqIndex): DataFrame = ix.sigs
+    def bind(meta: Row, sigs: DataFrame, corpus: DataFrame): BqIndex =
+      BqIndex(sigs, vectors(corpus))
+  }
+
+  private[graft] object IvfBqKind extends FrozenIndex.Kind[IvfBqIndex](
+      6, "sigs.parquet", "centroids" -> FrozenIndex.cells) {
+    def model(ix: IvfBqIndex): Seq[Any] = Seq(ix.centroids.map(_.toSeq))
+    def payloadOf(ix: IvfBqIndex): DataFrame = ix.sigs
+    def bind(meta: Row, sigs: DataFrame, corpus: DataFrame): IvfBqIndex =
+      IvfBqIndex(FrozenIndex.cellsOf(meta, "centroids"), sigs, vectors(corpus))
+  }
+
+  /** Both IVF-PQ layouts: the labeled codes, with the codebooks and
+    * centroids in 1e-8 units and the `residual` flag in the meta row,
+    * so a loader can never decode residual codes through the
+    * raw-vector search or the reverse. Results are bit-identical to
+    * [[annIvfPq]] (integer units end-to-end), so `ann_ivfpq_served`
+    * shares ann_ivfpq's oracle.
     */
-  private[graft] def frozenIndexComplete(spark: org.apache.spark.sql.SparkSession,
-                                         dir: String, params: String, corpusCount: Long,
-                                         kind: IndexMeta): Boolean =
-    frozenIndexMeta(spark, dir, params, corpusCount, kind).isDefined
+  private[graft] object IvfPqKind extends FrozenIndex.Kind[IvfPqIndex](
+      7, "codes.parquet", "m" -> IntegerType, "residual" -> BooleanType,
+      "codebooks" -> FrozenIndex.books, "centroids" -> FrozenIndex.cells) {
+    def model(ix: IvfPqIndex): Seq[Any] =
+      Seq(ix.m, ix.residual, bookUnits(ix.codebooks), ix.centroids.map(_.toSeq))
+    def payloadOf(ix: IvfPqIndex): DataFrame = ix.codes
+    def bind(meta: Row, codes: DataFrame, corpus: DataFrame): IvfPqIndex =
+      IvfPqIndex(FrozenIndex.booksOf(meta, "codebooks"), FrozenIndex.cellsOf(meta, "centroids"),
+        codes, vectors(corpus), meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"))
+  }
+
+  private def bookUnits(books: IndexedSeq[IndexedSeq[Array[Long]]]): Seq[Seq[Seq[Long]]] =
+    books.map(_.map(_.toSeq))
+
+  /** The (vec_id, embedding) corpus a search re-ranks on. */
+  private def vectors(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), col("embedding"))
 
   /** Zero-scan content stamp of a frame's file-backed source: an MD5
     * over the sorted (path, byte length, modification time) of its
     * input files — FS metadata only, no data read. Served entries
     * fold this into their build-parameter fingerprint so a
     * regenerated corpus with an unchanged ROW COUNT still reads as
-    * index drift and rebuilds instead of serving stale. Non-file
-    * sources (an in-memory frame) stamp as "mem" — for those the
-    * count check is the only corpus guard, as before.
+    * index drift and rebuilds instead of serving stale; what remains
+    * is only an in-place rewrite preserving every file's byte length
+    * AND mtime, which no parquet writer performs. Non-file sources
+    * (an in-memory frame) stamp as "mem" — for those the count check
+    * is the only corpus guard.
     */
   private[graft] def sourceStamp(df: DataFrame): String = {
     val files = df.inputFiles
@@ -2313,82 +1893,6 @@ object Similarity {
         .map("%02x".format(_)).mkString.take(16)
     }
   }
-
-  /** The one meta read every serve pays: the collected meta ROW of a
-    * complete, matching index dir, or None if the dir is missing, a
-    * partial save (meta is written LAST — no `_SUCCESS`, no index),
-    * a pre-version layout, or a fingerprint/corpus-count mismatch.
-    * The row is read with the kind's declared schema (no inference
-    * job), so a column the file lacks reads as null: a meta with a
-    * null column — a missing `version`, another kind's columns — or
-    * with a column of another type reads as absent too — so does an
-    * IVF-PQ meta of the v5 layout, which has no model columns. Callers
-    * thread the returned row into the load so meta.parquet is read
-    * exactly once per serve (it carries the parameters the loaders
-    * need, and IVF-PQ's whole model).
-    */
-  private[graft] def frozenIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String, params: String, corpusCount: Long,
-                                     kind: IndexMeta): Option[org.apache.spark.sql.Row] = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/meta.parquet/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      // a column of another type than the declared one: the parquet
-      // reader refuses the file
-      val rows =
-        try kind.read(spark, dir).collect()
-        catch {
-          case e: org.apache.spark.SparkException
-              if Option(e.getCondition).exists(_.startsWith("FAILED_READ_FILE")) => Array.empty[Row]
-        }
-      rows.headOption.filter { r =>
-        !r.anyNull && r.getAs[Int]("version") == kind.version &&
-          r.getAs[String]("params") == params && r.getAs[Long]("n") == corpusCount
-      }
-    }
-  }
-
-  /** Build-if-absent with an ATOMIC cross-process publish: the build
-    * writes the whole index into a staging dir (`<dir>.tmp-<pid>-…`,
-    * unique per attempt) and the completed tree is RENAMEd into
-    * place — a concurrent second builder can no longer interleave
-    * mode(overwrite) parquet writes into a mixed dir; whichever
-    * rename lands first wins and the loser's staging tree is
-    * deleted (its build was bit-identical anyway — the training is
-    * deterministic). The per-dir lock additionally makes
-    * check-then-build atomic WITHIN this JVM, and the final re-read
-    * returns the meta row so the serve path reads meta.parquet
-    * exactly once.
-    */
-  private[graft] def buildIfAbsent(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                   params: String, corpusCount: Long, kind: IndexMeta)
-                                  (build: String => Unit): org.apache.spark.sql.Row = {
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      frozenIndexMeta(spark, dir, params, corpusCount, kind).getOrElse {
-        val dest = new org.apache.hadoop.fs.Path(dir)
-        val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$dir.tmp-${ProcessHandle.current.pid}-${System.nanoTime}")
-        build(staging.toString)
-        // publish: clear any stale/partial dest (it failed the meta
-        // check above), then rename. A rename race with another
-        // process is settled by one more meta check: if a complete
-        // matching index appeared, serve it and drop our staging.
-        if (fs.exists(dest)) fs.delete(dest, true)
-        if (!fs.rename(staging, dest)) {
-          val theirs = frozenIndexMeta(spark, dir, params, corpusCount, kind)
-          fs.delete(staging, true)
-          theirs.getOrElse(sys.error(
-            s"failed to publish index to $dir and no complete index is present"))
-        } else frozenIndexMeta(spark, dir, params, corpusCount, kind).getOrElse(
-          sys.error(s"index published to $dir failed its own completeness check"))
-      }
-    }
-  }
-  private val servedBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** IVF-PQ composite search — the billion-vector layout: the trained
     * Lloyd coarse quantizer ([[lloyd]], raw-vector integer units)
@@ -2431,30 +1935,7 @@ object Similarity {
       codebooks: IndexedSeq[IndexedSeq[Array[Long]]],
       centroids: Seq[Array[Long]],
       codes: DataFrame, corpus: DataFrame, m: Int,
-      residual: Boolean = false) {
-
-    /** Frees the build's working checkpoint, the leaf `codes` projects
-      * over, once a save has written the codes: nothing reads it after
-      * that, and otherwise its blocks stay until the ContextCleaner
-      * sees the frame collected. The index must not be searched
-      * afterwards. A loaded index reads its codes from disk, so this
-      * is a no-op on it.
-      */
-    private[graft] def releaseBuild(): Unit =
-      codes.queryExecution.analyzed.collectLeaves().foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-  }
-
-  /** Save a freshly built index to `dir`, then release its build
-    * checkpoint — the cold path of every IVF-PQ build-then-save caller.
-    */
-  private[graft] def ivfPqSaveBuilt(index: IvfPqIndex, dir: String, params: String,
-                                    corpusCount: Long): Unit = {
-    ivfPqIndexSave(index, dir, params, corpusCount)
-    index.releaseBuild()
-  }
+      residual: Boolean = false)
 
   /** Train the coarse quantizer + codebooks and encode/label the
     * corpus ONCE — the index-build half of [[annIvfPq]]. Both trainers
@@ -2575,7 +2056,7 @@ object Similarity {
     * residual subtraction, joint PQ codebooks over residuals, codes
     * labeled with their cell. Same math as the composed operator —
     * the split exists so the trained model can freeze to disk
-    * ([[ivfPqIndexSave]]) and serve without retraining.
+    * ([[IvfPqKind]]) and serve without retraining.
     */
   def ivfPqResidualIndexBuild(embeddings: DataFrame, nlist: Int = 8, ivfIters: Int = 3,
                               m: Int = 8, codebookSize: Int = 8,
@@ -2626,12 +2107,8 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("un"), col("cluster").as("qlabel"))
       .withColumn("qres",
         zip_with(col("un"), centroidOf(index.centroids, col("qlabel")), (a, b) => a - b))
-    val qtable = array(books.indices.map(j =>
-      array(books(j).indices.map(c =>
-        graft.plans.IntegerUnits.l2Units(
-          slice(col("qres"), j * dsub + 1, dsub), lit(books(j)(c)))): _*)): _*)
     val qs = qProbe.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      col("qlabel"), qtable.as("qtable"))
+      col("qlabel"), graft.plans.PqQuant.pqQTable(col("qres"), books, dsub).as("qtable"))
     val cands = pqAdcCandidates(
       index.codes.join(broadcast(qs),
         col("label") === col("qlabel") && notSelf(excludeSelf)),
@@ -2643,93 +2120,18 @@ object Similarity {
   }
 
   /** Serve-from-frozen-index residual IVF-PQ — [[annIvfPqResidual]]
-    * through the build-if-absent-on-disk lifecycle (see
-    * [[annPqServed]]). Bit-identical to the direct operator (integer
-    * units survive the parquet round trip), so it shares
-    * ann_ivfpq_residual's oracle.
+    * through [[FrozenIndex.served]]. Bit-identical to the direct
+    * operator (integer units survive the parquet round trip), so it
+    * shares ann_ivfpq_residual's oracle.
     */
   def annIvfPqResidualServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                              nprobe: Int = 1, rerank: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqResidualIndexBuild defaults
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
-      ivfPqSaveBuilt(ivfPqResidualIndexBuild(embeddings), staging, params, n)
-    }
-    val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
+    val index = FrozenIndex.served(IvfPqKind, indexDir, params, embeddings,
+      countRows(embeddings))(ivfPqResidualIndexBuild(embeddings))
     ivfPqResidualSearch(index, defaultQueries(embeddings), k, rerank, nprobe,
       excludeSelf = true)
   }
-
-  /** Persist / load / serve-from a frozen IVF-PQ index — the
-    * [[pqIndexSave]]/[[pqIndexLoad]]/[[annPqServed]] lifecycle for
-    * the composite layout. Two tables: the labeled codes, then the
-    * one-row meta, whose row also carries the model (codebooks and
-    * centroids in 1e-8 units — bounded model parameters, see
-    * [[ivfPqMeta]]). Results are bit-identical to [[annIvfPq]]
-    * (integer units end-to-end), so `ann_ivfpq_served` shares
-    * ann_ivfpq's oracle.
-    */
-  def ivfPqIndexSave(index: IvfPqIndex, dir: String, params: String = "",
-                     corpusCount: Long = -1L, lastBatch: Long = -1L): Unit = {
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes.parquet")
-    // meta LAST: its _SUCCESS is the whole-index commit marker, so
-    // the model it carries commits with the codes. The residual flag
-    // persists WITH the index so a loader can never decode residual
-    // codes through the raw-vector search (or vice versa) — the
-    // layout is self-describing. params/n are the build fingerprint
-    // frozenIndexComplete checks; last_batch is the streaming-ingest
-    // high-water mark ([[ivfPqIndexStreamAppend]]) — delta dirs with
-    // a higher id are UNCOMMITTED and ignored by the loader.
-    ivfPqMeta.write(index.codes.sparkSession, s"$dir/meta.parquet",
-      index.m, index.residual, ivfPqIndexVersion, params, corpusCount, lastBatch,
-      index.codebooks.map(_.map(_.toSeq)), index.centroids.map(_.toSeq))
-  }
-
-  /** The codes paths a loader may read: the base `codes.parquet`
-    * plus every COMMITTED streaming delta (`delta_<id>.parquet` with
-    * id ≤ meta's last_batch). An uncommitted delta — a crashed
-    * [[ivfPqIndexStreamAppend]] that wrote its dir but died before
-    * the meta rewrite — has id > last_batch and is skipped; the
-    * replayed batch overwrites it idempotently. One FS listing per
-    * load, no data read.
-    */
-  private def committedCodesPaths(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, lastBatch: Long): Seq[String] =
-    s"$dir/codes.parquet" +: committedDeltaPaths(spark, dir, lastBatch)
-
-  /** Load a committed IVF-PQ index bound to `corpus`: the model comes
-    * from the meta row (read once; a serve passes the row its
-    * [[frozenIndexMeta]] check already collected, so the load reads
-    * no table), and the codes — the base table plus every committed
-    * streaming delta — are read with their declared schema, so
-    * loading starts no job.
-    */
-  def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     corpus: DataFrame,
-                     preReadMeta: Option[org.apache.spark.sql.Row] = None): IvfPqIndex = {
-    val meta = preReadMeta.getOrElse(
-      ivfPqMeta.read(spark, dir).head())
-    require(meta.getAs[Int]("version") == ivfPqIndexVersion,
-      s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
-    val codebooks = meta.getAs[collection.Seq[collection.Seq[collection.Seq[Long]]]]("codebooks")
-      .map(_.map(_.toArray).toIndexedSeq).toIndexedSeq
-    val centroids = meta.getAs[collection.Seq[collection.Seq[Long]]]("centroids")
-      .map(_.toArray).toSeq
-    val codePaths = committedCodesPaths(spark, dir, meta.getAs[Long]("last_batch"))
-    IvfPqIndex(codebooks, centroids,
-      spark.read.schema(ivfPqCodesSchema(corpus)).parquet(codePaths: _*),
-      corpus.select(col("vec_id"), col("embedding")), meta.getAs[Int]("m"),
-      residual = meta.getAs[Boolean]("residual"))
-  }
-
-  /** The codes table [[ivfPqIndexSave]] writes, as Spark reads it
-    * back: (vec_id, codes, label) rows whose `vec_id` has the type of
-    * `corpus`'s.
-    */
-  private[graft] def ivfPqCodesSchema(corpus: DataFrame): StructType =
-    StructType(Seq(StructField("vec_id", corpus.schema("vec_id").dataType),
-      StructField("codes", ArrayType(IntegerType)), StructField("label", LongType)))
 
   /** Encode new vectors under a FROZEN model — the shared `add()`
     * math for both IVF-PQ layouts: cell assignment with the frozen
@@ -2765,151 +2167,34 @@ object Similarity {
       corpus = index.corpus.unionByName(
         newVectors.select(col("vec_id"), col("embedding"))))
 
-  /** Incremental index append — the lifecycle step between a frozen
-    * index and a full retrain, for BOTH IVF-PQ layouts (the residual
-    * flag rides the on-disk meta): encode ONLY the new vectors with
-    * the frozen model ([[ivfPqEncodeWith]]), append the delta rows
-    * to the codes table, and bump meta `n`. Without this, ANY corpus
-    * growth fails the corpus-count fingerprint and forces a retrain;
-    * with it, growth costs ∝ |delta| — the corpus is never rescanned
-    * and no training runs (measured in SURVEY §6).
-    *
-    * Crash safety: meta is rewritten LAST (the commit marker), so a
-    * killed append leaves either uncommitted task files (ignored by
-    * readers) or committed codes with the OLD `n` — and the next
-    * serve's corpus-count check reads that as absent and rebuilds
-    * rather than serving a torn index. Appends are serialized per
-    * dir within this JVM (same lock as [[buildIfAbsent]]);
-    * cross-process append exclusion is the caller's to arrange, as
-    * with any shared-table append. Returns the new corpus count
-    * recorded in meta.
+  /** Incremental index append — FAISS-style `add()` on disk, the
+    * lifecycle step between a frozen index and a full retrain, for
+    * BOTH IVF-PQ layouts: only the new vectors are encoded, under the
+    * frozen model ([[ivfPqEncodeWith]]), and committed as the next
+    * delta ([[FrozenIndex.append]]; a stream's batch ids are left
+    * alone, so a later ingest still commits its batch 0). Without this, any corpus growth fails
+    * the corpus-count fingerprint and forces a retrain; with it,
+    * growth costs ∝ |delta| — the corpus is never rescanned and no
+    * training runs. A killed append leaves an uncommitted delta that
+    * every reader skips and the next append overwrites. Returns the
+    * new corpus count recorded in meta.
     */
-  def ivfPqIndexAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       newVectors: DataFrame): Long = {
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = ivfPqMeta.read(spark, dir).head()
-      require(meta.getAs[Int]("version") == ivfPqIndexVersion,
-        s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
-      val index = ivfPqIndexLoad(spark, dir,
-        newVectors.select(col("vec_id"), col("embedding")), Some(meta))
-      ivfPqEncodeWith(index, newVectors)
-        .write.mode("append").parquet(s"$dir/codes.parquet")
-      val n = meta.getAs[Long]("n") + countRows(newVectors)
-      rewriteMeta(spark, dir, meta, n, meta.getAs[Long]("last_batch"))
-      n
-    }
-  }
-
-  /** Meta rewrite with the model columns carried through unchanged —
-    * the commit step of every incremental lifecycle op (append /
-    * stream-append / remove / compact): only `n` and `last_batch`
-    * move; m/residual/params/version and the codebooks and centroids
-    * describe the FROZEN model and never change without a retrain.
-    */
-  private def rewriteMeta(spark: org.apache.spark.sql.SparkSession, dir: String,
-                          meta: org.apache.spark.sql.Row, n: Long,
-                          lastBatch: Long): Unit = {
-    stagedMetaWrite(spark, dir) { staging =>
-      ivfPqMeta.write(spark, staging, meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"),
-        ivfPqIndexVersion, meta.getAs[String]("params"), n, lastBatch,
-        meta.getAs[AnyRef]("codebooks"), meta.getAs[AnyRef]("centroids"))
-    }
-  }
-
-  /** Replace `<dir>/meta.parquet` — the commit marker every append
-    * advances — via a staged write + rename, so the window in which a
-    * CROSS-PROCESS reader can catch the meta mid-rewrite shrinks from
-    * an entire Spark write job (the old delete-then-write
-    * mode(overwrite)) to two FS metadata operations. Not fully
-    * atomic on a raw filesystem (rename cannot land on an existing
-    * dir): a reader in those two ops sees a MISSING meta dir and
-    * fails loudly — never a partial one — and same-JVM
-    * appender/loader pairs are already serialized by
-    * [[servedBuildLocks]]. A crashed writer leaves only a one-row
-    * `meta_staging-*` orphan dir that no loader or delta listing ever
-    * matches.
-    */
-  private def stagedMetaWrite(spark: org.apache.spark.sql.SparkSession, dir: String)
-                             (write: String => Unit): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(s"$dir/meta.parquet")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dir/meta_staging-${ProcessHandle.current.pid}-${System.nanoTime}.parquet")
-    write(staging.toString)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(staging, dest))
-      sys.error(s"failed to publish meta to $dir")
-  }
+  def ivfPqIndexAppend(spark: SparkSession, dir: String, newVectors: DataFrame): Long =
+    FrozenIndex.append(spark, IvfPqKind, dir, newVectors, None)(ivfPqEncodeWith(_, newVectors))
 
   /** Streaming `add()` — the exactly-once micro-batch append a
-    * `foreachBatch` ingest loop calls ([[graft.streaming.SimilarityStream.ivfPqIngest]]).
-    * Structured Streaming replays the in-flight batch after a
-    * restart, so unlike [[ivfPqIndexAppend]] (caller-serialized, no
-    * replay) this must be IDEMPOTENT per (dir, batchId):
-    *
-    *   - the delta codes land in their own `delta_<batchId>.parquet`
-    *     dir, written mode(overwrite) — a replay REWRITES the same
-    *     dir instead of double-appending into the shared codes table
-    *     (the failure a plain append suffers: nothing distinguishes
-    *     the two copies afterwards);
-    *   - the meta rewrite (n += |delta|, last_batch = batchId) is the
-    *     commit, written LAST. A crash between delta write and meta
-    *     rewrite leaves id > last_batch, which every loader skips
-    *     ([[committedCodesPaths]]) and the replay overwrites;
-    *   - a replayed ALREADY-COMMITTED batch (id ≤ last_batch) is
-    *     skipped outright.
-    *
-    * Batches must commit in increasing batchId order — exactly what
-    * one streaming query per index dir provides. Returns the
-    * committed corpus count.
+    * `foreachBatch` ingest loop calls ([[graft.streaming.SimilarityStream.ivfPqIngest]]):
+    * the batch is committed as the next delta and `batchId` becomes
+    * the stream's high-water mark ([[FrozenIndex.append]]), so a
+    * replayed in-flight batch overwrites its own uncommitted delta and
+    * a replayed committed batch is skipped. Batches must
+    * commit in increasing batchId order — one streaming query per
+    * index dir. Returns the committed corpus count.
     */
-  def ivfPqIndexStreamAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def ivfPqIndexStreamAppend(spark: SparkSession, dir: String,
                              batch: DataFrame, batchId: Long): Long = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = ivfPqMeta.read(spark, dir).head()
-      require(meta.getAs[Int]("version") == ivfPqIndexVersion,
-        s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
-      val lastBatch = meta.getAs[Long]("last_batch")
-      if (batchId <= lastBatch) meta.getAs[Long]("n") // replay of a committed batch
-      else {
-        val cnt = countRows(batch)
-        // empty batch: advance the high-water mark only — a data-less
-        // delta dir would break every later multi-path codes read
-        // (schema inference over zero files); the committed-paths
-        // listing tolerates a missing id (see semanticCommitDelta).
-        if (cnt > 0) {
-          val index = ivfPqIndexLoad(spark, dir,
-            batch.select(col("vec_id"), col("embedding")), Some(meta))
-          ivfPqEncodeWith(index, batch)
-            .write.mode("overwrite").parquet(s"$dir/delta_$batchId.parquet")
-        }
-        val n = meta.getAs[Long]("n") + cnt
-        rewriteMeta(spark, dir, meta, n, batchId)
-        n
-      }
-    }
-  }
-
-  /** Unconditional staged republish of an index dir — the write
-    * pattern [[ivfPqIndexRemove]] and [[ivfPqIndexCompact]] share:
-    * unlike [[buildIfAbsent]] the destination EXISTS and is complete;
-    * the rewritten tree is staged and RENAMEd over it so readers in
-    * other processes see either the old complete index or the new
-    * one, never a mix.
-    */
-  private def stagedReplace(spark: org.apache.spark.sql.SparkSession, dir: String)
-                           (write: String => Unit): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(dir)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dir.tmp-${ProcessHandle.current.pid}-${System.nanoTime}")
-    write(staging.toString)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(staging, dest))
-      sys.error(s"failed to republish index to $dir")
+    FrozenIndex.append(spark, IvfPqKind, dir, batch, Some(batchId))(ivfPqEncodeWith(_, batch))
   }
 
   /** FAISS-style `remove_ids` — the delete half of the incremental
@@ -2921,59 +2206,30 @@ object Similarity {
     * `removeIds` is a (vec_id) FRAME, not a driver list: at 100 TB a
     * tombstone set is itself a table, and the anti-join keeps the
     * whole rewrite distributed. Physical compaction is inherent
-    * (like FAISS): the codes tables are rewritten once, ∝ corpus —
-    * streaming deltas fold into the new base codes table in the same
-    * pass. Crash-safe via [[stagedReplace]]. The codes are read with
-    * their declared schema, taking `vec_id`'s type from `removeIds`,
-    * so its `vec_id` must have the corpus's type. Returns the new
-    * corpus count recorded in meta.
+    * (like FAISS): the codes are rewritten once, ∝ corpus, with the
+    * committed deltas folded in, and republished through the staged
+    * [[FrozenIndex.republish]]. Returns the new corpus count recorded
+    * in meta.
     */
-  def ivfPqIndexRemove(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       removeIds: DataFrame): Long = {
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = ivfPqMeta.read(spark, dir).head()
-      require(meta.getAs[Int]("version") == ivfPqIndexVersion,
-        s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
-      val paths = committedCodesPaths(spark, dir, meta.getAs[Long]("last_batch"))
-      val kept = spark.read.schema(ivfPqCodesSchema(removeIds)).parquet(paths: _*)
+  def ivfPqIndexRemove(spark: SparkSession, dir: String, removeIds: DataFrame): Long =
+    FrozenIndex.locked(dir) {
+      val meta = FrozenIndex.committedMeta(spark, IvfPqKind, dir)
+      val kept = FrozenIndex.payload(spark, IvfPqKind, dir, meta)
         .join(removeIds.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .honestCheckpoint() // counted once, then written — don't re-run the anti-join
       val n = countRows(kept)
-      stagedReplace(spark, dir) { staging =>
-        kept.write.mode("overwrite").parquet(s"$staging/codes.parquet")
-        rewriteMeta(spark, staging, meta, n, meta.getAs[Long]("last_batch"))
-      }
+      FrozenIndex.republish(spark, IvfPqKind, dir, meta, kept, n)
+      kept.releaseCheckpoint()
       n
     }
-  }
 
-  /** Fold committed streaming deltas into the base codes table — the
-    * maintenance pass that keeps a long-running ingest from
-    * accumulating one parquet dir per micro-batch (each is an FS
-    * listing + scan-relation entry at serve time). Search results are
-    * bit-identical before and after (same rows, one table);
-    * `last_batch` is PRESERVED so a replayed pre-compaction batch
-    * still reads as committed and skips. No-op when nothing is
-    * committed beyond the base. Crash-safe via [[stagedReplace]].
+  /** Fold committed deltas into the base codes table
+    * ([[FrozenIndex.compact]]) — the maintenance pass that keeps a
+    * long-running ingest from accumulating one parquet dir per
+    * micro-batch. Search results are bit-identical before and after.
     */
-  def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val lock = servedBuildLocks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val meta = ivfPqMeta.read(spark, dir).head()
-      require(meta.getAs[Int]("version") == ivfPqIndexVersion,
-        s"index at $dir has layout version ${meta.getAs[Int]("version")}, expected $ivfPqIndexVersion")
-      val paths = committedCodesPaths(spark, dir, meta.getAs[Long]("last_batch"))
-      if (paths.length > 1) {
-        val merged = spark.read.parquet(paths: _*).honestCheckpoint()
-        stagedReplace(spark, dir) { staging =>
-          merged.write.mode("overwrite").parquet(s"$staging/codes.parquet")
-          rewriteMeta(spark, staging, meta, meta.getAs[Long]("n"),
-            meta.getAs[Long]("last_batch"))
-        }
-      }
-    }
-  }
+  def ivfPqIndexCompact(spark: SparkSession, dir: String): Unit =
+    FrozenIndex.compact(spark, IvfPqKind, dir)
 
   /** The frozen lifecycle WITH corpus growth — the sequence
     * [[ivfPqIndexAppend]] exists for, as one oracled query: build
@@ -2990,16 +2246,13 @@ object Similarity {
     */
   def annIvfPqAppended(embeddings: DataFrame, indexDir: String, k: Int = 5,
                        nprobe: Int = 1, rerank: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
     val base = embeddings.filter(col("vec_id") % 10 =!= 0)
     val fresh = embeddings.filter(col("vec_id") % 10 === 0)
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;base=mod10;src=${sourceStamp(embeddings)}"
     val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
-      ivfPqSaveBuilt(ivfPqIndexBuild(base), staging, params, n - countRows(fresh))
-      ivfPqIndexAppend(spark, staging, fresh)
-    }
-    val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
+    val index = FrozenIndex.served(IvfPqKind, indexDir, params, embeddings, n)(
+      ivfPqIndexBuild(base), n - countRows(fresh),
+      ivfPqIndexAppend(embeddings.sparkSession, _, fresh))
     ivfPqSearch(index, defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
@@ -3017,37 +2270,29 @@ object Similarity {
     */
   def annIvfPqRemoved(embeddings: DataFrame, indexDir: String, k: Int = 5,
                       nprobe: Int = 1, rerank: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
     val tombstones = embeddings.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;rm=mod5eq2;src=${sourceStamp(embeddings)}"
     val nAll = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, nAll - countRows(tombstones), ivfPqMeta) { staging =>
-      ivfPqSaveBuilt(ivfPqIndexBuild(embeddings), staging, params, nAll)
-      ivfPqIndexRemove(spark, staging, tombstones)
-    }
-    val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
+    val index = FrozenIndex.served(IvfPqKind, indexDir, params, embeddings,
+        nAll - countRows(tombstones))(
+      ivfPqIndexBuild(embeddings), nAll, ivfPqIndexRemove(embeddings.sparkSession, _, tombstones))
     ivfPqSearch(index, defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
   /** Serve-from-frozen-index batch IVF-PQ — train → save → load →
-    * serve as one oracled query, with the same build-if-absent-on-
-    * disk lifecycle as [[annPqServed]] so a repeated-measure bench
-    * (and any later JVM) reads the steady serve-only cost. A warm
-    * serve builds its frame with two jobs: the corpus count
-    * ([[graft.plans.HonestCheckpoint.countRows]]) and the meta
-    * collect, which validates the index and returns its model; the
-    * load reads no other table. The search's query side is one
-    * projection ([[probedQueries]]).
+    * serve as one oracled query ([[FrozenIndex.served]]), so a
+    * repeated-measure bench (and any later JVM) reads the steady
+    * serve-only cost. A warm serve builds its frame with two jobs:
+    * the corpus count ([[graft.plans.HonestCheckpoint.countRows]])
+    * and the meta collect, which validates the index and returns its
+    * model. The search's query side is one projection
+    * ([[probedQueries]]).
     */
   def annIvfPqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      nprobe: Int = 1, rerank: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
     val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqIndexBuild defaults
-    val n = countRows(embeddings)
-    val meta = buildIfAbsent(spark, indexDir, params, n, ivfPqMeta) { staging =>
-      ivfPqSaveBuilt(ivfPqIndexBuild(embeddings), staging, params, n)
-    }
-    val index = ivfPqIndexLoad(spark, indexDir, embeddings, Some(meta))
+    val index = FrozenIndex.served(IvfPqKind, indexDir, params, embeddings,
+      countRows(embeddings))(ivfPqIndexBuild(embeddings))
     ivfPqSearch(index, defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
@@ -3090,62 +2335,6 @@ object Similarity {
       .select(col("vec_id"), graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
       .honestCheckpoint()
 
-  /** The plan-literal PQ argmin — the independent parity reference
-    * of the fused codebooks-as-data kernel ([[graft.plans.PqEncodeI64]]),
-    * reached only through `wide = false` on [[pqEncode]]. The fused
-    * kernel runs at every shape: this path plans m·cb l2 kernels plus
-    * m O(cb²) when/least argmin folds even at the SMALLEST registered
-    * codebook (m=8, cb=8 → 64 kernels, ~512-ref folds), and when the
-    * trainer re-planned that tree every Lloyd iteration its analyzer
-    * + codegen cost measured 24-26% of whole-query wall (sf0.1
-    * min-of-2 A/B: ann_pq 2.53 → 1.93 s, ann_ivfpq 3.25 → 2.44 s).
-    * Every subspace distance is projected
-    * ONCE (no re-evaluation inside the fold), and the fold picks the
-    * lowest index on ties.
-    */
-  private def pqDistCols(books: IndexedSeq[IndexedSeq[Array[Long]]], u: String, dsub: Int) = {
-    import graft.plans.IntegerUnits.l2Units
-    for (j <- books.indices; c <- books(j).indices)
-      yield l2Units(slice(col(u), j * dsub + 1, dsub), lit(books(j)(c))).as(s"d${j}_$c")
-  }
-  private def pqArgmin(j: Int, codebookSize: Int): Column =
-    (0 until codebookSize - 1).foldRight(lit(codebookSize - 1)) { (c, rest) =>
-      when(col(s"d${j}_$c") <=
-        (c + 1 until codebookSize).map(cc => col(s"d${j}_$cc")).reduce(least(_, _)), c)
-        .otherwise(rest)
-    }
-
-  /** Codebook j AS DATA: one array<struct<cl, cu>> literal in code
-    * order (zipWithIndex) — plan DATA (a single Literal in the
-    * references array), not code, so cb never touches the JIT
-    * budget. m·cb·dsub longs ≤ ~128 KB at (16, 256, 8) — far below
-    * where a broadcast frame would win over a plan literal.
-    */
-  private def pqCbData(books: IndexedSeq[IndexedSeq[Array[Long]]], j: Int): Column =
-    typedlit(books(j).zipWithIndex.map { case (cu, c) => (c.toLong, cu.toSeq) })
-
-  /** argmin code of subspace j against a codebook-as-data array —
-    * ONE l2 kernel evaluated per element inside `transform`, then
-    * the lexicographic (du, cl) sort-head: the same lowest-code
-    * tiebreak as [[pqArgmin]], bit-identical (spec-pinned).
-    *
-    * RETAINED AS THE REFERENCE SEMANTICS ONLY: no operator calls
-    * it. The corpus encode ([[pqEncode]]) runs the fused
-    * [[graft.plans.PqEncodeI64]] codegen kernel and the trainer
-    * ([[pqTrainCodebooks]]) its scan loop — the per-element
-    * `transform` lambda here is interpreted (m·cb dispatches per
-    * row), which priced the 100 TB encode pass — and the query-side
-    * ADC table ([[pqQueries]]) is [[graft.plans.PqQTableI64]]. The
-    * spec pins the encode kernel bit-identical to this path.
-    */
-  private[graft] def pqCodeData(un: Column, books: IndexedSeq[IndexedSeq[Array[Long]]],
-                         j: Int, dsub: Int): Column = {
-    import graft.plans.IntegerUnits.l2Units
-    element_at(array_sort(transform(pqCbData(books, j), e =>
-      struct(l2Units(slice(un, j * dsub + 1, dsub), e.getField("_2")).as("du"),
-        e.getField("_1").as("cl")))), 1).getField("cl").cast("int")
-  }
-
   /** JOINT per-subspace k-means: all m codebooks advance in ONE
     * [[meanStep]] job per iteration (slice j of a row scans codebook
     * j). Training each subspace through [[lloyd]] would cost m×iters
@@ -3183,18 +2372,12 @@ object Similarity {
   /** One corpus scan → (vec_id, codes): per-subspace argmin code
     * through the fused codebooks-as-data kernel
     * ([[graft.plans.PqEncodeI64]] — one compiled m×cb×dsub loop,
-    * plan size O(1) in cb); `wide = false` is the plan-literal parity
-    * reference ([[pqDistCols]]), bit-identical (spec-pinned).
+    * plan size O(1) in cb).
     */
   private[graft] def pqEncode(corpusU: DataFrame, books: IndexedSeq[IndexedSeq[Array[Long]]],
-                       dsub: Int, wide: Boolean = true): DataFrame =
-    if (wide)
-      corpusU.select(col("vec_id"),
-        graft.plans.PqQuant.pqEncodeCodes(col("un"), books, dsub).as("codes"))
-    else corpusU
-      .select(col("vec_id") +: col("un") +: pqDistCols(books, "un", dsub): _*)
-      .select(col("vec_id"),
-        array(books.indices.map(j => pqArgmin(j, books(j).size)): _*).as("codes"))
+                              dsub: Int): DataFrame =
+    corpusU.select(col("vec_id"),
+      graft.plans.PqQuant.pqEncodeCodes(col("un"), books, dsub).as("codes"))
 
   /** Query frame with its ADC table (m×cb longs) and the ORIGINAL
     * embedding `qe` for the exact re-rank. `rot` maps the normalized

@@ -29,6 +29,17 @@ object HonestCheckpoint {
       */
     def releaseCheckpoint(): Unit = ColumnBridge.releaseCheckpoint(df)
 
+    /** Frees the blocks of every checkpoint this frame reads — a
+      * build's working frame once a later checkpoint or a save has
+      * superseded it. Only for frames over the caller's own
+      * checkpoints; the frame must not be read again.
+      */
+    def releaseSources(): Unit =
+      df.queryExecution.analyzed.collectLeaves().foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+
     /** [[honestCheckpoint]] that re-declares the hash partitioning an
       * explicit `repartition(n, cols)` physically gave the frame (AQE
       * checkpoints otherwise surface as Unknown partitioning and

@@ -8,10 +8,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** Fused PQ encode kernel — the wide-codebook (codebooks-as-DATA)
-  * counterpart of the plan-literal `l2Units` kernel grid, for
-  * codebook shapes past the ~64-kernel JIT budget (FAISS-standard
-  * cb = 256 especially).
+/** Fused PQ encode kernel — the codebooks-as-DATA per-subspace
+  * argmin, at every codebook shape (FAISS-standard cb = 256 included;
+  * a plan-literal `l2Units` kernel grid would exceed the ~64-kernel
+  * JIT budget there).
   *
   * The shape problem it solves: past the budget, the previous wide
   * path evaluated the per-subspace argmin as a `transform` +
@@ -26,12 +26,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * zero JIT kernels added per codebook entry) and the m×cb×dsub loop
   * compiles to three nested counted loops inside whole-stage codegen.
   *
-  * Bit-parity (spec-pinned both against the plan-literal kernel grid
-  * and the HOF path it replaces): the distance is [[L2UnitsI64]]'s
-  * exact overflow-checked long Σ(Δ²), and scanning codes ASCENDING
-  * with a strict `<` keeps the FIRST minimal distance — exactly the
-  * `array_sort`-by-(du, cl) lowest-code tiebreak and `pqArgmin`'s
-  * when-chain rule. The interpreted eval runs that search as
+  * Bit-parity (spec-pinned against a driver-side argmin): the
+  * distance is [[L2UnitsI64]]'s exact overflow-checked long Σ(Δ²),
+  * and scanning codes ASCENDING with a strict `<` keeps the FIRST
+  * minimal distance — the lowest-code tiebreak. The interpreted eval
+  * runs that search as
   * [[ArgminL2.scan]] once per subspace, the loop the PQ training fold
   * shares. Overflow: normalized units |u| ≤ 1e8, centroids
   * are means of units, so per-term Δ² ≤ 4e16 and a dsub ≤ 64 sum

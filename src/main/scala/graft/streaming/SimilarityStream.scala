@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Similarity
+import graft.operators.{FrozenIndex, Similarity}
 import graft.plans.HonestCheckpoint.countRows
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -59,14 +59,9 @@ object SimilarityStream {
   def ivfPqResidualServe(queries: DataFrame, corpus: DataFrame, indexDir: String,
                          k: Int = 5, nprobe: Int = 1, rerank: Int = 50)
                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = corpus.sparkSession
     val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${Similarity.sourceStamp(corpus)}" // ivfPqResidualIndexBuild defaults
-    val n = countRows(corpus)
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.ivfPqMeta) { staging =>
-      Similarity.ivfPqSaveBuilt(Similarity.ivfPqResidualIndexBuild(corpus), staging,
-        params, n)
-    }
-    val index = Similarity.ivfPqIndexLoad(spark, indexDir, corpus, Some(meta))
+    val index = FrozenIndex.served(Similarity.IvfPqKind, indexDir, params, corpus,
+      countRows(corpus))(Similarity.ivfPqResidualIndexBuild(corpus))
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -170,7 +165,7 @@ object SimilarityStream {
     * serving process, reuses the frozen model — never retrains), a
     * missing/drifted dir triggers one offline build+save first, and
     * the loaded assignment table is CLUSTER-PARTITIONED on disk
-    * ([[Similarity.semanticIndexSave]]) so each micro-batch's probe
+    * ([[Similarity.SemanticKind]]) so each micro-batch's probe
     * join reads toward only its cells' partitions rather than the
     * checkpoint's full scan.
     */
@@ -179,14 +174,9 @@ object SimilarityStream {
                                  threshold: Double = 0.45,
                                  excludeSelf: Boolean = false)
                                 (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = corpus.sparkSession
     val params = s"sem;k=$k;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val n = countRows(corpus)
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.semanticMeta) { staging =>
-      Similarity.semanticIndexSave(Similarity.semanticIndexBuild(corpus, k, iters),
-        staging, params, n)
-    }
-    val index = Similarity.semanticIndexLoad(spark, indexDir, Some(meta))
+    val index = FrozenIndex.served(Similarity.SemanticKind, indexDir, params, corpus,
+      countRows(corpus))(Similarity.semanticIndexBuild(corpus, k, iters))
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -208,14 +198,9 @@ object SimilarityStream {
                                      iters: Int = 3, threshold: Double = 0.45,
                                      excludeSelf: Boolean = false)
                                     (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = corpus.sparkSession
     val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val n = countRows(corpus)
-    val meta = Similarity.buildIfAbsent(spark, indexDir, params, n, Similarity.hierMeta) { staging =>
-      Similarity.semanticIndexSaveHier(
-        Similarity.semanticIndexBuildHier(corpus, k1, k2, iters), staging, params, n)
-    }
-    val index = Similarity.semanticIndexLoadHier(spark, indexDir, Some(meta))
+    val index = FrozenIndex.served(Similarity.HierKind, indexDir, params, corpus,
+      countRows(corpus))(Similarity.semanticIndexBuildHier(corpus, k1, k2, iters))
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -74,6 +74,28 @@ class MinHashKernelSpec extends SparkSpec {
     intercept[IllegalArgumentException](shinglesOf(col("toks"), 0))
   }
 
+  test("tokens equals the filter-lambda split on the sf0.01 documents and whitespace edge cases") {
+    // the interpreted lambda form `tokens` had before array_remove
+    def lambdaTokens(text: Column): Column =
+      filter(split(trim(text), "\\s+"), x => length(x) > 0)
+    def both(df: DataFrame): Seq[(Seq[String], Seq[String])] =
+      df.select(tokens(col("text")), lambdaTokens(col("text"))).collect()
+        .map(r => (Option(r.getSeq[String](0)).orNull, Option(r.getSeq[String](1)).orNull)).toSeq
+    val docs = both(documents)
+    assert(docs.nonEmpty)
+    docs.foreach { case (got, want) => assert(got === want) }
+    val cases = Seq(Some(""), Some("   "), Some("\t\n "), Some("\tlead tab"),
+      Some("\nlead newline"), Some("a \t\n b\r\n\tc  \u000B d"), Some(" trailing \t"), None)
+      .toDF("text")
+    val edge = both(cases)
+    assert(edge.size === 8)
+    edge.foreach { case (got, want) => assert(got === want) }
+    assert(edge.map(_._1) === Seq(Seq(), Seq(), Seq(), Seq("lead", "tab"),
+      Seq("lead", "newline"), Seq("a", "b", "c", "d"), Seq("trailing"), null))
+    def typeOf(c: Column) = documents.select(c).schema.map(f => (f.dataType, f.nullable))
+    assert(typeOf(tokens(col("text"))) === typeOf(lambdaTokens(col("text"))))
+  }
+
   test("the MinHash kernel equals the per-document min(xxhash64) aggregate") {
     val sets = documents.select(col("doc_id"), col("text"),
       array_distinct(shingles(col("text"), 3)).as("sh"))

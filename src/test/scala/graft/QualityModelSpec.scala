@@ -165,7 +165,7 @@ class QualityModelSpec extends SparkSpec {
     // existing model works, and a missing/incomplete model dir fails
     // LOUDLY on the _SUCCESS commit-marker check (advisor round 14)
     val residue = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .filter(p => p.getFileName.toString.startsWith("model.parquet.staging"))
+      .filter(p => p.getFileName.toString.startsWith("model.parquet.tmp-"))
       .count()
     assert(residue === 0L, "staging dirs must not survive a publish")
     QualityModel.save(spark, beta, dir, params = "planted;alpha=1.0")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{FrozenIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -509,8 +509,8 @@ class SimilaritySpec extends SparkSpec {
   test("PQ index round-trips through parquet bit-exactly (save → load → serve)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_rt").toString
     val built = Similarity.pqIndexBuild(embeddings)
-    Similarity.pqIndexSave(built, dir)
-    val loaded = Similarity.pqIndexLoad(spark, dir, embeddings)
+    FrozenIndex.save(Similarity.PqKind, built, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.PqKind, dir, embeddings)
     assert(loaded.m === built.m)
     assert(loaded.codebooks.map(_.map(_.toSeq)) === built.codebooks.map(_.map(_.toSeq)),
       "codebook units must survive the parquet round trip exactly")
@@ -553,7 +553,7 @@ class SimilaritySpec extends SparkSpec {
       "a complete frozen OPQ index must never be silently rebuilt")
     // the persisted rotation model round-trips exactly
     val built = Similarity.opqIndexBuild(embeddings)
-    val loaded = Similarity.opqIndexLoad(spark, dir, embeddings)
+    val loaded = FrozenIndex.load(spark, Similarity.OpqKind, dir, embeddings)
     assert(loaded.signs === built.signs)
     assert(loaded.perms.map(p => (p._1.toSeq, p._2.toSeq)) ===
       built.perms.map(p => (p._1.toSeq, p._2.toSeq)))
@@ -591,8 +591,8 @@ class SimilaritySpec extends SparkSpec {
   test("IVF-PQ index round-trips through parquet bit-exactly and serves identically") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_rt").toString
     val built = Similarity.ivfPqIndexBuild(embeddings)
-    Similarity.ivfPqIndexSave(built, dir)
-    val loaded = Similarity.ivfPqIndexLoad(spark, dir, embeddings)
+    FrozenIndex.save(Similarity.IvfPqKind, built, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)
     assert(loaded.m === built.m)
     assert(loaded.codebooks.map(_.map(_.toSeq)) === built.codebooks.map(_.map(_.toSeq)))
     assert(loaded.centroids.map(_.toSeq) === built.centroids.map(_.toSeq),
@@ -616,8 +616,8 @@ class SimilaritySpec extends SparkSpec {
   test("residual IVF-PQ index round-trips through parquet bit-exactly and serves identically") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_res_rt").toString
     val built = Similarity.ivfPqResidualIndexBuild(embeddings)
-    Similarity.ivfPqIndexSave(built, dir)
-    val loaded = Similarity.ivfPqIndexLoad(spark, dir, embeddings)
+    FrozenIndex.save(Similarity.IvfPqKind, built, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)
     assert(loaded.residual, "the residual flag must persist with the index")
     assert(loaded.codebooks.map(_.map(_.toSeq)) === built.codebooks.map(_.map(_.toSeq)),
       "residual codebook units must survive the parquet round trip exactly")
@@ -714,14 +714,14 @@ class SimilaritySpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_append_$residual").toString
       val params = s"append-spec;res=$residual"
       val nBase = base.count()
-      Similarity.ivfPqIndexSave(built, dir, params, nBase)
+      FrozenIndex.save(Similarity.IvfPqKind, built, dir, params, nBase)
       val nAfter = Similarity.ivfPqIndexAppend(spark, dir, fresh)
       assert(nAfter === nBase + fresh.count(), "meta n must grow by exactly |delta|")
-      assert(Similarity.frozenIndexComplete(spark, dir, params, nAfter, Similarity.ivfPqMeta),
+      assert(FrozenIndex.committed(spark, Similarity.IvfPqKind, dir, params, nAfter).isDefined,
         "an appended index must read as complete at the GROWN corpus count")
-      assert(!Similarity.frozenIndexComplete(spark, dir, params, nBase, Similarity.ivfPqMeta),
+      assert(FrozenIndex.committed(spark, Similarity.IvfPqKind, dir, params, nBase).isEmpty,
         "an appended index must no longer match the pre-append count")
-      val loaded = Similarity.ivfPqIndexLoad(spark, dir, embeddings)
+      val loaded = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)
       assert(search(loaded) === want,
         s"append-then-search must be bit-identical to the in-memory extension (residual=$residual)")
       // appended neighbors are actually reachable: some result row
@@ -777,18 +777,18 @@ class SimilaritySpec extends SparkSpec {
           .collect().map(_.toString).toSeq
       val dir = java.nio.file.Files.createTempDirectory(s"graft_stream_append_$residual").toString
       val nBase = base.count()
-      Similarity.ivfPqIndexSave(built, dir, s"stream-spec;res=$residual", nBase)
+      FrozenIndex.save(Similarity.IvfPqKind, built, dir, s"stream-spec;res=$residual", nBase)
 
       val n1 = Similarity.ivfPqIndexStreamAppend(spark, dir, b1, batchId = 0)
       assert(n1 === nBase + b1.count())
       val wantAfter1 = search(Similarity.ivfPqIndexExtended(built, b1))
-      assert(search(Similarity.ivfPqIndexLoad(spark, dir, embeddings)) === wantAfter1)
+      assert(search(FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)) === wantAfter1)
 
       // an UNCOMMITTED delta (crashed writer: dir present, meta not
       // bumped) must be invisible to every loader
       b1.limit(3).select(col("vec_id"), col("embedding")).write
         .mode("overwrite").parquet(s"$dir/delta_1.parquet")
-      assert(search(Similarity.ivfPqIndexLoad(spark, dir, embeddings)) === wantAfter1,
+      assert(search(FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)) === wantAfter1,
         s"a delta dir beyond meta's last_batch must be ignored (residual=$residual)")
 
       // the replayed batch OVERWRITES the torn delta and commits
@@ -796,14 +796,14 @@ class SimilaritySpec extends SparkSpec {
       assert(n2 === n1 + b2.count())
       val wantAfter2 = search(Similarity.ivfPqIndexExtended(
         Similarity.ivfPqIndexExtended(built, b1), b2))
-      assert(search(Similarity.ivfPqIndexLoad(spark, dir, embeddings)) === wantAfter2,
+      assert(search(FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)) === wantAfter2,
         s"stream-append must be bit-identical to the in-memory extension (residual=$residual)")
 
       // a replay of an already-committed batch is a no-op
       val nReplay = Similarity.ivfPqIndexStreamAppend(spark, dir, b1, batchId = 0)
       assert(nReplay === n2, "replaying a committed batch must not change n")
       assert(deltaDirs(dir).size === 2)
-      assert(search(Similarity.ivfPqIndexLoad(spark, dir, embeddings)) === wantAfter2,
+      assert(search(FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)) === wantAfter2,
         s"a replayed committed batch must change nothing (residual=$residual)")
     }
   }
@@ -815,11 +815,11 @@ class SimilaritySpec extends SparkSpec {
     val queries = embeddings.filter(col("vec_id") % 100 === 0)
     val built = Similarity.ivfPqIndexBuild(base)
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    Similarity.ivfPqIndexSave(built, dir, "compact-spec", base.count())
+    FrozenIndex.save(Similarity.IvfPqKind, built, dir, "compact-spec", base.count())
     Similarity.ivfPqIndexStreamAppend(spark, dir, b1, batchId = 0)
     val n = Similarity.ivfPqIndexStreamAppend(spark, dir, b2, batchId = 1)
     def search(): Seq[String] =
-      Similarity.ivfPqSearch(Similarity.ivfPqIndexLoad(spark, dir, embeddings),
+      Similarity.ivfPqSearch(FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings),
         queries, nprobe = 2, excludeSelf = true).collect().map(_.toString).toSeq
     val want = search()
     Similarity.ivfPqIndexCompact(spark, dir)
@@ -848,7 +848,7 @@ class SimilaritySpec extends SparkSpec {
         else Similarity.ivfPqSearch(ix, queries, nprobe = 2, excludeSelf = true)
       val dir = java.nio.file.Files.createTempDirectory(s"graft_remove_$residual").toString
       val nAll = embeddings.count()
-      Similarity.ivfPqIndexSave(built, dir, s"remove-spec;res=$residual", nAll)
+      FrozenIndex.save(Similarity.IvfPqKind, built, dir, s"remove-spec;res=$residual", nAll)
       val tombstones = embeddings.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
       val nKept = Similarity.ivfPqIndexRemove(spark, dir, tombstones)
       assert(nKept === nAll - tombstones.count(), "meta n must shrink by exactly |tombstones|")
@@ -857,7 +857,7 @@ class SimilaritySpec extends SparkSpec {
           codes = built.codes.join(tombstones, Seq("vec_id"), "left_anti")))
         .collect().map(_.toString).toSeq
       assert(want.nonEmpty)
-      val loaded = Similarity.ivfPqIndexLoad(spark, dir, embeddings)
+      val loaded = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, embeddings)
       val got = search(loaded).collect()
       assert(got.map(_.toString).toSeq === want,
         s"remove-then-search must equal the filtered-codes reference (residual=$residual)")
@@ -961,8 +961,8 @@ class SimilaritySpec extends SparkSpec {
     // serve loads without rebuilding
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfsq_served").toString
     val built = Similarity.ivfSqIndexBuild(embeddings, nlist = 2)
-    Similarity.ivfSqIndexSave(built, dir)
-    val loaded = Similarity.ivfSqIndexLoad(spark, dir, embeddings)
+    FrozenIndex.save(Similarity.IvfSqKind, built, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.IvfSqKind, dir, embeddings)
     assert(loaded.mins.toSeq === built.mins.toSeq && loaded.spans.toSeq === built.spans.toSeq,
       "bounds must survive the parquet round trip exactly")
     assert(loaded.centroids.map(_.toSeq) === built.centroids.map(_.toSeq),
@@ -987,8 +987,8 @@ class SimilaritySpec extends SparkSpec {
   test("semantic index round-trips through cluster-partitioned parquet; served pairs equal flat") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_rt").toString
     val built = Similarity.semanticIndexBuild(embeddings, k = 4)
-    Similarity.semanticIndexSave(built, dir)
-    val loaded = Similarity.semanticIndexLoad(spark, dir)
+    FrozenIndex.save(Similarity.SemanticKind, built, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.SemanticKind, dir, spark.emptyDataFrame)
     assert(loaded.centroids.map(_.toSeq) === built.centroids.map(_.toSeq),
       "centroid units must survive the parquet round trip exactly")
     assert(loaded.assigned.select(col("vec_id"), col("cluster")).collect()
@@ -1038,7 +1038,7 @@ class SimilaritySpec extends SparkSpec {
     val batch = embeddings.filter(col("vec_id") % 50 === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
     val probed = Similarity.semanticProbeHier(built, batch).collect()
-    val loaded = Similarity.semanticIndexLoadHier(spark, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.HierKind, dir, spark.emptyDataFrame)
     assert(Similarity.semanticProbeHier(loaded, batch).collect().map(_.toString).toSeq
       === probed.map(_.toString).toSeq, "probing the loaded hier index must be bit-identical")
     val clusters = built.assigned.select(col("vec_id"), col("cluster")).collect()
@@ -1061,19 +1061,18 @@ class SimilaritySpec extends SparkSpec {
     // MAP_KEY_DOES_NOT_EXIST for a batch vector landing in that cell;
     // the probe must instead DROP the row (the old broadcast-join
     // semantics — a dead cell has no candidates anyway). Craft such an
-    // index through the save layout + loader.
+    // index in the saved layout and load it.
     val dir = java.nio.file.Files.createTempDirectory("graft_semhier_dead").toString
     val u = 100000000L // 1e8: quantized units of a unit basis vector
-    Seq((1L, Seq(1.0f, 0f, 0f, 0f), 0L)).toDF("vec_id", "embedding", "cluster")
-      .write.partitionBy("cluster").parquet(s"$dir/assigned.parquet")
-    Seq((0, Seq(u, 0L, 0L, 0L)), (1, Seq(0L, u, 0L, 0L))).toDF("cell", "units")
-      .write.parquet(s"$dir/centroids.parquet")
+    val assigned = Seq((1L, Seq(1.0f, 0f, 0f, 0f), 0L)).toDF("vec_id", "embedding", "cluster")
+    assigned.write.partitionBy("cluster").parquet(s"$dir/assigned.parquet")
+    val kind = Similarity.HierKind
     // fine centroids ONLY for coarse cell 0 — cell 1 is dead
-    Seq((0L, 0L, Seq(u, 0L, 0L, 0L))).toDF("coarse", "fine", "cu")
-      .write.parquet(s"$dir/fine_centroids.parquet")
-    Seq((Similarity.hierIndexVersion, 2, "", 1L)).toDF("version", "k2", "params", "n")
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(kind.version, "", 1L, -1L,
+        0L, assigned.schema.json, 2, Seq(Seq(u, 0L, 0L, 0L), Seq(0L, u, 0L, 0L)),
+        Seq(Seq(Seq(u, 0L, 0L, 0L)), Seq()))), kind.schema)
       .write.parquet(s"$dir/meta.parquet")
-    val index = Similarity.semanticIndexLoadHier(spark, dir)
+    val index = FrozenIndex.load(spark, Similarity.HierKind, dir, spark.emptyDataFrame)
     val batch = Seq(
       (100L, Seq(0f, 1f, 0f, 0f)),  // nearest coarse cell 1: DEAD
       (101L, Seq(1f, 0f, 0f, 0f)))  // cell 0: matches corpus vec 1
@@ -1089,7 +1088,7 @@ class SimilaritySpec extends SparkSpec {
     val base = embeddings.filter(col("vec_id") % 10 =!= 0)
     val fresh = embeddings.filter(col("vec_id") % 10 === 0)
     val params = "sem;k=4;it=3;spec"
-    Similarity.semanticIndexSave(Similarity.semanticIndexBuild(base, k = 4), dir,
+    FrozenIndex.save(Similarity.SemanticKind, Similarity.semanticIndexBuild(base, k = 4), dir,
       params, base.count())
     def assignedFiles: Seq[(String, java.nio.file.attribute.FileTime)] = {
       import scala.jdk.CollectionConverters._
@@ -1112,7 +1111,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // appended rows carry the FROZEN-model assignment: a re-keyed
     // copy of each fresh vector probes into exactly that cluster
-    val loaded = Similarity.semanticIndexLoad(spark, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.SemanticKind, dir, spark.emptyDataFrame)
     val appended = loaded.assigned.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1155,19 +1154,19 @@ class SimilaritySpec extends SparkSpec {
     val built = Similarity.semanticIndexBuild(base, k = 4)
     val nBase = base.count()
     def assignedSet(dir: String): Set[(Long, Long)] =
-      Similarity.semanticIndexLoad(spark, dir).assigned
+      FrozenIndex.load(spark, Similarity.SemanticKind, dir, spark.emptyDataFrame).assigned
         .select(col("vec_id"), col("cluster")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // reference: the caller-serialized double-append (itself pinned to
     // the frozen-model Lloyd chain by the dedup_semantic_appended oracle)
     val refDir = java.nio.file.Files.createTempDirectory("graft_sem_stream_ref").toString
-    Similarity.semanticIndexSave(built, refDir, "sem-stream-spec", nBase)
+    FrozenIndex.save(Similarity.SemanticKind, built, refDir, "sem-stream-spec", nBase)
     Similarity.semanticIndexAppend(spark, refDir, b1)
     Similarity.semanticIndexAppend(spark, refDir, b2)
     val want = assignedSet(refDir)
 
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_stream").toString
-    Similarity.semanticIndexSave(built, dir, "sem-stream-spec", nBase)
+    FrozenIndex.save(Similarity.SemanticKind, built, dir, "sem-stream-spec", nBase)
     val n1 = Similarity.semanticIndexStreamAppend(spark, dir, b1, batchId = 0)
     assert(n1 === nBase + b1.count())
     // an UNCOMMITTED delta (crashed writer: dir present, meta not
@@ -1188,7 +1187,7 @@ class SimilaritySpec extends SparkSpec {
     assert(assignedSet(dir) === want, "a replayed committed batch must change nothing")
     // appended rows carry the frozen-model assignment: a re-keyed twin
     // probes into exactly its twin's committed cell
-    val loaded = Similarity.semanticIndexLoad(spark, dir)
+    val loaded = FrozenIndex.load(spark, Similarity.SemanticKind, dir, spark.emptyDataFrame)
     val cells = loaded.assigned.filter(col("vec_id") % 10 <= 1)
       .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1215,7 +1214,7 @@ class SimilaritySpec extends SparkSpec {
     assert(none.count() === 0L)
     // semantic index
     val sDir = java.nio.file.Files.createTempDirectory("graft_sem_empty").toString
-    Similarity.semanticIndexSave(Similarity.semanticIndexBuild(base, k = 4),
+    FrozenIndex.save(Similarity.SemanticKind, Similarity.semanticIndexBuild(base, k = 4),
       sDir, "empty-spec", base.count())
     val n0 = Similarity.semanticIndexStreamAppend(spark, sDir, none, batchId = 0)
     assert(n0 === base.count(), "empty batch must not change n")
@@ -1224,16 +1223,16 @@ class SimilaritySpec extends SparkSpec {
       "batch 0 must read as committed after the empty commit")
     val n1 = Similarity.semanticIndexStreamAppend(spark, sDir, b1, batchId = 1)
     assert(n1 === base.count() + b1.count())
-    assert(Similarity.semanticIndexLoad(spark, sDir).assigned.count() === n1,
+    assert(FrozenIndex.load(spark, Similarity.SemanticKind, sDir, spark.emptyDataFrame).assigned.count() === n1,
       "the loader must read base + the real delta cleanly")
     // IVF-PQ index
     val pDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_empty").toString
-    Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(base), pDir, "empty-spec", base.count())
+    FrozenIndex.save(Similarity.IvfPqKind, Similarity.ivfPqIndexBuild(base), pDir, "empty-spec", base.count())
     val m0 = Similarity.ivfPqIndexStreamAppend(spark, pDir, none, batchId = 0)
     assert(m0 === base.count() && deltaDirs(pDir).isEmpty)
     val m1 = Similarity.ivfPqIndexStreamAppend(spark, pDir, b1, batchId = 1)
     assert(m1 === base.count() + b1.count())
-    assert(Similarity.ivfPqIndexLoad(spark, pDir, embeddings).codes.count() === m1,
+    assert(FrozenIndex.load(spark, Similarity.IvfPqKind, pDir, embeddings).codes.count() === m1,
       "the codes loader must read base + the real delta cleanly")
   }
 
@@ -1242,12 +1241,12 @@ class SimilaritySpec extends SparkSpec {
     val b1 = embeddings.filter(col("vec_id") % 10 === 0)
     val b2 = embeddings.filter(col("vec_id") % 10 === 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_compact").toString
-    Similarity.semanticIndexSave(Similarity.semanticIndexBuild(base, k = 4),
+    FrozenIndex.save(Similarity.SemanticKind, Similarity.semanticIndexBuild(base, k = 4),
       dir, "sem-compact-spec", base.count())
     Similarity.semanticIndexStreamAppend(spark, dir, b1, batchId = 0)
     val n = Similarity.semanticIndexStreamAppend(spark, dir, b2, batchId = 1)
     def assignedSet(): Set[(Long, Long, Seq[Float])] =
-      Similarity.semanticIndexLoad(spark, dir).assigned.collect()
+      FrozenIndex.load(spark, Similarity.SemanticKind, dir, spark.emptyDataFrame).assigned.collect()
         .map(r => (r.getLong(0), r.getAs[Long]("cluster"), r.getSeq[Float](1))).toSet
     val want = assignedSet()
     Similarity.semanticIndexCompact(spark, dir)
@@ -1284,7 +1283,7 @@ class SimilaritySpec extends SparkSpec {
     val wide = Similarity.semanticIndexBuild(base, k = 128)
     assert(wide.centroids.size === 128)
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_wide_app").toString
-    Similarity.semanticIndexSave(wide, dir, "sem-wide-app-spec", base.count())
+    FrozenIndex.save(Similarity.SemanticKind, wide, dir, "sem-wide-app-spec", base.count())
     val n1 = Similarity.semanticIndexAppend(spark, dir, f1)
     assert(n1 === base.count() + f1.count())
     val n2 = Similarity.semanticIndexStreamAppend(spark, dir, f2, batchId = 1)
@@ -1303,7 +1302,7 @@ class SimilaritySpec extends SparkSpec {
         (r.getLong(0), best._2)
       }.toMap
     def appendedClusters(): Map[Long, Long] =
-      Similarity.semanticIndexLoad(spark, dir).assigned
+      FrozenIndex.load(spark, Similarity.SemanticKind, dir, spark.emptyDataFrame).assigned
         .filter(col("vec_id") % 10 === 0)
         .select(col("vec_id"), col("cluster")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1398,77 +1397,6 @@ class SimilaritySpec extends SparkSpec {
     emptyWith(Similarity.annIvfPqResidualServed(none, tempDir("graft_ivfpqres_none")), ivf: _*)
   }
 
-  test("every frozen index kind's declared meta schema is the schema its saver writes") {
-    val base = embeddings.filter(col("vec_id") % 5 === 0)
-    def saved(save: String => Unit): String = {
-      val dir = tempDir("graft_meta_schema")
-      save(dir)
-      dir
-    }
-    val kinds = Seq(
-      Similarity.semanticMeta ->
-        saved(Similarity.semanticIndexSave(Similarity.semanticIndexBuild(base, k = 4), _)),
-      Similarity.hierMeta ->
-        saved(Similarity.semanticIndexSaveHier(Similarity.semanticIndexBuildHier(base), _)),
-      Similarity.pqMeta -> saved(Similarity.pqIndexSave(Similarity.pqIndexBuild(base), _)),
-      Similarity.opqMeta -> saved(Similarity.opqIndexSave(Similarity.opqIndexBuild(base), _)),
-      Similarity.sqMeta -> saved(Similarity.sqIndexSave(Similarity.sqIndexBuild(base), _)),
-      Similarity.ivfSqMeta -> saved(Similarity.ivfSqIndexSave(Similarity.ivfSqIndexBuild(base), _)),
-      Similarity.bqMeta -> saved(Similarity.bqIndexSave(Similarity.bqIndexBuild(base), _)),
-      Similarity.ivfBqMeta -> saved(Similarity.ivfBqIndexSave(Similarity.ivfBqIndexBuild(base), _)),
-      Similarity.ivfPqMeta -> saved(Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(base), _)))
-    // the payload tables, which the loaders bind to the corpus
-    val payloads = Set("meta.parquet", "codes.parquet", "sigs.parquet", "assigned.parquet")
-    for ((kind, dir) <- kinds) {
-      assert(spark.read.parquet(s"$dir/meta.parquet").schema === kind.schema, dir)
-      // every other table the saver writes is a model table with a declared schema
-      val models = new java.io.File(dir).list().filter(_.endsWith(".parquet")).toSet -- payloads
-      assert(models === kind.models.keySet, dir)
-      for ((table, schema) <- kind.models)
-        assert(spark.read.parquet(s"$dir/$table").schema === schema, s"$dir/$table")
-    }
-    // IVF-PQ's model rides its meta row; its codes are read with a declared schema too
-    val ivfPq = kinds.last._2
-    assert(Similarity.ivfPqMeta.models.isEmpty)
-    assert(spark.read.parquet(s"$ivfPq/codes.parquet").schema === Similarity.ivfPqCodesSchema(base))
-  }
-
-  test("a meta without version, with another kind's columns, mistyped or uncommitted reads as absent") {
-    import spark.implicits._
-    def metaDir(meta: DataFrame): String = {
-      val dir = tempDir("graft_meta_absent")
-      meta.coalesce(1).write.parquet(s"$dir/meta.parquet")
-      dir
-    }
-    def present(dir: String): Boolean =
-      Similarity.frozenIndexComplete(spark, dir, "p", 10L, Similarity.ivfPqMeta)
-    val v = Similarity.ivfPqIndexVersion
-    // a one-cell, one-code model: codebooks [m][cb][dsub], centroids [cell][dim]
-    val (books, cents) = (Seq(Seq(Seq(1L, 2L))), Seq(Seq(3L, 4L)))
-    val good = metaDir(Seq((8, false, v, "p", 10L, -1L, books, cents))
-      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))
-    assert(present(good), "a matching meta must read as present")
-    assert(!present(metaDir(Seq((8, false, "p", 10L, -1L, books, cents))
-      .toDF("m", "residual", "params", "n", "last_batch", "codebooks", "centroids"))),
-      "no version column")
-    assert(!present(metaDir(Seq((8, false, Option.empty[Int], "p", 10L, -1L, books, cents))
-      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))),
-      "null version")
-    assert(!present(metaDir(Seq((v, "p", 10L, -1L))
-      .toDF("version", "params", "n", "last_batch"))), "the semantic kind's columns")
-    assert(!present(metaDir(Seq((8, false, v.toString, "p", 10L, -1L, books, cents))
-      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))),
-      "string version")
-    assert(!present(metaDir(Seq((8, false, v.toLong, "p", 10L, -1L, books, cents))
-      .toDF("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"))),
-      "long version")
-    assert(!present(metaDir(Seq((8, false, v, "p", 10L, -1L))
-      .toDF("m", "residual", "version", "params", "n", "last_batch"))),
-      "no model columns (the v5 layout's meta)")
-    assert(new java.io.File(s"$good/meta.parquet/_SUCCESS").delete())
-    assert(!present(good), "a meta without _SUCCESS is an uncommitted save")
-  }
-
   private def noopWrite(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** Jobs of a warm serve from `dir`: (building the frame, its `noop` write). */
@@ -1493,27 +1421,179 @@ class SimilaritySpec extends SparkSpec {
     assert(write <= 6, s"the served search's write started $write jobs")
   }
 
-  test("IVF-PQ build-then-save and a cold serve leave no build checkpoint blocks") {
-    def stored(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    // each build checkpoints its working frame ((vec_id, u, un), or the
-    // residual rows) and its codes project over it; once the save has
-    // written the codes nothing reads it. The index stays reachable
-    // here, so only the release (not the ContextCleaner) can free it.
-    for (index <- Seq(Similarity.ivfPqIndexBuild(embeddings),
-        Similarity.ivfPqResidualIndexBuild(embeddings))) {
-      val build = index.codes.queryExecution.analyzed.collectLeaves().collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.toSet
-      assert(build.nonEmpty && build.subsetOf(stored()))
-      Similarity.ivfPqSaveBuilt(index, tempDir("graft_ivfpq_release"), "release", 1L)
-      assert((build & stored()).isEmpty, s"build checkpoint $build still holds blocks")
+  /** One frozen-index kind under test: its build and served entry
+    * over a corpus, and the layout of its previous version (the meta
+    * columns it kept and the model tables it wrote beside them).
+    */
+  private case class KindCase[I](name: String, kind: FrozenIndex.Kind[I],
+                                 build: DataFrame => I, serve: (DataFrame, String) => DataFrame,
+                                 oldVersion: Int, oldMeta: Seq[String], oldModels: Seq[String])
+
+  // the semantic entries pass `blocks` so their pair verify sizes no
+  // block grid: the served frame's jobs are then the lifecycle's alone
+  private lazy val kindCases: Seq[KindCase[_]] = Seq(
+    KindCase("semantic", Similarity.SemanticKind, Similarity.semanticIndexBuild(_, k = 4),
+      Similarity.dedupSemanticServed(_, _, k = 4, blocks = 1), 5,
+      Seq("version", "params", "n", "last_batch"), Seq("centroids.parquet")),
+    KindCase("hier", Similarity.HierKind, Similarity.semanticIndexBuildHier(_),
+      Similarity.dedupSemanticHierServed(_, _, blocks = 1), 5,
+      Seq("version", "k2", "params", "n"), Seq("centroids.parquet", "fine_centroids.parquet")),
+    KindCase("pq", Similarity.PqKind, Similarity.pqIndexBuild(_), Similarity.annPqServed(_, _), 5,
+      Seq("m", "version", "params", "n"), Seq("codebooks.parquet")),
+    KindCase("opq", Similarity.OpqKind, Similarity.opqIndexBuild(_), Similarity.annOpqServed(_, _), 1,
+      Seq("m", "version", "params", "n"), Seq("codebooks.parquet", "rotation.parquet")),
+    KindCase("sq", Similarity.SqKind, Similarity.sqIndexBuild, Similarity.annSqServed(_, _), 5,
+      Seq("version", "params", "n"), Seq("bounds.parquet")),
+    KindCase("ivfsq", Similarity.IvfSqKind, Similarity.ivfSqIndexBuild(_),
+      Similarity.annIvfSqServed(_, _), 5,
+      Seq("version", "params", "n"), Seq("bounds.parquet", "centroids.parquet")),
+    KindCase("bq", Similarity.BqKind, Similarity.bqIndexBuild, Similarity.annBqServed(_, _), 5,
+      Seq("version", "params", "n"), Nil),
+    KindCase("ivfbq", Similarity.IvfBqKind, Similarity.ivfBqIndexBuild(_),
+      Similarity.annIvfBqServed(_, _), 5, Seq("version", "params", "n"), Seq("centroids.parquet")),
+    KindCase("ivfpq", Similarity.IvfPqKind, Similarity.ivfPqIndexBuild(_),
+      Similarity.annIvfPqServed(_, _), 6,
+      Seq("m", "residual", "version", "params", "n", "last_batch", "codebooks", "centroids"), Nil))
+
+  /** The spec's small corpus: every fifth vector. */
+  private lazy val fifth = embeddings.filter(col("vec_id") % 5 === 0)
+
+  private def answer(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+
+  private def entries(dir: String): Set[String] = new java.io.File(dir).list().toSet
+
+  private def metaMtime(dir: String) =
+    java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(dir, "meta.parquet", "_SUCCESS"))
+
+  test("a warm serve of every index kind starts at most two jobs: the corpus count and the meta collect") {
+    // measured with this listener on the same data in the previous
+    // layout, where every kind but IVF-PQ kept its model in tables
+    // beside the meta row (a collect each) and read its payload without
+    // a schema (an inference job): semantic 4, hier 5, pq 4, opq 5,
+    // sq 4, ivfsq 5, bq 3, ivfbq 4, ivfpq 2
+    for (c <- kindCases) {
+      val dir = tempDir(s"graft_warm_${c.name}")
+      noopWrite(c.serve(fifth, dir)) // builds and commits the index
+      val jobs = jobsStartedBy(c.serve(fifth, dir))
+      assert(jobs <= 2, s"${c.name}: a warm serve's frame started $jobs jobs")
     }
-    for (serve <- Seq[String => DataFrame](Similarity.annIvfPqServed(embeddings, _),
-        Similarity.annIvfPqResidualServed(embeddings, _))) {
+  }
+
+  test("every frozen index kind's declared meta schema is the schema its saver writes") {
+    // and each saved directory holds exactly its payload and meta, and
+    // the payload's schema is the one meta records
+    for (c <- kindCases) {
+      val dir = tempDir(s"graft_layout_${c.name}")
+      noopWrite(c.serve(fifth, dir))
+      assert(entries(dir) === Set(c.kind.payload, "meta.parquet"), c.name)
+      val meta = FrozenIndex.committedMeta(spark, c.kind, dir)
+      assert(spark.read.parquet(s"$dir/meta.parquet").schema === c.kind.schema, c.name)
+      val recorded = org.apache.spark.sql.types.DataType.fromJson(meta.getAs[String]("schema"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val inferred = spark.read.parquet(s"$dir/${c.kind.payload}").schema
+      // a partition column's type is inferred from its directory
+      // names (int for small cluster ids); the declared read gives it
+      // the type it was written with
+      val parts = c.kind.partitionBy.toSet
+      assert(inferred.filter(f => parts(f.name)).forall(f =>
+        Set[org.apache.spark.sql.types.DataType](org.apache.spark.sql.types.IntegerType,
+          org.apache.spark.sql.types.LongType)(f.dataType)), c.name)
+      assert(org.apache.spark.sql.types.StructType(inferred.map(f =>
+        if (parts(f.name)) f.copy(dataType = recorded(f.name).dataType) else f)) === recorded, c.name)
+      assert(FrozenIndex.payload(spark, c.kind, dir, meta).schema === recorded, c.name)
+    }
+  }
+
+  test("a meta without _SUCCESS or in the previous layout reads as absent and is rebuilt to the same answer") {
+    import spark.implicits._
+    for (c <- kindCases) {
+      val dir = tempDir(s"graft_absent_${c.name}")
+      val want = answer(c.serve(fifth, dir))
+      // the writer killed between the payload and meta writes
+      val t0 = metaMtime(dir)
+      assert(new java.io.File(s"$dir/meta.parquet/_SUCCESS").delete())
+      assert(FrozenIndex.meta(spark, c.kind, dir).isEmpty, c.name)
+      assert(answer(c.serve(fifth, dir)) === want, c.name)
+      assert(metaMtime(dir) !== t0, s"${c.name}: an uncommitted meta must be rebuilt")
+      // the previous layout: its meta columns at its version, and its
+      // model tables beside them
+      val meta = FrozenIndex.committedMeta(spark, c.kind, dir)
+      spark.createDataFrame(java.util.List.of(meta), c.kind.schema)
+        .withColumn("version", lit(c.oldVersion))
+        .select(c.oldMeta.map(col): _*)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      for (table <- c.oldModels)
+        Seq((0, Seq(1L))).toDF("cell", "units").write.parquet(s"$dir/$table")
+      assert(FrozenIndex.meta(spark, c.kind, dir).isEmpty, s"${c.name}: the previous layout")
+      val t1 = metaMtime(dir)
+      assert(answer(c.serve(fifth, dir)) === want, c.name)
+      assert(metaMtime(dir) !== t1, s"${c.name}: the previous layout must be rebuilt")
+      assert(entries(dir) === Set(c.kind.payload, "meta.parquet"), c.name)
+    }
+  }
+
+  test("a meta without version, with another kind's columns, mistyped or uncommitted reads as absent") {
+    val metas = kindCases.map { c =>
+      val dir = tempDir(s"graft_meta_${c.name}")
+      noopWrite(c.serve(fifth, dir))
+      c -> FrozenIndex.committedMeta(spark, c.kind, dir)
+    }
+    for ((c, meta) <- metas) {
+      val frame = spark.createDataFrame(java.util.List.of(meta), c.kind.schema)
+      def written(meta: DataFrame): String = {
+        val dir = tempDir("graft_meta_variant")
+        meta.coalesce(1).write.parquet(s"$dir/meta.parquet")
+        dir
+      }
+      def present(meta: DataFrame): Boolean = FrozenIndex.meta(spark, c.kind, written(meta)).isDefined
+      val own = written(frame)
+      assert(FrozenIndex.meta(spark, c.kind, own).isDefined, s"${c.name}: its own meta")
+      assert(new java.io.File(s"$own/meta.parquet/_SUCCESS").delete())
+      assert(FrozenIndex.meta(spark, c.kind, own).isEmpty, s"${c.name}: an uncommitted meta")
+      assert(!present(frame.drop("version")), s"${c.name}: no version")
+      assert(!present(frame.withColumn("version", lit(null).cast("int"))), s"${c.name}: null version")
+      assert(!present(frame.withColumn("version", col("version").cast("string"))),
+        s"${c.name}: string version")
+      assert(!present(frame.withColumn("version", col("version").cast("long"))),
+        s"${c.name}: long version")
+      // IVF-PQ is the one kind at version 7; every other kind lacks its columns
+      val (other, otherMeta) = metas.find(_._1.name == (if (c.name == "ivfpq") "semantic" else "ivfpq")).get
+      assert(!present(spark.createDataFrame(java.util.List.of(otherMeta), other.kind.schema)),
+        s"${c.name}: the ${other.name} kind's meta")
+    }
+  }
+
+  /** Build through [[FrozenIndex.served]] while a rival publishes a
+    * complete index at the same destination before the build returns.
+    */
+  private def servedAgainstRival[I](c: KindCase[I]): Unit = {
+    val parent = java.nio.file.Files.createTempDirectory(s"graft_rival_${c.name}")
+    val dir = parent.resolve("idx").toString
+    val n = fifth.count()
+    FrozenIndex.served(c.kind, dir, "rival", fifth, n)({
+      FrozenIndex.served(c.kind, dir, "rival", fifth, n)(c.build(fifth))
+      c.build(fifth)
+    })
+    val meta = FrozenIndex.committed(spark, c.kind, dir, "rival", n)
+    assert(meta.isDefined, s"${c.name}: no complete matching index after the race")
+    assert(FrozenIndex.payload(spark, c.kind, dir, meta.get).count() === n, c.name)
+    assert(entries(dir) === Set(c.kind.payload, "meta.parquet"), c.name)
+    assert(!entries(parent.toString).exists(_.contains(".tmp-")), s"${c.name}: staging left behind")
+  }
+
+  test("a build that a rival publishes over still serves a complete matching index and leaves no staging") {
+    kindCases.foreach(c => servedAgainstRival(c))
+  }
+
+  test("every index kind's cold serve leaves no checkpoint blocks") {
+    def stored(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val serves = kindCases.map(c => c.name -> c.serve) ++ Seq(
+      "ivfpq residual" -> ((df: DataFrame, dir: String) => Similarity.annIvfPqResidualServed(df, dir)))
+    for ((name, serve) <- serves) {
       val before = stored()
-      noopWrite(serve(tempDir("graft_ivfpq_release")))
+      noopWrite(serve(fifth, tempDir(s"graft_release_${name.replace(' ', '_')}")))
       assert((stored() -- before).isEmpty,
-        s"blocks left after a cold serve: ${spark.sparkContext.getRDDStorageInfo.toSeq}")
+        s"$name: blocks left after a cold serve: ${spark.sparkContext.getRDDStorageInfo.toSeq}")
     }
   }
 
@@ -1527,35 +1607,6 @@ class SimilaritySpec extends SparkSpec {
     assert(bq <= 7 - 1, s"the IVF-BQ served search's write started $bq jobs")
   }
 
-  test("an IVF-PQ directory in the v5 layout reads as absent and is rebuilt with the same answer") {
-    import spark.implicits._
-    val dir = tempDir("graft_ivfpq_v5")
-    val first = Similarity.annIvfPqServed(embeddings, dir).collect().map(_.toString).toSeq
-    assert(first.nonEmpty)
-    // rewrite it as v5 wrote it: the model in codebooks and centroids
-    // tables, and a meta row with the same fingerprint but no model
-    val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${Similarity.sourceStamp(embeddings)}"
-    val n = embeddings.count()
-    val built = Similarity.ivfPqIndexBuild(embeddings)
-    (for ((books, j) <- built.codebooks.zipWithIndex; (u, c) <- books.zipWithIndex)
-      yield (j, c, u.toSeq)).toDF("subspace", "code", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
-    built.centroids.zipWithIndex.map { case (u, c) => (c, u.toSeq) }.toDF("cell", "units")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    Seq((8, false, 5, params, n, -1L)).toDF("m", "residual", "version", "params", "n", "last_batch")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
-    assert(!Similarity.frozenIndexComplete(spark, dir, params, n, Similarity.ivfPqMeta),
-      "a v5 directory must read as absent")
-    val marker = java.nio.file.Paths.get(dir, "meta.parquet", "_SUCCESS")
-    val v5At = java.nio.file.Files.getLastModifiedTime(marker)
-    val rebuilt = Similarity.annIvfPqServed(embeddings, dir).collect().map(_.toString).toSeq
-    assert(rebuilt === first, "the rebuilt index must serve the same answer")
-    assert(java.nio.file.Files.getLastModifiedTime(marker) !== v5At, "a v5 directory must be rebuilt")
-    assert(Similarity.frozenIndexComplete(spark, dir, params, n, Similarity.ivfPqMeta))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "codebooks.parquet")),
-      "the rebuilt directory is the current layout, with no model tables")
-  }
-
   test("ivfPqIndexLoad returns exactly the saved model for both layouts and an empty corpus") {
     val none = embeddings.filter(col("vec_id") < 0)
     for (corpus <- Seq(embeddings, none); residual <- Seq(false, true)) {
@@ -1563,8 +1614,8 @@ class SimilaritySpec extends SparkSpec {
         if (residual) Similarity.ivfPqResidualIndexBuild(corpus)
         else Similarity.ivfPqIndexBuild(corpus)
       val dir = tempDir("graft_ivfpq_model")
-      Similarity.ivfPqIndexSave(built, dir)
-      val loaded = Similarity.ivfPqIndexLoad(spark, dir, corpus)
+      FrozenIndex.save(Similarity.IvfPqKind, built, dir)
+      val loaded = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, corpus)
       val what = s"residual=$residual, empty=${corpus eq none}"
       assert(loaded.codebooks.map(_.map(_.toSeq)) === built.codebooks.map(_.map(_.toSeq)), what)
       assert(loaded.centroids.map(_.toSeq) === built.centroids.map(_.toSeq), what)
@@ -1583,22 +1634,59 @@ class SimilaritySpec extends SparkSpec {
         if (residual) Similarity.ivfPqResidualIndexBuild(base)
         else Similarity.ivfPqIndexBuild(base)
       val dir = tempDir("graft_ivfpq_frozen_model")
-      Similarity.ivfPqIndexSave(built, dir, s"model-spec;res=$residual", base.count())
+      FrozenIndex.save(Similarity.IvfPqKind, built, dir, s"model-spec;res=$residual", base.count())
       def model(): (Any, Any) = {
-        val meta = Similarity.ivfPqMeta.read(spark, dir).head()
+        val meta = FrozenIndex.committedMeta(spark, Similarity.IvfPqKind, dir)
         (meta.getAs[collection.Seq[_]]("codebooks"), meta.getAs[collection.Seq[_]]("centroids"))
       }
       val saved = model()
       assert(saved === (built.codebooks.map(_.map(_.toSeq)), built.centroids.map(_.toSeq)))
-      Similarity.ivfPqIndexAppend(spark, dir, embeddings.filter(col("vec_id") % 10 === 0))
+      val appended = Similarity.ivfPqIndexAppend(spark, dir, embeddings.filter(col("vec_id") % 10 === 0))
       assert(model() === saved, s"append (residual=$residual)")
-      Similarity.ivfPqIndexStreamAppend(spark, dir, embeddings.filter(col("vec_id") % 10 === 1), 0L)
+      val batch = embeddings.filter(col("vec_id") % 10 === 1)
+      assert(Similarity.ivfPqIndexStreamAppend(spark, dir, batch, 0L) === appended + batch.count(),
+        s"a stream's batch 0 after a batch append must commit (residual=$residual)")
       assert(model() === saved, s"stream-append (residual=$residual)")
       Similarity.ivfPqIndexCompact(spark, dir)
       assert(model() === saved, s"compact (residual=$residual)")
       Similarity.ivfPqIndexRemove(spark, dir, embeddings.filter(col("vec_id") % 5 === 2))
       assert(model() === saved, s"remove (residual=$residual)")
     }
+  }
+
+  test("batch appends leave a stream's batch ids free, for both growable kinds") {
+    val base = embeddings.filter(col("vec_id") % 10 > 3)
+    val parts = (0 to 3).map(r => embeddings.filter(col("vec_id") % 10 === r))
+    val queries = embeddings.filter(col("vec_id") % 100 === 0)
+    val nBase = base.count()
+    val sizes = parts.map(_.count())
+    // batch, stream 0, batch, stream 1: every append commits
+    def grow(batch: DataFrame => Long, stream: (DataFrame, Long) => Long): Unit = {
+      assert(batch(parts(0)) === nBase + sizes(0))
+      assert(stream(parts(1), 0L) === nBase + sizes.take(2).sum, "stream batch 0 after a batch append")
+      assert(batch(parts(2)) === nBase + sizes.take(3).sum)
+      assert(stream(parts(3), 1L) === nBase + sizes.sum, "stream batch 1 after a second batch append")
+      assert(stream(parts(1), 0L) === nBase + sizes.sum, "a replayed committed batch changes nothing")
+    }
+
+    val built = Similarity.ivfPqIndexBuild(base)
+    val pDir = tempDir("graft_ivfpq_shared_ids")
+    FrozenIndex.save(Similarity.IvfPqKind, built, pDir, "ids-spec", nBase)
+    grow(Similarity.ivfPqIndexAppend(spark, pDir, _),
+      Similarity.ivfPqIndexStreamAppend(spark, pDir, _, _))
+    val extended = parts.foldLeft(built)(Similarity.ivfPqIndexExtended)
+    assert(answer(Similarity.ivfPqSearch(
+        FrozenIndex.load(spark, Similarity.IvfPqKind, pDir, embeddings), queries, nprobe = 2)) ===
+      answer(Similarity.ivfPqSearch(extended, queries, nprobe = 2)))
+
+    val sDir = tempDir("graft_sem_shared_ids")
+    FrozenIndex.save(Similarity.SemanticKind, Similarity.semanticIndexBuild(base, k = 4), sDir,
+      "ids-spec", nBase)
+    grow(Similarity.semanticIndexAppend(spark, sDir, _),
+      Similarity.semanticIndexStreamAppend(spark, sDir, _, _))
+    val ids = FrozenIndex.load(spark, Similarity.SemanticKind, sDir, spark.emptyDataFrame).assigned
+      .select(col("vec_id")).collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq === embeddings.select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq)
   }
 
   private def normUnitsFrame(df: DataFrame): DataFrame =
@@ -1621,7 +1709,7 @@ class SimilaritySpec extends SparkSpec {
   test("an IVF-PQ build and save starts at least 8 fewer jobs than with two jobs per training step") {
     val dir = tempDir("graft_ivfpq_build_jobs")
     val jobs = jobsStartedBy(
-      Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(embeddings), dir))
+      FrozenIndex.save(Similarity.IvfPqKind, Similarity.ivfPqIndexBuild(embeddings), dir))
     // with a two-job mean step per Lloyd and PQ iteration, a
     // (vec_id, embedding, u) and a (vec_id, un) checkpoint, two init
     // collects and a codes-to-labels join, this same count read 21
@@ -1673,19 +1761,31 @@ class SimilaritySpec extends SparkSpec {
     assert(ix.codes.collect().isEmpty)
   }
 
-  test("wide PQ codebooks are bit-identical to the literal kernels and lift recall at FAISS sizes") {
+  /** Driver-side PQ encode reference: per subspace, the [[refTop]]
+    * argmin code of the row's slice (lowest code on ties).
+    */
+  private def refPqCodes(corpusU: DataFrame, books: IndexedSeq[IndexedSeq[Array[Long]]],
+                         dsub: Int): Map[Long, Seq[Int]] =
+    corpusU.select(col("vec_id"), col("un")).collect().map { r =>
+      val u = r.getSeq[Long](1).toArray
+      r.getLong(0) -> books.indices.map(j =>
+        refTop(u.slice(j * dsub, (j + 1) * dsub), books(j), 1).head._2.toInt)
+    }.toMap
+
+  private def pqCodes(codes: DataFrame): Map[Long, Seq[Int]] =
+    codes.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+
+  test("wide PQ codebooks encode like a driver-side argmin and lift recall at FAISS sizes") {
     import graft.plans.IntegerUnits.normalizeUnits
     val corpusU = embeddings
       .select(col("vec_id"), normalizeUnits(col("embedding")).as("un"))
       .localCheckpoint(true)
-    // bit parity of the encode at a size both run (the trainer is
-    // pinned to a driver-side reference by its own test)
+    // the encode at the registered shape (the trainer is pinned to a
+    // driver-side reference by its own test)
     val bK = Similarity.pqTrainCodebooks(corpusU, 8, 8, 3, 8)
-    val cK = Similarity.pqEncode(corpusU, bK, 8, wide = false)
-      .orderBy(col("vec_id")).collect().map(_.toString).toSeq
-    val cD = Similarity.pqEncode(corpusU, bK, 8, wide = true)
-      .orderBy(col("vec_id")).collect().map(_.toString).toSeq
-    assert(cD === cK, "codebooks-as-data encode diverged from the literal kernels")
+    val codes = pqCodes(Similarity.pqEncode(corpusU, bK, 8))
+    assert(codes.nonEmpty)
+    assert(codes === refPqCodes(corpusU, bK, 8), "the encode diverged from the driver-side argmin")
     // FAISS-sized codebooks (auto-wide at m*cb = 512) beat the
     // kernel-budget-capped cb=8 on recall, decisively — this is the
     // real recall lever on the isotropic gate corpus (rotation
@@ -1711,24 +1811,17 @@ class SimilaritySpec extends SparkSpec {
       s"(m=16, cb=256) must hold the cb=64 recall ($wide -> $faiss16)")
   }
 
-  test("fused PQ encode kernel is bit-identical to the interpreted HOF reference at wide shapes") {
+  test("fused PQ encode kernel equals a driver-side argmin at wide shapes") {
     import graft.plans.IntegerUnits.normalizeUnits
-    // the round-15 wide encode (per-subspace transform + array_sort
-    // over codebooks-as-data) is retained as the REFERENCE semantics;
-    // the fused PqEncodeI64 kernel that replaced it on the corpus
-    // path must agree code-for-code at a genuinely wide shape
-    // (m·cb = 512, past the kernel budget — the ann_pq_wide gate
-    // shape, where only the data paths can run)
+    // the fused PqEncodeI64 kernel must agree code-for-code with the
+    // driver-side argmin at a genuinely wide shape (m·cb = 512 — the
+    // ann_pq_wide gate shape)
     val corpusU = embeddings
       .select(col("vec_id"), normalizeUnits(col("embedding")).as("un"))
       .localCheckpoint(true)
     val books = Similarity.pqTrainCodebooks(corpusU, 8, 64, 1, 8)
-    val ref = corpusU.select(col("vec_id"),
-        array((0 until 8).map(j => Similarity.pqCodeData(col("un"), books, j, 8)): _*).as("codes"))
-      .orderBy(col("vec_id")).collect().map(_.toString).toSeq
-    val fused = Similarity.pqEncode(corpusU, books, 8)
-      .orderBy(col("vec_id")).collect().map(_.toString).toSeq
-    assert(fused === ref, "fused PQ encode kernel diverged from the HOF reference")
+    val fused = pqCodes(Similarity.pqEncode(corpusU, books, 8))
+    assert(fused === refPqCodes(corpusU, books, 8), "fused PQ encode kernel diverged from the driver-side argmin")
     assert(fused.nonEmpty)
     // and the kernel's interpreted eval (non-codegen fallback) agrees
     // with its own codegen on a malformed-width probe: both throw

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{FrozenIndex, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
@@ -83,7 +83,7 @@ class SimilarityStreamSpec extends SparkSpec {
 
     val got = serveAll()
     // batch oracle: the identical frozen index (loaded, not retrained)
-    val index = Similarity.ivfPqIndexLoad(spark, dir, corpus)
+    val index = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, corpus)
     def want(rows: Seq[(Long, Array[Float])]): Seq[String] =
       Similarity.ivfPqResidualSearch(index, rows.toDF("vec_id", "embedding"), nprobe = 2)
         .collect().map(_.toString).toSeq
@@ -112,7 +112,7 @@ class SimilarityStreamSpec extends SparkSpec {
     assert(batch1.nonEmpty && batch2.nonEmpty)
     val built = Similarity.ivfPqIndexBuild(base)
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    Similarity.ivfPqIndexSave(built, dir, "ingest-spec", base.count())
+    FrozenIndex.save(Similarity.IvfPqKind, built, dir, "ingest-spec", base.count())
 
     val input = MemoryStream[(Long, Array[Float])]
     val commits = scala.collection.mutable.Map.empty[Long, Long]
@@ -136,7 +136,7 @@ class SimilarityStreamSpec extends SparkSpec {
           built, batch1.toDF("vec_id", "embedding")), batch2.toDF("vec_id", "embedding")),
         queries, nprobe = 2, excludeSelf = true)
       .collect().map(_.toString).toSeq
-    val loaded = Similarity.ivfPqIndexLoad(spark, dir, all)
+    val loaded = FrozenIndex.load(spark, Similarity.IvfPqKind, dir, all)
     val gotRows = Similarity.ivfPqSearch(loaded, queries, nprobe = 2, excludeSelf = true)
       .collect().map(_.toString).toSeq
     assert(gotRows === want)
@@ -156,7 +156,7 @@ class SimilarityStreamSpec extends SparkSpec {
     assert(batch1.nonEmpty && batch2.nonEmpty)
     val built = Similarity.semanticIndexBuild(base, k = 4)
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_ingest").toString
-    Similarity.semanticIndexSave(built, dir, "sem-ingest-spec", base.count())
+    FrozenIndex.save(Similarity.SemanticKind, built, dir, "sem-ingest-spec", base.count())
 
     val input = MemoryStream[(Long, Array[Float])]
     val commits = scala.collection.mutable.Map.empty[Long, Long]
@@ -175,11 +175,11 @@ class SimilarityStreamSpec extends SparkSpec {
     // the ingested assignment is bit-identical to the in-memory
     // double-append under the SAME frozen model (no retrain happened)
     val refDir = java.nio.file.Files.createTempDirectory("graft_sem_ingest_ref").toString
-    Similarity.semanticIndexSave(built, refDir, "sem-ingest-spec", base.count())
+    FrozenIndex.save(Similarity.SemanticKind, built, refDir, "sem-ingest-spec", base.count())
     Similarity.semanticIndexAppend(spark, refDir, batch1.toDF("vec_id", "embedding"))
     Similarity.semanticIndexAppend(spark, refDir, batch2.toDF("vec_id", "embedding"))
     def assigned(d: String): Set[(Long, Long)] =
-      Similarity.semanticIndexLoad(spark, d).assigned
+      FrozenIndex.load(spark, Similarity.SemanticKind, d, spark.emptyDataFrame).assigned
         .select(col("vec_id"), col("cluster")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(assigned(dir) === assigned(refDir))
