@@ -448,11 +448,8 @@ object ScaleProbe {
       // semantic analog of the ann_*_served rows).
       "sem_probe_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_sem_index"
-        val kk = 4 * k.toInt
-        val (params, n) = (s"sem;k=$kk;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
         operators.Similarity.semanticProbe(
-          operators.FrozenIndex.served(operators.Similarity.SemanticKind, dir, params, em, n)(
-            operators.Similarity.semanticIndexBuild(em, kk)),
+          operators.Similarity.semanticIndexServed(em, dir, 4 * k.toInt, 3),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
@@ -514,10 +511,8 @@ object ScaleProbe {
       "sem_probe_hier_served" -> ((_, _, _, em, k) => {
         val dir = s"/tmp/graft_scale${k}_${recipeVersion}_semhier_index"
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
-        val (params, n) = (s"semhier;k1=$side;k2=$side;it=3;src=${operators.Similarity.sourceStamp(em)}", plans.HonestCheckpoint.countRows(em))
         operators.Similarity.semanticProbeHier(
-          operators.FrozenIndex.served(operators.Similarity.HierKind, dir, params, em, n)(
-            operators.Similarity.semanticIndexBuildHier(em, side, side)),
+          operators.Similarity.hierIndexServed(em, dir, side, side, 3),
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),

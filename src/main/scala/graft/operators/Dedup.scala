@@ -231,6 +231,13 @@ object Dedup {
     * small, and the same plan degrades to shuffled equi-joins past
     * the broadcast threshold — linear either way, never a nested-loop
     * (DedupPlanSpec pins both).
+    *
+    * The counts come out of a one-row `inline` per pair, so
+    * `array_intersect` runs once per pair: a filter on a score over a
+    * projected `inter` is pushed below the projection with `inter`
+    * inlined into every use (the Jaccard test reads it three times),
+    * but a filter on a generator's output stays above the Generate
+    * (DedupPlanSpec pins one `array_intersect` per plan).
     */
   private def scoredPairCounts(cands: DataFrame, sets: DataFrame): DataFrame = {
     // an id without a row has the empty set
@@ -239,9 +246,9 @@ object Dedup {
       .join(sets.select(col("doc_id").as("a"), col("sh").as("sa")), Seq("a"), "left")
       .join(sets.select(col("doc_id").as("b"), col("sh").as("sb")), Seq("b"), "left")
       .select(col("a"), col("b"), set("sa"), set("sb"))
-      .select(col("a"), col("b"),
+      .select(col("a"), col("b"), inline(array(struct(
         size(array_intersect(col("sa"), col("sb"))).cast("long").as("inter"),
-        size(col("sa")).cast("long").as("na"), size(col("sb")).cast("long").as("nb"))
+        size(col("sa")).cast("long").as("na"), size(col("sb")).cast("long").as("nb")))))
   }
 
   /** MinHash + LSH near-dup pairs (w=3 shingles, 32 permutations,

@@ -14,10 +14,24 @@ import org.apache.spark.sql.catalyst.InternalRow
   *
   * Scale design: the query side of every search broadcasts (queries
   * ≪ corpus); the corpus is scanned once, map-side, and only top-k
-  * candidates reach a shuffle. The all-pairs near-dup variant prunes
-  * with a codegen double cosine and verifies survivors with exact
-  * decimal arithmetic — the expensive exact math touches only
-  * near-threshold pairs.
+  * candidates reach a shuffle.
+  *
+  * Every operator here is TWO-PHASE — the ADC contract of Jégou et
+  * al. ("Product quantization for nearest neighbor search", TPAMI
+  * 2011): a cheap distance cuts the candidates, and only the
+  * survivors pay the exact decimal cosine, so every emitted score is
+  * oracle-grade however approximate the cut that chose it.
+  *  - Top-k search over a quantized index ([[twoPhase]]): a kind
+  *    supplies its query projection and one candidate distance (lower
+  *    is nearer); the top `rerank` per query by (distance, vec_id)
+  *    survive. The flat scans ([[annBruteForce]], [[annIvf]],
+  *    [[annLsh]]) cut by value at the k-th codegen double cosine
+  *    instead ([[keepFastSurvivors]]).
+  *  - Exact re-rank ([[exactTopK]]): the survivors' exact cosine on
+  *    the original vectors, top k by (cosine desc, vec_id).
+  *  - Threshold operators (near-dup pairs, range search, ingestion
+  *    probes) run the same split as a value test ([[verified]]).
+  * Self-matches are excluded by [[notSelf]]'s policy.
   */
 object Similarity {
 
@@ -29,6 +43,87 @@ object Similarity {
     */
   private def defaultQueries(embeddings: DataFrame): DataFrame =
     embeddings.filter(col("vec_id") % 100 === 0)
+
+  /** The query frame an ann* entry searches and whether it is
+    * corpus-derived ([[notSelf]]): the caller's frame or, when it
+    * passes none, [[defaultQueries]]; corpus-derived as the caller
+    * says, else iff the default is used.
+    */
+  private def querySet(embeddings: DataFrame, queries: Option[DataFrame],
+                       corpusDerived: Option[Boolean] = None): (DataFrame, Boolean) =
+    (queries.getOrElse(defaultQueries(embeddings)), corpusDerived.getOrElse(queries.isEmpty))
+
+  /** The query side of a flat search as one projection:
+    * (query_id, qe, payload…), the payload being the kind's
+    * query-side columns named by their aliases.
+    */
+  private def flatQueries(queries: DataFrame, payload: Column*): DataFrame =
+    queries.select(Seq(col("vec_id").as("query_id"), col("embedding").as("qe")) ++ payload: _*)
+
+  /** The exact decimal cosine of two embedding columns — the score
+    * every operator emits and every oracle replays.
+    */
+  private def exactCosine(a: Column, b: Column): Column =
+    cosineExact(decDot(a, b), decNorm2(a), decNorm2(b))
+
+  /** Threshold verify: the rows of `pairs` whose embeddings `a` and
+    * `b` have exact cosine ≥ `threshold`, with it as `cosine`. A
+    * codegen double cosine first drops everything below
+    * threshold − 1e-3 (a margin ≫ the ~1e-7 double-vs-exact gap, see
+    * [[keepFastSurvivors]]), so only near-threshold pairs pay the
+    * exact decimal math.
+    */
+  private def verified(pairs: DataFrame, a: String, b: String, threshold: Double): DataFrame =
+    pairs.filter(cosineFast(col(a), col(b)) >= threshold - 1e-3)
+      .withColumn("cosine", exactCosine(col(a), col(b)))
+      .filter(col("cosine") >= threshold)
+
+  /** Exact re-rank: each query's top `k` candidates by (exact cosine
+    * desc, vec_id) as (query_id, [label,] neighbor_id, rank, cosine),
+    * sorted by (query_id, rank). `cands` carries query_id, qe, vec_id
+    * and embedding, plus the neighbor's cell `label` in an IVF search,
+    * which then rides to the output.
+    */
+  private def exactTopK(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
+    val label = if (cands.columns.contains("label")) Seq(col("label")) else Nil
+    cands.withColumn("cosine", exactCosine(col("qe"), col("embedding")))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("query_id") +: label :+ col("vec_id").as("neighbor_id") :+ col("rank") :+
+        col("cosine"): _*)
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** The two-phase search of every quantized index kind. `payload` is
+    * the kind's scanned table (vec_id, its codes or signature[, label]),
+    * `qs` its query projection (query_id, qe[, qlabel], its query-side
+    * columns) and `dist` its candidate distance over the two, lower
+    * being nearer. Each query keeps its top `rerank` payload rows by
+    * (dist, vec_id) — a total order, so the candidate set is
+    * deterministic, and Spark's WindowGroupLimit keeps the cut
+    * map-side partial — and [[exactTopK]] re-ranks them on `corpus`.
+    *
+    * An IVF kind's query frame carries `qlabel`, one row per probed
+    * cell ([[probedQueries]]): a payload row then meets only the
+    * queries probing its `label`, one window cuts across all probed
+    * cells at once (a vector lives in exactly one cell, so no pair
+    * duplicates), and the label rides to the output. `excludeSelf`
+    * only for corpus-derived query frames ([[notSelf]]).
+    */
+  private def twoPhase(payload: DataFrame, qs: DataFrame, dist: Column, corpus: DataFrame,
+                       k: Int, rerank: Int, excludeSelf: Boolean): DataFrame = {
+    val ivf = qs.columns.contains("qlabel")
+    val cell = if (ivf) col("label") === col("qlabel") && notSelf(excludeSelf)
+               else notSelf(excludeSelf)
+    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))
+    val cands = payload.join(broadcast(qs), cell)
+      .withColumn("dist", dist)
+      .withColumn("rc", row_number().over(w))
+      .filter(col("rc") <= rerank)
+      .select((Seq("query_id", "qe", "vec_id") ++ (if (ivf) Seq("label") else Nil)).map(col): _*)
+    exactTopK(cands.join(vectors(corpus), "vec_id"), k)
+  }
 
   /** Value-based survivor cut for the two-phase (fast double prune →
     * exact decimal re-rank) top-k scans: keep every row whose fast
@@ -44,12 +139,14 @@ object Similarity {
     * not the ~1000× a naive 1e-9 estimate suggests. If small-norm
     * vectors are ever admitted, the dec8 perturbation amplifies by
     * 1/‖v‖ and the margin must widen accordingly. NULL kth_fast
-    * (fewer than k candidates) keeps everything.
+    * (fewer than k candidates) keeps everything. `df` carries
+    * query_id, qe, vec_id and embedding.
     */
   private def keepFastSurvivors(df: DataFrame, k: Int): DataFrame = {
     val wFast = Window.partitionBy(col("query_id")).orderBy(col("fast").desc, col("vec_id"))
     val wAll = Window.partitionBy(col("query_id"))
-    df.withColumn("rf", row_number().over(wFast))
+    df.withColumn("fast", cosineFast(col("qe"), col("embedding")))
+      .withColumn("rf", row_number().over(wFast))
       .withColumn("kth_fast", max(when(col("rf") === k, col("fast"))).over(wAll))
       .filter(col("kth_fast").isNull || col("fast") >= col("kth_fast") - 1e-6)
       .drop("rf", "kth_fast")
@@ -110,23 +207,31 @@ object Similarity {
         val n = embeddings.select(col("vec_id")).count()
         math.max(16L, (n + 199999L) / 200000L).toInt
       }
-    val e = embeddings.select(col("vec_id"), col("embedding"))
-      .withColumn("blk", pmod(xxhash64(col("vec_id")), lit(b)).cast("int"))
+    blockPairs(vectors(embeddings), b, threshold)
+  }
+
+  /** The verified pairs of a (vec_id, embedding[, keys…]) frame within
+    * equal `keys` (none: the whole frame), spread over the block-pair
+    * triangle of `b` hash blocks as (a, b[, keys…], cosine) with
+    * a < b, sorted by (a, b).
+    */
+  private def blockPairs(vecs: DataFrame, b: Int, threshold: Double,
+                         keys: String*): DataFrame = {
+    val e = vecs.withColumn("blk", pmod(xxhash64(col("vec_id")), lit(b)).cast("int"))
     // Roles are BLOCK-ordered (side A = the lower block, side B = the
     // higher): group (p, q), p < q, meets each cross-block pair once;
     // only the diagonal (p = p) needs the id-order filter. Output ids
     // are then normalized with least/greatest (cosine is symmetric).
-    val sideA = e.select(col("vec_id").as("ia"), col("embedding").as("ea"), col("blk").as("bi"))
+    val sideA = e.select(keys.map(col) ++ Seq(col("vec_id").as("ia"), col("embedding").as("ea"),
+        col("blk").as("bi")): _*)
       .withColumn("bj", explode(sequence(col("bi"), lit(b - 1))))
-    val sideB = e.select(col("vec_id").as("ib"), col("embedding").as("eb"), col("blk").as("bj"))
+    val sideB = e.select(keys.map(col) ++ Seq(col("vec_id").as("ib"), col("embedding").as("eb"),
+        col("blk").as("bj")): _*)
       .withColumn("bi", explode(sequence(lit(0), col("bj"))))
-    sideA.join(sideB, Seq("bi", "bj"))
-      .filter(col("bi") =!= col("bj") || col("ia") < col("ib"))
-      .filter(cosineFast(col("ea"), col("eb")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("ea"), col("eb")), decNorm2(col("ea")), decNorm2(col("eb"))))
-      .filter(col("cosine") >= threshold)
-      .select(least(col("ia"), col("ib")).as("a"), greatest(col("ia"), col("ib")).as("b"), col("cosine"))
+    verified(sideA.join(sideB, keys ++ Seq("bi", "bj"))
+        .filter(col("bi") =!= col("bj") || col("ia") < col("ib")), "ea", "eb", threshold)
+      .select(Seq(least(col("ia"), col("ib")).as("a"), greatest(col("ia"), col("ib")).as("b")) ++
+        keys.map(col) :+ col("cosine"): _*)
       .orderBy(col("a"), col("b"))
   }
 
@@ -226,7 +331,7 @@ object Similarity {
     * when the frame goes out of scope.
     */
   private def corpusFrame(embeddings: DataFrame, k: Int): DataFrame =
-    withUnits(spreadForK(embeddings.select(col("vec_id"), col("embedding")), k))
+    withUnits(spreadForK(vectors(embeddings), k))
       .honestCheckpoint()
 
   /** Train + corpus assignment sharing ONE [[corpusFrame]]
@@ -441,8 +546,8 @@ object Similarity {
     * the same k.
     */
   private def semanticAssign(index: SemanticIndex, vecs: DataFrame): DataFrame =
-    nearestCells(withUnits(spreadForK(vecs.select(col("vec_id"), col("embedding")),
-        index.centroids.size)), "u", index.centroids)
+    nearestCells(withUnits(spreadForK(vectors(vecs), index.centroids.size)), "u",
+        index.centroids)
       .select(col("vec_id"), col("embedding"), col("cluster"))
 
   /** Fold committed deltas into the cluster-partitioned base
@@ -490,12 +595,29 @@ object Similarity {
     */
   def dedupSemanticServed(embeddings: DataFrame, indexDir: String, k: Int = 8,
                           iters: Int = 3, threshold: Double = 0.45,
-                          blocks: Int = 0): DataFrame = {
-    val params = s"sem;k=$k;it=$iters;src=${sourceStamp(embeddings)}"
-    withinClusterPairs(FrozenIndex.served(SemanticKind, indexDir, params, embeddings,
-        countRows(embeddings))(semanticIndexBuild(embeddings, k, iters)).assigned,
+                          blocks: Int = 0): DataFrame =
+    withinClusterPairs(semanticIndexServed(embeddings, indexDir, k, iters).assigned,
       threshold, blocks)
-  }
+
+  /** The frozen [[SemanticIndex]] at `indexDir` that
+    * [[dedupSemanticServed]], the streaming probe serve
+    * ([[graft.streaming.SimilarityStream.semanticNearDupServeFrozen]])
+    * and ScaleProbe's serve probe all read: one build fingerprint, so
+    * they never rebuild each other's index in a shared directory.
+    */
+  private[graft] def semanticIndexServed(embeddings: DataFrame, indexDir: String,
+                                         k: Int, iters: Int): SemanticIndex =
+    served(SemanticKind, indexDir, s"sem;k=$k;it=$iters", embeddings)(
+      semanticIndexBuild(embeddings, k, iters))
+
+  /** [[FrozenIndex.served]] over the whole corpus: `params` plus the
+    * corpus's [[sourceStamp]] is the build fingerprint, its row count
+    * the corpus guard.
+    */
+  private def served[I](kind: FrozenIndex.Kind[I], dir: String, params: String,
+                        embeddings: DataFrame)(build: => I): I =
+    FrozenIndex.served(kind, dir, s"$params;src=${sourceStamp(embeddings)}", embeddings,
+      countRows(embeddings))(build)
 
   /** Probe a bounded batch of NEW vectors against a frozen
     * [[SemanticIndex]] — the ingestion-time half of SemDeDup ("is
@@ -517,20 +639,25 @@ object Similarity {
     */
   def semanticProbe(index: SemanticIndex, batch: DataFrame,
                     threshold: Double = 0.45,
-                    excludeSelf: Boolean = false): DataFrame = {
-    val nb = nearestCells(withUnits(batch), "u", index.centroids)
-      .select(col("vec_id").as("new_id"), col("embedding").as("eb"), col("cluster"))
-    index.assigned
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ea"), col("cluster"))
-      .join(broadcast(nb), Seq("cluster"))
-      .filter(if (excludeSelf) col("corpus_id") =!= col("new_id") else lit(true))
-      .filter(cosineFast(col("ea"), col("eb")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("ea"), col("eb")), decNorm2(col("ea")), decNorm2(col("eb"))))
-      .filter(col("cosine") >= threshold)
+                    excludeSelf: Boolean = false): DataFrame =
+    cellProbe(index.assigned, nearestCells(withUnits(batch), "u", index.centroids)
+        .select(col("vec_id").as("new_id"), col("embedding").as("eb"), col("cluster")),
+      threshold, excludeSelf)
+
+  /** The verify half of both ingestion probes: each (new_id, eb,
+    * cluster) batch row against its cell's members of `assigned`, as
+    * (new_id, corpus_id, cluster, cosine) sorted by (new_id,
+    * corpus_id).
+    */
+  private def cellProbe(assigned: DataFrame, nb: DataFrame, threshold: Double,
+                        excludeSelf: Boolean): DataFrame =
+    verified(assigned
+        .select(col("vec_id").as("corpus_id"), col("embedding").as("ea"), col("cluster"))
+        .join(broadcast(nb), Seq("cluster"))
+        .filter(if (excludeSelf) col("corpus_id") =!= col("new_id") else lit(true)),
+      "ea", "eb", threshold)
       .select(col("new_id"), col("corpus_id"), col("cluster"), col("cosine"))
       .orderBy(col("new_id"), col("corpus_id"))
-  }
 
   /** Hierarchical SemDeDup — [[dedupSemantic]]'s SECOND-DECADE scale
     * path. The flat operator's contract grows k with the corpus so a
@@ -663,22 +790,12 @@ object Similarity {
     */
   def semanticProbeHier(index: HierSemanticIndex, batch: DataFrame,
                         threshold: Double = 0.45,
-                        excludeSelf: Boolean = false): DataFrame = {
-    val nb = nearestCells(withUnits(batch), "u", index.coarse)
-      .select(col("vec_id"), col("embedding"), col("u"), col("cluster").as("coarse"))
-      .select(col("vec_id").as("new_id"), col("embedding").as("eb"),
-        (col("coarse") * index.k2 + fineCluster(index.coarse.size, index.fine)).as("cluster"))
-    index.assigned
-      .select(col("vec_id").as("corpus_id"), col("embedding").as("ea"), col("cluster"))
-      .join(broadcast(nb), Seq("cluster"))
-      .filter(if (excludeSelf) col("corpus_id") =!= col("new_id") else lit(true))
-      .filter(cosineFast(col("ea"), col("eb")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("ea"), col("eb")), decNorm2(col("ea")), decNorm2(col("eb"))))
-      .filter(col("cosine") >= threshold)
-      .select(col("new_id"), col("corpus_id"), col("cluster"), col("cosine"))
-      .orderBy(col("new_id"), col("corpus_id"))
-  }
+                        excludeSelf: Boolean = false): DataFrame =
+    cellProbe(index.assigned, nearestCells(withUnits(batch), "u", index.coarse)
+        .select(col("vec_id"), col("embedding"), col("u"), col("cluster").as("coarse"))
+        .select(col("vec_id").as("new_id"), col("embedding").as("eb"),
+          (col("coarse") * index.k2 + fineCluster(index.coarse.size, index.fine)).as("cluster")),
+      threshold, excludeSelf)
 
   /** Frozen-lifecycle hierarchical SemDeDup pairs — bit-identical to
     * [[dedupSemanticHierGrouped]] (assignment and centroids survive
@@ -687,12 +804,20 @@ object Similarity {
     */
   def dedupSemanticHierServed(embeddings: DataFrame, indexDir: String,
                               k1: Int = 4, k2: Int = 4, iters: Int = 3,
-                              threshold: Double = 0.45, blocks: Int = 0): DataFrame = {
-    val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${sourceStamp(embeddings)}"
-    withinClusterPairs(FrozenIndex.served(HierKind, indexDir, params, embeddings,
-        countRows(embeddings))(semanticIndexBuildHier(embeddings, k1, k2, iters)).assigned,
+                              threshold: Double = 0.45, blocks: Int = 0): DataFrame =
+    withinClusterPairs(hierIndexServed(embeddings, indexDir, k1, k2, iters).assigned,
       threshold, blocks)
-  }
+
+  /** The frozen [[HierSemanticIndex]] at `indexDir` that
+    * [[dedupSemanticHierServed]], the streaming probe serve
+    * ([[graft.streaming.SimilarityStream.semanticNearDupServeHierFrozen]])
+    * and ScaleProbe's serve probe all read, under one build
+    * fingerprint.
+    */
+  private[graft] def hierIndexServed(embeddings: DataFrame, indexDir: String,
+                                     k1: Int, k2: Int, iters: Int): HierSemanticIndex =
+    served(HierKind, indexDir, s"semhier;k1=$k1;k2=$k2;it=$iters", embeddings)(
+      semanticIndexBuildHier(embeddings, k1, k2, iters))
 
   /** Shared verify stage of the SemDeDup family: the within-cluster
     * pair space of an (vec_id, embedding, cluster) frame, spread over
@@ -712,48 +837,45 @@ object Similarity {
           .agg(coalesce(max(col("count")), lit(0L))).collect()(0).getLong(0)
         math.max(1L, (maxN + 199999L) / 200000L).toInt
       }
-    val e = assigned.withColumn("blk", pmod(xxhash64(col("vec_id")), lit(b)).cast("int"))
-    val sideA = e.select(col("cluster"), col("vec_id").as("ia"), col("embedding").as("ea"), col("blk").as("bi"))
-      .withColumn("bj", explode(sequence(col("bi"), lit(b - 1))))
-    val sideB = e.select(col("cluster"), col("vec_id").as("ib"), col("embedding").as("eb"), col("blk").as("bj"))
-      .withColumn("bi", explode(sequence(lit(0), col("bj"))))
-    sideA.join(sideB, Seq("cluster", "bi", "bj"))
-      .filter(col("bi") =!= col("bj") || col("ia") < col("ib"))
-      .filter(cosineFast(col("ea"), col("eb")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("ea"), col("eb")), decNorm2(col("ea")), decNorm2(col("eb"))))
-      .filter(col("cosine") >= threshold)
-      .select(least(col("ia"), col("ib")).as("a"), greatest(col("ia"), col("ib")).as("b"),
-        col("cluster"), col("cosine"))
-      .orderBy(col("a"), col("b"))
+    blockPairs(assigned, b, threshold, "cluster")
   }
 
   /** Radius (range) search — every corpus vector with exact cosine ≥
     * `threshold` of each query, the FAISS `range_search` analog
     * (top-k's sibling: the caller wants ALL matches above a quality
-    * bar, not a fixed count). Same two-phase shape as
-    * [[annBruteForce]]: queries broadcast over ONE corpus scan, a
-    * codegen double-cosine prefilter (1e-3 margin ≫ double-vs-exact
-    * error) cuts the stream map-side, and only near-threshold
-    * survivors pay the exact decimal verification. No window, no
-    * top-k shuffle — the only exchange is the final presentation
-    * sort, so the scan parallelizes embarrassingly at any corpus
-    * size (the broadcast query set is the caller-bounded side).
+    * bar, not a fixed count): queries broadcast over ONE corpus scan
+    * and the threshold verify ([[verified]]) cuts the stream
+    * map-side. No window, no top-k shuffle — the only exchange is the
+    * final presentation sort, so the scan parallelizes embarrassingly
+    * at any corpus size (the broadcast query set is the
+    * caller-bounded side).
     */
   def annRange(embeddings: DataFrame, queries: Option[DataFrame] = None,
                threshold: Double = 0.4,
                queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
-    val corpus = embeddings.select(col("vec_id"), col("embedding"))
-    val qs = queries.getOrElse(defaultQueries(embeddings))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    corpus.join(broadcast(qs),
-        notSelf(queriesAreCorpusDerived.getOrElse(queries.isEmpty)))
-      .filter(cosineFast(col("qe"), col("embedding")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .filter(col("cosine") >= threshold)
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    rangeHits(vectors(embeddings).join(broadcast(flatQueries(qs)), notSelf(self)), threshold)
+  }
+
+  /** The range verify of (query_id, qe, vec_id, embedding) pairs as
+    * (query_id, neighbor_id, cosine) sorted by (query_id, neighbor_id).
+    */
+  private def rangeHits(pairs: DataFrame, threshold: Double): DataFrame =
+    verified(pairs, "qe", "embedding", threshold)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
       .orderBy(col("query_id"), col("neighbor_id"))
+
+  /** The IVF range probe over a cell assignment: each query's
+    * `nprobe` nearest cells ([[nearestCells]]), then the range verify
+    * against those cells' members only — [[annRangeIvf]] and
+    * [[annRangeIvfServed]] alike.
+    */
+  private def rangeProbe(index: SemanticIndex, queries: DataFrame, threshold: Double,
+                         nprobe: Int, excludeSelf: Boolean): DataFrame = {
+    val qs = nearestCells(withUnits(queries), "u", index.centroids, nprobe)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
+    rangeHits(index.assigned.join(broadcast(qs), Seq("cluster")).filter(notSelf(excludeSelf)),
+      threshold)
   }
 
   /** IVF range search — the FAISS `IndexIVF.range_search` analog and
@@ -777,19 +899,9 @@ object Similarity {
                   queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     // train + corpus assignment share one materialized corpus frame
     val (centroids, corpusA) = trainAssign(embeddings, nlist, ivfIters)
-    val corpus = corpusA
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-    val qs = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
-        centroids, nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
-    corpus.join(broadcast(qs), Seq("cluster"))
-      .filter(notSelf(queriesAreCorpusDerived.getOrElse(queries.isEmpty)))
-      .filter(cosineFast(col("qe"), col("embedding")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .filter(col("cosine") >= threshold)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("neighbor_id"))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    rangeProbe(SemanticIndex(centroids, corpusA.select(col("vec_id"), col("embedding"),
+      col("cluster"))), qs, threshold, nprobe, self)
   }
 
   /** Serve-from-frozen-index IVF range search — [[annRangeIvf]]'s
@@ -813,20 +925,10 @@ object Similarity {
                         threshold: Double = 0.4, nlist: Int = 8, ivfIters: Int = 3,
                         nprobe: Int = 2,
                         queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
-    val params = s"rangeivf;nlist=$nlist;ivfIt=$ivfIters;src=${sourceStamp(embeddings)}"
-    val index = FrozenIndex.served(SemanticKind, indexDir, params, embeddings,
-      countRows(embeddings))(semanticIndexBuild(embeddings, nlist, ivfIters))
-    val qs = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
-        index.centroids, nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
-    index.assigned.join(broadcast(qs), Seq("cluster"))
-      .filter(notSelf(queriesAreCorpusDerived.getOrElse(queries.isEmpty)))
-      .filter(cosineFast(col("qe"), col("embedding")) >= threshold - 1e-3)
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .filter(col("cosine") >= threshold)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("neighbor_id"))
+    val index = served(SemanticKind, indexDir, s"rangeivf;nlist=$nlist;ivfIt=$ivfIters",
+      embeddings)(semanticIndexBuild(embeddings, nlist, ivfIters))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    rangeProbe(index, qs, threshold, nprobe, self)
   }
 
   /** Self-match exclusion policy for the ann* family: when the query
@@ -841,28 +943,15 @@ object Similarity {
   private def notSelf(corpusDerived: Boolean): Column =
     if (corpusDerived) col("vec_id") =!= col("query_id") else lit(true)
 
-  /** Exact top-k cosine neighbors for the query set. Queries
-    * broadcast over one corpus scan; ranking uses the exact cosine
-    * with vec_id tiebreak so rank order is total.
+  /** Exact top-k cosine neighbors for the query set: queries
+    * broadcast over one corpus scan, the value cut at the k-th codegen
+    * double cosine ([[keepFastSurvivors]]), then the exact re-rank.
     */
   def annBruteForce(embeddings: DataFrame, queries: Option[DataFrame] = None,
                     k: Int = 5): DataFrame = {
-    val corpus = embeddings.select(col("vec_id"), col("embedding"))
-    val qs = queries.getOrElse(defaultQueries(embeddings))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    // Phase 1: native double cosine over the full scan, cut by VALUE
-    // at the k-th fast score (see keepFastSurvivors). Phase 2: exact
-    // decimal re-rank of the survivors only (the oracle-parity values).
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val scanned = corpus.join(broadcast(qs), notSelf(corpusDerived = queries.isEmpty))
-      .withColumn("fast", cosineFast(col("qe"), col("embedding")))
-    keepFastSurvivors(scanned, k)
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    val (qs, self) = querySet(embeddings, queries)
+    exactTopK(keepFastSurvivors(
+      vectors(embeddings).join(broadcast(flatQueries(qs)), notSelf(self)), k), k)
   }
 
   /** Deterministic Lloyd's k-means over the embedding column — the
@@ -910,6 +999,12 @@ object Similarity {
   private def units(e: Column): Column =
     graft.plans.IntegerUnits.quantizeUnits(e)
 
+  /** The L2-normalized `embedding` in 1e-8 units — the PQ, OPQ and SQ
+    * working space ([[pqCorpusUnits]]).
+    */
+  private def normalizedUnits: Column =
+    graft.plans.IntegerUnits.normalizeUnits(col("embedding"))
+
   /** FULL IVF search: the coarse quantizer is the TRAINED k-means
     * model (vs [[annIvf]], which uses the pre-given label column as
     * its cell assignment): the corpus is assigned in ONE scan, and
@@ -939,13 +1034,12 @@ object Similarity {
     val (centroids, corpusA) = trainAssign(embeddings, nlist, iters)
     val corpus = corpusA
       .select(col("vec_id"), col("embedding"), col("cluster").as("label"))
-    val probed = nearestCells(withUnits(queries.getOrElse(defaultQueries(embeddings))), "u",
-        centroids, nprobe)
+    val (qs, self) = querySet(embeddings, queries)
+    val probed = nearestCells(withUnits(qs), "u", centroids, nprobe)
       .select(col("vec_id"), col("embedding"), col("cluster").as("label"))
     // self-exclusion follows OUR caller's query provenance, not the
     // always-Some frame handed to annIvf (see notSelf)
-    annIvf(corpus, Some(probed), k,
-      queriesAreCorpusDerived = Some(queries.isEmpty))
+    annIvf(corpus, Some(probed), k, queriesAreCorpusDerived = Some(self))
   }
 
   /** Per-label centroids in long form (label, dim, mean) — the
@@ -990,10 +1084,9 @@ object Similarity {
       df.select(col(idCol), col("embedding"),
         posexplode(bandSigs(col("embedding"), LshPlanes.scaled, LshPlanes.rowsPerBand))
           .as(Seq("band", "sig")))
-    val corpus = banded(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
-    val qBanded = banded(
-      queries.getOrElse(defaultQueries(embeddings))
-        .select(col("vec_id").as("query_id"), col("embedding")), "query_id")
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    val corpus = banded(vectors(embeddings), "vec_id")
+    val qBanded = banded(qs.select(col("vec_id").as("query_id"), col("embedding")), "query_id")
       .withColumnRenamed("embedding", "qe")
       .withColumnRenamed("band", "qband").withColumnRenamed("sig", "qsig")
     // Candidate dedup on IDS ONLY: a band can match a (query, vector)
@@ -1004,29 +1097,17 @@ object Similarity {
     // side from the (small, broadcast) query frame, the corpus side
     // from a scan co-joined on vec_id.
     val cands = corpus.join(broadcast(qBanded),
-        col("band") === col("qband") && col("sig") === col("qsig") &&
-          notSelf(queriesAreCorpusDerived.getOrElse(queries.isEmpty)))
+        col("band") === col("qband") && col("sig") === col("qsig") && notSelf(self))
       .select(col("query_id"), col("vec_id")).distinct()
-    val qVecs = queries.getOrElse(defaultQueries(embeddings))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     // Two-phase re-rank like annBruteForce/annIvf: the candidate
     // window sorts on the CODEGEN double cosine (WindowGroupLimit
     // prepasses re-evaluate the sort key — on the interpreted decimal
     // fold that re-evaluation dominated the whole query), the value
     // cut keeps every possible true top-k member, and the exact
     // decimal cosine prices only the survivors.
-    val scanned = cands
-      .join(broadcast(qVecs), "query_id")
-      .join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
-      .withColumn("fast", cosineFast(col("qe"), col("embedding")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    keepFastSurvivors(scanned, k)
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    exactTopK(keepFastSurvivors(cands
+      .join(broadcast(flatQueries(qs)), "query_id")
+      .join(vectors(embeddings), "vec_id"), k), k)
   }
 
   /** Product-quantization ANN (PQ + asymmetric-distance scan) — the
@@ -1045,10 +1126,8 @@ object Similarity {
     * approximate distance of a corpus vector is m TABLE LOOKUPS —
     * the fused [[graft.plans.PqAdcSumI64]] codegen kernel, one
     * compiled loop over Σ_j qtable[j][codes[j]] — instead
-    * of a dim-wide dot product. Top `rerank` candidates by ADC
-    * distance then re-rank with the exact decimal cosine, so the
-    * emitted scores are oracle-grade even though candidate selection
-    * is approximate.
+    * of a dim-wide dot product, the candidate distance of the
+    * family's two-phase search.
     *
     * At 100 TB the codes table is the only thing the scan touches
     * (raw vectors are fetched just for the ≤ rerank×queries
@@ -1067,8 +1146,8 @@ object Similarity {
             k: Int = 5, m: Int = 8, codebookSize: Int = 8, iters: Int = 3,
             rerank: Int = 50, queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     val index = pqIndexBuild(embeddings, m, codebookSize, iters)
-    pqSearch(index, queries.getOrElse(defaultQueries(embeddings)), k, rerank,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    pqSearch(index, qs, k, rerank, excludeSelf = self)
   }
 
   /** A trained, materialized PQ index: the serving-side model. The
@@ -1097,19 +1176,13 @@ object Similarity {
   }
 
   /** Search a trained [[PqIndex]] with any (vec_id, embedding) query
-    * frame: ADC candidate cut over the codes scan, exact decimal
-    * re-rank of the top `rerank`. `excludeSelf` only for
-    * corpus-derived query frames (see [[notSelf]]).
+    * frame: [[twoPhase]] with the ADC table as the query side and
+    * [[adcDistance]] as the candidate distance.
     */
   def pqSearch(index: PqIndex, queries: DataFrame, k: Int = 5, rerank: Int = 50,
-               excludeSelf: Boolean = false): DataFrame = {
-    val qs = pqQueries(queries, index.codebooks, pqDsub(index.m))
-    val cands = pqAdcCandidates(
-      index.codes.join(broadcast(qs), notSelf(excludeSelf)), index.m, rerank)
-    pqExactRerank(cands, index.corpus, k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+               excludeSelf: Boolean = false): DataFrame =
+    twoPhase(index.codes, pqQueries(queries, index.codebooks, pqDsub(index.m)),
+      adcDistance(index.m), index.corpus, k, rerank, excludeSelf)
 
   /** md5-seeded ±1 sign diagonal for the OPQ rotation — deterministic
     * on any engine (the oracle generator inlines the same values as
@@ -1227,8 +1300,8 @@ object Similarity {
              rerank: Int = 50, refineIters: Int = 1,
              queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     val index = opqIndexBuild(embeddings, m, codebookSize, iters, refineIters)
-    opqSearch(index, queries.getOrElse(defaultQueries(embeddings)), k, rerank,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    opqSearch(index, qs, k, rerank, excludeSelf = self)
   }
 
   /** A trained, materialized OPQ index: the learned rotation (the
@@ -1259,9 +1332,7 @@ object Similarity {
     val dsub = pqDsub(m)
     val signs = opqSigns(dim)
     var corpusR = embeddings
-      .select(col("vec_id"),
-        graft.plans.FwhtSignsI64.fwhtSigns(
-          graft.plans.IntegerUnits.normalizeUnits(col("embedding")), signs).as("un"))
+      .select(col("vec_id"), graft.plans.FwhtSignsI64.fwhtSigns(normalizedUnits, signs).as("un"))
       .honestCheckpoint()
     var books = pqTrainCodebooks(corpusR, m, codebookSize, iters, dsub)
     var perms = Seq.empty[(Array[Int], Array[Long])]
@@ -1280,19 +1351,13 @@ object Similarity {
     OpqIndex(signs, perms, books, codes, vectors(embeddings), m)
   }
 
-  /** Search a trained [[OpqIndex]]: rotate the queries into the
-    * index's working space, then the shared ADC cut + exact decimal
-    * re-rank — [[pqSearch]]'s contract.
+  /** Search a trained [[OpqIndex]]: [[pqSearch]] with the queries
+    * rotated into the index's working space.
     */
   def opqSearch(index: OpqIndex, queries: DataFrame, k: Int = 5, rerank: Int = 50,
-                excludeSelf: Boolean = false): DataFrame = {
-    val qs = pqQueries(queries, index.codebooks, pqDsub(index.m), index.rot)
-    val cands = pqAdcCandidates(
-      index.codes.join(broadcast(qs), notSelf(excludeSelf)), index.m, rerank)
-    pqExactRerank(cands, index.corpus, k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+                excludeSelf: Boolean = false): DataFrame =
+    twoPhase(index.codes, pqQueries(queries, index.codebooks, pqDsub(index.m), index.rot),
+      adcDistance(index.m), index.corpus, k, rerank, excludeSelf)
 
   /** Serve from a frozen OPQ index ([[OpqKind]]): codes like
     * [[PqKind]]'s, and the rotation model — O(d) pre-signs and
@@ -1304,9 +1369,8 @@ object Similarity {
   def annOpqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                    m: Int = 8, codebookSize: Int = 8, iters: Int = 3,
                    rerank: Int = 50, refineIters: Int = 1): DataFrame = {
-    val params = s"opq;m=$m;cb=$codebookSize;it=$iters;ref=$refineIters;src=${sourceStamp(embeddings)}"
-    opqSearch(FrozenIndex.served(OpqKind, indexDir, params, embeddings, countRows(embeddings))(
-        opqIndexBuild(embeddings, m, codebookSize, iters, refineIters)),
+    opqSearch(served(OpqKind, indexDir, s"opq;m=$m;cb=$codebookSize;it=$iters;ref=$refineIters",
+        embeddings)(opqIndexBuild(embeddings, m, codebookSize, iters, refineIters)),
       defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
@@ -1330,10 +1394,9 @@ object Similarity {
                   m: Int = 8, codebookSize: Int = 8, iters: Int = 3,
                   rerank: Int = 50): DataFrame = {
     // build-parameter fingerprint (k/rerank are search-time knobs —
-    // not part of the frozen model) + the corpus row count
-    val params = s"pq;m=$m;cb=$codebookSize;it=$iters;src=${sourceStamp(embeddings)}"
-    pqSearch(FrozenIndex.served(PqKind, indexDir, params, embeddings,
-        countRows(embeddings))(pqIndexBuild(embeddings, m, codebookSize, iters)),
+    // not part of the frozen model)
+    pqSearch(served(PqKind, indexDir, s"pq;m=$m;cb=$codebookSize;it=$iters", embeddings)(
+        pqIndexBuild(embeddings, m, codebookSize, iters)),
       defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
@@ -1372,28 +1435,22 @@ object Similarity {
     SqIndex(bounds.map(_._2), bounds.map(t => t._3 - t._2), codes, vectors(embeddings))
   }
 
-  /** Two-phase SQ search: the fused asymmetric integer distance
-    * ([[graft.plans.SqAdcL2I64]] — decode inlined, nothing
-    * materialized) ranks the codes scan, the top `rerank` survivors
-    * get the exact decimal cosine re-rank. Same bounded-query-set
-    * broadcast shape as [[pqSearch]]: at 100 TB the scan reads dim
-    * bytes/vector of codes, never the raw corpus.
+  /** Two-phase SQ search ([[twoPhase]]): the query's normalized
+    * units against the codes through [[sqDistance]]. At 100 TB the
+    * candidate scan reads dim bytes/vector of codes.
     */
   def sqSearch(index: SqIndex, queries: DataFrame, k: Int = 5, rerank: Int = 50,
-               excludeSelf: Boolean = false): DataFrame = {
-    val qs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("qun"))
-    val wS = Window.partitionBy(col("query_id")).orderBy(col("sdist"), col("vec_id"))
-    val cands = index.codes.join(broadcast(qs), notSelf(excludeSelf))
-      .withColumn("sdist",
-        graft.plans.ScalarQuant.sqAdcL2(col("qun"), col("codes"), index.mins, index.spans))
-      .withColumn("ra", row_number().over(wS))
-      .filter(col("ra") <= rerank)
-      .select(col("query_id"), col("qe"), col("vec_id"))
-    pqExactRerank(cands, index.corpus, k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+               excludeSelf: Boolean = false): DataFrame =
+    twoPhase(index.codes, flatQueries(queries, normalizedUnits.as("qun")),
+      sqDistance(index.mins, index.spans), index.corpus, k, rerank, excludeSelf)
+
+  /** The SQ kinds' candidate distance: the fused asymmetric integer
+    * L2 of the query units `qun` against the `codes`
+    * ([[graft.plans.SqAdcL2I64]] — decode inlined, nothing
+    * materialized).
+    */
+  private def sqDistance(mins: Array[Long], spans: Array[Long]): Column =
+    graft.plans.ScalarQuant.sqAdcL2(col("qun"), col("codes"), mins, spans)
 
   /** SQ8 ANN as one query: train bounds + encode + two-phase search.
     * Deterministic integer units end-to-end → full DuckDB oracle.
@@ -1402,8 +1459,8 @@ object Similarity {
             k: Int = 5, rerank: Int = 50,
             queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     val index = sqIndexBuild(embeddings)
-    sqSearch(index, queries.getOrElse(defaultQueries(embeddings)), k, rerank,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    sqSearch(index, qs, k, rerank, excludeSelf = self)
   }
 
   /** Serve from a frozen SQ8 index ([[SqKind]]: the codes a serve
@@ -1413,9 +1470,7 @@ object Similarity {
     */
   def annSqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                   rerank: Int = 50): DataFrame = {
-    val params = s"sq8;src=${sourceStamp(embeddings)}"
-    sqSearch(FrozenIndex.served(SqKind, indexDir, params, embeddings,
-        countRows(embeddings))(sqIndexBuild(embeddings)),
+    sqSearch(served(SqKind, indexDir, "sq8", embeddings)(sqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
@@ -1427,8 +1482,7 @@ object Similarity {
     * `nprobe` nearest cells and the fused asymmetric integer
     * distance ([[graft.plans.SqAdcL2I64]]) ranks ONLY those cells'
     * codes (candidates ≈ nprobe/nlist of the corpus — the cell prune
-    * that removes flat SQ's linear ADC term), then the top `rerank`
-    * survivors get the exact decimal re-rank. Where IVF-PQ spends m
+    * that removes flat SQ's linear ADC term). Where IVF-PQ spends m
     * bytes/vector for maximum compression, IVF-SQ spends dim
     * bytes/vector for SQ8's measured recall@5 = 1.000 — the layout
     * for corpora that need both the cell prune AND near-exact
@@ -1441,8 +1495,8 @@ object Similarity {
                rerank: Int = 50, nprobe: Int = 1,
                queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     val index = ivfSqIndexBuild(embeddings, nlist, ivfIters)
-    ivfSqSearch(index, queries.getOrElse(defaultQueries(embeddings)), k, rerank, nprobe,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    ivfSqSearch(index, qs, k, rerank, nprobe, excludeSelf = self)
   }
 
   /** A trained, materialized IVF-SQ index: per-dimension SQ8 bounds
@@ -1467,28 +1521,14 @@ object Similarity {
   }
 
   /** Search a trained [[IvfSqIndex]] — the serve half of
-    * [[annIvfSq]], same math.
+    * [[annIvfSq]]: [[sqSearch]] over the probed cells.
     */
   def ivfSqSearch(index: IvfSqIndex, queries: DataFrame, k: Int = 5,
                   rerank: Int = 50, nprobe: Int = 1,
-                  excludeSelf: Boolean = false): DataFrame = {
-    val qs = probedQueries(queries, index.centroids, nprobe,
-      graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("qun"))
-    // rerank window cuts across all probed cells at once (a corpus
-    // vector lives in exactly one cell, so no pair duplicates)
-    val wS = Window.partitionBy(col("query_id")).orderBy(col("sdist"), col("vec_id"))
-    val cands = index.codes.join(broadcast(qs),
-        col("label") === col("qlabel") && notSelf(excludeSelf))
-      .withColumn("sdist",
-        graft.plans.ScalarQuant.sqAdcL2(col("qun"), col("codes"), index.mins, index.spans))
-      .withColumn("ra", row_number().over(wS))
-      .filter(col("ra") <= rerank)
-      .select(col("query_id"), col("qe"), col("label"), col("vec_id"))
-    pqExactRerank(cands, index.corpus, k, carry = Seq("label"))
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+                  excludeSelf: Boolean = false): DataFrame =
+    twoPhase(index.codes,
+      probedQueries(queries, index.centroids, nprobe, normalizedUnits.as("qun")),
+      sqDistance(index.mins, index.spans), index.corpus, k, rerank, excludeSelf)
 
   /** Serve from a frozen IVF-SQ index ([[IvfSqKind]]: cell-labeled
     * codes; the 2×dim bounds and the centroids in the meta row) —
@@ -1497,9 +1537,8 @@ object Similarity {
     */
   def annIvfSqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      rerank: Int = 50, nprobe: Int = 1): DataFrame = {
-    val params = s"ivfsq;nlist=8;ivfIt=3;src=${sourceStamp(embeddings)}"
-    ivfSqSearch(FrozenIndex.served(IvfSqKind, indexDir, params, embeddings,
-        countRows(embeddings))(ivfSqIndexBuild(embeddings)),
+    ivfSqSearch(served(IvfSqKind, indexDir, "ivfsq;nlist=8;ivfIt=3", embeddings)(
+        ivfSqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
@@ -1528,38 +1567,31 @@ object Similarity {
     BqIndex(
       embeddings.select(col("vec_id"), signPack(col("embedding")).as("sig"))
         .honestCheckpoint(),
-      embeddings.select(col("vec_id"), col("embedding")))
+      vectors(embeddings))
   }
 
-  /** Search a [[BqIndex]]: Hamming candidate cut over the signature
-    * scan (rank by (hamming, vec_id) — total order, deterministic
-    * candidate set, the pqAdcCandidates shape so Spark's
-    * WindowGroupLimit keeps the top-rerank selection map-side
-    * partial), then the family's exact decimal re-rank on the
-    * original vectors.
+  /** Search a [[BqIndex]] ([[twoPhase]]): the Hamming distance of
+    * the query's signature to each scanned one.
     */
   def bqSearch(index: BqIndex, queries: DataFrame, k: Int = 5, rerank: Int = 20,
-               excludeSelf: Boolean = false): DataFrame = {
-    import graft.plans.BinarySig.{hammingPacked, signPack}
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), signPack(col("embedding")).as("qsig"))
-    val wH = Window.partitionBy(col("query_id")).orderBy(col("hamming"), col("vec_id"))
-    val cands = index.sigs.join(broadcast(qs), notSelf(excludeSelf))
-      .withColumn("hamming", hammingPacked(col("sig"), col("qsig")))
-      .withColumn("rh", row_number().over(wH))
-      .filter(col("rh") <= rerank)
-      .select(col("query_id"), col("qe"), col("vec_id"))
-    pqExactRerank(cands, index.corpus, k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+               excludeSelf: Boolean = false): DataFrame =
+    twoPhase(index.sigs, flatQueries(queries, querySig), hamming, index.corpus, k, rerank,
+      excludeSelf)
+
+  /** The BQ kinds' query side: the query's packed sign signature. */
+  private def querySig: Column = graft.plans.BinarySig.signPack(col("embedding")).as("qsig")
+
+  /** The BQ kinds' candidate distance: popcount of XOR. */
+  private def hamming: Column = graft.plans.BinarySig.hammingPacked(col("sig"), col("qsig"))
 
   /** One-shot build + search — the `ann_bq` query. */
   def annBq(embeddings: DataFrame, queries: Option[DataFrame] = None,
             k: Int = 5, rerank: Int = 20,
-            queriesAreCorpusDerived: Option[Boolean] = None): DataFrame =
-    bqSearch(bqIndexBuild(embeddings), queries.getOrElse(defaultQueries(embeddings)),
-      k, rerank, excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+            queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
+    val index = bqIndexBuild(embeddings)
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    bqSearch(index, qs, k, rerank, excludeSelf = self)
+  }
 
   /** Serve from a frozen BQ index ([[BqKind]]: the signature table a
     * serve scans — dim/8 bytes per vector — and a meta row with no
@@ -1567,9 +1599,7 @@ object Similarity {
     */
   def annBqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                   rerank: Int = 20): DataFrame = {
-    val params = s"bq;w=32;src=${sourceStamp(embeddings)}"
-    bqSearch(FrozenIndex.served(BqKind, indexDir, params, embeddings,
-        countRows(embeddings))(bqIndexBuild(embeddings)),
+    bqSearch(served(BqKind, indexDir, "bq;w=32", embeddings)(bqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, excludeSelf = true)
   }
 
@@ -1614,7 +1644,7 @@ object Similarity {
       .select(col("vec_id"), signPackUnits(col("u")).as("s1"),
         signPackUnits(col("r")).as("s2"), col("alpha"), col("beta"))
       .honestCheckpoint()
-    BqResidualIndex(enc, embeddings.select(col("vec_id"), col("embedding")))
+    BqResidualIndex(enc, vectors(embeddings))
   }
 
   /** Integer half-up mean of |xᵢ| over an array<long> — the scale
@@ -1626,35 +1656,28 @@ object Similarity {
     expr(s"(2 * aggregate($name, CAST(0 AS BIGINT), (acc, x) -> acc + abs(x))" +
       s" + size($name)) DIV (2 * CAST(size($name) AS BIGINT))")
 
-  /** Search a [[BqResidualIndex]]: asymmetric two-term integer score
-    * over the signature scan, (score DESC, vec_id) candidate cut,
-    * then the family's exact decimal re-rank.
+  /** Search a [[BqResidualIndex]] ([[twoPhase]]): the candidate
+    * distance is the NEGATED asymmetric two-term integer score
+    * (higher score is nearer), exact under negation by the class
+    * doc's |score| < 1e18 bound.
     */
   def bqResidualSearch(index: BqResidualIndex, queries: DataFrame, k: Int = 5,
                        rerank: Int = 20, excludeSelf: Boolean = false): DataFrame = {
     import graft.plans.BinarySig.signDotPacked
-    val qs = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), units(col("embedding")).as("qu"))
-    val wS = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
-    val cands = index.sigs.join(broadcast(qs), notSelf(excludeSelf))
-      .withColumn("score",
-        col("alpha") * signDotPacked(col("qu"), col("s1")) +
-          col("beta") * signDotPacked(col("qu"), col("s2")))
-      .withColumn("rs", row_number().over(wS))
-      .filter(col("rs") <= rerank)
-      .select(col("query_id"), col("qe"), col("vec_id"))
-    pqExactRerank(cands, index.corpus, k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    val score = col("alpha") * signDotPacked(col("qu"), col("s1")) +
+      col("beta") * signDotPacked(col("qu"), col("s2"))
+    twoPhase(index.sigs, flatQueries(queries, units(col("embedding")).as("qu")), -score,
+      index.corpus, k, rerank, excludeSelf)
   }
 
   /** One-shot build + search — the `ann_bq_residual` query. */
   def annBqResidual(embeddings: DataFrame, queries: Option[DataFrame] = None,
                     k: Int = 5, rerank: Int = 20,
-                    queriesAreCorpusDerived: Option[Boolean] = None): DataFrame =
-    bqResidualSearch(bqResidualIndexBuild(embeddings),
-      queries.getOrElse(defaultQueries(embeddings)), k, rerank,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+                    queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
+    val index = bqResidualIndexBuild(embeddings)
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    bqResidualSearch(index, qs, k, rerank, excludeSelf = self)
+  }
 
   /** A trained IVF-BQ index — the quantizer matrix's binary cell
     * (FAISS `IndexBinaryIVF` in spirit: coarse cells prune the scan,
@@ -1682,38 +1705,24 @@ object Similarity {
     IvfBqIndex(centroids, sigs, vectors(embeddings))
   }
 
-  /** Search a trained [[IvfBqIndex]]: query-side top-`nprobe` cell
-    * assignment, Hamming rank within the probed cells' signatures
-    * (one rerank window across all probed cells — a corpus vector
-    * lives in exactly one cell, so no pair duplicates), then the
-    * family's shared exact decimal re-rank with the label carried.
+  /** Search a trained [[IvfBqIndex]]: [[bqSearch]] over the probed
+    * cells' signatures.
     */
   def ivfBqSearch(index: IvfBqIndex, queries: DataFrame, k: Int = 5,
                   rerank: Int = 20, nprobe: Int = 1,
-                  excludeSelf: Boolean = false): DataFrame = {
-    import graft.plans.BinarySig.{hammingPacked, signPack}
-    val qs = probedQueries(queries, index.centroids, nprobe, signPack(col("embedding")).as("qsig"))
-    val wH = Window.partitionBy(col("query_id")).orderBy(col("hamming"), col("vec_id"))
-    val cands = index.sigs.join(broadcast(qs),
-        col("label") === col("qlabel") && notSelf(excludeSelf))
-      .withColumn("hamming", hammingPacked(col("sig"), col("qsig")))
-      .withColumn("rh", row_number().over(wH))
-      .filter(col("rh") <= rerank)
-      .select(col("query_id"), col("qe"), col("label"), col("vec_id"))
-    pqExactRerank(cands, index.corpus, k, carry = Seq("label"))
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+                  excludeSelf: Boolean = false): DataFrame =
+    twoPhase(index.sigs, probedQueries(queries, index.centroids, nprobe, querySig), hamming,
+      index.corpus, k, rerank, excludeSelf)
 
   /** One-shot build + search — the `ann_ivfbq` query. */
   def annIvfBq(embeddings: DataFrame, queries: Option[DataFrame] = None,
                k: Int = 5, nlist: Int = 8, ivfIters: Int = 3,
                rerank: Int = 20, nprobe: Int = 1,
-               queriesAreCorpusDerived: Option[Boolean] = None): DataFrame =
-    ivfBqSearch(ivfBqIndexBuild(embeddings, nlist, ivfIters),
-      queries.getOrElse(defaultQueries(embeddings)), k, rerank, nprobe,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+               queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
+    val index = ivfBqIndexBuild(embeddings, nlist, ivfIters)
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    ivfBqSearch(index, qs, k, rerank, nprobe, excludeSelf = self)
+  }
 
   /** Serve from a frozen IVF-BQ index ([[IvfBqKind]]: cell-labeled
     * signatures, centroids in the meta row) — bit-identical to
@@ -1722,9 +1731,8 @@ object Similarity {
     */
   def annIvfBqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      rerank: Int = 20, nprobe: Int = 1): DataFrame = {
-    val params = s"ivfbq;nlist=8;ivfIt=3;w=32;src=${sourceStamp(embeddings)}"
-    ivfBqSearch(FrozenIndex.served(IvfBqKind, indexDir, params, embeddings,
-        countRows(embeddings))(ivfBqIndexBuild(embeddings)),
+    ivfBqSearch(served(IvfBqKind, indexDir, "ivfbq;nlist=8;ivfIt=3;w=32", embeddings)(
+        ivfBqIndexBuild(embeddings)),
       defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
@@ -1898,9 +1906,9 @@ object Similarity {
     * Lloyd coarse quantizer ([[lloyd]], raw-vector integer units)
     * restricts each query to its own cell (1/nlist of the corpus),
     * and within the cell ranking reads PQ CODES only (global
-    * codebooks on normalized vectors, like [[annPq]]) before the
-    * exact decimal re-rank. At 100 TB the scan touches `codes`+`label`
-    * (9 bytes/vector) for nprobe/nlist of the corpus — the two
+    * codebooks on normalized vectors, like [[annPq]]). At 100 TB the
+    * scan touches `codes`+`label` (9 bytes/vector) for nprobe/nlist
+    * of the corpus — the two
     * pruning axes compose multiplicatively, and `nprobe` (the
     * [[nearestCells]] recall knob) trades candidate volume back
     * for recall when cells are imbalanced. (Production refinement — per-cell
@@ -1917,8 +1925,8 @@ object Similarity {
                rerank: Int = 50, nprobe: Int = 1,
                queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     val index = ivfPqIndexBuild(embeddings, nlist, ivfIters, m, codebookSize, pqIters)
-    ivfPqSearch(index, queries.getOrElse(defaultQueries(embeddings)), k, rerank, nprobe,
-      excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    ivfPqSearch(index, qs, k, rerank, nprobe, excludeSelf = self)
   }
 
   /** A trained, materialized IVF-PQ index: coarse quantizer
@@ -1948,22 +1956,21 @@ object Similarity {
   def ivfPqIndexBuild(embeddings: DataFrame, nlist: Int = 8, ivfIters: Int = 3,
                       m: Int = 8, codebookSize: Int = 8, pqIters: Int = 3): IvfPqIndex = {
     val dsub = pqDsub(m)
-    val vecs = ivfPqUnits(spreadForK(embeddings.select(col("vec_id"), col("embedding")), nlist))
+    val vecs = ivfPqUnits(spreadForK(vectors(embeddings), nlist))
       .honestCheckpoint()
     val init = initRows(vecs, math.max(nlist, codebookSize), "u", "un")
     val centroids = lloyd(vecs, "u", unitsOf(init.take(nlist), 0), ivfIters)
     val codebooks = pqTrainFrom(vecs, "un", unitsOf(init.take(codebookSize), 1),
       m, codebookSize, pqIters, dsub)
     IvfPqIndex(codebooks, centroids, ivfPqCodes(vecs, codebooks, dsub, cellOf(centroids)),
-      embeddings.select(col("vec_id"), col("embedding")), m)
+      vectors(embeddings), m)
   }
 
   /** The raw layout's working frame: (vec_id, u, un) — raw units for
     * the coarse cells, normalized units for PQ.
     */
   private def ivfPqUnits(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), units(col("embedding")).as("u"),
-      graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
+    df.select(col("vec_id"), units(col("embedding")).as("u"), normalizedUnits.as("un"))
 
   /** The raw layout's coarse cell of each row: the argmin centroid of
     * its units `u`, or null under no centroids (an empty training
@@ -1991,19 +1998,9 @@ object Similarity {
                   excludeSelf: Boolean = false): DataFrame = {
     require(!index.residual,
       "this index holds residual codebooks — search it with ivfPqResidualSearch")
-    // nprobe rows per query: the ADC scan reads codes from the
-    // query's nprobe nearest cells; the per-query rerank window then
-    // cuts across all probed cells at once.
-    val qs = probedQueries(queries, index.centroids, nprobe,
-      pqQTableOf(col("embedding"), index.codebooks, pqDsub(index.m)).as("qtable"))
-    val cands = pqAdcCandidates(
-      index.codes.join(broadcast(qs),
-        col("label") === col("qlabel") && notSelf(excludeSelf)),
-      index.m, rerank, carry = Seq("label"))
-    pqExactRerank(cands, index.corpus, k, carry = Seq("label"))
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    twoPhase(index.codes, probedQueries(queries, index.centroids, nprobe,
+        pqQTableOf(index.codebooks, pqDsub(index.m))),
+      adcDistance(index.m), index.corpus, k, rerank, excludeSelf)
   }
 
   /** Residual IVF-PQ — the refinement production IVF-PQ systems
@@ -2020,9 +2017,7 @@ object Similarity {
     *
     * Search: each (query, probed cell) pair builds its OWN ADC table
     * from the query's residual against that cell — nprobe small
-    * tables per query, the standard residual-IVFPQ query cost. The
-    * exact-decimal re-rank then prices survivors on the ORIGINAL
-    * embeddings, so emitted scores are oracle-grade as everywhere.
+    * tables per query, the standard residual-IVFPQ query cost.
     *
     * Every stage stays in exact integer units (residual subtraction
     * is Long arithmetic; |r| ≤ 4e8 keeps 8-dim squared sums below
@@ -2036,8 +2031,8 @@ object Similarity {
                        rerank: Int = 50, nprobe: Int = 1,
                        queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
     val index = ivfPqResidualIndexBuild(embeddings, nlist, ivfIters, m, codebookSize, pqIters)
-    ivfPqResidualSearch(index, queries.getOrElse(defaultQueries(embeddings)), k, rerank,
-      nprobe, excludeSelf = queriesAreCorpusDerived.getOrElse(queries.isEmpty))
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
+    ivfPqResidualSearch(index, qs, k, rerank, nprobe, excludeSelf = self)
   }
 
   /** Cell centroid as a label-dispatched plan literal (nlist × dim
@@ -2072,7 +2067,7 @@ object Similarity {
     val books = pqTrainCodebooks(rx.select(col("vec_id"), col("un")), m, codebookSize,
       pqIters, dsub)
     IvfPqIndex(books, centroids, ivfPqCodes(rx, books, dsub, col("label")),
-      embeddings.select(col("vec_id"), col("embedding")), m, residual = true)
+      vectors(embeddings), m, residual = true)
   }
 
   /** The residual layout's rows of a (vec_id, un) frame as one
@@ -2089,34 +2084,21 @@ object Similarity {
   /** Search a residual-trained [[IvfPqIndex]] — the serve half of
     * [[annIvfPqResidual]]: each (query, probed cell) pair builds its
     * OWN ADC table from the query's residual against that cell's
-    * centroid (the standard residual-IVFPQ query cost), then the
-    * usual exact decimal re-rank on the original embeddings.
+    * centroid (the standard residual-IVFPQ query cost).
     */
   def ivfPqResidualSearch(index: IvfPqIndex, queries: DataFrame, k: Int = 5,
                           rerank: Int = 50, nprobe: Int = 1,
                           excludeSelf: Boolean = false): DataFrame = {
     require(index.residual,
       "this index holds raw-vector codebooks — search it with ivfPqSearch")
-    val dsub = pqDsub(index.m)
-    val books = index.codebooks
-    val qU = queries.select(col("vec_id"), col("embedding"),
-      graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
     // one row per (query, probed cell), each with its OWN residual
     // ADC table against that cell's centroid
-    val qProbe = nearestCells(qU, "un", index.centroids, nprobe)
-      .select(col("vec_id"), col("embedding"), col("un"), col("cluster").as("qlabel"))
-      .withColumn("qres",
-        zip_with(col("un"), centroidOf(index.centroids, col("qlabel")), (a, b) => a - b))
-    val qs = qProbe.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      col("qlabel"), graft.plans.PqQuant.pqQTable(col("qres"), books, dsub).as("qtable"))
-    val cands = pqAdcCandidates(
-      index.codes.join(broadcast(qs),
-        col("label") === col("qlabel") && notSelf(excludeSelf)),
-      index.m, rerank, carry = Seq("label"))
-    pqExactRerank(cands, index.corpus, k, carry = Seq("label"))
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    val qres = zip_with(col("un"), centroidOf(index.centroids, col("cluster")), (a, b) => a - b)
+    val qs = nearestCells(queries.select(col("vec_id"), col("embedding"), normalizedUnits.as("un")),
+        "un", index.centroids, nprobe)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster").as("qlabel"),
+        graft.plans.PqQuant.pqQTable(qres, index.codebooks, pqDsub(index.m)).as("qtable"))
+    twoPhase(index.codes, qs, adcDistance(index.m), index.corpus, k, rerank, excludeSelf)
   }
 
   /** Serve-from-frozen-index residual IVF-PQ — [[annIvfPqResidual]]
@@ -2125,13 +2107,20 @@ object Similarity {
     * shares ann_ivfpq_residual's oracle.
     */
   def annIvfPqResidualServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
-                             nprobe: Int = 1, rerank: Int = 50): DataFrame = {
-    val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqResidualIndexBuild defaults
-    val index = FrozenIndex.served(IvfPqKind, indexDir, params, embeddings,
-      countRows(embeddings))(ivfPqResidualIndexBuild(embeddings))
-    ivfPqResidualSearch(index, defaultQueries(embeddings), k, rerank, nprobe,
-      excludeSelf = true)
-  }
+                             nprobe: Int = 1, rerank: Int = 50): DataFrame =
+    ivfPqResidualSearch(ivfPqResidualIndexServed(embeddings, indexDir),
+      defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
+
+  /** The frozen residual [[IvfPqIndex]] at `indexDir`, built with
+    * [[ivfPqResidualIndexBuild]]'s defaults, that
+    * [[annIvfPqResidualServed]] and the streaming serve
+    * ([[graft.streaming.SimilarityStream.ivfPqResidualServe]]) both
+    * read, under one build fingerprint.
+    */
+  private[graft] def ivfPqResidualIndexServed(embeddings: DataFrame,
+                                              indexDir: String): IvfPqIndex =
+    served(IvfPqKind, indexDir, "ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", embeddings)(
+      ivfPqResidualIndexBuild(embeddings))
 
   /** Encode new vectors under a FROZEN model — the shared `add()`
     * math for both IVF-PQ layouts: cell assignment with the frozen
@@ -2147,9 +2136,8 @@ object Similarity {
     // one pass over the new vectors, nothing materialized: each
     // kernel and the residual subtraction runs once per row
     if (index.residual)
-      ivfPqCodes(residuals(newVectors.select(col("vec_id"),
-          graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un")), index.centroids),
-        index.codebooks, dsub, col("label"))
+      ivfPqCodes(residuals(newVectors.select(col("vec_id"), normalizedUnits.as("un")),
+        index.centroids), index.codebooks, dsub, col("label"))
     else ivfPqCodes(ivfPqUnits(newVectors), index.codebooks, dsub, cellOf(index.centroids))
   }
 
@@ -2164,8 +2152,7 @@ object Similarity {
     index.copy(
       codes = index.codes.select(col("vec_id"), col("codes"), col("label"))
         .unionByName(ivfPqEncodeWith(index, newVectors)),
-      corpus = index.corpus.unionByName(
-        newVectors.select(col("vec_id"), col("embedding"))))
+      corpus = index.corpus.unionByName(vectors(newVectors)))
 
   /** Incremental index append — FAISS-style `add()` on disk, the
     * lifecycle step between a frozen index and a full retrain, for
@@ -2290,9 +2277,9 @@ object Similarity {
     */
   def annIvfPqServed(embeddings: DataFrame, indexDir: String, k: Int = 5,
                      nprobe: Int = 1, rerank: Int = 50): DataFrame = {
-    val params = s"ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${sourceStamp(embeddings)}" // ivfPqIndexBuild defaults
-    val index = FrozenIndex.served(IvfPqKind, indexDir, params, embeddings,
-      countRows(embeddings))(ivfPqIndexBuild(embeddings))
+    // ivfPqIndexBuild defaults
+    val index = served(IvfPqKind, indexDir, "ivfpq;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3", embeddings)(
+      ivfPqIndexBuild(embeddings))
     ivfPqSearch(index, defaultQueries(embeddings), k, rerank, nprobe, excludeSelf = true)
   }
 
@@ -2331,9 +2318,7 @@ object Similarity {
     * checkpoint instead ([[ivfPqIndexBuild]]).
     */
   private def pqCorpusUnits(embeddings: DataFrame): DataFrame =
-    embeddings
-      .select(col("vec_id"), graft.plans.IntegerUnits.normalizeUnits(col("embedding")).as("un"))
-      .honestCheckpoint()
+    embeddings.select(col("vec_id"), normalizedUnits.as("un")).honestCheckpoint()
 
   /** JOINT per-subspace k-means: all m codebooks advance in ONE
     * [[meanStep]] job per iteration (slice j of a row scans codebook
@@ -2386,66 +2371,32 @@ object Similarity {
     * SAME space the codebooks were trained in).
     */
   private[graft] def pqQueries(qs: DataFrame, books: IndexedSeq[IndexedSeq[Array[Long]]],
-                        dsub: Int,
-                        rot: Column => Column = identity): DataFrame =
-    qs.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      pqQTableOf(col("embedding"), books, dsub, rot).as("qtable"))
+                               dsub: Int, rot: Column => Column = identity): DataFrame =
+    flatQueries(qs, pqQTableOf(books, dsub, rot))
 
-  /** The ADC table (m×cb longs) of an `embedding` column against
-    * `books`, over its normalized units mapped by `rot` (see
-    * [[pqQueries]]). The whole table is ONE fused
+  /** The ADC table (m×cb longs) of the `embedding` column against
+    * `books`, as `qtable`, over its normalized units mapped by `rot`
+    * (see [[pqQueries]]). The whole table is ONE fused
     * kernel with the codebooks as a reference object
     * (plans/PqQuant.PqQTableI64): a per-subspace `transform` over a
     * typedlit codebook literal embedded m·cb struct literals in the
     * plan — 2048 at FAISS cb=256, ~2 s of analysis/serialization per
     * execution before any row moved.
     */
-  private def pqQTableOf(embedding: Column, books: IndexedSeq[IndexedSeq[Array[Long]]],
-                         dsub: Int, rot: Column => Column = identity): Column =
-    graft.plans.PqQuant.pqQTable(rot(graft.plans.IntegerUnits.normalizeUnits(embedding)),
-      books, dsub)
+  private def pqQTableOf(books: IndexedSeq[IndexedSeq[Array[Long]]], dsub: Int,
+                         rot: Column => Column = identity): Column =
+    graft.plans.PqQuant.pqQTable(rot(normalizedUnits), books, dsub).as("qtable")
 
-  /** ADC candidate cut: rank the joined (codes × queries) frame by
-    * the asymmetric distance and keep the top `rerank` per query.
-    *
-    * The ADC distance Σ_j qtable[j][codes[j]] is ONE fused codegen
-    * kernel ([[graft.plans.PqAdcSumI64]] — a compiled m-iteration
-    * loop reading both arrays once), replacing the static m-term
-    * `element_at(element_at(...))` chain (m separate two-level
-    * ArrayData walks per scanned code row; bit-identical, spec-
-    * pinned). This is the corpus-sized scan of the SERVING path —
-    * at 100 TB the codes table is all the scan touches, so its
-    * per-row constant is the family's deployment cost. All-Long
-    * sums — exact in any order.
+  /** The PQ kinds' candidate distance: the ADC sum
+    * Σ_j qtable[j][codes[j]] as ONE fused codegen kernel
+    * ([[graft.plans.PqAdcSumI64]] — a compiled m-iteration loop
+    * reading both arrays once). This is the corpus-sized scan of the
+    * SERVING path — at 100 TB the codes table is all the scan
+    * touches, so its per-row constant is the family's deployment
+    * cost. All-Long sums — exact in any order.
     */
-  private def pqAdcCandidates(joined: DataFrame, m: Int, rerank: Int,
-                              carry: Seq[String] = Nil): DataFrame = {
-    val adist = graft.plans.PqQuant.pqAdcSum(col("codes"), col("qtable"), m)
-    val wA = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    joined
-      .withColumn("adist", adist)
-      .withColumn("ra", row_number().over(wA))
-      .filter(col("ra") <= rerank)
-      .select((Seq("query_id", "qe", "vec_id") ++ carry).map(col): _*)
-  }
-
-  /** Exact decimal re-rank of the ≤ rerank×queries survivors only —
-    * on the ORIGINAL vectors (cosine is scale-invariant, and the
-    * other ann_* oracles share this exact form). Output is the
-    * explicit (query_id, vec_id, rank, cosine) + `carry` projection,
-    * so carried columns (e.g. annIvfPq's label) survive by contract
-    * rather than by the absence of a select.
-    */
-  private def pqExactRerank(cands: DataFrame, embeddings: DataFrame, k: Int,
-                            carry: Seq[String] = Nil): DataFrame = {
-    val wC = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    cands.join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .withColumn("rank", row_number().over(wC).cast("long"))
-      .filter(col("rank") <= k)
-      .select((Seq("query_id", "vec_id", "rank", "cosine") ++ carry).map(col): _*)
-  }
+  private def adcDistance(m: Int): Column =
+    graft.plans.PqQuant.pqAdcSum(col("codes"), col("qtable"), m)
 
   /** IVF-style search: the coarse quantizer assignment is the
     * pre-computed `label` column (in a full IVF build this is the
@@ -2454,21 +2405,11 @@ object Similarity {
     */
   def annIvf(embeddings: DataFrame, queries: Option[DataFrame] = None,
              k: Int = 5, queriesAreCorpusDerived: Option[Boolean] = None): DataFrame = {
+    val (qs, self) = querySet(embeddings, queries, queriesAreCorpusDerived)
     val corpus = embeddings.select(col("vec_id"), col("embedding"), col("label"))
-    val qs = queries.getOrElse(defaultQueries(embeddings))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("label").as("qlabel"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val scanned = corpus.join(broadcast(qs),
-        col("label") === col("qlabel") &&
-          notSelf(queriesAreCorpusDerived.getOrElse(queries.isEmpty)))
-      .withColumn("fast", cosineFast(col("qe"), col("embedding")))
-    keepFastSurvivors(scanned, k)
-      .withColumn("cosine",
-        cosineExact(decDot(col("qe"), col("embedding")), decNorm2(col("qe")), decNorm2(col("embedding"))))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
+    exactTopK(keepFastSurvivors(corpus.join(
+      broadcast(flatQueries(qs, col("label").as("qlabel"))),
+      col("label") === col("qlabel") && notSelf(self)), k), k)
   }
 }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.operators.{FrozenIndex, Similarity}
-import graft.plans.HonestCheckpoint.countRows
+import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -59,9 +58,7 @@ object SimilarityStream {
   def ivfPqResidualServe(queries: DataFrame, corpus: DataFrame, indexDir: String,
                          k: Int = 5, nprobe: Int = 1, rerank: Int = 50)
                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val params = s"ivfpqres;nlist=8;ivfIt=3;m=8;cb=8;pqIt=3;src=${Similarity.sourceStamp(corpus)}" // ivfPqResidualIndexBuild defaults
-    val index = FrozenIndex.served(Similarity.IvfPqKind, indexDir, params, corpus,
-      countRows(corpus))(Similarity.ivfPqResidualIndexBuild(corpus))
+    val index = Similarity.ivfPqResidualIndexServed(corpus, indexDir)
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -174,9 +171,7 @@ object SimilarityStream {
                                  threshold: Double = 0.45,
                                  excludeSelf: Boolean = false)
                                 (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val params = s"sem;k=$k;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val index = FrozenIndex.served(Similarity.SemanticKind, indexDir, params, corpus,
-      countRows(corpus))(Similarity.semanticIndexBuild(corpus, k, iters))
+    val index = Similarity.semanticIndexServed(corpus, indexDir, k, iters)
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -198,9 +193,7 @@ object SimilarityStream {
                                      iters: Int = 3, threshold: Double = 0.45,
                                      excludeSelf: Boolean = false)
                                     (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val params = s"semhier;k1=$k1;k2=$k2;it=$iters;src=${Similarity.sourceStamp(corpus)}"
-    val index = FrozenIndex.served(Similarity.HierKind, indexDir, params, corpus,
-      countRows(corpus))(Similarity.semanticIndexBuildHier(corpus, k1, k2, iters))
+    val index = Similarity.hierIndexServed(corpus, indexDir, k1, k2, iters)
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -40,6 +40,18 @@ class DedupPlanSpec extends SparkSpec
       s"non-equi join in the containment plan:\n$plan")
   }
 
+  test("pair scoring evaluates array_intersect once per candidate pair") {
+    // The Jaccard and containment filters read `inter` from the
+    // scoring generator's output, so the optimizer cannot push them
+    // below it and inline the intersection into each use.
+    val containment = Dedup.containment(Tables(spark, PlanGate.defaultSf).documents)
+    Seq("minhashLsh" -> verified, "containment" -> containment).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert("array_intersect".r.findAllIn(plan).size === 1,
+        s"$name evaluates array_intersect more than once per pair:\n$plan")
+    }
+  }
+
   test("the MinHash candidate and verify plan reads only the per-document checkpoint") {
     // Both band self-join sides and both verify joins read the one
     // (doc_id, sh, sig) checkpoint: no corpus re-scan, no second

@@ -185,6 +185,52 @@ class SimilaritySpec extends SparkSpec {
     assert(res.find(_._2 == 1L).map(_._1).contains(0L))
   }
 
+  /** Every ann* entry that takes a query frame, as a search over
+    * `queries` whose candidate cut keeps the whole corpus (nprobe =
+    * nlist, rerank past the corpus size; LSH has no such knob), so
+    * each finds the exact neighbors of a query.
+    */
+  private val externalQueryEntries: Seq[(String, Option[DataFrame] => DataFrame)] = Seq(
+    "annBruteForce" -> (q => Similarity.annBruteForce(embeddings, q)),
+    "annLsh" -> (q => Similarity.annLsh(embeddings, q)),
+    "annRange" -> (q => Similarity.annRange(embeddings, q, threshold = nnCosine)),
+    "annRangeIvf" -> (q => Similarity.annRangeIvf(embeddings, q, threshold = nnCosine, nprobe = 8)),
+    "annIvfTrained" -> (q => Similarity.annIvfTrained(embeddings, q, nprobe = 8)),
+    "annPq" -> (q => Similarity.annPq(embeddings, q, rerank = 10000)),
+    "annOpq" -> (q => Similarity.annOpq(embeddings, q, rerank = 10000)),
+    "annSq" -> (q => Similarity.annSq(embeddings, q, rerank = 10000)),
+    "annIvfSq" -> (q => Similarity.annIvfSq(embeddings, q, rerank = 10000, nprobe = 8)),
+    "annBq" -> (q => Similarity.annBq(embeddings, q, rerank = 10000)),
+    "annBqResidual" -> (q => Similarity.annBqResidual(embeddings, q, rerank = 10000)),
+    "annIvfBq" -> (q => Similarity.annIvfBq(embeddings, q, rerank = 10000, nprobe = 8)),
+    "annIvfPq" -> (q => Similarity.annIvfPq(embeddings, q, rerank = 10000, nprobe = 8)),
+    "annIvfPqResidual" -> (q => Similarity.annIvfPqResidual(embeddings, q, rerank = 10000,
+      nprobe = 8)))
+
+  /** The true nearest neighbor of corpus vector 0 and its exact cosine. */
+  private lazy val (nearest0, nnCosine) = {
+    val r = exactTopK(1).collect().find(_.getLong(0) == 0L).get
+    (r.getLong(1), r.getDouble(3))
+  }
+
+  externalQueryEntries.foreach { case (name, search) =>
+    test(s"an external query id that collides with a neighbor's id keeps that neighbor: $name") {
+      // vector 0's embedding twice, under an id no corpus vector has
+      // and under its true neighbor's id: the second must not drop the
+      // neighbor as a self-match, so both queries get one answer
+      val v0 = embeddings.filter(col("vec_id") === 0L).select(col("embedding"))
+      val qs = v0.select(lit(-1L).as("vec_id"), col("embedding"))
+        .unionByName(v0.select(lit(nearest0).as("vec_id"), col("embedding")))
+      val rows = search(Some(qs)).collect()
+      def answer(q: Long): Set[(Long, Double)] = rows.filter(_.getAs[Long]("query_id") == q)
+        .map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"))).toSet
+      assert(answer(-1L).map(_._1).contains(nearest0),
+        s"$name misses vector 0's true neighbor $nearest0: ${answer(-1L)}")
+      assert(answer(nearest0) === answer(-1L),
+        s"$name answers differently under the colliding id $nearest0")
+    }
+  }
+
   test("annIvfTrained is deterministic and finds most exact neighbors within trained cells") {
     // nlist=2 on the tiny sf0.001 corpus — with the production default
     // (8) the ~6-vector cells make recall meaningless at this SF
@@ -393,7 +439,7 @@ class SimilaritySpec extends SparkSpec {
     // the point of the layout: two scaled sign rounds + asymmetric
     // scoring must buy recall over 1-bit symmetric Hamming at the
     // same rerank budget (measured 0.96 vs 0.56 here at sf0.001;
-    // 1.00 vs 0.64 at sf0.01 — RecallProbe)
+    // 1.00 vs 0.64 at sf0.01 by this test's recall over that corpus)
     assert(recall > flat, s"residual BQ recall@5 = $recall must beat flat BQ's $flat")
     assert(recall >= 0.9, s"recall@5 vs exact = $recall drifted below the measured floor")
     // re-rank contract: every returned cosine is the exact value
