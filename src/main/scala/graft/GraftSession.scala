@@ -29,7 +29,7 @@ object GraftSession {
     // Cached plans pin their shuffle output partitioning unless AQE
     // is allowed to re-plan it; at high shuffle-partition counts
     // that turns every .cache() inside an iterative loop into
-    // partitions×iterations scheduler overhead (PartitionSweep
+    // partitions×iterations scheduler overhead (a partition sweep
     // measured cached-round components 6.2× SLOWER at 2048
     // partitions without this flag). Label propagation checkpoints
     // its rounds and no longer relies on it; the flag stays for

@@ -431,14 +431,6 @@ object ScaleProbe {
         val side = math.ceil(math.sqrt(4.0 * k)).toInt
         operators.Similarity.dedupSemanticHier(em, k1 = side, k2 = side).count()
       }),
-      // The grouped build at the same k₁=k₂ sizing, called by its
-      // own name (dedup_semantic_hier delegates to it): each fine
-      // Lloyd iteration is ONE dataframe program — at 100× (side 20)
-      // 3 assignment jobs total.
-      "dedup_sem_hier_grp" -> ((_, _, _, em, k) => {
-        val side = math.ceil(math.sqrt(4.0 * k)).toInt
-        operators.Similarity.dedupSemanticHierGrouped(em, k1 = side, k2 = side).count()
-      }),
       // Ingestion-time SemDeDup serve from the FROZEN on-disk index:
       // fixed query batch, corpus (and k = 4·mult with it) scales —
       // the probe measures what the cluster-partitioned assignment
@@ -481,7 +473,7 @@ object ScaleProbe {
       // per fine iteration regardless of k₁.
       "dedup_sem_hier_grp_wide" -> ((_, _, _, em, k) => {
         val k2 = math.max(1, math.ceil(4.0 * k / 64).toInt)
-        operators.Similarity.dedupSemanticHierGrouped(em, k1 = 64, k2 = k2).count()
+        operators.Similarity.dedupSemanticHier(em, k1 = 64, k2 = k2).count()
       }),
       // The WIDE serve probe: the frozen single-level index at the
       // corpus-contract k (400 at 100×), under its own index dir —
@@ -540,7 +532,7 @@ object ScaleProbe {
       // k2 sized so k1·k2 tracks the corpus contract.
       "sem_hier_wide_coarse" -> ((_, _, _, em, k) => {
         val k2 = math.max(1, math.ceil(4.0 * k / 128).toInt)
-        operators.Similarity.dedupSemanticHierGrouped(em, k1 = 128, k2 = k2).count()
+        operators.Similarity.dedupSemanticHier(em, k1 = 128, k2 = k2).count()
       }),
       // Build-only half of the row above: isolates the two-level
       // trainer + assignment from the within-cluster pair verify.

@@ -23,20 +23,12 @@ object Hashing {
     */
   def hex60(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Seeded variant — family of independent hash functions for
-    * MinHash permutations.
-    */
-  def hex60Seeded(seed: Int, c: Column): Column = hex60(concat(lit(s"$seed:"), c))
-
   /** Whitespace tokenization (the engine's canonical split): the
     * non-empty pieces of the space-trimmed text split on whitespace
     * runs. `array_remove` drops the empty pieces (a leading tab or
     * newline, an empty text) in generated code.
     */
   def tokens(text: Column): Column = array_remove(split(trim(text), "\\s+"), "")
-
-  /** Distinct sorted token set — the unit for Jaccard similarity. */
-  def tokenSet(text: Column): Column = array_sort(array_distinct(tokens(text)))
 
   /** w-token shingles: element i is `concat_ws(" ", toks[i .. i+w-1])`,
     * and fewer than `w` tokens (or a null array) give the empty array.

@@ -1,8 +1,12 @@
 package graft.operators
 
 import graft.plans.HonestCheckpoint._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types._
 
 /** The one frozen-index lifecycle — build, save, serve, append,
@@ -198,24 +202,33 @@ private[graft] object FrozenIndex {
     meta(spark, kind, dir).getOrElse(throw new IllegalArgumentException(
       s"no committed index of layout version ${kind.version} at $dir"))
 
-  /** The meta row at `dir` if it is committed (`_SUCCESS`), reads
-    * with `kind`'s schema with no null column, and has its version.
+  /** The meta row at `dir` if it is committed (`_SUCCESS`), its file
+    * footers give every column it has the declared type, and it reads
+    * with `kind`'s schema with no null column and its version.
     */
   def meta(spark: SparkSession, kind: Kind[_], dir: String): Option[Row] = {
-    val marker = new Path(s"$dir/meta.parquet/_SUCCESS")
-    if (!marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)) None
-    else {
-      // a column of another type than the declared one: the parquet
-      // reader refuses the file
-      val rows =
-        try spark.read.schema(kind.schema).parquet(s"$dir/meta.parquet").collect()
-        catch {
-          case e: org.apache.spark.SparkException
-              if Option(e.getCondition).exists(_.startsWith("FAILED_READ_FILE")) => Array.empty[Row]
-        }
-      rows.headOption.filter(r => !r.anyNull && r.getAs[Int]("version") == kind.version)
-    }
+    val table = new Path(s"$dir/meta.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = table.getFileSystem(conf)
+    if (!fs.exists(new Path(table, "_SUCCESS")) || !typed(fs, conf, table, kind.schema)) None
+    else spark.read.schema(kind.schema).parquet(table.toString).collect()
+      .headOption.filter(r => !r.anyNull && r.getAs[Int]("version") == kind.version)
   }
+
+  /** Whether each data file of the table at `table` types every
+    * column of `schema` it holds as `schema` does, read from the
+    * file footers on the driver. A column of another type would fail
+    * the read task; a type the reader would widen also reads as
+    * mistyped, which costs one rebuild.
+    */
+  private def typed(fs: FileSystem, conf: Configuration, table: Path, schema: StructType): Boolean =
+    fs.listStatus(table).map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .forall { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        val written = try new ParquetToSparkSchemaConverter().convert(reader.getFileMetaData.getSchema)
+                      finally reader.close()
+        schema.forall(f => written.find(_.name == f.name).forall(w => nullable(w.dataType) == nullable(f.dataType)))
+      }
 
   /** [[meta]] of an index built with `params` over a corpus of `n`. */
   def committed(spark: SparkSession, kind: Kind[_], dir: String, params: String,

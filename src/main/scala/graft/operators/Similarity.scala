@@ -686,15 +686,6 @@ object Similarity {
   def dedupSemanticHier(embeddings: DataFrame, k1: Int = 4, k2: Int = 4,
                         iters: Int = 3, threshold: Double = 0.45,
                         blocks: Int = 0): DataFrame =
-    dedupSemanticHierGrouped(embeddings, k1, k2, iters, threshold, blocks)
-
-  /** [[dedupSemanticHier]] spelled as its build: `withinClusterPairs`
-    * over [[semanticIndexBuildHier]] — the registration that pins the
-    * grouped build against dedup_semantic_hier's FULL DuckDB oracle.
-    */
-  def dedupSemanticHierGrouped(embeddings: DataFrame, k1: Int = 4, k2: Int = 4,
-                               iters: Int = 3, threshold: Double = 0.45,
-                               blocks: Int = 0): DataFrame =
     withinClusterPairs(semanticIndexBuildHier(embeddings, k1, k2, iters).assigned,
       threshold, blocks)
 
@@ -798,7 +789,7 @@ object Similarity {
       threshold, excludeSelf)
 
   /** Frozen-lifecycle hierarchical SemDeDup pairs — bit-identical to
-    * [[dedupSemanticHierGrouped]] (assignment and centroids survive
+    * [[dedupSemanticHier]] (assignment and centroids survive
     * the parquet round trip exactly), so it shares
     * dedup_semantic_hier's oracle.
     */

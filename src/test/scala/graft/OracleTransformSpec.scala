@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.{Family, Query}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the oracle CTE-materialization rewrite
@@ -90,6 +92,33 @@ class OracleTransformSpec extends AnyFunSuite {
       val stripped = sql.replace(" AS MATERIALIZED (", " AS (")
       assert(!stripped.contains("MATERIALIZED"),
         s"$name: MATERIALIZED must only ever appear as a CTE hint")
+    }
+  }
+
+  test("every registered query but the two rows-only sketches has an oracle, and every oracle names a query") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries -- oracles === Set("events_approx_users", "fin_quantiles_sketch"))
+    assert(oracles -- queries === Set.empty[String])
+  }
+
+  test("a query name declared in two families fails the union, which builds no oracle") {
+    val build: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    def family(qs: Query*): Family = new Family { val queries: Seq[Query] = qs }
+    val lazyOracle = family(Query("shared", build, sys.error("an oracle was built")))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.union(Seq(lazyOracle, family(Query.rowsOnly("shared", build)))))
+    assert(e.getMessage.contains("shared"))
+    assert(SparkEntry.union(Seq(lazyOracle, family(Query.rowsOnly("other", build)))).map(_.name) ===
+      Seq("shared", "other"))
+  }
+
+  test("an alias registers its original's builder and oracle") {
+    for ((alias, original) <- Seq("dedup_semantic_wide" -> "dedup_semantic",
+        "ann_ivf_trained_wide" -> "ann_ivf_trained", "dedup_semantic_hier_wide" -> "dedup_semantic_hier",
+        "dedup_semantic_hier_grouped" -> "dedup_semantic_hier")) {
+      assert(SparkEntry.queries(alias) eq SparkEntry.queries(original), alias)
+      assert(SparkEntry.oracleSql(alias) === SparkEntry.oracleSql(original), alias)
     }
   }
 }

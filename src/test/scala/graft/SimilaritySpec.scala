@@ -1069,7 +1069,7 @@ class SimilaritySpec extends SparkSpec {
     // the grouped (≡ looped, spec above) operator bit-for-bit
     val served = Similarity.dedupSemanticHierServed(embeddings, dir, k1 = 2, k2 = 2)
       .collect().map(_.toString).toSeq
-    val grouped = Similarity.dedupSemanticHierGrouped(embeddings, k1 = 2, k2 = 2)
+    val grouped = Similarity.dedupSemanticHier(embeddings, k1 = 2, k2 = 2)
       .collect().map(_.toString).toSeq
     assert(served === grouped, "served hier pairs must equal the in-memory build bit-for-bit")
     val marker = java.nio.file.Paths.get(dir, "meta.parquet", "_SUCCESS")
@@ -1426,7 +1426,7 @@ class SimilaritySpec extends SparkSpec {
     for (nlist <- Seq(8, 80))
       emptyWith(Similarity.annIvfTrained(none, nlist = nlist),
         "query_id", "label", "neighbor_id", "rank", "cosine")
-    emptyWith(Similarity.dedupSemanticHierGrouped(none, k1 = 80), "a", "b", "cluster", "cosine")
+    emptyWith(Similarity.dedupSemanticHier(none, k1 = 80), "a", "b", "cluster", "cosine")
   }
 
   test("every PQ-family build, save and search returns an empty frame with its schema on an empty corpus") {
@@ -1584,29 +1584,38 @@ class SimilaritySpec extends SparkSpec {
       noopWrite(c.serve(fifth, dir))
       c -> FrozenIndex.committedMeta(spark, c.kind, dir)
     }
-    for ((c, meta) <- metas) {
-      val frame = spark.createDataFrame(java.util.List.of(meta), c.kind.schema)
-      def written(meta: DataFrame): String = {
-        val dir = tempDir("graft_meta_variant")
-        meta.coalesce(1).write.parquet(s"$dir/meta.parquet")
-        dir
+    // a mistyped meta is told from its file footer, not from a read
+    // task that fails
+    val failedTasks = new java.util.concurrent.atomic.AtomicInteger()
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (!e.taskInfo.successful) failedTasks.incrementAndGet()
+    }) {
+      for ((c, meta) <- metas) {
+        val frame = spark.createDataFrame(java.util.List.of(meta), c.kind.schema)
+        def written(meta: DataFrame): String = {
+          val dir = tempDir("graft_meta_variant")
+          meta.coalesce(1).write.parquet(s"$dir/meta.parquet")
+          dir
+        }
+        def present(meta: DataFrame): Boolean = FrozenIndex.meta(spark, c.kind, written(meta)).isDefined
+        val own = written(frame)
+        assert(FrozenIndex.meta(spark, c.kind, own).isDefined, s"${c.name}: its own meta")
+        assert(new java.io.File(s"$own/meta.parquet/_SUCCESS").delete())
+        assert(FrozenIndex.meta(spark, c.kind, own).isEmpty, s"${c.name}: an uncommitted meta")
+        assert(!present(frame.drop("version")), s"${c.name}: no version")
+        assert(!present(frame.withColumn("version", lit(null).cast("int"))), s"${c.name}: null version")
+        assert(!present(frame.withColumn("version", col("version").cast("string"))),
+          s"${c.name}: string version")
+        assert(!present(frame.withColumn("version", col("version").cast("long"))),
+          s"${c.name}: long version")
+        // IVF-PQ is the one kind at version 7; every other kind lacks its columns
+        val (other, otherMeta) = metas.find(_._1.name == (if (c.name == "ivfpq") "semantic" else "ivfpq")).get
+        assert(!present(spark.createDataFrame(java.util.List.of(otherMeta), other.kind.schema)),
+          s"${c.name}: the ${other.name} kind's meta")
       }
-      def present(meta: DataFrame): Boolean = FrozenIndex.meta(spark, c.kind, written(meta)).isDefined
-      val own = written(frame)
-      assert(FrozenIndex.meta(spark, c.kind, own).isDefined, s"${c.name}: its own meta")
-      assert(new java.io.File(s"$own/meta.parquet/_SUCCESS").delete())
-      assert(FrozenIndex.meta(spark, c.kind, own).isEmpty, s"${c.name}: an uncommitted meta")
-      assert(!present(frame.drop("version")), s"${c.name}: no version")
-      assert(!present(frame.withColumn("version", lit(null).cast("int"))), s"${c.name}: null version")
-      assert(!present(frame.withColumn("version", col("version").cast("string"))),
-        s"${c.name}: string version")
-      assert(!present(frame.withColumn("version", col("version").cast("long"))),
-        s"${c.name}: long version")
-      // IVF-PQ is the one kind at version 7; every other kind lacks its columns
-      val (other, otherMeta) = metas.find(_._1.name == (if (c.name == "ivfpq") "semantic" else "ivfpq")).get
-      assert(!present(spark.createDataFrame(java.util.List.of(otherMeta), other.kind.schema)),
-        s"${c.name}: the ${other.name} kind's meta")
     }
+    assert(failedTasks.get === 0, "reading the meta variants failed a task")
   }
 
   /** Build through [[FrozenIndex.served]] while a rival publishes a

@@ -22,30 +22,45 @@ object SparkTestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  /** Jobs that `body` starts, counted by a listener up to a sentinel
-    * job: listener events arrive in order, so once the sentinel is seen
-    * every job `body` started has been counted.
-    */
+  /** Jobs that `body` starts (see [[listening]]). */
   protected def jobsStartedBy(body: => Unit): Int = {
     import scala.jdk.CollectionConverters._
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
+    listening(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription("sentinel")
-      spark.range(1).collect()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.contains("sentinel"))
+        jobs.add(description(e))
+    })(body)
     jobs.asScala.takeWhile(_ != "sentinel").size
   }
+
+  /** Run `body` with `listener` registered, then a sentinel job, and
+    * return once the sentinel's start has been delivered: listener
+    * events arrive in order, so by then `listener` has seen every
+    * event of the jobs `body` started.
+    */
+  protected def listening(listener: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (description(e) == "sentinel") seen.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.addSparkListener(sentinel)
+    try {
+      body
+      sc.setJobDescription("sentinel")
+      spark.range(1).collect()
+      sc.setJobDescription(null)
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "the sentinel job was never seen")
+    } finally {
+      sc.removeSparkListener(sentinel)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def description(e: org.apache.spark.scheduler.SparkListenerJobStart): String =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
 
   /** The first `T` in the cause chain of what `body` throws: a check
     * inside a Spark job reaches the driver wrapped in a SparkException.
