@@ -417,13 +417,8 @@ object Similarity {
       while (it.hasNext) {
         val row = it.next()
         if (!row.isNullAt(0) && !(keyed && row.isNullAt(1))) {
-          val u = row.getArray(0)
-          graft.plans.IntegerUnits.requireSameLength(u.numElements(), parts * dim, "lloyd")
-          var i = 0
-          while (i < parts * dim) {
-            if (u.isNullAt(i)) throw new IllegalArgumentException(s"lloyd: null element at $i")
-            i += 1
-          }
+          val u = graft.plans.IntegerUnits.longs(row.getArray(0), "lloyd")
+          graft.plans.IntegerUnits.requireSameLength(u.length, parts * dim, "lloyd")
           val first = if (keyed) row.getLong(1) else 0L
           var j = 0
           while (j < parts) {
@@ -436,7 +431,7 @@ object Similarity {
               counts(g) += 1
               var d = 0
               while (d < dim) {
-                sums(g * dim + d) = Math.addExact(sums(g * dim + d), u.getLong(j * dim + d))
+                sums(g * dim + d) = Math.addExact(sums(g * dim + d), u(j * dim + d))
                 d += 1
               }
             }

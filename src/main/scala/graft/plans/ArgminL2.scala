@@ -15,8 +15,8 @@ import scala.collection.immutable.ArraySeq
   * train, assign and probe in [[graft.operators.Similarity]] runs:
   * the centroid model rides the plan as data (one `long[]` reference
   * object, [[PqEncodeI64]]'s pattern — zero JIT kernels per centroid)
-  * and the k×dim scan compiles to two nested counted loops inside
-  * whole-stage codegen, so plan size is O(1) in k.
+  * and the generated code calls [[ArgminL2.nearest]], the k×dim scan,
+  * from inside whole-stage codegen, so plan size is O(1) in k.
   *
   * Output: `array<struct<du, cluster>>`, the `nprobe` nearest
   * centroids in `(du, cluster)` order — exactly
@@ -54,7 +54,7 @@ case class ArgminL2I64(child: Expression, cell: Expression, cents: ArraySeq.ofLo
   override def right: Expression = cell
 
   override def checkInputDataTypes(): TypeCheckResult = (child.dataType, cell.dataType) match {
-    // a null slot would read as 0 through getLong: reject nullable elements
+    // every producer of units is null-free: refuse a nullable element type up front
     case (ArrayType(LongType, false), LongType) => TypeCheckResult.TypeCheckSuccess
     case (u, c) => TypeCheckResult.TypeCheckFailure(
       s"argmin_l2 expects array<long> without null elements and a long cell, got $u, $c")
@@ -66,73 +66,16 @@ case class ArgminL2I64(child: Expression, cell: Expression, cents: ArraySeq.ofLo
   override protected def stringArgs: Iterator[Any] =
     Iterator(child, cell, s"${starts.last}x$dim", nprobe)
 
-  private def numCells: Int = starts.length - 1
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val u = a.asInstanceOf[ArrayData]
-    IntegerUnits.requireSameLength(u.numElements(), dim, "argmin_l2")
-    val cl = b.asInstanceOf[Long]
-    if (cl < 0 || cl >= numCells || starts(cl.toInt) == starts(cl.toInt + 1)) return null
-    val lo = starts(cl.toInt)
-    val hi = starts(cl.toInt + 1)
-    val cap = math.min(nprobe, hi - lo)
-    val bestD = new Array[Long](cap)
-    val bestC = new Array[Long](cap)
-    val filled = ArgminL2.scan(u, 0, cents.unsafeArray, lo, hi, dim, bestD, bestC)
-    new GenericArrayData(Array.tabulate[Any](filled)(i =>
-      new GenericInternalRow(Array[Any](bestD(i), bestC(i)))))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArgminL2.nearest(a.asInstanceOf[ArrayData], b.asInstanceOf[Long], cents.unsafeArray,
+      starts.unsafeArray, dim, nprobe)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("argminCents", cents.unsafeArray, "long[]")
     val startsRef = ctx.addReferenceObj("argminStarts", starts.unsafeArray, "int[]")
-    nullSafeCodeGen(ctx, ev, (u, cl) => {
-      val n = ctx.freshName("n")
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val cap = ctx.freshName("cap"); val filled = ctx.freshName("filled")
-      val c = ctx.freshName("c"); val d = ctx.freshName("d")
-      val bestD = ctx.freshName("bestD"); val bestC = ctx.freshName("bestC")
-      val acc = ctx.freshName("acc"); val base = ctx.freshName("base")
-      val diff = ctx.freshName("diff"); val pos = ctx.freshName("pos")
-      val out = ctx.freshName("out"); val i = ctx.freshName("i")
-      s"""
-         |int $n = $u.numElements();
-         |if ($n != $dim) throw new IllegalArgumentException(
-         |  "argmin_l2: vector dim " + $n + " != $dim");
-         |if ($cl < 0L || $cl >= $numCells || $startsRef[(int) $cl] == $startsRef[(int) $cl + 1]) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $lo = $startsRef[(int) $cl];
-         |  int $hi = $startsRef[(int) $cl + 1];
-         |  int $cap = java.lang.Math.min($nprobe, $hi - $lo);
-         |  long[] $bestD = new long[$cap];
-         |  long[] $bestC = new long[$cap];
-         |  int $filled = 0;
-         |  for (int $c = $lo; $c < $hi; $c++) {
-         |    long $acc = 0L;
-         |    int $base = $c * $dim;
-         |    for (int $d = 0; $d < $dim; $d++) {
-         |      long $diff = $u.getLong($d) - $centsRef[$base + $d];
-         |      $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($diff, $diff));
-         |    }
-         |    if ($filled < $cap || $acc < $bestD[$cap - 1]) {
-         |      if ($filled < $cap) $filled++;
-         |      int $pos = $filled - 1;
-         |      while ($pos > 0 && $acc < $bestD[$pos - 1]) {
-         |        $bestD[$pos] = $bestD[$pos - 1]; $bestC[$pos] = $bestC[$pos - 1]; $pos--;
-         |      }
-         |      $bestD[$pos] = $acc; $bestC[$pos] = (long) ($c - $lo);
-         |    }
-         |  }
-         |  Object[] $out = new Object[$filled];
-         |  for (int $i = 0; $i < $filled; $i++) {
-         |    $out[$i] = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |      new Object[] { java.lang.Long.valueOf($bestD[$i]), java.lang.Long.valueOf($bestC[$i]) });
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (u, cl) =>
+      s"""${ev.value} = ${IntegerUnits.call(ArgminL2, "nearest", u, cl, centsRef, startsRef, dim, nprobe)};
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -147,34 +90,46 @@ object ArgminL2 {
     StructField("du", LongType, nullable = false),
     StructField("cluster", LongType, nullable = false))), containsNull = false)
 
+  /** [[ArgminL2I64]]'s body: the `nprobe` nearest centroids of `u`
+    * in the row's `cell`, or null for a cell outside the model or
+    * without centroids.
+    */
+  def nearest(u: ArrayData, cell: Long, cents: Array[Long], starts: Array[Int],
+              dim: Int, nprobe: Int): ArrayData = {
+    val x = IntegerUnits.longs(u, "argmin_l2")
+    IntegerUnits.requireSameLength(x.length, dim, "argmin_l2")
+    if (cell < 0 || cell >= starts.length - 1 || starts(cell.toInt) == starts(cell.toInt + 1))
+      return null
+    val lo = starts(cell.toInt)
+    val hi = starts(cell.toInt + 1)
+    val cap = math.min(nprobe, hi - lo)
+    val bestD = new Array[Long](cap)
+    val bestC = new Array[Long](cap)
+    val filled = scan(x, 0, cents, lo, hi, dim, bestD, bestC)
+    new GenericArrayData(Array.tabulate[Any](filled)(i =>
+      new GenericInternalRow(Array[Any](bestD(i), bestC(i)))))
+  }
+
   /** The nearest-centroid scan every argmin in graft runs — this
-    * kernel's interpreted eval, [[PqEncodeI64]]'s per-subspace search
-    * and the k-means and PQ training folds in
-    * [[graft.operators.Similarity]] — written once so that all of them
-    * assign a row alike. It scans centroids `lo until hi` of the flat
-    * model `cents` (centroid c at `cents(c·dim)`) ASCENDING against the
-    * `dim` components of `u` starting at `off`, and keeps the
-    * `bestD.length` nearest in (du, cluster) order in `bestD`/`bestC`,
-    * cluster ids local to `lo`: an insertion only passes entries with a
-    * strictly larger distance, so equal distances keep the lower
-    * cluster first. The distance is the exact overflow-checked long
-    * Σ(Δ²). Returns how many slots it filled, min(capacity, hi − lo).
+    * kernel, [[PqEncodeI64]]'s per-subspace search and the k-means and
+    * PQ training folds in [[graft.operators.Similarity]] — written once
+    * so that all of them assign a row alike. It scans centroids
+    * `lo until hi` of the flat model `cents` (centroid c at
+    * `cents(c·dim)`) ASCENDING against the `dim` components of `u`
+    * starting at `off`, and keeps the `bestD.length` nearest in
+    * (du, cluster) order in `bestD`/`bestC`, cluster ids local to `lo`:
+    * an insertion only passes entries with a strictly larger distance,
+    * so equal distances keep the lower cluster first. The distance is
+    * [[dist]]. Returns how many slots it filled, min(capacity, hi − lo).
     * The caller checks `u`'s length; nothing is allocated.
     */
-  def scan(u: ArrayData, off: Int, cents: Array[Long], lo: Int, hi: Int, dim: Int,
+  def scan(u: Array[Long], off: Int, cents: Array[Long], lo: Int, hi: Int, dim: Int,
            bestD: Array[Long], bestC: Array[Long]): Int = {
     val cap = bestD.length
     var filled = 0
     var c = lo
     while (c < hi) {
-      var acc = 0L
-      val base = c * dim
-      var d = 0
-      while (d < dim) {
-        val diff = u.getLong(off + d) - cents(base + d)
-        acc = Math.addExact(acc, Math.multiplyExact(diff, diff))
-        d += 1
-      }
+      val acc = dist(u, off, cents, c * dim, dim)
       if (filled < cap || acc < bestD(cap - 1)) {
         if (filled < cap) filled += 1
         var pos = filled - 1
@@ -186,6 +141,21 @@ object ArgminL2 {
       c += 1
     }
     filled
+  }
+
+  /** The exact overflow-checked long Σ(Δ²) of `dim` components of `u`
+    * from `uOff` and of `v` from `vOff` — the one squared-L2 loop of
+    * the integer kernels ([[scan]], [[PqQTableI64]], [[L2UnitsI64]]).
+    */
+  def dist(u: Array[Long], uOff: Int, v: Array[Long], vOff: Int, dim: Int): Long = {
+    var acc = 0L
+    var d = 0
+    while (d < dim) {
+      val diff = u(uOff + d) - v(vOff + d)
+      acc = Math.addExact(acc, Math.multiplyExact(diff, diff))
+      d += 1
+    }
+    acc
   }
 
   /** Column API: the `nprobe` nearest centroids of `u` as

@@ -1,16 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Native Catalyst expression: all LSH band signatures of an
   * `array<float>` vector against a fixed set of hyperplanes, in ONE
   * pass — replaces `bands × rowsPerBand` separate higher-order
   * `aggregate(zip_with(...))` dot products (each a per-element lambda
-  * dispatch) with a single codegen'd integer loop.
+  * dispatch) with a single integer loop ([[BandSignatures.sigs]]).
   *
   * Arithmetic is EXACT fixed-point, not floating: vector components
   * and plane weights are scaled by 1e4 and rounded HALF_UP to longs,
@@ -29,91 +28,62 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   *
   * Output: `array<long>` of length `planes.length / rowsPerBand`;
   * bit r of element b is the sign of plane (b*rowsPerBand + r)'s dot.
+  * A vector whose length is not the planes' dimension throws: a dot
+  * over the shorter prefix would give a plausible wrong signature.
   */
 case class BandSignatures(child: Expression, planes: Seq[Seq[Long]], rowsPerBand: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
 
   // Seq field (not Array) so case-class equals/hashCode compare plane
   // CONTENTS — Array fields fall back to reference identity, which
   // breaks plan canonicalization / subexpression elimination for two
-  // semantically identical instances. Eval and codegen still run on
-  // primitive arrays, converted once here.
+  // semantically identical instances. The body runs on primitive
+  // arrays, converted once here.
   @transient private lazy val planesArr: Array[Array[Long]] =
     planes.map(_.toArray).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"band_sigs expects an array<float> argument, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "band_sigs"
+  override def nullSafeEval(v: Any): Any =
+    BandSignatures.sigs(v.asInstanceOf[ArrayData], planesArr, rowsPerBand)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("planes", planesArr, "long[][]")
+    defineCodeGen(ctx, ev, v => IntegerUnits.call(BandSignatures, "sigs", v, planesRef, rowsPerBand))
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+object BandSignatures {
+  /** [[BandSignatures]]'s body. */
+  def sigs(v: ArrayData, planes: Array[Array[Long]], rowsPerBand: Int): ArrayData = {
+    val x = IntegerUnits.floats(v, "band_sigs")
+    val n = x.length
     val scaled = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val x = arr.getFloat(i).toDouble * 10000.0
-      scaled(i) = if (x >= 0) math.round(x) else -math.round(-x)
+      val d = x(i).toDouble * 10000.0
+      scaled(i) = if (d >= 0) math.round(d) else -math.round(-d)
       i += 1
     }
-    val bands = planesArr.length / rowsPerBand
-    val sigs = new Array[Long](bands)
+    val out = new Array[Long](planes.length / rowsPerBand)
     var b = 0
-    while (b < bands) {
+    while (b < out.length) {
       var sig = 0L
       var r = 0
       while (r < rowsPerBand) {
-        val w = planesArr(b * rowsPerBand + r)
-        val m = math.min(n, w.length)
+        val w = planes(b * rowsPerBand + r)
+        IntegerUnits.requireSameLength(n, w.length, "band_sigs")
         var dot = 0L
         var j = 0
-        while (j < m) { dot += scaled(j) * w(j); j += 1 }
+        while (j < n) { dot += scaled(j) * w(j); j += 1 }
         if (dot >= 0L) sig |= (1L << r)
         r += 1
       }
-      sigs(b) = sig
+      out(b) = sig
       b += 1
     }
-    new GenericArrayData(sigs)
+    ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planesArr, "long[][]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val scaled = ctx.freshName("scaled"); val x = ctx.freshName("x")
-      val bands = ctx.freshName("bands"); val sigs = ctx.freshName("sigs")
-      val b = ctx.freshName("b"); val r = ctx.freshName("r"); val j = ctx.freshName("j")
-      val sig = ctx.freshName("sig"); val w = ctx.freshName("w")
-      val m = ctx.freshName("m"); val dot = ctx.freshName("dot")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $scaled = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $arr.getFloat($i) * 10000.0;
-         |  $scaled[$i] = $x >= 0 ? java.lang.Math.round($x) : -java.lang.Math.round(-$x);
-         |}
-         |int $bands = $planesRef.length / $rowsPerBand;
-         |long[] $sigs = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $sig = 0L;
-         |  for (int $r = 0; $r < $rowsPerBand; $r++) {
-         |    long[] $w = $planesRef[$b * $rowsPerBand + $r];
-         |    int $m = java.lang.Math.min($n, $w.length);
-         |    long $dot = 0L;
-         |    for (int $j = 0; $j < $m; $j++) { $dot += $scaled[$j] * $w[$j]; }
-         |    if ($dot >= 0L) $sig |= (1L << $r);
-         |  }
-         |  $sigs[$b] = $sig;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sigs);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

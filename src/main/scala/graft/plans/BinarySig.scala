@@ -1,10 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
@@ -35,48 +34,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * word, little-endian within the word (component 32w+i → bit i of
   * word w). The last word of a non-multiple-of-32 embedding leaves
   * its high bits zero on both engines (they contribute 0 to every
-  * XOR). One codegen kernel per row — the whole encode is a single
+  * XOR). One kernel call per row — the whole encode is a single
   * map pass at scan speed.
   */
-case class SignPack32I64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sign_pack32 expects array<float>, got $t")
-  }
+case class SignPack32I64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sign_pack32"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val words = (n + 31) / 32
-    val out = new Array[Long](words)
-    var i = 0
-    while (i < n) {
-      if (x.getFloat(i) >= 0f) out(i / 32) |= (1L << (i % 32))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any = SignPack32I64.pack(a.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $out = new long[($n + 31) / 32];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($arr.getFloat($i) >= 0f) $out[$i / 32] |= (1L << ($i % 32));
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, a => IntegerUnits.call(SignPack32I64, "pack", a))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object SignPack32I64 {
+  /** [[SignPack32I64]]'s body. */
+  def pack(a: ArrayData): ArrayData = {
+    val x = IntegerUnits.floats(a, "sign_pack32")
+    val out = new Array[Long]((x.length + 31) / 32)
+    var i = 0
+    while (i < x.length) { if (x(i) >= 0f) out(i / 32) |= (1L << (i % 32)); i += 1 }
+    ArrayData.toArrayData(out)
+  }
 }
 
 /** Hamming distance of two packed sign signatures: Σ popcount(a⊕b)
@@ -86,45 +66,29 @@ case class SignPack32I64(child: Expression) extends UnaryExpression {
   * Long sum can never overflow.
   */
 case class HammingPackedI64(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"hamming_packed expects two array<long> arguments, got $l / $r")
-  }
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "hamming_packed"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = IntegerUnits.requireSameLength(x.numElements(), y.numElements(), "hamming_packed")
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i))
-      i += 1
-    }
-    acc
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    HammingPackedI64.hamming(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr1, arr2) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |${IntegerUnits.sameLengthJava(n, arr1, arr2, "hamming_packed")}
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += java.lang.Long.bitCount($arr1.getLong($i) ^ $arr2.getLong($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) => IntegerUnits.call(HammingPackedI64, "hamming", a, b))
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object HammingPackedI64 {
+  /** [[HammingPackedI64]]'s body. */
+  def hamming(a: ArrayData, b: ArrayData): Long = {
+    val x = IntegerUnits.longs(a, "hamming_packed")
+    val y = IntegerUnits.longs(b, "hamming_packed")
+    val n = IntegerUnits.requireSameLength(x.length, y.length, "hamming_packed")
+    var acc = 0L
+    var i = 0
+    while (i < n) { acc += java.lang.Long.bitCount(x(i) ^ y(i)); i += 1 }
+    acc
+  }
 }
 
 /** `array<long>` → `array<long>`: [[SignPack32I64]] on the INTEGER-
@@ -134,44 +98,26 @@ case class HammingPackedI64(left: Expression, right: Expression)
   * (no float comparison, no NaN case: units are exact Longs shared
   * with the DuckDB oracle).
   */
-case class SignPackUnits32I64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sign_pack_units32 expects array<long>, got $t")
-  }
+case class SignPackUnits32I64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sign_pack_units32"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val out = new Array[Long]((n + 31) / 32)
-    var i = 0
-    while (i < n) {
-      if (x.getLong(i) >= 0L) out(i / 32) |= (1L << (i % 32))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any = SignPackUnits32I64.pack(a.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $out = new long[($n + 31) / 32];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($arr.getLong($i) >= 0L) $out[$i / 32] |= (1L << ($i % 32));
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, a => IntegerUnits.call(SignPackUnits32I64, "pack", a))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object SignPackUnits32I64 {
+  /** [[SignPackUnits32I64]]'s body. */
+  def pack(a: ArrayData): ArrayData = {
+    val x = IntegerUnits.longs(a, "sign_pack_units32")
+    val out = new Array[Long]((x.length + 31) / 32)
+    var i = 0
+    while (i < x.length) { if (x(i) >= 0L) out(i / 32) |= (1L << (i % 32)); i += 1 }
+    ArrayData.toArrayData(out)
+  }
 }
 
 /** Asymmetric signed dot of a full-precision integer-units query
@@ -184,53 +130,34 @@ case class SignPackUnits32I64(child: Expression) extends UnaryExpression {
   * (|e| < 0.6 → |q| < 6e7 units; 64 dims → |Σ| < 3.9e9).
   */
 case class SignDotPackedI64(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"sign_dot_packed expects two array<long> arguments, got $l / $r")
-  }
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "sign_dot_packed"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SignDotPackedI64.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (q, sig) => IntegerUnits.call(SignDotPackedI64, "dot", q, sig))
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val q = a.asInstanceOf[ArrayData]
-    val sig = b.asInstanceOf[ArrayData]
-    val n = q.numElements()
-    if (sig.numElements() != (n + 31) / 32)
+object SignDotPackedI64 {
+  /** [[SignDotPackedI64]]'s body. */
+  def dot(qa: ArrayData, sa: ArrayData): Long = {
+    val q = IntegerUnits.longs(qa, "sign_dot_packed")
+    val sig = IntegerUnits.longs(sa, "sign_dot_packed")
+    if (sig.length != (q.length + 31) / 32)
       throw new IllegalArgumentException(
-        s"sign_dot_packed: signature has ${sig.numElements()} words for $n dims, expected ${(n + 31) / 32}")
+        s"sign_dot_packed: signature has ${sig.length} words for ${q.length} dims, expected ${(q.length + 31) / 32}")
     var acc = 0L
     var i = 0
-    while (i < n) {
-      val qi = q.getLong(i)
-      acc += (if ((sig.getLong(i / 32) & (1L << (i % 32))) != 0L) qi else -qi)
+    while (i < q.length) {
+      acc += (if ((sig(i / 32) & (1L << (i % 32))) != 0L) q(i) else -q(i))
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qArr, sigArr) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val qi = ctx.freshName("qi")
-      s"""
-         |int $n = $qArr.numElements();
-         |if ($sigArr.numElements() != ($n + 31) / 32)
-         |  throw new IllegalArgumentException("sign_dot_packed: signature has " +
-         |    $sigArr.numElements() + " words for " + $n + " dims, expected " + (($n + 31) / 32));
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $qi = $qArr.getLong($i);
-         |  $acc += (($sigArr.getLong($i / 32) & (1L << ($i % 32))) != 0L) ? $qi : -$qi;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object BinarySig {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -14,68 +14,51 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `array<float>` columns, accumulated in doubles in index order.
   *
   * Semantically identical to the `zip_with`+`aggregate` double fold
-  * in [[graft.functions.VectorFunctions.cosineFast]], but whole-stage
-  * codegen emits a tight primitive loop (no per-element lambda
-  * dispatch or boxing) — this is the hot inner kernel of the
-  * all-pairs/top-k similarity scans, worth ~10× on a 100 TB corpus
-  * scan. Used for candidate pruning; exact-decimal math still
-  * produces every value that crosses the oracle boundary (SURVEY §5).
+  * in [[graft.functions.VectorFunctions.cosineFast]], but one
+  * primitive loop ([[CosineSimilarityF64.cosine]], no per-element
+  * lambda dispatch or boxing) run inside whole-stage codegen — this
+  * is the hot inner kernel of the all-pairs/top-k similarity scans,
+  * worth ~10× on a 100 TB corpus scan. Used for candidate pruning;
+  * exact-decimal math still produces every value that crosses the
+  * oracle boundary (SURVEY §5).
   */
 case class CosineSimilarityF64(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"cosine_f64 expects two array<float> arguments, got ${left.dataType} / ${right.dataType}")
-  }
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_f64"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarityF64.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => IntegerUnits.call(CosineSimilarityF64, "cosine", a, b))
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = IntegerUnits.requireSameLength(x.numElements(), y.numElements(), "cosine_f64")
+object CosineSimilarityF64 {
+  /** [[CosineSimilarityF64]]'s body: doubles summed in index order. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val x = IntegerUnits.floats(a, "cosine_f64")
+    val y = IntegerUnits.floats(b, "cosine_f64")
+    val n = IntegerUnits.requireSameLength(x.length, y.length, "cosine_f64")
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
+      val xv = x(i).toDouble
+      val yv = y(i).toDouble
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
     dot / math.sqrt(na * nb)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr1, arr2) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |${IntegerUnits.sameLengthJava(n, arr1, arr2, "cosine_f64")}
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $arr1.getFloat($i);
-         |  double $yv = (double) $arr2.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Native squared-L2 distance over two `array<float>`-or-`array<double>`
-  * columns — same tight-loop codegen rationale as
-  * [[CosineSimilarityF64]]; the hot kernel of the k-means assignment
-  * scan (k evaluations per row per iteration).
+  * columns — same one-loop rationale as [[CosineSimilarityF64]]; the
+  * hot kernel of the k-means assignment scan (k evaluations per row
+  * per iteration).
   */
-case class L2DistanceF64(left: Expression, right: Expression)
-  extends BinaryExpression {
-
+case class L2DistanceF64(left: Expression, right: Expression) extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
       TypeCheckResult.TypeCheckSuccess
@@ -84,45 +67,35 @@ case class L2DistanceF64(left: Expression, right: Expression)
   }
   override def dataType: DataType = DoubleType
   override def prettyName: String = "l2_f64"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    L2DistanceF64.l2(a.asInstanceOf[ArrayData], isFloat(left), b.asInstanceOf[ArrayData], isFloat(right))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      IntegerUnits.call(L2DistanceF64, "l2", a, isFloat(left), b, isFloat(right)))
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+}
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (lf, rf) = (isFloat(left), isFloat(right))
-    val n = IntegerUnits.requireSameLength(x.numElements(), y.numElements(), "l2_f64")
+object L2DistanceF64 {
+  /** [[L2DistanceF64]]'s body; each side's flag says it is `array<float>`. */
+  def l2(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val x = doubles(a, aFloat)
+    val y = doubles(b, bFloat)
+    val n = IntegerUnits.requireSameLength(x.length, y.length, "l2_f64")
     var acc = 0.0
     var i = 0
-    while (i < n) {
-      val d = (if (lf) x.getFloat(i).toDouble else x.getDouble(i)) -
-        (if (rf) y.getFloat(i).toDouble else y.getDouble(i))
-      acc += d * d
-      i += 1
-    }
+    while (i < n) { val d = x(i) - y(i); acc += d * d; i += 1 }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr1, arr2) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      val getL = if (isFloat(left)) s"(double) $arr1.getFloat($i)" else s"$arr1.getDouble($i)"
-      val getR = if (isFloat(right)) s"(double) $arr2.getFloat($i)" else s"$arr2.getDouble($i)"
-      s"""
-         |${IntegerUnits.sameLengthJava(n, arr1, arr2, "l2_f64")}
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $getL - $getR;
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  private def doubles(a: ArrayData, isFloat: Boolean): Array[Double] = {
+    IntegerUnits.requireNoNulls(a, "l2_f64")
+    if (!isFloat) a.toDoubleArray()
+    else Array.tabulate(a.numElements())(a.getFloat(_).toDouble)
+  }
 }
 
 object GraftExpressions {

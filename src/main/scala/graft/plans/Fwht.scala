@@ -1,10 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -31,66 +30,38 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * addExact/subtractExact as the loud overflow guard like every
   * kernel in [[IntegerUnits]].
   */
-case class FwhtSignsI64(child: Expression, signs: Seq[Long]) extends UnaryExpression {
+case class FwhtSignsI64(child: Expression, signs: Seq[Long])
+  extends UnaryExpression with ExpectsInputTypes {
 
   require(signs.nonEmpty && (signs.length & (signs.length - 1)) == 0,
     s"fwht_signs needs a power-of-two dimension, got ${signs.length}")
   require(signs.forall(s => s == 1L || s == -1L), "fwht_signs signs must be ±1")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"fwht_signs expects array<long>, got $t")
-  }
+  @transient private lazy val signsArr: Array[Long] = signs.toArray
+
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "fwht_signs"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != signs.length)
-      throw new IllegalArgumentException(
-        s"fwht_signs: input has $n components, expected ${signs.length}")
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) { out(i) = signs(i) * x.getLong(i); i += 1 }
-    FwhtSignsI64.fwhtInPlace(out)
-    new GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any = FwhtSignsI64.rotate(a.asInstanceOf[ArrayData], signsArr)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val signsRef = ctx.addReferenceObj("fwhtSigns", signs.toArray, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      val h = ctx.freshName("h"); val p = ctx.freshName("p"); val q = ctx.freshName("q")
-      val a = ctx.freshName("a"); val b = ctx.freshName("b")
-      s"""
-         |int $n = $arr.numElements();
-         |if ($n != $signsRef.length)
-         |  throw new IllegalArgumentException("fwht_signs: input has " + $n
-         |    + " components, expected " + $signsRef.length);
-         |long[] $out = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) $out[$i] = $signsRef[$i] * $arr.getLong($i);
-         |for (int $h = 1; $h < $n; $h <<= 1) {
-         |  for (int $p = 0; $p < $n; $p += $h << 1) {
-         |    for (int $q = $p; $q < $p + $h; $q++) {
-         |      long $a = $out[$q]; long $b = $out[$q + $h];
-         |      $out[$q] = java.lang.Math.addExact($a, $b);
-         |      $out[$q + $h] = java.lang.Math.subtractExact($a, $b);
-         |    }
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-       """.stripMargin
-    })
+    val signsRef = ctx.addReferenceObj("fwhtSigns", signsArr, "long[]")
+    defineCodeGen(ctx, ev, a => IntegerUnits.call(FwhtSignsI64, "rotate", a, signsRef))
   }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object FwhtSignsI64 {
+
+  /** [[FwhtSignsI64]]'s body: the sign flip, then [[fwhtInPlace]]. */
+  def rotate(a: ArrayData, signs: Array[Long]): ArrayData = {
+    val out = IntegerUnits.longs(a, "fwht_signs")
+    IntegerUnits.requireSameLength(out.length, signs.length, "fwht_signs")
+    var i = 0
+    while (i < out.length) { out(i) = signs(i) * out(i); i += 1 }
+    fwhtInPlace(out)
+    ArrayData.toArrayData(out)
+  }
 
   /** In-place unnormalized FWHT (Sylvester order): after the
     * butterfly, `out[i] = Σ_j (−1)^popcount(i & j) · in[j]`.

@@ -1,12 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, FloatType, LongType}
 
 /** Codegen kernels for the exact 1e-8 fixed-point ("integer units")
   * embedding arithmetic used by the k-means family
@@ -35,55 +34,27 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * [[NormalizeUnitsI64.dec8Unscaled]]). The argument above does not
   * carry over to them, so `dec8` keeps a guard band around every
   * half-way point and hands those components to `BigDecimal`.
+  *
+  * Every kernel in this package states its arithmetic once, as a
+  * method on its companion object taking and returning `ArrayData`
+  * or primitives. `nullSafeEval` (the interpreted path) calls it, and
+  * `doGenCode` emits one call to the same method ([[IntegerUnits.call]]),
+  * so generated and interpreted evaluation cannot drift apart and the
+  * kernel still runs inside its whole-stage codegen stage.
   */
 
 /** `array<float>` → `array<long>`: quantize every component to 1e-8
-  * units, once per row. Null elements are not expected (embedding
-  * columns are dense); a null element in interpreted eval surfaces as
-  * a NullPointerException rather than silently zeroing.
+  * units, once per row ([[QuantizeUnitsI64.quantizeAll]]). A null
+  * element throws `IllegalArgumentException` naming it, rather than
+  * quantizing as 0.
   */
-case class QuantizeUnitsI64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"quantize_units expects array<float>, got $t")
-  }
+case class QuantizeUnitsI64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "quantize_units"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      out(i) = QuantizeUnitsI64.quantize(x.getFloat(i))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any = QuantizeUnitsI64.quantizeAll(a.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out"); val v = ctx.freshName("v")
-      val t = ctx.freshName("t"); val f = ctx.freshName("f")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $out = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = ((double) $arr.getFloat($i)) * 1.0E8D;
-         |  ${QuantizeUnitsI64.guardJava(v)}
-         |  long $t = (long) $v;
-         |  double $f = $v - (double) $t;
-         |  $out[$i] = ($v >= 0.0D) ? ($f >= 0.5D ? $t + 1L : $t)
-         |                          : ($f <= -0.5D ? $t - 1L : $t);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, a => IntegerUnits.call(QuantizeUnitsI64, "quantizeAll", a))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -112,10 +83,14 @@ object QuantizeUnitsI64 {
     else { if (f <= -0.5) t - 1 else t }
   }
 
-  /** The codegen-inlined guard mirroring [[quantize]]'s range check. */
-  private[plans] def guardJava(v: String): String =
-    s"""if (!(java.lang.Math.abs($v) < 4.503599627370496E15D)) """ +
-      s"""throw new ArithmeticException("quantize_units: |e*1e8| = " + $v + " not < 2^52");"""
+  /** [[QuantizeUnitsI64]]'s body. */
+  def quantizeAll(a: ArrayData): ArrayData = {
+    val x = IntegerUnits.floats(a, "quantize_units")
+    val out = new Array[Long](x.length)
+    var i = 0
+    while (i < x.length) { out(i) = quantize(x(i)); i += 1 }
+    ArrayData.toArrayData(out)
+  }
 }
 
 /** Squared L2 distance of two `array<long>` unit vectors, accumulated
@@ -128,47 +103,25 @@ object QuantizeUnitsI64 {
   * for a malformed embedding).
   */
 case class L2UnitsI64(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"l2_units expects two array<long> arguments, got $l / $r")
-  }
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "l2_units"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = IntegerUnits.requireSameLength(x.numElements(), y.numElements(), "l2_units")
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = x.getLong(i) - y.getLong(i)
-      acc = Math.addExact(acc, Math.multiplyExact(d, d))
-      i += 1
-    }
-    acc
-  }
-
+  override def nullSafeEval(a: Any, b: Any): Any =
+    L2UnitsI64.l2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr1, arr2) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      s"""
-         |${IntegerUnits.sameLengthJava(n, arr1, arr2, "l2_units")}
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $arr1.getLong($i) - $arr2.getLong($i);
-         |  $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($d, $d));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, (a, b) => IntegerUnits.call(L2UnitsI64, "l2", a, b))
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object L2UnitsI64 {
+  /** [[L2UnitsI64]]'s body: [[ArgminL2.dist]] over the whole arrays. */
+  def l2(a: ArrayData, b: ArrayData): Long = {
+    val x = IntegerUnits.longs(a, "l2_units")
+    val y = IntegerUnits.longs(b, "l2_units")
+    ArgminL2.dist(x, 0, y, 0, IntegerUnits.requireSameLength(x.length, y.length, "l2_units"))
+  }
 }
 
 /** `array<float>` → `array<long>`: L2-normalize by the EXACT decimal
@@ -193,73 +146,38 @@ case class L2UnitsI64(left: Expression, right: Expression)
   *  - sqrt / divide / float-narrow / 1e-8 half-up quantize are the
   *    same correctly-rounded IEEE scalar ops as [[QuantizeUnitsI64]].
   */
-case class NormalizeUnitsI64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"normalize_units expects array<float>, got $t")
-  }
+case class NormalizeUnitsI64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "normalize_units"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val n8 = NormalizeUnitsI64.dec8Unscaled(x.getFloat(i))
-      acc = Math.addExact(acc, Math.multiplyExact(n8, n8))
-      i += 1
-    }
-    val nrm = math.sqrt(java.math.BigDecimal.valueOf(acc, 16).doubleValue())
-    val out = new Array[Long](n)
-    i = 0
-    while (i < n) {
-      out(i) =
-        if (nrm > 0.0) QuantizeUnitsI64.quantize((x.getFloat(i).toDouble / nrm).toFloat)
-        else QuantizeUnitsI64.quantize(x.getFloat(i))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any = NormalizeUnitsI64.normalize(a.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val n8 = ctx.freshName("n8")
-      val nrm = ctx.freshName("nrm"); val out = ctx.freshName("out")
-      val v = ctx.freshName("v"); val t = ctx.freshName("t"); val f = ctx.freshName("f")
-      val helper = NormalizeUnitsI64.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |int $n = $arr.numElements();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $n8 = $helper.dec8Unscaled($arr.getFloat($i));
-         |  $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($n8, $n8));
-         |}
-         |double $nrm = java.lang.Math.sqrt(java.math.BigDecimal.valueOf($acc, 16).doubleValue());
-         |long[] $out = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = ($nrm > 0.0D)
-         |    ? ((double) (float) (((double) $arr.getFloat($i)) / $nrm)) * 1.0E8D
-         |    : ((double) $arr.getFloat($i)) * 1.0E8D;
-         |  ${QuantizeUnitsI64.guardJava(v)}
-         |  long $t = (long) $v;
-         |  double $f = $v - (double) $t;
-         |  $out[$i] = ($v >= 0.0D) ? ($f >= 0.5D ? $t + 1L : $t)
-         |                          : ($f <= -0.5D ? $t - 1L : $t);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, a => IntegerUnits.call(NormalizeUnitsI64, "normalize", a))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object NormalizeUnitsI64 {
+  /** [[NormalizeUnitsI64]]'s body. */
+  def normalize(a: ArrayData): ArrayData = {
+    val x = IntegerUnits.floats(a, "normalize_units")
+    var acc = 0L
+    var i = 0
+    while (i < x.length) {
+      val n8 = dec8Unscaled(x(i))
+      acc = Math.addExact(acc, Math.multiplyExact(n8, n8))
+      i += 1
+    }
+    val nrm = math.sqrt(java.math.BigDecimal.valueOf(acc, 16).doubleValue())
+    val out = new Array[Long](x.length)
+    i = 0
+    while (i < x.length) {
+      out(i) = QuantizeUnitsI64.quantize(if (nrm > 0.0) (x(i).toDouble / nrm).toFloat else x(i))
+      i += 1
+    }
+    ArrayData.toArrayData(out)
+  }
+
   /** |x·1e8| bound of the [[dec8Unscaled]] fast path. */
   private val FastBound = 1.0e12
 
@@ -324,49 +242,33 @@ object NormalizeUnitsI64 {
   * throw, like [[L2UnitsI64]].
   */
 case class DecDotF32(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"dec_dot expects two array<float> arguments, got $l / $r")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.DecimalType(30, 16)
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
+  override def dataType: DataType = DecimalType(30, 16)
   override def prettyName: String = "dec_dot"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DecDotF32.decDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => IntegerUnits.call(DecDotF32, "decDot", a, b))
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = IntegerUnits.requireSameLength(x.numElements(), y.numElements(), "dec_dot")
+object DecDotF32 {
+  /** [[DecDotF32]]'s body. */
+  def decDot(a: ArrayData, b: ArrayData): Decimal = {
+    val x = IntegerUnits.floats(a, "dec_dot")
+    val y = IntegerUnits.floats(b, "dec_dot")
+    val n = IntegerUnits.requireSameLength(x.length, y.length, "dec_dot")
     var acc = 0L
     var i = 0
     while (i < n) {
       acc = Math.addExact(acc, Math.multiplyExact(
-        NormalizeUnitsI64.dec8Unscaled(x.getFloat(i)),
-        NormalizeUnitsI64.dec8Unscaled(y.getFloat(i))))
+        NormalizeUnitsI64.dec8Unscaled(x(i)), NormalizeUnitsI64.dec8Unscaled(y(i))))
       i += 1
     }
-    org.apache.spark.sql.types.Decimal(java.math.BigDecimal.valueOf(acc, 16), 30, 16)
+    Decimal(java.math.BigDecimal.valueOf(acc, 16), 30, 16)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr1, arr2) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-      val helper = NormalizeUnitsI64.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |${IntegerUnits.sameLengthJava(n, arr1, arr2, "dec_dot")}
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact(
-         |    $helper.dec8Unscaled($arr1.getFloat($i)), $helper.dec8Unscaled($arr2.getFloat($i))));
-         |}
-         |${ev.value} = org.apache.spark.sql.types.Decimal.apply(
-         |  java.math.BigDecimal.valueOf($acc, 16), 30, 16);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object IntegerUnits {
@@ -380,11 +282,35 @@ object IntegerUnits {
     a
   }
 
-  /** Codegen twin of [[requireSameLength]]: declares `int nVar`. */
-  private[plans] def sameLengthJava(nVar: String, arr1: String, arr2: String, op: String): String =
-    s"""int $nVar = $arr1.numElements();
-       |if ($nVar != $arr2.numElements()) throw new IllegalArgumentException(
-       |  "$op: array lengths differ (" + $nVar + " vs " + $arr2.numElements() + ")");""".stripMargin
+  /** The elements of `a` as a `long[]`, read once per row: a kernel
+    * body loops over a primitive array whatever `ArrayData` class the
+    * row holds (unsafe, columnar or generic), so its inner loops keep
+    * one JIT profile across every call site. A null element throws
+    * [[nullElement]] instead of reading as 0; an input type that
+    * admits no nulls never trips it.
+    */
+  def longs(a: ArrayData, op: String): Array[Long] = { requireNoNulls(a, op); a.toLongArray() }
+
+  /** [[longs]] for `array<int>`. */
+  def ints(a: ArrayData, op: String): Array[Int] = { requireNoNulls(a, op); a.toIntArray() }
+
+  /** [[longs]] for `array<float>`. */
+  def floats(a: ArrayData, op: String): Array[Float] = { requireNoNulls(a, op); a.toFloatArray() }
+
+  private[plans] def requireNoNulls(a: ArrayData, op: String): Unit = {
+    var i = 0
+    while (i < a.numElements()) { if (a.isNullAt(i)) throw nullElement(op, i); i += 1 }
+  }
+
+  /** The loud failure for a null element of a numeric kernel input. */
+  def nullElement(op: String, at: Any): IllegalArgumentException =
+    new IllegalArgumentException(s"$op: null element at $at")
+
+  /** Java source that calls `method` of the Scala object `obj` — how a
+    * kernel's `doGenCode` runs the same body as its `nullSafeEval`.
+    */
+  private[plans] def call(obj: AnyRef, method: String, args: Any*): String =
+    s"${obj.getClass.getName}.MODULE$$.$method(${args.mkString(", ")})"
 
   /** Column API for the quantizer. */
   def quantizeUnits(e: Column): Column =

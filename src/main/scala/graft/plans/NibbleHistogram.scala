@@ -1,15 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
-/** 16-bin high-nibble histogram of a binary column, one codegen pass
-  * over the raw bytes — the feature-extraction kernel behind
+/** 16-bin high-nibble histogram of a binary column, one pass over
+  * the raw bytes ([[NibbleHistogram.histogram]]) — the feature-extraction kernel behind
   * `mm_byte_histogram`.
   *
   * Value-identical to counting hex digits at odd positions of
@@ -21,44 +20,26 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * into every bin reference (8 s). One pass over byte[] with a
   * 16-slot local array is the shape a 100 TB scan needs (0.6 s).
   */
-case class NibbleHistogram(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"nibble_histogram expects binary, got $t")
-  }
+case class NibbleHistogram(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(BinaryType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "nibble_histogram"
-
-  override def nullSafeEval(a: Any): Any = {
-    val b = a.asInstanceOf[Array[Byte]]
-    val counts = new Array[Long](16)
-    var i = 0
-    while (i < b.length) {
-      counts((b(i) >> 4) & 0xf) += 1
-      i += 1
-    }
-    new GenericArrayData(counts)
-  }
-
+  override def nullSafeEval(a: Any): Any = NibbleHistogram.histogram(a.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val counts = ctx.freshName("counts"); val i = ctx.freshName("i")
-      s"""
-         |long[] $counts = new long[16];
-         |for (int $i = 0; $i < $arr.length; $i++) {
-         |  $counts[($arr[$i] >> 4) & 0xf]++;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($counts);
-       """.stripMargin
-    })
-
+    defineCodeGen(ctx, ev, b => IntegerUnits.call(NibbleHistogram, "histogram", b))
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object NibbleHistogram {
+  /** [[NibbleHistogram]]'s body. */
+  def histogram(b: Array[Byte]): ArrayData = {
+    val counts = new Array[Long](16)
+    var i = 0
+    while (i < b.length) { counts((b(i) >> 4) & 0xf) += 1; i += 1 }
+    ArrayData.toArrayData(counts)
+  }
+
   /** Column API. */
   def nibbleHistogram(payload: Column): Column =
     ColumnBridge.column(NibbleHistogram(ColumnBridge.expression(payload)))

@@ -1,9 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -23,16 +22,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * was the dominant build cost (`ann_pq_wide` 9.2 s vs flat PQ's
   * ~2.6 s at bench SF). Here the codebooks ride the plan as ONE
   * `long[]` reference object ([[SqEncodeI64]]'s pattern — plan DATA,
-  * zero JIT kernels added per codebook entry) and the m×cb×dsub loop
-  * compiles to three nested counted loops inside whole-stage codegen.
+  * zero JIT kernels added per codebook entry) and the generated code
+  * runs the m×cb×dsub search ([[PqEncodeI64.encode]]) inside
+  * whole-stage codegen.
   *
-  * Bit-parity (spec-pinned against a driver-side argmin): the
-  * distance is [[L2UnitsI64]]'s exact overflow-checked long Σ(Δ²),
-  * and scanning codes ASCENDING with a strict `<` keeps the FIRST
-  * minimal distance — the lowest-code tiebreak. The interpreted eval
-  * runs that search as
-  * [[ArgminL2.scan]] once per subspace, the loop the PQ training fold
-  * shares. Overflow: normalized units |u| ≤ 1e8, centroids
+  * Bit-parity (spec-pinned against a driver-side argmin): the search
+  * is [[ArgminL2.scan]] once per subspace, the loop the PQ training
+  * fold shares — [[L2UnitsI64]]'s exact overflow-checked long Σ(Δ²),
+  * codes scanned ASCENDING so the FIRST minimal distance wins (the
+  * lowest-code tiebreak). Overflow: normalized units |u| ≤ 1e8, centroids
   * are means of units, so per-term Δ² ≤ 4e16 and a dsub ≤ 64 sum
   * stays < 2.6e18 < 2⁶³; addExact/multiplyExact fail loudly beyond.
   *
@@ -42,18 +40,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * over a per-task reference object.
   */
 case class PqEncodeI64(child: Expression, books: Array[Long],
-                       m: Int, cb: Int, dsub: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_encode expects array<long>, got $t")
-  }
+                       m: Int, cb: Int, dsub: Int) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
+  override def nullSafeEval(a: Any): Any =
+    PqEncodeI64.encode(a.asInstanceOf[ArrayData], books, m, cb, dsub)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val booksRef = ctx.addReferenceObj("pqBooks", books, "long[]")
+    defineCodeGen(ctx, ev, u => IntegerUnits.call(PqEncodeI64, "encode", u, booksRef, m, cb, dsub))
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
 
-  override def nullSafeEval(a: Any): Any = {
-    val u = a.asInstanceOf[ArrayData]
-    IntegerUnits.requireSameLength(u.numElements(), m * dsub, "pq_encode")
+object PqEncodeI64 {
+  /** [[PqEncodeI64]]'s body: the m per-subspace argmin codes. */
+  def encode(a: ArrayData, books: Array[Long], m: Int, cb: Int, dsub: Int): ArrayData = {
+    val u = IntegerUnits.longs(a, "pq_encode")
+    IntegerUnits.requireSameLength(u.length, m * dsub, "pq_encode")
     val out = new Array[Int](m)
     val bestD = new Array[Long](1)
     val bestC = new Array[Long](1)
@@ -63,43 +68,8 @@ case class PqEncodeI64(child: Expression, books: Array[Long],
       out(j) = bestC(0).toInt
       j += 1
     }
-    new GenericArrayData(out)
+    ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("pqBooks", books, "long[]")
-    nullSafeCodeGen(ctx, ev, u => {
-      val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val j = ctx.freshName("j"); val c = ctx.freshName("c"); val d = ctx.freshName("d")
-      val bestD = ctx.freshName("bestD"); val bestC = ctx.freshName("bestC")
-      val acc = ctx.freshName("acc"); val base = ctx.freshName("base")
-      val diff = ctx.freshName("diff")
-      s"""
-         |int $n = $u.numElements();
-         |if ($n != ${m * dsub}) throw new IllegalArgumentException(
-         |  "pq_encode: vector dim " + $n + " != m*dsub = ${m * dsub}");
-         |int[] $out = new int[$m];
-         |for (int $j = 0; $j < $m; $j++) {
-         |  long $bestD = Long.MAX_VALUE;
-         |  int $bestC = 0;
-         |  for (int $c = 0; $c < $cb; $c++) {
-         |    long $acc = 0L;
-         |    int $base = ($j * $cb + $c) * $dsub;
-         |    for (int $d = 0; $d < $dsub; $d++) {
-         |      long $diff = $u.getLong($j * $dsub + $d) - $booksRef[$base + $d];
-         |      $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($diff, $diff));
-         |    }
-         |    if ($acc < $bestD) { $bestD = $acc; $bestC = $c; }
-         |  }
-         |  $out[$j] = $bestC;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Fused query ADC-TABLE kernel: all m×cb per-subspace partial
@@ -114,82 +84,47 @@ case class PqEncodeI64(child: Expression, books: Array[Long],
   * 2.3 s steady-state on a 500-row corpus — pure plan constant).
   * Here the codebooks ride as ONE long[] reference object
   * ([[PqEncodeI64]]'s layout, identical flattening) and the
-  * m×cb×dsub loop compiles inside whole-stage codegen.
+  * m×cb×dsub loop ([[PqQTableI64.qtable]]) runs inside whole-stage
+  * codegen.
   *
   * Bit parity with the HOF/literal table builds is exact: the same
-  * overflow-checked long Σ(Δ²) per (subspace, code), emitted in the
-  * same (j, c) order ([[graft.plans.IntegerUnits]] l2Units math).
+  * overflow-checked long Σ(Δ²) per (subspace, code) ([[ArgminL2.dist]]),
+  * emitted in the same (j, c) order.
   */
 case class PqQTableI64(child: Expression, books: Array[Long],
-                       m: Int, cb: Int, dsub: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_qtable expects array<long>, got $t")
-  }
+                       m: Int, cb: Int, dsub: Int) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType =
     ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
   override def prettyName: String = "pq_qtable"
+  override def nullSafeEval(a: Any): Any =
+    PqQTableI64.qtable(a.asInstanceOf[ArrayData], books, m, cb, dsub)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val booksRef = ctx.addReferenceObj("pqBooks", books, "long[]")
+    defineCodeGen(ctx, ev, u => IntegerUnits.call(PqQTableI64, "qtable", u, booksRef, m, cb, dsub))
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
 
-  override def nullSafeEval(a: Any): Any = {
-    val u = a.asInstanceOf[ArrayData]
-    IntegerUnits.requireSameLength(u.numElements(), m * dsub, "pq_qtable")
+object PqQTableI64 {
+  /** [[PqQTableI64]]'s body: row j holds the distance of subspace j
+    * to each of its cb codes.
+    */
+  def qtable(a: ArrayData, books: Array[Long], m: Int, cb: Int, dsub: Int): ArrayData = {
+    val u = IntegerUnits.longs(a, "pq_qtable")
+    IntegerUnits.requireSameLength(u.length, m * dsub, "pq_qtable")
     val out = new Array[Any](m)
     var j = 0
     while (j < m) {
       val row = new Array[Long](cb)
       var c = 0
-      while (c < cb) {
-        var acc = 0L
-        val base = (j * cb + c) * dsub
-        var d = 0
-        while (d < dsub) {
-          val diff = u.getLong(j * dsub + d) - books(base + d)
-          acc = Math.addExact(acc, Math.multiplyExact(diff, diff))
-          d += 1
-        }
-        row(c) = acc
-        c += 1
-      }
-      out(j) = new GenericArrayData(row)
+      while (c < cb) { row(c) = ArgminL2.dist(u, j * dsub, books, (j * cb + c) * dsub, dsub); c += 1 }
+      out(j) = ArrayData.toArrayData(row)
       j += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("pqBooks", books, "long[]")
-    nullSafeCodeGen(ctx, ev, u => {
-      val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val row = ctx.freshName("row")
-      val j = ctx.freshName("j"); val c = ctx.freshName("c"); val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc"); val base = ctx.freshName("base")
-      val diff = ctx.freshName("diff")
-      s"""
-         |int $n = $u.numElements();
-         |if ($n != ${m * dsub}) throw new IllegalArgumentException(
-         |  "pq_qtable: vector dim " + $n + " != m*dsub = ${m * dsub}");
-         |Object[] $out = new Object[$m];
-         |for (int $j = 0; $j < $m; $j++) {
-         |  long[] $row = new long[$cb];
-         |  for (int $c = 0; $c < $cb; $c++) {
-         |    long $acc = 0L;
-         |    int $base = ($j * $cb + $c) * $dsub;
-         |    for (int $d = 0; $d < $dsub; $d++) {
-         |      long $diff = $u.getLong($j * $dsub + $d) - $booksRef[$base + $d];
-         |      $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($diff, $diff));
-         |    }
-         |    $row[$c] = $acc;
-         |  }
-         |  $out[$j] = new org.apache.spark.sql.catalyst.util.GenericArrayData($row);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Fused ADC distance kernel — the corpus-sized pass of the PQ
@@ -199,9 +134,9 @@ case class PqQTableI64(child: Expression, books: Array[Long],
   * chain: codegen'd, but m separate two-level ArrayData walks per
   * row, each with its own null/bounds machinery, and the plan grows
   * m nodes (16 at the FAISS m=16 shape). Here the whole
-  * Σ_j qtable[j][codes[j]] folds into ONE compiled counted loop
-  * reading both arrays once — the serve-scan constant that prices a
-  * 100 TB codes-table scan.
+  * Σ_j qtable[j][codes[j]] folds into ONE loop
+  * ([[PqAdcSumI64.adcSum]]) reading both arrays once — the serve-scan
+  * constant that prices a 100 TB codes-table scan.
   *
   * Unlike [[PqEncodeI64]] the table is NOT a plan literal: each
   * query row carries its own m×cb table (built by `pqQueries`
@@ -216,62 +151,43 @@ case class PqQTableI64(child: Expression, books: Array[Long],
   * addExact fails loudly beyond (the [[L2UnitsI64]] guard family).
   */
 case class PqAdcSumI64(left: Expression, right: Expression, m: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(IntegerType, _), ArrayType(ArrayType(LongType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"pq_adc_sum expects (array<int>, array<array<long>>), got ($l, $r)")
-  }
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes =
+    Seq(ArrayType(IntegerType), ArrayType(ArrayType(LongType)))
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_adc_sum"
+  override def nullSafeEval(codes: Any, table: Any): Any =
+    PqAdcSumI64.adcSum(codes.asInstanceOf[ArrayData], table.asInstanceOf[ArrayData], m)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (codes, table) => IntegerUnits.call(PqAdcSumI64, "adcSum", codes, table, m))
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
-  override def nullSafeEval(codesAny: Any, tableAny: Any): Any = {
-    val codes = codesAny.asInstanceOf[ArrayData]
-    val table = tableAny.asInstanceOf[ArrayData]
-    IntegerUnits.requireSameLength(codes.numElements(), m, "pq_adc_sum codes")
+object PqAdcSumI64 {
+  /** [[PqAdcSumI64]]'s body. The table is read only where a code
+    * points (copying m×cb longs per row would cost more than the sum).
+    */
+  def adcSum(codesData: ArrayData, table: ArrayData, m: Int): Long = {
+    val codes = IntegerUnits.ints(codesData, "pq_adc_sum codes")
+    IntegerUnits.requireSameLength(codes.length, m, "pq_adc_sum codes")
     IntegerUnits.requireSameLength(table.numElements(), m, "pq_adc_sum qtable")
     var acc = 0L
     var j = 0
     while (j < m) {
-      val c = codes.getInt(j)
+      val c = codes(j)
+      if (table.isNullAt(j)) throw IntegerUnits.nullElement("pq_adc_sum qtable", j)
       val row = table.getArray(j)
       if (c < 0 || c >= row.numElements())
         throw new IllegalArgumentException(
           s"pq_adc_sum: code $c out of range for a ${row.numElements()}-entry table (subspace $j)")
+      if (row.isNullAt(c)) throw IntegerUnits.nullElement("pq_adc_sum qtable", s"($j, $c)")
       acc = Math.addExact(acc, row.getLong(c))
       j += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (codes, table) => {
-      val acc = ctx.freshName("acc"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val row = ctx.freshName("row")
-      s"""
-         |if ($codes.numElements() != $m) throw new IllegalArgumentException(
-         |  "pq_adc_sum codes: length " + $codes.numElements() + " != $m");
-         |if ($table.numElements() != $m) throw new IllegalArgumentException(
-         |  "pq_adc_sum qtable: length " + $table.numElements() + " != $m");
-         |long $acc = 0L;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  int $c = $codes.getInt($j);
-         |  org.apache.spark.sql.catalyst.util.ArrayData $row = $table.getArray($j);
-         |  if ($c < 0 || $c >= $row.numElements()) throw new IllegalArgumentException(
-         |    "pq_adc_sum: code " + $c + " out of range for a " + $row.numElements()
-         |      + "-entry table (subspace " + $j + ")");
-         |  $acc = java.lang.Math.addExact($acc, $row.getLong($c));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object PqQuant {

@@ -1,10 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -41,121 +40,83 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * oracle never replays that path.
   */
 case class SqEncodeI64(child: Expression, mins: Array[Long], spans: Array[Long])
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"sq_encode expects array<long>, got $t")
-  }
+  extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "sq_encode"
-
-  override def nullSafeEval(a: Any): Any = {
-    val u = a.asInstanceOf[ArrayData]
-    val n = IntegerUnits.requireSameLength(u.numElements(), mins.length, "sq_encode")
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      out(i) = ScalarQuant.encode1(u.getLong(i), mins(i), spans(i))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
+  override def nullSafeEval(a: Any): Any = SqEncodeI64.encode(a.asInstanceOf[ArrayData], mins, spans)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val minsRef = ctx.addReferenceObj("sqMins", mins, "long[]")
     val spansRef = ctx.addReferenceObj("sqSpans", spans, "long[]")
-    nullSafeCodeGen(ctx, ev, u => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out"); val c = ctx.freshName("c")
-      s"""
-         |int $n = $u.numElements();
-         |if ($n != $minsRef.length) throw new IllegalArgumentException(
-         |  "sq_encode: vector dim " + $n + " != trained bounds dim " + $minsRef.length);
-         |int[] $out = new int[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $c = $spansRef[$i] == 0L ? 0L
-         |    : java.lang.Math.multiplyExact($u.getLong($i) - $minsRef[$i], 255L) / $spansRef[$i];
-         |  $out[$i] = (int) java.lang.Math.min(255L, java.lang.Math.max(0L, $c));
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, u => IntegerUnits.call(SqEncodeI64, "encode", u, minsRef, spansRef))
   }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+object SqEncodeI64 {
+  /** [[SqEncodeI64]]'s body: [[ScalarQuant.encode1]] per dimension. */
+  def encode(a: ArrayData, mins: Array[Long], spans: Array[Long]): ArrayData = {
+    val u = IntegerUnits.longs(a, "sq_encode")
+    val out = new Array[Int](IntegerUnits.requireSameLength(u.length, mins.length, "sq_encode"))
+    var i = 0
+    while (i < out.length) { out(i) = ScalarQuant.encode1(u(i), mins(i), spans(i)); i += 1 }
+    ArrayData.toArrayData(out)
+  }
+}
+
 /** Asymmetric SQ distance, fused: Σ_d (q_d − decode_d(c_d))² over the
   * query's exact units and the corpus row's 8-bit codes — the SQ
-  * analogue of PQ's ADC lookup, one codegen loop per (query, vector)
-  * pair with the decode inlined (the codes table stays 1 byte/dim on
+  * analogue of PQ's ADC lookup, one loop per (query, vector) pair
+  * with the decode inlined (the codes table stays 1 byte/dim on
   * disk; nothing decoded is ever materialized).
   */
 case class SqAdcL2I64(left: Expression, right: Expression,
                       mins: Array[Long], spans: Array[Long])
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"sq_adc_l2 expects (array<long>, array<int>), got $l / $r")
-  }
+  extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(IntegerType))
   override def dataType: DataType = LongType
   override def prettyName: String = "sq_adc_l2"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SqAdcL2I64.adcL2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], mins, spans)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val minsRef = ctx.addReferenceObj("sqMins", mins, "long[]")
+    val spansRef = ctx.addReferenceObj("sqSpans", spans, "long[]")
+    defineCodeGen(ctx, ev, (q, c) => IntegerUnits.call(SqAdcL2I64, "adcL2", q, c, minsRef, spansRef))
+  }
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val q = a.asInstanceOf[ArrayData]
-    val c = b.asInstanceOf[ArrayData]
-    val n = IntegerUnits.requireSameLength(q.numElements(), c.numElements(), "sq_adc_l2")
+object SqAdcL2I64 {
+  /** [[SqAdcL2I64]]'s body: Σ (q − [[ScalarQuant.decode1]](c))². */
+  def adcL2(qa: ArrayData, ca: ArrayData, mins: Array[Long], spans: Array[Long]): Long = {
+    val q = IntegerUnits.longs(qa, "sq_adc_l2")
+    val c = IntegerUnits.ints(ca, "sq_adc_l2")
+    val n = IntegerUnits.requireSameLength(q.length, c.length, "sq_adc_l2")
     IntegerUnits.requireSameLength(n, mins.length, "sq_adc_l2")
     var acc = 0L
     var i = 0
     while (i < n) {
-      val d = q.getLong(i) - ScalarQuant.decode1(c.getInt(i), mins(i), spans(i))
+      val d = q(i) - ScalarQuant.decode1(c(i), mins(i), spans(i))
       acc = Math.addExact(acc, Math.multiplyExact(d, d))
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val minsRef = ctx.addReferenceObj("sqMins", mins, "long[]")
-    val spansRef = ctx.addReferenceObj("sqSpans", spans, "long[]")
-    nullSafeCodeGen(ctx, ev, (q, c) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      s"""
-         |${IntegerUnits.sameLengthJava(n, q, c, "sq_adc_l2")}
-         |if ($n != $minsRef.length) throw new IllegalArgumentException(
-         |  "sq_adc_l2: vector dim " + $n + " != trained bounds dim " + $minsRef.length);
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $q.getLong($i)
-         |    - ($minsRef[$i] + java.lang.Math.multiplyExact((long) $c.getInt($i), $spansRef[$i]) / 255L);
-         |  $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($d, $d));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object ScalarQuant {
 
-  /** Reference scalar encode — the spec pins the kernels against
-    * plain-Scala replays of these two.
+  /** Scalar encode of one dimension — the kernels' per-element step,
+    * which the spec also replays driver-side.
     */
   def encode1(u: Long, vmin: Long, span: Long): Int = {
     val c = if (span == 0L) 0L else Math.multiplyExact(u - vmin, 255L) / span
     Math.min(255L, Math.max(0L, c)).toInt
   }
 
-  /** Reference scalar decode (1e-8 units). */
+  /** Scalar decode of one dimension (1e-8 units). */
   def decode1(c: Int, vmin: Long, span: Long): Long =
     vmin + Math.multiplyExact(c.toLong, span) / 255L
 

@@ -214,16 +214,6 @@ class IntegerUnitsSpec extends SparkSpec {
       (u.indices.map { d => val x = u(d) - c(d); x * x }.sum, i.toLong)
     }.sorted
 
-  /** The test session plus a session that evaluates every expression
-    * interpreted (no whole-stage or expression codegen).
-    */
-  private def bothEvalModes: Seq[org.apache.spark.sql.SparkSession] = {
-    val interpreted = spark.newSession()
-    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
-    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    Seq(spark, interpreted)
-  }
-
   private def pairs(r: org.apache.spark.sql.Row, i: Int): Seq[(Long, Long)] =
     if (r.isNullAt(i)) null
     else r.getSeq[org.apache.spark.sql.Row](i).map(p => (p.getLong(0), p.getLong(1)))

@@ -22,6 +22,24 @@ object SparkTestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** Two sessions over the test session's context: one that runs
+    * generated code wherever Catalyst can — a codegen failure fails
+    * instead of falling back to interpretation, and a projection over
+    * local data is not folded away at optimization — and one that
+    * evaluates every expression interpreted (no whole-stage or
+    * expression codegen).
+    */
+  protected lazy val bothEvalModes: Seq[SparkSession] = {
+    val generated = spark.newSession()
+    generated.conf.set("spark.sql.codegen.fallback", "false")
+    generated.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    Seq(generated, interpreted)
+  }
+
   /** Jobs that `body` starts (see [[listening]]). */
   protected def jobsStartedBy(body: => Unit): Int = {
     import scala.jdk.CollectionConverters._
