@@ -462,12 +462,6 @@ object ScaleProbe {
           fixedQ.get.select(col("vec_id") + 1000000000L as "vec_id", col("embedding")),
           threshold = 0.45).count()
       }),
-      // The flat trainer at the corpus contract's k = 4·mult, named
-      // for the single-level alternative to the hier factorization
-      // at the second/third decade: plan size is O(1) in k, so the
-      // cost is the n×k argmin scan.
-      "dedup_semantic_wide" -> ((_, _, _, em, k) =>
-        operators.Similarity.dedupSemantic(em, k = 4 * k.toInt).count()),
       // Grouped build at HIGH k₁: k₁ = 64, k₂
       // sized so k₁·k₂ tracks the corpus contract; 3 assignment jobs
       // per fine iteration regardless of k₁.

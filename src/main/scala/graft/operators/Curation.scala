@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Exact.ratio6
 import graft.functions.Hashing._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -611,9 +612,7 @@ object Curation {
         sum(col("n_chars")).as("total_chars"),
         sum(col("n_toks")).as("total_tokens"),
         sum(when(col("n_toks") >= 5, 1L).otherwise(0L)).as("n_keep"))
-      .withColumn("avg_chars", // tie-exact integer half-up (fin_vwap lesson)
-        (expr("(2 * total_chars * 1000000 + n_docs) DIV (2 * n_docs)").cast("double")
-          / lit(1e6)) + lit(0.0))
+      .withColumn("avg_chars", ratio6("total_chars", "n_docs"))
       .orderBy(col("lang"))
   }
 

@@ -83,14 +83,10 @@ object CvEval {
         (sum(abs(col("residual"))) * 1000000).cast("long").as("sum_abs_u"),
         (round(sqrt(sum(col("residual") * col("residual")).cast("double") / count(lit(1))), 6)
           + lit(0.0)).as("rmse"))
-      // MAE rounds half-up in EXACT integer arithmetic (residuals are
-      // 1e-6 units): with a power-of-two testSize the mean is
-      // binary-exact and round(double) tie behavior splits between
-      // engines (the fin_vwap lesson). RMSE keeps double rounding —
-      // sqrt output has no exact-tie structure.
-      .withColumn("mae",
-        (expr("(2 * sum_abs_u + n_test) DIV (2 * n_test)").cast("double") / lit(1e6))
-          + lit(0.0))
+      // MAE is tie-exact over 1e-6 residual units (a power-of-two
+      // testSize makes the mean binary-exact); RMSE keeps double
+      // rounding — sqrt output has no exact-tie structure.
+      .withColumn("mae", ratio6("sum_abs_u", "n_test", scale = 1))
       .select(col("fold"), col("n_test"), col("mae"), col("rmse"))
       .orderBy(col("fold"))
   }

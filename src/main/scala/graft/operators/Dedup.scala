@@ -56,8 +56,7 @@ object Dedup {
     * explode fans out ~n/w rows per doc on the scan side.
     */
   def passages(documents: DataFrame, w: Int = 20): DataFrame = {
-    val parallelism = documents.sparkSession.sparkContext.defaultParallelism
-    val chunks = documents.repartition(parallelism, col("doc_id"))
+    val chunks = Spread(documents, "doc_id")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       // guard: sequence(0, -1) DESCENDS in Spark, it is not empty —
       // short docs must map to an explicit empty array
@@ -117,8 +116,7 @@ object Dedup {
     */
   def substrings(documents: DataFrame, w: Int = 20, stride: Int = 5,
                  minDocs: Int = 1): DataFrame = {
-    val parallelism = documents.sparkSession.sparkContext.defaultParallelism
-    val wins = documents.repartition(parallelism, col("doc_id"))
+    val wins = Spread(documents, "doc_id")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), posexplode(
         when(size(col("toks")) >= w,
@@ -159,15 +157,9 @@ object Dedup {
     * `honestCheckpoint` it, and the ones that rank shingles explode
     * the checkpoint into (doc_id, s) rows.
     */
-  private def shingleSets(documents: DataFrame, w: Int): DataFrame = {
-    // Explicit partition count: shingling is CPU-bound on small
-    // rows, and AQE's byte-based coalescing would shrink a small-byte
-    // shuffle to ~1 partition and serialize it. A user-numbered
-    // repartition is exempt from AQE coalescing.
-    val parallelism = documents.sparkSession.sparkContext.defaultParallelism
-    documents.repartition(parallelism, col("doc_id"))
+  private def shingleSets(documents: DataFrame, w: Int): DataFrame =
+    Spread(documents, "doc_id")
       .select(col("doc_id"), array_distinct(shingles(col("text"), w)).as("sh"))
-  }
 
   /** The (doc_id, s) rows of a [[shingleSets]] frame. */
   private def shingleRows(sets: DataFrame): DataFrame =

@@ -531,12 +531,10 @@ object Events {
   /** Trailing z-score anomaly flags: each event's value scored
     * against the mean/stddev of the SAME USER's previous `bars`
     * values (frame excludes the current row — an anomaly must not
-    * dilute its own baseline). Moments are exact decimal sums; at
-    * bars ≤ 20 the double combination n·Σx² − (Σx)² is exact integer
-    * arithmetic (magnitudes ≪ 2⁵³), so a constant window yields
-    * variance exactly 0, never a catastrophic-cancellation negative.
-    * One shuffle on user_id; z uses the ROUNDED stddev so both
-    * engines replay identical doubles.
+    * dilute its own baseline). Moments are exact decimal sums
+    * combined by [[graft.functions.Exact.sampleStd]]. One shuffle on
+    * user_id; z uses the ROUNDED stddev so both engines replay
+    * identical doubles.
     */
   def anomalies(events: DataFrame, bars: Int = 20, zCut: Double = 3.0): DataFrame = {
     val ord = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -550,9 +548,7 @@ object Events {
       .withColumn("s2", sum(v * v).over(w))
       .withColumn("mean", col("s").cast("double") / col("n"))
       .withColumn("sd", when(col("n") > 1,
-        round(sqrt((col("n").cast("double") * col("s2").cast("double")
-          - col("s").cast("double") * col("s").cast("double"))
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))), 6) + lit(0.0)))
+        round(sampleStd(col("n"), col("s"), col("s2")), 6) + lit(0.0)))
       .withColumn("zscore", when(col("sd") > 0.0,
         round((col("value") - col("mean")) / col("sd"), 6) + lit(0.0)))
       .withColumn("is_anomaly", coalesce(abs(col("zscore")) > zCut, lit(false)))

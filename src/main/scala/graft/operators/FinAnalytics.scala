@@ -1,8 +1,9 @@
 package graft.operators
 
+import graft.functions.Exact
 import graft.functions.Exact._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Financial time-series analytics — the derived metrics the
@@ -85,6 +86,29 @@ object FinAnalytics {
       .select(col("user_id"), col("day"), col("value").as("close"), col("volume"))
   }
 
+  /** Each user's bars in day order, the family's one window ordering. */
+  private def byDay: WindowSpec = Window.partitionBy(col("user_id")).orderBy(col("day"))
+
+  /** The trailing `bars`-bar frame of [[byDay]], ending at the current bar. */
+  private def trailing(bars: Int): WindowSpec = byDay.rowsBetween(-(bars - 1), 0)
+
+  /** A daily return needs a previous close neither missing nor zero
+    * (ANSI makes x / 0 an error). Oracle twin: OracleBlocks.returnDefined.
+    */
+  private def returnDefined(prev: Column): Column = prev.isNotNull && prev =!= 0.0
+
+  /** The daily simple return close / prev − 1, in doubles. */
+  private def dailyReturn(prev: Column): Column = col("close") / prev - lit(1.0)
+
+  /** `closes` with each user's daily return `ret` over `prev_close`,
+    * where defined: the one series [[returns]], [[beta]] and
+    * [[infoRatio]] read.
+    */
+  private def dailyReturns(closes: DataFrame): DataFrame =
+    closes.withColumn("prev_close", lag(col("close"), 1).over(byDay))
+      .filter(returnDefined(col("prev_close")))
+      .withColumn("ret", dailyReturn(col("prev_close")))
+
   /** Wide→long reshape of the daily OHLC bars (the melt/unpivot the
     * reference's plotting layer does before charting): one row per
     * (user_id, day, metric). Runs through Spark's native `unpivot`
@@ -109,7 +133,7 @@ object FinAnalytics {
     * the one closes-family shuffle.
     */
   def rollingMedian(events: DataFrame, bars: Int = 5): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day")).rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     closes(events)
       .withColumn("vals", sort_array(collect_list(col("close")).over(w)))
       .withColumn("med", element_at(col("vals"), ((size(col("vals")) + 1) / 2).cast("int")))
@@ -147,16 +171,8 @@ object FinAnalytics {
         sum(col("r1") * col("r1")).as("s11"),
         sum(col("r2") * col("r2")).as("s22"))
       .filter(col("n") > 1)
-      .select(col("u1"), col("u2"), col("n"), {
-        val vx = col("n").cast("double") * col("s11").cast("double") -
-          col("s1").cast("double") * col("s1").cast("double")
-        val vy = col("n").cast("double") * col("s22").cast("double") -
-          col("s2").cast("double") * col("s2").cast("double")
-        val cov = col("n").cast("double") * col("s12").cast("double") -
-          col("s1").cast("double") * col("s2").cast("double")
-        // constant series (zero variance) have no defined correlation
-        when(vx > 0.0 && vy > 0.0, round(cov / sqrt(vx * vy), 6) + lit(0.0)).as("corr")
-      })
+      .select(col("u1"), col("u2"), col("n"),
+        pearson(col("n"), col("s1"), col("s2"), col("s12"), col("s11"), col("s22")).as("corr"))
       .orderBy(col("u1"), col("u2"))
   }
 
@@ -167,9 +183,8 @@ object FinAnalytics {
     * result.
     */
   def movingAvg(events: DataFrame): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val w5 = ord.rowsBetween(-4, 0)
-    val w20 = ord.rowsBetween(-19, 0)
+    val w5 = trailing(5)
+    val w20 = trailing(20)
     closes(events)
       .withColumn("ma5", sum(dec2(col("close"))).over(w5).cast("double") / count(lit(1)).over(w5))
       .withColumn("ma20", sum(dec2(col("close"))).over(w20).cast("double") / count(lit(1)).over(w20))
@@ -182,7 +197,7 @@ object FinAnalytics {
     * decimal needed).
     */
   def rollingHiLo(events: DataFrame, bars: Int = 10): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day")).rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     closes(events)
       .withColumn("rolling_high", max(col("close")).over(w))
       .withColumn("rolling_low", min(col("close")).over(w))
@@ -192,20 +207,14 @@ object FinAnalytics {
   }
 
   /** Per-period simple returns close/lag(close) − 1 (the
-    * earningsGrowth / regularMarket change analog). Pure double
-    * scalar math on deterministic inputs.
+    * earningsGrowth / regularMarket change analog,
+    * [[dailyReturns]]). Pure double scalar math on deterministic
+    * inputs.
     */
-  def returns(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    closes(events)
-      .withColumn("prev_close", lag(col("close"), 1).over(w))
-      // A zero close has no defined return (and ANSI mode turns the
-      // division into an error, not an Infinity) — drop those periods.
-      .filter(col("prev_close").isNotNull && col("prev_close") =!= 0.0)
-      .withColumn("ret", col("close") / col("prev_close") - lit(1.0))
+  def returns(events: DataFrame): DataFrame =
+    dailyReturns(closes(events))
       .select(col("user_id"), col("day"), col("close"), col("ret"))
       .orderBy(col("user_id"), col("day"))
-  }
 
   /** Sample stddev of per-key returns via exact decimal moment sums:
     * var = (n·Σr² − (Σr)²) / (n·(n−1)) with the final combination in
@@ -220,9 +229,7 @@ object FinAnalytics {
       .select(col("user_id"), col("n"),
         // round(…,6)+0.0: engines may differ in the last ulp when
         // casting scale-12 decimals to double (see SURVEY §5).
-        (round(sqrt((col("n").cast("double") * col("sr2").cast("double")
-          - col("sr").cast("double") * col("sr").cast("double"))
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))), 6) + lit(0.0)).as("volatility"))
+        (round(sampleStd(col("n"), col("sr"), col("sr2")), 6) + lit(0.0)).as("volatility"))
       .orderBy(col("user_id"))
   }
 
@@ -248,9 +255,7 @@ object FinAnalytics {
       .select({
         val nD = col("n").cast("double")
         val mean = col("sr").cast("double") / nD
-        val std = sqrt((nD * col("sr2").cast("double")
-          - col("sr").cast("double") * col("sr").cast("double"))
-          / (nD * (col("n") - 1).cast("double")))
+        val std = sampleStd(col("n"), col("sr"), col("sr2"))
         val down = sqrt(col("sd2").cast("double") / nD)
         Seq(col("user_id"), col("n"),
           when(std > 0.0, round(mean / std * sqrt(lit(252.0)), 6) + lit(0.0)).as("sharpe"),
@@ -330,16 +335,8 @@ object FinAnalytics {
     * returns, exact-decimal moment sums, final ratio in doubles.
     */
   def infoRatio(events: DataFrame): DataFrame = {
-    val c = closes(events)
-    val marketRet = marketReturns(c).filter(col("mret").isNotNull)
-      .select(col("day"), col("mret"))
-    val wu = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val userRet = c
-      .withColumn("prev", lag(col("close"), 1).over(wu))
-      .filter(col("prev").isNotNull && col("prev") =!= 0.0)
-      .select(col("user_id"), col("day"), (col("close") / col("prev") - lit(1.0)).as("ret"))
     val a = dec6(col("ret")) - dec6(col("mret"))
-    userRet.join(broadcast(marketRet), "day")
+    matchedReturns(events)
       .select(col("user_id"), a.as("a"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("a")).as("sa"),
@@ -348,9 +345,7 @@ object FinAnalytics {
       .select(col("user_id"), col("n"), {
         val nD = col("n").cast("double")
         val mean = col("sa").cast("double") / nD
-        val std = sqrt((nD * col("sa2").cast("double")
-          - col("sa").cast("double") * col("sa").cast("double"))
-          / (nD * (col("n") - 1).cast("double")))
+        val std = sampleStd(col("n"), col("sa"), col("sa2"))
         when(std > 0.0, round(mean / std * sqrt(lit(252.0)), 6) + lit(0.0)).as("info_ratio")
       })
       .orderBy(col("user_id"))
@@ -361,30 +356,28 @@ object FinAnalytics {
     * would waste the sort).
     */
   private def betaPerUser(events: DataFrame): DataFrame = {
-    val c = closes(events)
-    val marketRet = marketReturns(c).filter(col("mret").isNotNull)
-      .select(col("day"), col("mret"))
-    val wu = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val userRet = c
-      .withColumn("prev", lag(col("close"), 1).over(wu))
-      .filter(col("prev").isNotNull && col("prev") =!= 0.0)
-      .select(col("user_id"), col("day"), (col("close") / col("prev") - lit(1.0)).as("ret"))
     val r = dec6(col("ret"))
     val m = dec6(col("mret"))
-    userRet.join(broadcast(marketRet), "day")
+    matchedReturns(events)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(r).as("sr"), sum(m).as("sm"),
            sum(r * m).as("srm"), sum(m * m).as("sm2"))
       .filter(col("n") > 1)
-      .select(col("user_id"), col("n"), {
-        val den = col("n").cast("double") * col("sm2").cast("double") -
-          col("sm").cast("double") * col("sm").cast("double")
-        // zero market variance over the matched days → beta undefined
-        when(den =!= 0.0,
-          round((col("n").cast("double") * col("srm").cast("double")
-            - col("sr").cast("double") * col("sm").cast("double")) / den, 6) + lit(0.0))
-          .as("beta")
-      })
+      .select(col("user_id"), col("n"),
+        Exact.beta(col("n"), col("sr"), col("sm"), col("srm"), col("sm2")).as("beta"))
+  }
+
+  /** Each user's [[dailyReturns]] matched to the market's return of
+    * the same day ([[marketReturns]], broadcast back): the
+    * (day, user_id, ret, mret) rows [[beta]] and [[infoRatio]] take
+    * their moments over.
+    */
+  private def matchedReturns(events: DataFrame): DataFrame = {
+    val c = closes(events)
+    val marketRet = marketReturns(c).filter(col("mret").isNotNull)
+      .select(col("day"), col("mret"))
+    dailyReturns(c).select(col("user_id"), col("day"), col("ret"))
+      .join(broadcast(marketRet), "day")
   }
 
   /** Cyclical time features — sin/cos encodings of hour-of-day,
@@ -453,7 +446,7 @@ object FinAnalytics {
     * identical double arithmetic. One closes-family shuffle.
     */
   def bollinger(events: DataFrame, bars: Int = 20): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day")).rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     val c2 = dec2(col("close"))
     closes(events)
       .withColumn("n", count(lit(1)).over(w))
@@ -461,9 +454,7 @@ object FinAnalytics {
       .withColumn("s2", sum(c2 * c2).over(w))
       .withColumn("ma20", col("s").cast("double") / col("n"))
       .withColumn("std20", when(col("n") > 1,
-        round(sqrt((col("n").cast("double") * col("s2").cast("double")
-          - col("s").cast("double") * col("s").cast("double"))
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))), 6) + lit(0.0)))
+        round(sampleStd(col("n"), col("s"), col("s2")), 6) + lit(0.0)))
       .withColumn("upper", when(col("std20").isNotNull,
         round(col("ma20") + lit(2.0) * col("std20"), 6) + lit(0.0)))
       .withColumn("lower", when(col("std20").isNotNull,
@@ -484,11 +475,10 @@ object FinAnalytics {
     * gains either) has no defined RSI.
     */
   def rsi(events: DataFrame, bars: Int = 14): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val w = ord.rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     val zero6 = lit(0).cast("decimal(18,6)")
     closes(events)
-      .withColumn("prev", lag(col("close"), 1).over(ord))
+      .withColumn("prev", lag(col("close"), 1).over(byDay))
       .filter(col("prev").isNotNull)
       .withColumn("gain", when(col("close") > col("prev"), dec6(col("close") - col("prev"))).otherwise(zero6))
       .withColumn("loss", when(col("close") < col("prev"), dec6(col("prev") - col("close"))).otherwise(zero6))
@@ -510,23 +500,16 @@ object FinAnalytics {
     * Exchange).
     */
   def vwap(events: DataFrame, bars: Int = 10): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      .rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     closes(events)
       .withColumn("pv", sum(dec2(col("close")) * col("volume")).over(w))
       .withColumn("v", sum(col("volume")).over(w))
-      // The 6-dp rounding happens in EXACT INTEGER arithmetic, not
-      // round(double): pv/v can land on a true binary .xxxxxx5 tie
-      // (volume sums are often powers of two, making the division
-      // exact), and double-round ties split between engines — sf0.1
-      // surfaced 7 such rows. Half-up on the magnitude:
-      // (2·|pv·10⁶| + v) DIV (2v), sign reapplied; fits BIGINT while
-      // |pv| < 4.6e12 (price·volume windows at any realistic scale).
+      // pv/v rounds tie-exact at 6 dp (volume sums are often powers of
+      // two); pv in 10⁻² units fits the quotient's BIGINT bound while
+      // |pv| < 4.6e12 (price·volume windows at any realistic scale)
       .withColumn("pv2", (col("pv") * 100).cast("long"))
-      .withColumn("mag", expr("(2 * abs(pv2) * 10000 + v) DIV (2 * v)"))
-      .withColumn("vwap10",
-        (when(col("pv2") < 0, -col("mag")).otherwise(col("mag")).cast("double")
-          / lit(1e6)) + lit(0.0))
+      .withColumn("mag", halfUpDiv("abs(pv2)", "v", 10000))
+      .withColumn("vwap10", micros(withSignOf(col("pv2"), col("mag"))))
       .select(col("user_id"), col("day"), col("close"), col("volume"), col("vwap10"))
       .orderBy(col("user_id"), col("day"))
   }
@@ -539,16 +522,15 @@ object FinAnalytics {
     * closes-family shuffle, three window passes over it.
     */
   def stochastic(events: DataFrame, bars: Int = 14): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val w = ord.rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     closes(events)
       .withColumn("lo", min(dec2(col("close"))).over(w))
       .withColumn("hi", max(dec2(col("close"))).over(w))
       .withColumn("pct_k", when(col("hi") > col("lo"),
         round(lit(100.0) * (dec2(col("close")) - col("lo")).cast("double")
           / (col("hi") - col("lo")).cast("double"), 6) + lit(0.0)))
-      .withColumn("k1", lag(col("pct_k"), 1).over(ord))
-      .withColumn("k2", lag(col("pct_k"), 2).over(ord))
+      .withColumn("k1", lag(col("pct_k"), 1).over(byDay))
+      .withColumn("k2", lag(col("pct_k"), 2).over(byDay))
       .withColumn("pct_d",
         when(col("pct_k").isNotNull && col("k1").isNotNull && col("k2").isNotNull,
           round((col("pct_k") + col("k1") + col("k2")) / lit(3.0), 6) + lit(0.0)))
@@ -560,16 +542,15 @@ object FinAnalytics {
     * form like [[rsi]]): per daily bar, TR = max(high−low,
     * |high−prev_close|, |low−prev_close|) on 2-dp-quantized prices —
     * exact decimal comparisons, no rounding ambiguity — and ATR14 is
-    * the trailing 14-bar mean of TR, rounded 6-dp in tie-exact
-    * integer arithmetic (TR units are 1e-2, counts can be 2^k — the
-    * fin_vwap lesson). First bar has no prev_close → no TR row.
+    * the trailing 14-bar mean of TR, a tie-exact 6-dp ratio (TR units
+    * are 1e-2, counts can be 2^k). First bar has no prev_close → no
+    * TR row.
     * One OHLC shuffle, two ordered windows over the same clustering.
     */
   def atr(events: DataFrame, bars: Int = 14): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val w = ord.rowsBetween(-(bars - 1), 0)
+    val w = trailing(bars)
     dailyOhlc(events)
-      .withColumn("pc", lag(dec2(col("close")), 1).over(ord))
+      .withColumn("pc", lag(dec2(col("close")), 1).over(byDay))
       .filter(col("pc").isNotNull)
       .withColumn("tr", greatest(
         dec2(col("high")) - dec2(col("low")),
@@ -577,8 +558,7 @@ object FinAnalytics {
         abs(dec2(col("low")) - col("pc"))))
       .withColumn("s2", (sum(col("tr")).over(w) * 100).cast("long"))
       .withColumn("n", count(lit(1)).over(w))
-      .withColumn("atr14",
-        (expr("(2 * s2 * 10000 + n) DIV (2 * n)").cast("double") / lit(1e6)) + lit(0.0))
+      .withColumn("atr14", ratio6("s2", "n", scale = 10000))
       .select(col("user_id"), col("day"),
         (col("tr").cast("double") + lit(0.0)).as("tr"), col("atr14"))
       .orderBy(col("user_id"), col("day"))
@@ -592,10 +572,9 @@ object FinAnalytics {
     * windows over the same clustering.
     */
   def obv(events: DataFrame): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, 0)
+    val cum = byDay.rowsBetween(Window.unboundedPreceding, 0)
     closes(events)
-      .withColumn("prev", lag(dec2(col("close")), 1).over(ord))
+      .withColumn("prev", lag(dec2(col("close")), 1).over(byDay))
       .withColumn("dir",
         when(col("prev").isNull, 0L)
           .when(dec2(col("close")) > col("prev"), 1L)
@@ -612,7 +591,7 @@ object FinAnalytics {
     * no defined drawdown (guarded, not an ANSI error).
     */
   def drawdown(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
+    val w = byDay
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     closes(events)
       .withColumn("peak", max(col("close")).over(w))
@@ -658,9 +637,8 @@ object FinAnalytics {
     * defined autocorrelation.
     */
   def autocorr(events: DataFrame, lagK: Int = 1): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
     returns(events)
-      .withColumn("ret_lag", lag(col("ret"), lagK).over(ord))
+      .withColumn("ret_lag", lag(col("ret"), lagK).over(byDay))
       .filter(col("ret_lag").isNotNull)
       .select(col("user_id"), dec6(col("ret")).as("x"), dec6(col("ret_lag")).as("y"))
       .groupBy(col("user_id"))
@@ -668,13 +646,8 @@ object FinAnalytics {
         sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("x")).as("sx2"), sum(col("y") * col("y")).as("sy2"))
       .filter(col("n") > 1)
-      .select(col("user_id"), col("n"), {
-        val n = col("n").cast("double")
-        val vx = n * col("sx2").cast("double") - col("sx").cast("double") * col("sx").cast("double")
-        val vy = n * col("sy2").cast("double") - col("sy").cast("double") * col("sy").cast("double")
-        val cov = n * col("sxy").cast("double") - col("sx").cast("double") * col("sy").cast("double")
-        when(vx > 0.0 && vy > 0.0, round(cov / sqrt(vx * vy), 6) + lit(0.0)).as("autocorr1")
-      })
+      .select(col("user_id"), col("n"),
+        pearson(col("n"), col("sx"), col("sy"), col("sxy"), col("sx2"), col("sy2")).as("autocorr1"))
       .orderBy(col("user_id"))
   }
 
@@ -795,9 +768,8 @@ object FinAnalytics {
     */
   def ewma(events: DataFrame): DataFrame = {
     val c = closes(events)
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val terms = ewmaWeightStrings.zipWithIndex.map { case (ws, j) =>
-      val x = if (j == 0) dec2(col("close")) else lag(dec2(col("close")), j).over(ord)
+      val x = if (j == 0) dec2(col("close")) else lag(dec2(col("close")), j).over(byDay)
       (x, lit(ws).cast(org.apache.spark.sql.types.DecimalType(12, 10)))
     }
     val num = terms.map { case (x, w) => coalesce(x * w, lit(0).cast("decimal(25,12)")) }.reduce(_ + _)
@@ -836,11 +808,10 @@ object FinAnalytics {
     */
   def macd(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
     def ewmaOf(ws: Seq[String], wScale: Int): Column = {
       val pScale = wScale + 2
       val terms = ws.zipWithIndex.map { case (w, j) =>
-        val x = if (j == 0) dec2(col("close")) else lag(dec2(col("close")), j).over(ord)
+        val x = if (j == 0) dec2(col("close")) else lag(dec2(col("close")), j).over(byDay)
         (x, lit(w).cast(DecimalType(wScale + 2, wScale)))
       }
       val num = terms.map { case (x, w) =>
@@ -896,7 +867,7 @@ object FinAnalytics {
     val spine = c.groupBy(col("user_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("user_id"), explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
+    val w = byDay
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     spine.join(c, Seq("user_id", "day"), "left")
       .withColumn("close_filled", last(col("close"), ignoreNulls = true).over(w))
@@ -990,19 +961,17 @@ object FinAnalytics {
   def featureSnapshot(events: DataFrame): DataFrame = {
     val c = closes(events)
     val marketRet = marketReturns(c)
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val w5 = ord.rowsBetween(-4, 0)
-    val w10 = ord.rowsBetween(-9, 0)
-    val w20 = ord.rowsBetween(-19, 0)
-    val wPeak = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w5 = trailing(5)
+    val w10 = trailing(10)
+    val w20 = trailing(20)
+    val wPeak = byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val retv = col("ret").isNotNull
     val pairv = retv && col("mret").isNotNull
     val r6 = dec6(col("ret"))
     val m6 = dec6(col("mret"))
     val snap = c.join(broadcast(marketRet), "day")
-      .withColumn("prev_close", lag(col("close"), 1).over(ord))
-      .withColumn("ret", when(col("prev_close").isNotNull && col("prev_close") =!= 0.0,
-        col("close") / col("prev_close") - lit(1.0)))
+      .withColumn("prev_close", lag(col("close"), 1).over(byDay))
+      .withColumn("ret", when(returnDefined(col("prev_close")), dailyReturn(col("prev_close"))))
       .withColumn("ma5", sum(dec2(col("close"))).over(w5).cast("double") / count(lit(1)).over(w5))
       .withColumn("ma20", sum(dec2(col("close"))).over(w20).cast("double") / count(lit(1)).over(w20))
       // volume family (averageVolume / averageVolume10days analogs,
@@ -1021,19 +990,13 @@ object FinAnalytics {
       .withColumn("smp", sum(when(pairv, m6)).over(w20))
       .withColumn("srmp", sum(when(pairv, r6 * m6)).over(w20))
       .withColumn("sm2p", sum(when(pairv, m6 * m6)).over(w20))
-    val den = col("np").cast("double") * col("sm2p").cast("double") -
-      col("smp").cast("double") * col("smp").cast("double")
     snap.select(col("user_id"), col("day"), col("close"), col("ma5"), col("ma20"),
         col("volume"), col("avg_vol10"), col("avg_vol20"),
         col("hi10"), col("lo10"), col("ret"),
         when(col("peak") > 0, round(lit(1.0) - col("close") / col("peak"), 6) + lit(0.0)).as("drawdown"),
-        when(col("nr") > 1,
-          round(sqrt((col("nr").cast("double") * col("sr2").cast("double")
-            - col("sr").cast("double") * col("sr").cast("double"))
-            / (col("nr").cast("double") * (col("nr") - 1).cast("double"))), 6) + lit(0.0)).as("vol20"),
-        when(col("np") > 1 && den =!= 0.0,
-          round((col("np").cast("double") * col("srmp").cast("double")
-            - col("srp").cast("double") * col("smp").cast("double")) / den, 6) + lit(0.0)).as("beta20"))
+        when(col("nr") > 1, round(sampleStd(col("nr"), col("sr"), col("sr2")), 6) + lit(0.0)).as("vol20"),
+        Exact.beta(col("np"), col("srp"), col("smp"), col("srmp"), col("sm2p"),
+          given = Some(col("np") > 1)).as("beta20"))
       .orderBy(col("user_id"), col("day"))
   }
 
@@ -1098,10 +1061,9 @@ object FinAnalytics {
     * AQE is free to broadcast at small SF but never forced to.
     */
   def infoSnapshot(events: DataFrame, customer: DataFrame): DataFrame = {
-    val ord = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val w50 = ord.rowsBetween(-49, 0)
-    val w200 = ord.rowsBetween(-199, 0)
-    val w252 = ord.rowsBetween(-251, 0)
+    val w50 = trailing(50)
+    val w200 = trailing(200)
+    val w252 = trailing(252)
     val wAll = Window.partitionBy(col("user_id"))
     val wDesc = Window.partitionBy(col("user_id")).orderBy(col("day").desc)
     val snap = barsCore(events.repartition(col("user_id")), "day")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Exact.halfUpDiv
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.plans.HonestCheckpoint._
@@ -144,9 +145,9 @@ object Multimodal {
   /** Decode-free resize PLANNER — the metadata half of the resize
     * step in an image-training pipeline: aspect-preserving letterbox
     * fit of each image into a `target`×`target` box, from the header
-    * dimensions alone. Emits the scaled size (exact half-up integer
-    * rounding — `(2·w·t + h) DIV (2·h)` keeps every engine
-    * bit-identical, clamped to ≥ 1 px), the centering pads, and an
+    * dimensions alone. Emits the scaled size (tie-exact half-up
+    * w·t/h, [[graft.functions.Exact.halfUpDiv]], clamped to ≥ 1 px),
+    * the centering pads, and an
     * upscale flag. The pixel resample itself needs a codec (out of
     * scope, like pixel decode in [[decodePipeline]]); at 100 TB this
     * planner is the cheap metadata pass that sizes batches and
@@ -157,10 +158,10 @@ object Multimodal {
     binaryMetaCols(documents.orderBy(col("doc_id")))
       .select(col("doc_id"), col("format"), col("width"), col("height"),
         when(col("width") >= col("height"), t)
-          .otherwise(greatest(lit(1L), expr(s"(2 * width * $target + height) DIV (2 * height)")))
+          .otherwise(greatest(lit(1L), halfUpDiv("width", "height", target)))
           .as("out_w"),
         when(col("width") >= col("height"),
-          greatest(lit(1L), expr(s"(2 * height * $target + width) DIV (2 * width)")))
+          greatest(lit(1L), halfUpDiv("height", "width", target)))
           .otherwise(t).as("out_h"))
       .select(col("doc_id"), col("format"), col("width"), col("height"),
         col("out_w"), col("out_h"),
@@ -231,7 +232,7 @@ object Multimodal {
     // 7.0 s bench wall in ONE task at sf0.1. Round-robin over the
     // default parallelism BEFORE the explode shuffles only n metadata
     // rows, never the exploded fan or the pair space (guide §2.4/§2.6).
-    val sideA = e.repartition(e.sparkSession.sparkContext.defaultParallelism)
+    val sideA = Spread(e)
       .select(col("doc_id").as("ia"), col("len").as("la"),
         col("hist").as("ha"), col("blk").as("bi"))
       .withColumn("bj", explode(sequence(col("bi"), lit(b - 1))))
@@ -297,7 +298,7 @@ object Multimodal {
       val h = s"hist[${4 * band + k}]"
       val q =
         if (probe == 0) expr(s"($h * $grid) DIV len")
-        else expr(s"(2 * $h * $grid + len) DIV (2 * len)")
+        else halfUpDiv(h, "len", grid)
       q * math.pow(256.0, 3 - k).toLong
     }.reduce(_ + _)
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Exact.{halfUpDiv, ratio6}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -103,6 +104,15 @@ object Similarity {
     * (dist, vec_id) — a total order, so the candidate set is
     * deterministic, and Spark's WindowGroupLimit keeps the cut
     * map-side partial — and [[exactTopK]] re-ranks them on `corpus`.
+    *
+    * The re-rank's cost: the survivors (≤ rerank × queries rows) join
+    * the whole raw (vec_id, embedding) corpus ([[vectors]]). Under
+    * graft's 64 MB broadcast threshold the planner broadcasts that
+    * corpus once per search — the final plan of a warm
+    * `ann_ivfpq_served` broadcasts the whole `embeddings` table —
+    * and past it the join shuffles the whole corpus to re-rank a few
+    * hundred rows. Only the candidate scan is confined to the kind's
+    * codes or signatures.
     *
     * An IVF kind's query frame carries `qlabel`, one row per probed
     * cell ([[probedQueries]]): a payload row then meets only the
@@ -309,8 +319,7 @@ object Similarity {
     * (they are broadcast-bound, not fan-bound).
     */
   private def spreadForK(df: DataFrame, k: Int): DataFrame =
-    if (k > spreadAboveK) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else df
+    if (k > spreadAboveK) Spread(df) else df
 
   /** (vec_id, embedding, u): a vector frame with its quantized units. */
   private def withUnits(df: DataFrame): DataFrame =
@@ -963,8 +972,7 @@ object Similarity {
   def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 5): DataFrame =
     trainAssign(embeddings, k, iters)._2
       .select(col("vec_id"), col("cluster"),
-        (expr("(2 * du + 10000000000) DIV 20000000000").cast("double") / lit(1e6)
-          + lit(0.0)).as("dist"))
+        ratio6("du", "10000000000", scale = 1).as("dist"))
       .orderBy(col("vec_id"))
 
   /** 1e-8 fixed-point quantization of a whole embedding — the
@@ -1115,9 +1123,10 @@ object Similarity {
     * of a dim-wide dot product, the candidate distance of the
     * family's two-phase search.
     *
-    * At 100 TB the codes table is the only thing the scan touches
-    * (raw vectors are fetched just for the ≤ rerank×queries
-    * survivors), which is what makes billion-vector search feasible.
+    * The candidate scan reads only the codes (m bytes per vector).
+    * The exact re-rank does not: it joins the ≤ rerank×queries
+    * survivors to the whole raw corpus ([[twoPhase]] gives that
+    * cost), and a flat kind has no cell to prune that read by.
     *
     * Like [[kmeans]], every step up to the re-rank runs in EXACT
     * integer units, so the whole search — normalization, joint
@@ -1634,13 +1643,12 @@ object Similarity {
   }
 
   /** Integer half-up mean of |xᵢ| over an array<long> — the scale
-    * step of both residual-BQ rounds (nonnegative numerator, so the
-    * sign-split DIV form degenerates to one branch; matches the
-    * oracle's `(2*s + d) // (2*d)` exactly).
+    * step of both residual-BQ rounds (a nonnegative numerator, so the
+    * unsigned form).
     */
   private def halfUpMeanAbs(name: String): Column =
-    expr(s"(2 * aggregate($name, CAST(0 AS BIGINT), (acc, x) -> acc + abs(x))" +
-      s" + size($name)) DIV (2 * CAST(size($name) AS BIGINT))")
+    halfUpDiv(s"aggregate($name, CAST(0 AS BIGINT), (acc, x) -> acc + abs(x))",
+      s"CAST(size($name) AS BIGINT)")
 
   /** Search a [[BqResidualIndex]] ([[twoPhase]]): the candidate
     * distance is the NEGATED asymmetric two-term integer score
@@ -1769,10 +1777,11 @@ object Similarity {
     }
   }
 
-  /** `codes` is the payload (the thing a 100 TB deployment actually
-    * serves from: 9 bytes/vector next to the raw corpus), the
-    * m×cb×dsub codebook units and `m` ride the meta row. The raw
-    * corpus is NOT copied — it is the source table, re-bound at load.
+  /** `codes` is the payload (9 bytes/vector, the candidate scan's
+    * only input), the m×cb×dsub codebook units and `m` ride the meta
+    * row. The raw corpus is NOT copied — it is the source table,
+    * re-bound at load — and every serve still reads all of it for
+    * the exact re-rank ([[twoPhase]]).
     * A loaded index answers BIT-EXACT like the freshly built one
     * (integer units end-to-end) — spec-gated.
     */
@@ -2377,9 +2386,10 @@ object Similarity {
     * Σ_j qtable[j][codes[j]] as ONE fused codegen kernel
     * ([[graft.plans.PqAdcSumI64]] — a compiled m-iteration loop
     * reading both arrays once). This is the corpus-sized scan of the
-    * SERVING path — at 100 TB the codes table is all the scan
-    * touches, so its per-row constant is the family's deployment
-    * cost. All-Long sums — exact in any order.
+    * SERVING path's candidate scan, which reads only the codes table,
+    * so its per-row constant is the scan's cost (the re-rank's
+    * corpus read is [[twoPhase]]'s). All-Long sums — exact in any
+    * order.
     */
   private def adcDistance(m: Int): Column =
     graft.plans.PqQuant.pqAdcSum(col("codes"), col("qtable"), m)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Exact.ratio6
 import graft.functions.Hashing._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -128,19 +129,9 @@ object TextOps {
       .withColumn("n_punct", regexp_count(col("text"), lit("[^A-Za-z0-9\\s]")).cast("long"))
       .withColumn("n_stop", size(filter(toks, t => t.isInCollection(en))).cast("long"))
       // Guards: empty docs make these ANSI division errors, not NaNs.
-      // Ratios round half-up in EXACT integer arithmetic: count/count
-      // quotients with power-of-two denominators (n_words = 128 ...)
-      // are binary-exact and can sit on true .xxxxxx5 ties, where
-      // engines' double rounding splits (the fin_vwap lesson).
-      .withColumn("avg_word_len", when(col("n_words") > 0,
-        (expr("(2 * sum_word_len * 1000000 + n_words) DIV (2 * n_words)").cast("double")
-          / lit(1e6)) + lit(0.0)))
-      .withColumn("punct_ratio", when(col("n_chars") > 0,
-        (expr("(2 * n_punct * 1000000 + n_chars) DIV (2 * n_chars)").cast("double")
-          / lit(1e6)) + lit(0.0)))
-      .withColumn("stop_ratio", when(col("n_words") > 0,
-        (expr("(2 * n_stop * 1000000 + n_words) DIV (2 * n_words)").cast("double")
-          / lit(1e6)) + lit(0.0)))
+      .withColumn("avg_word_len", when(col("n_words") > 0, ratio6("sum_word_len", "n_words")))
+      .withColumn("punct_ratio", when(col("n_chars") > 0, ratio6("n_punct", "n_chars")))
+      .withColumn("stop_ratio", when(col("n_words") > 0, ratio6("n_stop", "n_words")))
       .withColumn("keep",
         col("n_words") >= 5 && col("punct_ratio") <= 0.1 &&
           col("avg_word_len") >= 2.0 && col("avg_word_len") <= 12.0)
@@ -172,16 +163,14 @@ object TextOps {
     * this to route docs to script-appropriate pipelines and to flag
     * mixed-script spam (e.g. Latin text stuffed with CJK SEO
     * tokens). Pure per-row Column algebra, no UDFs, run once above
-    * the doc_id sort of the scan rows; ratios round half-up in exact
-    * integer arithmetic (the fin_vwap tie lesson).
+    * the doc_id sort of the scan rows; ratios are tie-exact
+    * ([[graft.functions.Exact.ratio6]]).
     */
   def scripts(documents: DataFrame): DataFrame = {
     val counts = scriptClasses.map { case (n, p) =>
       regexp_count(col("text"), lit(p)).cast("long").as(s"n_$n")
     }
-    def ratio(n: String): Column = when(col("n_chars") > 0,
-      (expr(s"(2 * $n * 1000000 + n_chars) DIV (2 * n_chars)").cast("double")
-        / lit(1e6)) + lit(0.0))
+    def ratio(n: String): Column = when(col("n_chars") > 0, ratio6(n, "n_chars"))
     documents.orderBy(col("doc_id"))
       .select(col("doc_id") +: length(col("text")).cast("long").as("n_chars") +: counts: _*)
       .withColumn("n_other",
@@ -209,10 +198,7 @@ object TextOps {
         length(col("text")).cast("long").as("n_chars"),
         size(tokens(col("text"))).cast("long").as("ws_tokens"),
         regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).cast("long").as("bpe_tokens"))
-      .withColumn("chars_per_token", // tie-exact integer half-up (fin_vwap lesson)
-        when(col("bpe_tokens") > 0,
-          (expr("(2 * n_chars * 1000000 + bpe_tokens) DIV (2 * bpe_tokens)").cast("double")
-            / lit(1e6)) + lit(0.0)))
+      .withColumn("chars_per_token", when(col("bpe_tokens") > 0, ratio6("n_chars", "bpe_tokens")))
 
   /** Corpus vocabulary: global token frequencies, top-k by count.
     * Explode → hash-aggregate (map-side partial combine collapses to
@@ -286,14 +272,13 @@ object TextOps {
     * with token tiebreak, so rank assignment is total and exact.
     */
   def tfidf(documents: DataFrame, k: Int = 3): DataFrame = {
-    val parallelism = documents.sparkSession.sparkContext.defaultParallelism
     // ONE tokenize scan for the whole operator (the surprisal
     // pattern): the (doc_id, token, tf) frame feeds BOTH sides of the
     // tf⋈df join — inline, Catalyst plans the tokenize+explode+agg
     // chain twice (plan-verified in round 6: six parquet scans, zero
     // ReusedExchange). Materialize it once; at 100 TB this halves the
     // dominant stage.
-    val tf = documents.repartition(parallelism, col("doc_id"))
+    val tf = Spread(documents, "doc_id")
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
@@ -305,13 +290,9 @@ object TextOps {
     // typos), so no forced broadcast; AQE broadcasts it while small.
     tf.join(df, "token")
       .crossJoin(broadcast(nDocs))
-      // tie-exact integer half-up: tf*(N+1)/(df+1) is an exact
-      // integer quotient, and df+1 = 128 is perfectly plausible at
-      // corpus scale (fin_vwap lesson)
       .withColumn("num", col("tf") * (col("n_docs") + 1))
       .withColumn("den", col("df") + 1)
-      .withColumn("score",
-        (expr("(2 * num * 1000000 + den) DIV (2 * den)").cast("double") / lit(1e6)) + lit(0.0))
+      .withColumn("score", ratio6("num", "den"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("token"), col("tf"), col("df"), col("score"), col("rank"))
@@ -336,7 +317,6 @@ object TextOps {
     * few dozen bytes).
     */
   def surprisal(documents: DataFrame): DataFrame = {
-    val parallelism = documents.sparkSession.sparkContext.defaultParallelism
     // ONE tokenize scan for the whole operator: the per-(doc, token)
     // count frame is materialized once (eager localCheckpoint, the
     // tokenRank pattern) and feeds the vocabulary frequencies, the
@@ -345,7 +325,7 @@ object TextOps {
     // Scoring then weights each distinct (doc, token) by its count
     // instead of fanning out per occurrence, so the token join
     // carries vocabulary-bounded rows per doc.
-    val tf = documents.repartition(parallelism, col("doc_id"))
+    val tf = Spread(documents, "doc_id")
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("cnt"))
       .honestCheckpoint()
@@ -358,13 +338,7 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_tokens"),
         sum(col("cnt") * col("bits")).as("total_bits"))
-      // mean in EXACT integer half-up (not round(double)): with a
-      // power-of-two token count the quotient is binary-exact and can
-      // sit on a true .xxxxxx5 tie, where engines' double rounding
-      // splits (the fin_vwap lesson).
-      .withColumn("mean_bits",
-        (expr("(2 * total_bits * 1000000 + n_tokens) DIV (2 * n_tokens)").cast("double")
-          / lit(1e6)) + lit(0.0))
+      .withColumn("mean_bits", ratio6("total_bits", "n_tokens"))
       .orderBy(col("doc_id"))
   }
 
@@ -376,8 +350,7 @@ object TextOps {
     * model is vocabulary-bounded data, not corpus-sized.
     */
   def surprisalModel(documents: DataFrame): (DataFrame, Long) = {
-    val parallelism = documents.sparkSession.sparkContext.defaultParallelism
-    val freq = documents.repartition(parallelism, col("doc_id"))
+    val freq = Spread(documents, "doc_id")
       .select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("f"))
       .honestCheckpoint()
@@ -406,9 +379,7 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_tokens"),
         sum(col("cnt") * col("bits")).as("total_bits"))
-      .withColumn("mean_bits",
-        (expr("(2 * total_bits * 1000000 + n_tokens) DIV (2 * n_tokens)").cast("double")
-          / lit(1e6)) + lit(0.0))
+      .withColumn("mean_bits", ratio6("total_bits", "n_tokens"))
   }
 
   /** Winnowing fingerprints (Schleimer et al.): hash every w-token
@@ -466,10 +437,9 @@ object TextOps {
     // pass. The checkpoint re-declares the explicit repartition's
     // hash(doc_id) partitioning (AQE checkpoints lose it), so every
     // downstream grouping/join still plans exchange-free on it.
-    val par = documents.sparkSession.sparkContext.defaultParallelism
-    val base = documents.repartition(par, col("doc_id"))
+    val base = Spread(documents, "doc_id")
       .select(col("doc_id"), toksOf(documents).as("toks"))
-      .honestCheckpointHashPartitioned(par, "doc_id")
+      .honestCheckpointHashPartitioned(Spread.partitions(documents), "doc_id")
     val tok = base.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "token")))
     // The top token is min(struct(-cnt, token)) — a struct min has no
     // mutable aggregation buffer, so Spark planned it as a
@@ -522,16 +492,11 @@ object TextOps {
       .groupBy(col("doc_id"), col("run_id")).agg(count(lit(1)).as("run_len"))
       .groupBy(col("doc_id")).agg(max(col("run_len")).as("max_run"))
     perTok.join(gram, "doc_id").join(runs, "doc_id")
-      // fracs round half-up in exact integer arithmetic — count/count
-      // ties split between engines under double round (fin_vwap lesson)
       .select(col("doc_id"), col("n_tokens"),
         col("top_t").as("top_token"), col("top_n"),
-        ((expr("(2 * top_n * 1000000 + n_tokens) DIV (2 * n_tokens)").cast("double")
-          / lit(1e6)) + lit(0.0)).as("top_frac"),
-        ((expr("(2 * dup_tok * 1000000 + n_tokens) DIV (2 * n_tokens)").cast("double")
-          / lit(1e6)) + lit(0.0)).as("dup_token_frac"),
-        ((expr("(2 * dup2 * 1000000 + total2) DIV (2 * total2)").cast("double")
-          / lit(1e6)) + lit(0.0)).as("dup_2gram_frac"),
+        ratio6("top_n", "n_tokens").as("top_frac"),
+        ratio6("dup_tok", "n_tokens").as("dup_token_frac"),
+        ratio6("dup2", "total2").as("dup_2gram_frac"),
         col("max_run"))
       .orderBy(col("doc_id"))
   }
@@ -557,7 +522,6 @@ object TextOps {
   def tokenRank(documents: DataFrame, iters: Int = 3, k: Int = 20): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     def dec12(c: Column): Column = round(c, 12).cast(DecimalType(28, 12))
-    val par = documents.sparkSession.sparkContext.defaultParallelism
     // The corpus-sized tokenize→explode stage runs ONCE: edges and
     // nodes are materialized as eager localCheckpoints before the
     // iteration plan is built. Without this the 3 unrolled iterations
@@ -567,7 +531,7 @@ object TextOps {
     // released; the checkpoint blocks are ContextCleaner-managed (no
     // CacheManager residue), at the usual localCheckpoint cost of
     // non-resilient blocks on executor loss.
-    val toks = documents.repartition(par, col("doc_id"))
+    val toks = Spread(documents, "doc_id")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .cache()
     // Shuffle audit (round 11): the per-iteration Exchange on src

@@ -94,7 +94,7 @@ private[graft] object AnnQueries extends Family {
     Query("ann_kmeans", (s, d) => Similarity.kmeans(Tables(s, d).embeddings),
       s"""WITH ${lloydCtes(8, 5)}
         |SELECT vec_id, cluster,
-        |  CAST((2 * du + 10000000000) // 20000000000 AS DOUBLE) / 1000000.0 + 0.0 AS dist
+        |  ${ratio6("du", "10000000000", 1)} AS dist
         |FROM a_fin ORDER BY vec_id""".stripMargin),
     // trained-quantizer IVF: nprobe=2 exercises the multi-cell recall
     // knob under the gate
@@ -267,9 +267,7 @@ private[graft] object AnnQueries extends Family {
          |${p}a$t AS (SELECT vec_id, cluster FROM (
          |  SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn FROM ${p}d$t) WHERE rn = 1),
          |${p}c$t AS (SELECT p.cluster, p.dim, coalesce(m.cu, p.cu) AS cu FROM ${p}c${t - 1} p LEFT JOIN (
-         |  SELECT a.cluster, e.dim, CAST(CASE WHEN sum(e.u) < 0
-         |      THEN -((2 * (-sum(e.u)) + count(*)) // (2 * count(*)))
-         |      ELSE (2 * sum(e.u) + count(*)) // (2 * count(*)) END AS BIGINT) AS cu
+         |  SELECT a.cluster, e.dim, CAST(${halfUpDivSigned("sum(e.u)", "count(*)")} AS BIGINT) AS cu
          |  FROM ${p}a$t a JOIN ${p}ex e ON e.vec_id = a.vec_id GROUP BY 1, 2) m
          |  ON m.cluster = p.cluster AND m.dim = p.dim)""".stripMargin
     }
@@ -377,9 +375,7 @@ private[graft] object AnnQueries extends Family {
          |${px}pa$t AS (SELECT vec_id, j, cl FROM (
          |  SELECT vec_id, j, cl, row_number() OVER (PARTITION BY vec_id, j ORDER BY du, cl) AS rn FROM ${px}pd$t) WHERE rn = 1),
          |${px}b$t AS (SELECT p.cl, p.j, p.sdim, coalesce(m.cu, p.cu) AS cu FROM ${px}b${t - 1} p LEFT JOIN (
-         |  SELECT a.cl, s.j, s.sdim, CAST(CASE WHEN sum(s.u) < 0
-         |      THEN -((2 * (-sum(s.u)) + count(*)) // (2 * count(*)))
-         |      ELSE (2 * sum(s.u) + count(*)) // (2 * count(*)) END AS BIGINT) AS cu
+         |  SELECT a.cl, s.j, s.sdim, CAST(${halfUpDivSigned("sum(s.u)", "count(*)")} AS BIGINT) AS cu
          |  FROM ${px}pa$t a JOIN $trainSx s ON s.vec_id = a.vec_id AND s.j = a.j GROUP BY 1, 2, 3) m
          |  ON m.cl = p.cl AND m.j = p.j AND m.sdim = p.sdim)""".stripMargin
     }
@@ -613,12 +609,12 @@ private[graft] object AnnQueries extends Family {
     s"""WITH $normsCte,
        |$rawExDef,
        |ast AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS d, sum(abs(u)) AS sa FROM ex GROUP BY 1),
-       |alph AS (SELECT vec_id, (2 * sa + d) // (2 * d) AS a FROM ast),
+       |alph AS (SELECT vec_id, ${halfUpDiv("sa", "d")} AS a FROM ast),
        |res AS (SELECT e.vec_id, e.dim, e.u,
        |    e.u - CASE WHEN e.u >= 0 THEN al.a ELSE -al.a END AS r
        |  FROM ex e JOIN alph al USING (vec_id)),
        |bst AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS d, sum(abs(r)) AS sb FROM res GROUP BY 1),
-       |bet AS (SELECT vec_id, (2 * sb + d) // (2 * d) AS b FROM bst),
+       |bet AS (SELECT vec_id, ${halfUpDiv("sb", "d")} AS b FROM bst),
        |recon AS (SELECT r.vec_id, r.dim,
        |    (CASE WHEN r.u >= 0 THEN al.a ELSE -al.a END)
        |  + (CASE WHEN r.r >= 0 THEN bt.b ELSE -bt.b END) AS xh

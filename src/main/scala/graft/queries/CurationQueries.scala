@@ -151,7 +151,7 @@ private[graft] object CurationQueries extends Family {
         |SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars,
         |  CAST(sum(n_toks) AS BIGINT) AS total_tokens,
         |  CAST(sum(CASE WHEN n_toks >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-        |  CAST((2 * total_chars * 1000000 + n_docs) // (2 * n_docs) AS DOUBLE) / 1000000.0 + 0.0 AS avg_chars
+        |  ${ratio6("total_chars", "n_docs")} AS avg_chars
         |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
     // end-to-end curation verdict; shares the dedup label stage
     Query("curate_pipeline", (s, d) => Curation.pipeline(Tables(s, d).documents, DedupQueries.memoComponents(s, d)),
@@ -216,8 +216,7 @@ private[graft] object CurationQueries extends Family {
        |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
        |  CAST(sum(bits) AS BIGINT) AS total_bits FROM s GROUP BY doc_id),
        |sb AS (SELECT doc_id,
-       |  CAST((2 * total_bits * 1000000 + n_tokens) // (2 * n_tokens) AS DOUBLE)
-       |    / 1000000.0 + 0.0 AS mean_bits FROM g),
+       |  ${ratio6("total_bits", "n_tokens")} AS mean_bits FROM g),
        |b AS (SELECT d.doc_id, d.lang, sb.mean_bits
        |      FROM documents d JOIN sb ON sb.doc_id = d.doc_id),
        |st AS (SELECT lang, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY lang),

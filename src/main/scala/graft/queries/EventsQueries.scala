@@ -81,7 +81,7 @@ private[graft] object EventsQueries extends Family {
         |SELECT 'session' AS event_type, $quantiles
         |FROM r GROUP BY 1""".stripMargin),
     Query("events_anomaly", (s, d) => Events.anomalies(Tables(s, d).events),
-      """WITH b AS (SELECT event_id, user_id, value,
+      s"""WITH b AS (SELECT event_id, user_id, value,
         |    CAST(count(*) OVER w AS BIGINT) AS n,
         |    sum(CAST(value AS DECIMAL(12,2))) OVER w AS s,
         |    sum(CAST(value AS DECIMAL(12,2)) * CAST(value AS DECIMAL(12,2))) OVER w AS s2
@@ -89,9 +89,7 @@ private[graft] object EventsQueries extends Family {
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)),
         |m AS (SELECT *, CAST(s AS DOUBLE) / n AS mean,
-        |    CASE WHEN n > 1 THEN round(sqrt((CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))), 6) + 0.0 END AS sd
+        |    CASE WHEN n > 1 THEN round(${sampleStd("n", "s", "s2")}, 6) + 0.0 END AS sd
         |  FROM b),
         |z AS (SELECT *, CASE WHEN sd > 0.0
         |    THEN round((value - mean) / sd, 6) + 0.0 END AS zscore FROM m)

@@ -12,17 +12,15 @@ private[graft] object FinQueries extends Family {
 
   val queries: Seq[Query] = Seq(
     Query("fin_bollinger", (s, d) => FinAnalytics.bollinger(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, b AS (SELECT user_id, day, close,
         |    CAST(count(*) OVER w AS BIGINT) AS n,
         |    sum(CAST(close AS DECIMAL(12,2))) OVER w AS s,
         |    sum(CAST(close AS DECIMAL(12,2)) * CAST(close AS DECIMAL(12,2))) OVER w AS s2
         |  FROM closes
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)),
+        |  WINDOW w AS (${trailing(20)})),
         |m AS (SELECT *, CAST(s AS DOUBLE) / n AS ma20,
-        |    CASE WHEN n > 1 THEN round(sqrt((CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))), 6) + 0.0 END AS std20
+        |    CASE WHEN n > 1 THEN round(${sampleStd("n", "s", "s2")}, 6) + 0.0 END AS std20
         |  FROM b),
         |u AS (SELECT *,
         |    CASE WHEN std20 IS NOT NULL THEN round(ma20 + 2.0 * std20, 6) + 0.0 END AS upper,
@@ -32,57 +30,55 @@ private[graft] object FinQueries extends Family {
         |  CASE WHEN upper > lower THEN round((close - lower) / (upper - lower), 6) + 0.0 END AS pct_b
         |FROM u ORDER BY user_id, day""".stripMargin),
     Query("fin_rsi", (s, d) => FinAnalytics.rsi(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, d AS (SELECT user_id, day, close,
         |    CASE WHEN close > prev THEN CAST(round(close - prev, 6) AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END AS gain,
         |    CASE WHEN close < prev THEN CAST(round(prev - close, 6) AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END AS loss
         |  FROM (SELECT user_id, day, close,
-        |          lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev FROM closes)
+        |          lag(close, 1) OVER ($byDay) AS prev FROM closes)
         |  WHERE prev IS NOT NULL),
         |s AS (SELECT user_id, day, close,
         |    sum(gain) OVER w AS sg, sum(loss) OVER w AS sl
         |  FROM d
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
+        |  WINDOW w AS (${trailing(14)}))
         |SELECT user_id, day, close,
         |  CASE WHEN sl > 0 THEN round(100.0 - 100.0 / (1.0 + CAST(sg AS DOUBLE) / CAST(sl AS DOUBLE)), 6) + 0.0
         |       WHEN sg > 0 THEN 100.0 END AS rsi14
         |FROM s ORDER BY user_id, day""".stripMargin),
     Query("fin_vwap", (s, d) => FinAnalytics.vwap(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, v0 AS (SELECT user_id, day, close, volume,
         |    sum(CAST(close AS DECIMAL(12,2)) * volume) OVER w AS pv,
         |    sum(volume) OVER w AS v
         |  FROM closes
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)),
+        |  WINDOW w AS (${trailing(10)})),
         |q AS (SELECT user_id, day, close, volume, CAST(pv * 100 AS BIGINT) AS pv2, v FROM v0)
         |SELECT user_id, day, close, CAST(volume AS BIGINT) AS volume,
-        |  CAST((CASE WHEN pv2 < 0 THEN -((2 * abs(pv2) * 10000 + v) // (2 * v))
-        |             ELSE (2 * abs(pv2) * 10000 + v) // (2 * v) END) AS DOUBLE)
-        |    / 1000000.0 + 0.0 AS vwap10
+        |  ${micros(halfUpDivSigned("pv2", "v", 10000))} AS vwap10
         |FROM q ORDER BY user_id, day""".stripMargin),
     Query("fin_stochastic", (s, d) => FinAnalytics.stochastic(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, hl AS (SELECT user_id, day, close,
         |    min(CAST(close AS DECIMAL(12,2))) OVER w AS lo,
         |    max(CAST(close AS DECIMAL(12,2))) OVER w AS hi
         |  FROM closes
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)),
+        |  WINDOW w AS (${trailing(14)})),
         |k AS (SELECT user_id, day, close,
         |    CASE WHEN hi > lo THEN round(100.0 * CAST(CAST(close AS DECIMAL(12,2)) - lo AS DOUBLE)
         |      / CAST(hi - lo AS DOUBLE), 6) + 0.0 END AS pct_k
         |  FROM hl),
         |kk AS (SELECT user_id, day, close, pct_k,
-        |    lag(pct_k, 1) OVER (PARTITION BY user_id ORDER BY day) AS k1,
-        |    lag(pct_k, 2) OVER (PARTITION BY user_id ORDER BY day) AS k2
+        |    lag(pct_k, 1) OVER ($byDay) AS k1,
+        |    lag(pct_k, 2) OVER ($byDay) AS k2
         |  FROM k)
         |SELECT user_id, day, close, pct_k,
         |  CASE WHEN pct_k IS NOT NULL AND k1 IS NOT NULL AND k2 IS NOT NULL
         |       THEN round((pct_k + k1 + k2) / 3.0, 6) + 0.0 END AS pct_d
         |FROM kk ORDER BY user_id, day""".stripMargin),
     Query("fin_obv", (s, d) => FinAnalytics.obv(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, d AS (SELECT user_id, day, close, volume,
-        |    lag(CAST(close AS DECIMAL(12,2)), 1) OVER (PARTITION BY user_id ORDER BY day) AS prev
+        |    lag(CAST(close AS DECIMAL(12,2)), 1) OVER ($byDay) AS prev
         |  FROM closes),
         |s AS (SELECT user_id, day, close, volume,
         |    CASE WHEN prev IS NULL THEN 0
@@ -90,11 +86,10 @@ private[graft] object FinQueries extends Family {
         |         WHEN CAST(close AS DECIMAL(12,2)) < prev THEN -1 ELSE 0 END AS dir
         |  FROM d)
         |SELECT user_id, day, close, CAST(volume AS BIGINT) AS volume,
-        |  CAST(sum(dir * volume) OVER (PARTITION BY user_id ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS obv
+        |  CAST(sum(dir * volume) OVER ($byDay ROWS UNBOUNDED PRECEDING) AS BIGINT) AS obv
         |FROM s ORDER BY user_id, day""".stripMargin),
     Query("fin_atr", (s, d) => FinAnalytics.atr(Tables(s, d).events),
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT user_id, day,
         |    max(value) AS high, min(value) AS low,
         |    max(CASE WHEN rn_d = 1 THEN value END) AS close
@@ -106,7 +101,7 @@ private[graft] object FinQueries extends Family {
         |  GROUP BY user_id, day),
         |p AS (SELECT user_id, day,
         |    CAST(high AS DECIMAL(12,2)) AS h, CAST(low AS DECIMAL(12,2)) AS l,
-        |    lag(CAST(close AS DECIMAL(12,2)), 1) OVER (PARTITION BY user_id ORDER BY day) AS pc
+        |    lag(CAST(close AS DECIMAL(12,2)), 1) OVER ($byDay) AS pc
         |  FROM o),
         |t AS (SELECT user_id, day, greatest(h - l, abs(h - pc), abs(l - pc)) AS tr
         |  FROM p WHERE pc IS NOT NULL),
@@ -114,9 +109,9 @@ private[graft] object FinQueries extends Family {
         |    CAST(sum(tr) OVER w * 100 AS BIGINT) AS s2,
         |    CAST(count(*) OVER w AS BIGINT) AS n
         |  FROM t
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
+        |  WINDOW w AS (${trailing(14)}))
         |SELECT user_id, day, CAST(tr AS DOUBLE) + 0.0 AS tr,
-        |  CAST((2 * s2 * 10000 + n) // (2 * n) AS DOUBLE) / 1000000.0 + 0.0 AS atr14
+        |  ${ratio6("s2", "n", 10000)} AS atr14
         |FROM a ORDER BY user_id, day""".stripMargin),
     Query("fin_macd", (s, d) => FinAnalytics.macd(Tables(s, d).events), macdOracle),
     Query("fin_moments", (s, d) => FinAnalytics.moments(Tables(s, d).events),
@@ -143,28 +138,17 @@ private[graft] object FinQueries extends Family {
         |  CASE WHEN m2 > 0.0 THEN round(m4 / (m2 * m2) - 3.0, 6) + 0.0 END AS kurtosis_excess
         |FROM f ORDER BY event_type""".stripMargin),
     Query("fin_autocorr", (s, d) => FinAnalytics.autocorr(Tables(s, d).events), closesCte +
-      """
-        |, rets AS (SELECT user_id, day, close / prev_close - 1.0 AS ret FROM (
-        |    SELECT user_id, day, close,
-        |           lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-        |    FROM closes) WHERE prev_close IS NOT NULL AND prev_close <> 0),
-        |p0 AS (SELECT user_id, ret,
-        |    lag(ret) OVER (PARTITION BY user_id ORDER BY day) AS retl FROM rets),
-        |p AS (SELECT user_id, CAST(round(ret, 6) AS DECIMAL(19,6)) AS x,
-        |    CAST(round(retl, 6) AS DECIMAL(19,6)) AS y
+      s"""
+        |, $returnsCte,
+        |p0 AS (SELECT user_id, ret, lag(ret) OVER ($byDay) AS retl FROM rets),
+        |p AS (SELECT user_id, ${dec6("ret")} AS x, ${dec6("retl")} AS y
         |  FROM p0 WHERE retl IS NOT NULL),
         |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
         |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
         |    sum(x * x) AS sx2, sum(y * y) AS sy2
-        |  FROM p GROUP BY user_id),
-        |f AS (SELECT user_id, n,
-        |    CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS vx,
-        |    CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vy,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cov
-        |  FROM m WHERE n > 1)
-        |SELECT user_id, n,
-        |  CASE WHEN vx > 0.0 AND vy > 0.0 THEN round(cov / sqrt(vx * vy), 6) + 0.0 END AS autocorr1
-        |FROM f ORDER BY user_id""".stripMargin),
+        |  FROM p GROUP BY user_id)
+        |SELECT user_id, n, ${pearson("n", "sx", "sy", "sxy", "sx2", "sy2")} AS autocorr1
+        |FROM m WHERE n > 1 ORDER BY user_id""".stripMargin),
     Query("fin_ohlc_unpivot", (s, d) => FinAnalytics.ohlcUnpivot(Tables(s, d).events),
       s"""WITH ohlc AS (${ohlcBars("day")})
         |SELECT user_id, day, metric, value FROM (
@@ -174,44 +158,34 @@ private[graft] object FinQueries extends Family {
         |  UNION ALL SELECT user_id, day, 'close', close FROM ohlc)
         |ORDER BY user_id, day, metric""".stripMargin),
     Query("fin_rolling_median", (s, d) => FinAnalytics.rollingMedian(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, m AS (SELECT user_id, day, close,
         |    list_sort(list(close) OVER w) AS vals,
         |    CAST(count(*) OVER w AS BIGINT) AS n
         |  FROM closes
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 4 PRECEDING AND CURRENT ROW))
+        |  WINDOW w AS (${trailing(5)}))
         |SELECT user_id, day, close, vals[(n + 1) // 2] AS med
         |FROM m ORDER BY user_id, day""".stripMargin),
     Query("fin_corr_pairs", (s, d) => FinAnalytics.corrPairs(Tables(s, d).events), closesCte +
-      """
-        |, rets AS (SELECT user_id, day, CAST(round(close / prev - 1.0, 6) AS DECIMAL(19,6)) AS r FROM (
-        |    SELECT user_id, day, close,
-        |           lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev FROM closes)
-        |  WHERE prev IS NOT NULL AND prev <> 0),
+      s"""
+        |, $returnsCte,
         |top AS (SELECT user_id FROM events GROUP BY user_id ORDER BY count(*) DESC, user_id LIMIT 20),
-        |sel AS (SELECT r.user_id, r.day, r.r FROM rets r JOIN top USING (user_id)),
+        |sel AS (SELECT user_id, day, ${dec6("ret")} AS r FROM rets JOIN top USING (user_id)),
         |m AS (SELECT a.user_id AS u1, b.user_id AS u2, count(*) AS n,
         |        sum(a.r) AS s1, sum(b.r) AS s2, sum(a.r * b.r) AS s12,
         |        sum(a.r * a.r) AS s11, sum(b.r * b.r) AS s22
         |      FROM sel a JOIN sel b ON a.day = b.day AND a.user_id < b.user_id
-        |      GROUP BY 1, 2),
-        |f AS (SELECT u1, u2, CAST(n AS BIGINT) AS n,
-        |        CAST(n AS DOUBLE) * CAST(s11 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) AS vx,
-        |        CAST(n AS DOUBLE) * CAST(s22 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) AS vy,
-        |        CAST(n AS DOUBLE) * CAST(s12 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s2 AS DOUBLE) AS cov
-        |      FROM m WHERE n > 1)
-        |SELECT u1, u2, n,
-        |  CASE WHEN vx > 0 AND vy > 0 THEN round(cov / sqrt(vx * vy), 6) + 0.0 END AS corr
-        |FROM f ORDER BY u1, u2""".stripMargin),
+        |      GROUP BY 1, 2)
+        |SELECT u1, u2, CAST(n AS BIGINT) AS n, ${pearson("n", "s1", "s2", "s12", "s11", "s22")} AS corr
+        |FROM m WHERE n > 1 ORDER BY u1, u2""".stripMargin),
     Query("fin_resample_ffill", (s, d) => FinAnalytics.resampleFfill(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, b AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM closes GROUP BY user_id),
         |spine AS (SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day FROM b),
         |j AS (SELECT s.user_id, s.day, c.close
         |      FROM spine s LEFT JOIN closes c ON c.user_id = s.user_id AND c.day = s.day)
         |SELECT user_id, day,
-        |  last_value(close IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING) AS close_filled,
+        |  last_value(close IGNORE NULLS) OVER ($byDay ROWS UNBOUNDED PRECEDING) AS close_filled,
         |  close IS NULL AS is_gap
         |FROM j ORDER BY user_id, day""".stripMargin),
     Query("fin_range_day_sum", (s, d) => FinAnalytics.rangeDaySum(Tables(s, d).events), closesCte +
@@ -230,65 +204,51 @@ private[graft] object FinQueries extends Family {
     Query("fin_monthly_ohlc", (s, d) => FinAnalytics.ohlcBars(Tables(s, d).events, "month"),
       s"${ohlcBars("month")} ORDER BY user_id, month"),
     Query("fin_drawdown", (s, d) => FinAnalytics.drawdown(Tables(s, d).events), closesCte +
-      """
+      s"""
         |, dd AS (SELECT user_id,
         |    CASE WHEN peak > 0 THEN round(1.0 - close / peak, 6) + 0.0 END AS dd
         |  FROM (SELECT user_id, close,
-        |          max(close) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS peak
+        |          max(close) OVER ($byDay ROWS UNBOUNDED PRECEDING) AS peak
         |        FROM closes))
         |SELECT user_id, count(*) AS n_days, max(dd) AS max_drawdown
         |FROM dd GROUP BY user_id ORDER BY user_id""".stripMargin),
     Query("fin_moving_avg", (s, d) => FinAnalytics.movingAvg(Tables(s, d).events), closesCte +
-      """
+      s"""
         |SELECT user_id, day, close,
         |  CAST(sum(CAST(close AS DECIMAL(12,2))) OVER w5 AS DOUBLE) / count(*) OVER w5 AS ma5,
         |  CAST(sum(CAST(close AS DECIMAL(12,2))) OVER w20 AS DOUBLE) / count(*) OVER w20 AS ma20
         |FROM closes
-        |WINDOW w5 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-        |       w20 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
+        |WINDOW w5 AS (${trailing(5)}),
+        |       w20 AS (${trailing(20)})
         |ORDER BY user_id, day""".stripMargin),
     Query("fin_rolling_hilo", (s, d) => FinAnalytics.rollingHiLo(Tables(s, d).events), closesCte +
-      """
+      s"""
         |SELECT user_id, day, close,
         |  max(close) OVER w AS rolling_high, min(close) OVER w AS rolling_low
         |FROM closes
-        |WINDOW w AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
+        |WINDOW w AS (${trailing(10)})
         |ORDER BY user_id, day""".stripMargin),
     Query("fin_returns", (s, d) => FinAnalytics.returns(Tables(s, d).events), closesCte +
-      """
-        |SELECT user_id, day, close, close / prev_close - 1.0 AS ret FROM (
-        |  SELECT user_id, day, close,
-        |         lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-        |  FROM closes) WHERE prev_close IS NOT NULL AND prev_close <> 0
-        |ORDER BY user_id, day""".stripMargin),
+      s"""
+        |, $returnsCte
+        |SELECT user_id, day, close, ret FROM rets ORDER BY user_id, day""".stripMargin),
     Query("fin_volatility", (s, d) => FinAnalytics.volatility(Tables(s, d).events), closesCte +
-      """
-        |, rets AS (
-        |  SELECT user_id, CAST(round(close / prev_close - 1.0, 6) AS DECIMAL(19,6)) AS r FROM (
-        |    SELECT user_id, close,
-        |           lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-        |    FROM closes) WHERE prev_close IS NOT NULL AND prev_close <> 0)
-        |SELECT user_id, n, round(sqrt((CAST(n AS DOUBLE) * CAST(sr2 AS DOUBLE)
-        |  - CAST(sr AS DOUBLE) * CAST(sr AS DOUBLE))
-        |  / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))), 6) + 0.0 AS volatility
-        |FROM (SELECT user_id, count(*) AS n, sum(r) AS sr, sum(r * r) AS sr2
-        |      FROM rets GROUP BY user_id) WHERE n > 1 ORDER BY user_id""".stripMargin),
+      s"""
+        |, $returnsCte,
+        |m AS (SELECT user_id, count(*) AS n, sum(r) AS sr, sum(r * r) AS sr2
+        |  FROM (SELECT user_id, ${dec6("ret")} AS r FROM rets) GROUP BY user_id)
+        |SELECT user_id, n, round(${sampleStd("n", "sr", "sr2")}, 6) + 0.0 AS volatility
+        |FROM m WHERE n > 1 ORDER BY user_id""".stripMargin),
     Query("fin_sharpe", (s, d) => FinAnalytics.sharpe(Tables(s, d).events), closesCte +
-      """
-        |, rets AS (SELECT user_id, close / prev_close - 1.0 AS ret FROM (
-        |    SELECT user_id, close,
-        |           lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-        |    FROM closes) WHERE prev_close IS NOT NULL AND prev_close <> 0),
-        |d AS (SELECT user_id, CAST(round(ret, 6) AS DECIMAL(19,6)) AS r,
-        |    CAST(round(least(ret, 0.0), 6) AS DECIMAL(19,6)) AS dn FROM rets),
+      s"""
+        |, $returnsCte,
+        |d AS (SELECT user_id, ${dec6("ret")} AS r, ${dec6("least(ret, 0.0)")} AS dn FROM rets),
         |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
         |    sum(r) AS sr, sum(r * r) AS sr2, sum(dn * dn) AS sd2
         |  FROM d GROUP BY user_id),
         |f AS (SELECT user_id, n,
         |    CAST(sr AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-        |    sqrt((CAST(n AS DOUBLE) * CAST(sr2 AS DOUBLE)
-        |      - CAST(sr AS DOUBLE) * CAST(sr AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) AS std,
+        |    ${sampleStd("n", "sr", "sr2")} AS std,
         |    sqrt(CAST(sd2 AS DOUBLE) / CAST(n AS DOUBLE)) AS down
         |  FROM m WHERE n > 1)
         |SELECT user_id, n,
@@ -296,18 +256,14 @@ private[graft] object FinQueries extends Family {
         |  CASE WHEN down > 0.0 THEN round(mean / down * sqrt(252.0), 6) + 0.0 END AS sortino
         |FROM f ORDER BY user_id""".stripMargin),
     Query("fin_calmar", (s, d) => FinAnalytics.calmar(Tables(s, d).events), closesCte +
-      """
-        |, rets AS (
-        |  SELECT user_id, CAST(round(close / prev_close - 1.0, 6) AS DECIMAL(19,6)) AS r FROM (
-        |    SELECT user_id, close,
-        |           lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-        |    FROM closes) WHERE prev_close IS NOT NULL AND prev_close <> 0),
-        |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n, sum(r) AS sr FROM rets GROUP BY user_id),
+      s"""
+        |, $returnsCte,
+        |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n, sum(${dec6("ret")}) AS sr FROM rets GROUP BY user_id),
         |dd AS (SELECT user_id, max(d) AS max_drawdown FROM (
         |  SELECT user_id,
         |         CASE WHEN peak > 0 THEN round(1.0 - close / peak, 6) + 0.0 END AS d
         |  FROM (SELECT user_id, close,
-        |          max(close) OVER (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING) AS peak
+        |          max(close) OVER ($byDay ROWS UNBOUNDED PRECEDING) AS peak
         |        FROM closes)) GROUP BY user_id)
         |SELECT dd.user_id, CAST(coalesce(n, 0) AS BIGINT) AS n, max_drawdown,
         |       CASE WHEN max_drawdown > 0 AND n > 0
@@ -315,28 +271,16 @@ private[graft] object FinQueries extends Family {
         |FROM dd LEFT JOIN m ON m.user_id = dd.user_id ORDER BY dd.user_id""".stripMargin),
     Query("fin_info_ratio", (s, d) => FinAnalytics.infoRatio(Tables(s, d).events), closesCte +
       s"""
-        |, $marketReturns,
-        |act AS (SELECT user_id,
-        |    CAST(round(ret, 6) AS DECIMAL(19,6)) - CAST(round(mret, 6) AS DECIMAL(19,6)) AS a
-        |  FROM uret JOIN mret USING (day)),
+        |, $matchedReturns,
         |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n, sum(a) AS sa, sum(a * a) AS sa2
-        |      FROM act GROUP BY user_id)
+        |  FROM (SELECT user_id, ${dec6("ret")} - ${dec6("mret")} AS a FROM matched) GROUP BY user_id),
+        |f AS (SELECT user_id, n, sa, ${sampleStd("n", "sa", "sa2")} AS std FROM m WHERE n > 1)
         |SELECT user_id, n,
-        |  CASE WHEN sqrt((CAST(n AS DOUBLE) * CAST(sa2 AS DOUBLE)
-        |                  - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-        |                 / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) > 0.0
-        |       THEN round(CAST(sa AS DOUBLE) / n
-        |            / sqrt((CAST(n AS DOUBLE) * CAST(sa2 AS DOUBLE)
-        |                    - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
-        |                   / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)))
-        |            * sqrt(252.0), 6) + 0.0 END AS info_ratio
-        |FROM m WHERE n > 1 ORDER BY user_id""".stripMargin),
+        |  CASE WHEN std > 0.0 THEN round(CAST(sa AS DOUBLE) / n / std * sqrt(252.0), 6) + 0.0 END AS info_ratio
+        |FROM f ORDER BY user_id""".stripMargin),
     Query("fin_var_es", (s, d) => FinAnalytics.varEs(Tables(s, d).events), closesCte +
-      """
-        |, rets AS (SELECT user_id, day, close / prev_close - 1.0 AS ret FROM (
-        |    SELECT user_id, day, close,
-        |           lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev_close
-        |    FROM closes) WHERE prev_close IS NOT NULL AND prev_close <> 0),
+      s"""
+        |, $returnsCte,
         |r2 AS (SELECT user_id, ret,
         |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ret, day) AS BIGINT) AS rn,
         |    CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
@@ -346,7 +290,7 @@ private[graft] object FinQueries extends Family {
         |      OVER (PARTITION BY user_id) AS var_ret
         |  FROM r2),
         |g AS (SELECT user_id, max(n) AS n, max(var_ret) AS var_ret,
-        |    sum(CASE WHEN ret <= var_ret THEN CAST(round(ret, 6) AS DECIMAL(19,6)) END) AS tail_sum,
+        |    sum(CASE WHEN ret <= var_ret THEN ${dec6("ret")} END) AS tail_sum,
         |    CAST(count(CASE WHEN ret <= var_ret THEN 1 END) AS BIGINT) AS tail_n
         |  FROM v GROUP BY user_id)
         |SELECT user_id, n, var_ret,
@@ -354,7 +298,7 @@ private[graft] object FinQueries extends Family {
         |FROM g WHERE n > 1 ORDER BY user_id""".stripMargin),
     Query("fin_beta", (s, d) => FinAnalytics.beta(Tables(s, d).events), closesCte +
       s"""
-        |, $marketReturns,
+        |, $matchedReturns,
         |$betas
         |SELECT user_id, n, beta FROM betas ORDER BY user_id""".stripMargin),
     Query("fin_cyclical_features", (s, d) => FinAnalytics.cyclicalFeatures(Tables(s, d).events),
@@ -383,20 +327,16 @@ private[graft] object FinQueries extends Family {
       """SELECT event_id, user_id, c_name, c_mktsegment, value
         |FROM events JOIN customer ON user_id = c_custkey ORDER BY event_id""".stripMargin),
     Query("fin_feature_snapshot", (s, d) => FinAnalytics.featureSnapshot(Tables(s, d).events), closesCte +
-      """
-        |, market AS (SELECT day, sum(CAST(close AS DECIMAL(12,2))) AS mkt_value FROM closes GROUP BY day),
-        |mret AS (SELECT day, CASE WHEN prev IS NOT NULL AND prev <> 0
-        |                          THEN CAST(mkt_value AS DOUBLE) / CAST(prev AS DOUBLE) - 1.0 END AS mret
-        |         FROM (SELECT day, mkt_value, lag(mkt_value, 1) OVER (ORDER BY day) AS prev FROM market)),
+      s"""
+        |, $marketCtes,
         |b1 AS (SELECT c.user_id, c.day, c.close, c.volume, m.mret,
-        |              lag(c.close, 1) OVER (PARTITION BY c.user_id ORDER BY c.day) AS prev_close
+        |              lag(c.close, 1) OVER ($byDay) AS prev_close
         |       FROM closes c JOIN mret m USING (day)),
-        |b2 AS (SELECT *, CASE WHEN prev_close IS NOT NULL AND prev_close <> 0
-        |                      THEN close / prev_close - 1.0 END AS ret FROM b1),
+        |b2 AS (SELECT *, CASE WHEN ${returnDefined("prev_close")} THEN ${dailyReturn("prev_close")} END AS ret FROM b1),
         |b3 AS (SELECT *,
-        |         CASE WHEN ret IS NOT NULL THEN CAST(round(ret, 6) AS DECIMAL(19,6)) END AS r6,
-        |         CASE WHEN ret IS NOT NULL AND mret IS NOT NULL THEN CAST(round(ret, 6) AS DECIMAL(19,6)) END AS pr,
-        |         CASE WHEN ret IS NOT NULL AND mret IS NOT NULL THEN CAST(round(mret, 6) AS DECIMAL(19,6)) END AS pm
+        |         CASE WHEN ret IS NOT NULL THEN ${dec6("ret")} END AS r6,
+        |         CASE WHEN ret IS NOT NULL AND mret IS NOT NULL THEN ${dec6("ret")} END AS pr,
+        |         CASE WHEN ret IS NOT NULL AND mret IS NOT NULL THEN ${dec6("mret")} END AS pm
         |       FROM b2),
         |wins AS (SELECT user_id, day, close, ret, volume,
         |    CAST(sum(CAST(close AS DECIMAL(12,2))) OVER w5 AS DOUBLE) / count(*) OVER w5 AS ma5,
@@ -409,19 +349,14 @@ private[graft] object FinQueries extends Family {
         |    count(pr) OVER w20 AS np, sum(pr) OVER w20 AS srp, sum(pm) OVER w20 AS smp,
         |    sum(pr * pm) OVER w20 AS srmp, sum(pm * pm) OVER w20 AS sm2p
         |  FROM b3
-        |  WINDOW w5 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-        |         w10 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 9 PRECEDING AND CURRENT ROW),
-        |         w20 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 19 PRECEDING AND CURRENT ROW),
-        |         wpk AS (PARTITION BY user_id ORDER BY day ROWS UNBOUNDED PRECEDING))
+        |  WINDOW w5 AS (${trailing(5)}),
+        |         w10 AS (${trailing(10)}),
+        |         w20 AS (${trailing(20)}),
+        |         wpk AS ($byDay ROWS UNBOUNDED PRECEDING))
         |SELECT user_id, day, close, ma5, ma20, volume, avg_vol10, avg_vol20, hi10, lo10, ret,
         |  CASE WHEN peak > 0 THEN round(1.0 - close / peak, 6) + 0.0 END AS drawdown,
-        |  CASE WHEN nr > 1 THEN round(sqrt((CAST(nr AS DOUBLE) * CAST(sr2 AS DOUBLE)
-        |        - CAST(sr AS DOUBLE) * CAST(sr AS DOUBLE))
-        |        / (CAST(nr AS DOUBLE) * CAST(nr - 1 AS DOUBLE))), 6) + 0.0 END AS vol20,
-        |  CASE WHEN np > 1 AND CAST(np AS DOUBLE) * CAST(sm2p AS DOUBLE) - CAST(smp AS DOUBLE) * CAST(smp AS DOUBLE) <> 0
-        |       THEN round((CAST(np AS DOUBLE) * CAST(srmp AS DOUBLE) - CAST(srp AS DOUBLE) * CAST(smp AS DOUBLE))
-        |            / (CAST(np AS DOUBLE) * CAST(sm2p AS DOUBLE) - CAST(smp AS DOUBLE) * CAST(smp AS DOUBLE)), 6) + 0.0
-        |  END AS beta20
+        |  CASE WHEN nr > 1 THEN round(${sampleStd("nr", "sr", "sr2")}, 6) + 0.0 END AS vol20,
+        |  CASE WHEN np > 1 THEN ${beta("np", "srp", "smp", "srmp", "sm2p")} END AS beta20
         |FROM wins ORDER BY user_id, day""".stripMargin),
     // financialData-shaped wide snapshot at the latest bar: the ma
     // family replays fin_moving_avg's exact-decimal pattern, the
@@ -439,11 +374,11 @@ private[graft] object FinQueries extends Family {
         |    CAST(sum(n_ticks) OVER wa AS DOUBLE) / count(*) OVER wa AS average_volume,
         |    row_number() OVER (PARTITION BY user_id ORDER BY day DESC) AS rn
         |  FROM bars
-        |  WINDOW w50 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 49 PRECEDING AND CURRENT ROW),
-        |         w200 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 199 PRECEDING AND CURRENT ROW),
-        |         w252 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 251 PRECEDING AND CURRENT ROW),
+        |  WINDOW w50 AS (${trailing(50)}),
+        |         w200 AS (${trailing(200)}),
+        |         w252 AS (${trailing(252)}),
         |         wa AS (PARTITION BY user_id)),
-        |$marketReturns,
+        |$matchedReturns,
         |$betas
         |SELECT s.user_id, c.c_name, s.day, s.close AS current_price, s.open,
         |  s.high AS day_high, s.low AS day_low, s.n_ticks AS volume,
@@ -488,40 +423,35 @@ private[graft] object FinQueries extends Family {
         |ORDER BY e.event_id""".stripMargin),
   )
 
-  /** Daily market and per-user returns over `closes`: the market's
-    * summed close `market(day, mkt_value)`, its return
-    * `mret(day, mret)` and each user's `uret(user_id, day, ret)`.
+  /** The market series over `closes` (FinAnalytics.marketReturns):
+    * the summed close `market(day, mkt_value)` and its return
+    * `mret(day, mret)`, null where the previous value is missing or
+    * zero.
     */
-  private def marketReturns: String =
-    """market AS (
-      |  SELECT day, sum(CAST(close AS DECIMAL(12,2))) AS mkt_value FROM closes GROUP BY day),
-      |mret AS (
-      |  SELECT day, CAST(mkt_value AS DOUBLE) / CAST(prev AS DOUBLE) - 1.0 AS mret FROM (
-      |    SELECT day, mkt_value, lag(mkt_value, 1) OVER (ORDER BY day) AS prev FROM market)
-      |  WHERE prev IS NOT NULL AND prev <> 0),
-      |uret AS (
-      |  SELECT user_id, day, close / prev - 1.0 AS ret FROM (
-      |    SELECT user_id, day, close, lag(close, 1) OVER (PARTITION BY user_id ORDER BY day) AS prev
-      |    FROM closes) WHERE prev IS NOT NULL AND prev <> 0)""".stripMargin
+  private val marketCtes: String =
+    """market AS (SELECT day, sum(CAST(close AS DECIMAL(12,2))) AS mkt_value FROM closes GROUP BY day),
+      |mret AS (SELECT day, CASE WHEN prev IS NOT NULL AND prev <> 0
+      |                          THEN CAST(mkt_value AS DOUBLE) / CAST(prev AS DOUBLE) - 1.0 END AS mret
+      |         FROM (SELECT day, mkt_value, lag(mkt_value, 1) OVER (ORDER BY day) AS prev FROM market))""".stripMargin
 
-  /** Each user's beta against the market over [[marketReturns]] from
+  /** [[marketCtes]], the users' `rets` and
+    * `matched(user_id, day, ret, mret)`: each user's daily return
+    * next to the market's defined return of the same day
+    * (FinAnalytics.matchedReturns).
+    */
+  private val matchedReturns: String =
+    s"""$marketCtes,
+       |$returnsCte,
+       |matched AS (SELECT user_id, day, ret, mret FROM rets JOIN mret USING (day) WHERE mret IS NOT NULL)""".stripMargin
+
+  /** Each user's beta against the market over [[matchedReturns]] from
     * exact-decimal moments (FinAnalytics.beta): `betas(user_id, n,
     * beta)` for users with more than one joint return.
     */
-  private def betas: String =
-    """moments AS (
-      |  SELECT user_id, count(*) AS n,
-      |         sum(CAST(round(ret, 6) AS DECIMAL(19,6))) AS sr, sum(CAST(round(mret, 6) AS DECIMAL(19,6))) AS sm,
-      |         sum(CAST(round(ret, 6) AS DECIMAL(19,6)) * CAST(round(mret, 6) AS DECIMAL(19,6))) AS srm,
-      |         sum(CAST(round(mret, 6) AS DECIMAL(19,6)) * CAST(round(mret, 6) AS DECIMAL(19,6))) AS sm2
-      |  FROM uret JOIN mret USING (day) GROUP BY user_id),
-      |betas AS (
-      |  SELECT user_id, n,
-      |    CASE WHEN CAST(n AS DOUBLE) * CAST(sm2 AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) <> 0
-      |         THEN round((CAST(n AS DOUBLE) * CAST(srm AS DOUBLE) - CAST(sr AS DOUBLE) * CAST(sm AS DOUBLE))
-      |              / (CAST(n AS DOUBLE) * CAST(sm2 AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE)), 6) + 0.0
-      |    END AS beta
-      |  FROM moments WHERE n > 1)""".stripMargin
+  private val betas: String =
+    s"""moments AS (SELECT user_id, count(*) AS n, sum(r) AS sr, sum(m) AS sm, sum(r * m) AS srm, sum(m * m) AS sm2
+       |  FROM (SELECT user_id, ${dec6("ret")} AS r, ${dec6("mret")} AS m FROM matched) GROUP BY user_id),
+       |betas AS (SELECT user_id, n, ${beta("n", "sr", "sm", "srm", "sm2")} AS beta FROM moments WHERE n > 1)""".stripMargin
 
   /** Per-user OHLC bars at calendar `unit` (FinAnalytics.ohlcBars):
     * (user_id, <unit>, open, high, low, close, n_ticks), open and
@@ -568,7 +498,7 @@ private[graft] object FinQueries extends Family {
     val ws = operators.FinAnalytics.ewmaWeightStrings
     val lags = ws.indices.map { j =>
       if (j == 0) "CAST(close AS DECIMAL(12,2)) AS c0"
-      else s"lag(CAST(close AS DECIMAL(12,2)), $j) OVER (PARTITION BY user_id ORDER BY day) AS c$j"
+      else s"lag(CAST(close AS DECIMAL(12,2)), $j) OVER ($byDay) AS c$j"
     }.mkString(",\n    ")
     val num = ws.zipWithIndex.map { case (w, j) =>
       s"coalesce(c$j * CAST('$w' AS DECIMAL(12,10)), CAST(0 AS DECIMAL(25,12)))"
@@ -598,7 +528,7 @@ FROM lagged ORDER BY user_id, day"""
     val nLags = fast.length max slow.length
     val lags = (0 until nLags).map { j =>
       if (j == 0) "CAST(close AS DECIMAL(12,2)) AS c0"
-      else s"lag(CAST(close AS DECIMAL(12,2)), $j) OVER (PARTITION BY user_id ORDER BY day) AS c$j"
+      else s"lag(CAST(close AS DECIMAL(12,2)), $j) OVER ($byDay) AS c$j"
     }.mkString(",\n    ")
     def numDen(ws: Seq[String], wScale: Int): (String, String) = {
       val wPrec = wScale + 2
@@ -728,7 +658,7 @@ FROM e ORDER BY user_id, day"""
        |    round(sqrt(CAST(CAST(sum(residual * residual) AS VARCHAR) AS DOUBLE) / count(*)), 6) + 0.0 AS rmse
        |  FROM scored GROUP BY fold)
        |SELECT fold, n_test,
-       |  CAST((2 * sum_abs_u + n_test) // (2 * n_test) AS DOUBLE) / 1000000.0 + 0.0 AS mae,
+       |  ${ratio6("sum_abs_u", "n_test", 1)} AS mae,
        |  rmse
        |FROM agg ORDER BY fold""".stripMargin
   }
@@ -749,9 +679,9 @@ FROM e ORDER BY user_id, day"""
     */
   /** Unrolled boosting replay for the fin_gbt gate. `iters` is
     * threaded, but the learning rate is BAKED IN: the leaf-value
-    * CTEs below encode lr = 0.1 as the `10*`/`20*` literals in the
-    * half-up rational division (lr·s/n on the integer-unit grid =
-    * (2·lrNum·s + lrDen·n) // (2·lrDen·n) with lrNum/lrDen = 1/10).
+    * CTEs below encode lr = 0.1 as the `10 *` denominators of the
+    * half-up rational division (lr·s/n on the integer-unit grid is
+    * the half-up s / (10·n)).
     * If fin_gbt is ever registered with a non-default lr, thread
     * lrNum/lrDen through here the way `iters` is — a mismatched
     * oracle fails the hash gate with no hint otherwise.
@@ -771,8 +701,7 @@ FROM e ORDER BY user_id, day"""
          |  FROM feat GROUP BY 1, 2, 3),
          |tot AS (SELECT sum(syu) AS sy, sum(n) AS nn FROM cells),
          |p0 AS MATERIALIZED (SELECT c.hour, c.dow, c.month, c.syu, c.n,
-         |    CAST(CASE WHEN t.sy < 0 THEN -((2 * (-t.sy) + t.nn) // (2 * t.nn))
-         |              ELSE (2 * t.sy + t.nn) // (2 * t.nn) END AS BIGINT) AS pu
+         |    CAST(${halfUpDivSigned("t.sy", "t.nn")} AS BIGINT) AS pu
          |  FROM cells c CROSS JOIN tot t)""".stripMargin
     val rounds = (1 to iters).map { t =>
       s"""mg$t AS (SELECT fidx, bin, sum(syu - pu * n) AS s, sum(n) AS nb FROM (
@@ -787,10 +716,8 @@ FROM e ORDER BY user_id, day"""
          |  WINDOW w AS (PARTITION BY fidx ORDER BY bin ROWS UNBOUNDED PRECEDING),
          |         f AS (PARTITION BY fidx)),
          |best$t AS (SELECT fidx, thr,
-         |    CAST(CASE WHEN sl < 0 THEN -((2 * (-sl) + 10 * nl) // (20 * nl))
-         |              ELSE (2 * sl + 10 * nl) // (20 * nl) END AS BIGINT) AS lv,
-         |    CAST(CASE WHEN st - sl < 0 THEN -((2 * (sl - st) + 10 * (nt - nl)) // (20 * (nt - nl)))
-         |              ELSE (2 * (st - sl) + 10 * (nt - nl)) // (20 * (nt - nl)) END AS BIGINT) AS rv
+         |    CAST(${halfUpDivSigned("sl", "10 * nl")} AS BIGINT) AS lv,
+         |    CAST(${halfUpDivSigned("st - sl", "10 * (nt - nl)")} AS BIGINT) AS rv
          |  FROM sp$t WHERE nl > 0 AND nt - nl > 0
          |  ORDER BY CAST(CAST(sl AS BIGINT) AS DOUBLE) * CAST(CAST(sl AS BIGINT) AS DOUBLE) / CAST(nl AS DOUBLE)
          |         + CAST(CAST(st - sl AS BIGINT) AS DOUBLE) * CAST(CAST(st - sl AS BIGINT) AS DOUBLE) / CAST(nt - nl AS DOUBLE) DESC,

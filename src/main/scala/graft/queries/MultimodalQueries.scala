@@ -3,6 +3,7 @@ package queries
 
 import graft.operators._
 import graft.sources.Tables
+import OracleBlocks.halfUpDiv
 
 /** Binary payloads: container metadata, frame sampling, resize plans
   * and byte-histogram near-dups (Multimodal). */
@@ -44,7 +45,7 @@ private[graft] object MultimodalQueries extends Family {
         |sig AS (SELECT doc_id, band, probe,
         |    CAST(list_sum([
         |      (CASE WHEN probe = 0 THEN (hist[CAST(4 * band + k + 1 AS INT)] * 128) // len
-        |            ELSE (2 * hist[CAST(4 * band + k + 1 AS INT)] * 128 + len) // (2 * len) END)
+        |            ELSE ${halfUpDiv("hist[CAST(4 * band + k + 1 AS INT)]", "len", 128)} END)
         |      * (CASE k WHEN 0 THEN 16777216 WHEN 1 THEN 65536 WHEN 2 THEN 256 ELSE 1 END)
         |      FOR k IN range(4)]) AS BIGINT) AS sig
         |  FROM hh CROSS JOIN (SELECT unnest(range(4)) AS band)
@@ -227,8 +228,8 @@ private[graft] object MultimodalQueries extends Family {
     s"""WITH $mmPayloadCtes,
        |r AS (SELECT doc_id, format, width, height,
        |    CASE WHEN width >= height THEN 224
-       |         ELSE greatest(1, (2 * width * 224 + height) // (2 * height)) END AS out_w,
-       |    CASE WHEN width >= height THEN greatest(1, (2 * height * 224 + width) // (2 * width))
+       |         ELSE greatest(1, ${halfUpDiv("width", "height", 224)}) END AS out_w,
+       |    CASE WHEN width >= height THEN greatest(1, ${halfUpDiv("height", "width", 224)})
        |         ELSE 224 END AS out_h
        |  FROM y)
        |SELECT doc_id, format, width, height, out_w, out_h,

@@ -9,6 +9,53 @@ package queries
   */
 private[graft] object OracleBlocks {
 
+  /** The tie-exact half-up quotient round(num · scale / den), num ≥ 0,
+    * den > 0: the one oracle spelling of Exact.halfUpDiv (whose
+    * scaladoc gives the reason).
+    */
+  def halfUpDiv(num: String, den: String, scale: Long = 1): String =
+    s"(2 * ($num)${if (scale == 1) "" else s" * $scale"} + ($den)) // (2 * ($den))"
+
+  /** [[halfUpDiv]] of any-signed `num`: half-up on the magnitude, sign
+    * reapplied (Exact.withSignOf).
+    */
+  def halfUpDivSigned(num: String, den: String, scale: Long = 1): String = {
+    val mag = halfUpDiv(s"abs($num)", den, scale)
+    s"CASE WHEN ($num) < 0 THEN -($mag) ELSE $mag END"
+  }
+
+  /** A count of 10⁻⁶ units as its double value (Exact.micros). */
+  def micros(units: String): String = s"CAST($units AS DOUBLE) / 1000000.0 + 0.0"
+
+  /** The tie-exact 6-dp ratio num / den (Exact.ratio6). */
+  def ratio6(num: String, den: String, scale: Long = 1000000): String =
+    micros(halfUpDiv(num, den, scale))
+
+  /** n·Σab − Σa·Σb in doubles over exact moment sums (Exact.comoment). */
+  private def comoment(n: String, a: String, b: String, ab: String): String =
+    s"(CAST($n AS DOUBLE) * CAST($ab AS DOUBLE) - CAST($a AS DOUBLE) * CAST($b AS DOUBLE))"
+
+  /** The sample standard deviation (Exact.sampleStd). */
+  def sampleStd(n: String, s: String, s2: String): String =
+    s"sqrt(${comoment(n, s, s, s2)} / (CAST($n AS DOUBLE) * CAST($n - 1 AS DOUBLE)))"
+
+  /** Pearson's r at 6 dp, null on a zero variance (Exact.pearson). */
+  def pearson(n: String, sx: String, sy: String, sxy: String, sx2: String, sy2: String): String = {
+    val (vx, vy) = (comoment(n, sx, sx, sx2), comoment(n, sy, sy, sy2))
+    s"CASE WHEN $vx > 0.0 AND $vy > 0.0 THEN round(${comoment(n, sx, sy, sxy)} / sqrt($vx * $vy), 6) + 0.0 END"
+  }
+
+  /** Beta of r on m at 6 dp, null on a zero m variance (Exact.beta). */
+  def beta(n: String, sr: String, sm: String, srm: String, sm2: String): String = {
+    val den = comoment(n, sm, sm, sm2)
+    s"CASE WHEN $den <> 0 THEN round(${comoment(n, sr, sm, srm)} / $den, 6) + 0.0 END"
+  }
+
+  /** round(e, 6) as an exact decimal (Exact.dec6; one more digit of
+    * precision, which changes no value).
+    */
+  def dec6(e: String): String = s"CAST(round($e, 6) AS DECIMAL(19,6))"
+
   /** DuckDB token/shingle building blocks shared by the text oracles. */
   val toksExpr = "list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> len(x) > 0)"
   def shinglesCte(w: Int): String =
@@ -53,8 +100,8 @@ private[graft] object OracleBlocks {
     * pattern), `c0` is the md5-ordered seed, and each round t
     * computes integer squared distances `d{t}`, the argmin
     * assignment `a{t}` (lowest-cluster tiebreak), and half-up
-    * integer means `c{t}` (sign split so `//` only sees nonnegative
-    * operands; empty clusters keep their previous centroid). Ends
+    * integer means `c{t}` ([[halfUpDivSigned]]; empty clusters keep
+    * their previous centroid). Ends
     * with `a_fin(vec_id, cluster, du)` — the assignment under the
     * final centroids. DuckDB sums BIGINTs into HUGEINT, so no
     * overflow on its side; Spark's Long bound is documented at
@@ -84,9 +131,7 @@ private[graft] object OracleBlocks {
          |a$t AS (SELECT vec_id, cluster FROM (
          |  SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn FROM d$t) WHERE rn = 1),
          |c$t AS (SELECT p.cluster, p.dim, coalesce(m.cu, p.cu) AS cu FROM c${t - 1} p LEFT JOIN (
-         |  SELECT a.cluster, ex.dim, CAST(CASE WHEN sum(ex.u) < 0
-         |      THEN -((2 * (-sum(ex.u)) + count(*)) // (2 * count(*)))
-         |      ELSE (2 * sum(ex.u) + count(*)) // (2 * count(*)) END AS BIGINT) AS cu
+         |  SELECT a.cluster, ex.dim, CAST(${halfUpDivSigned("sum(ex.u)", "count(*)")} AS BIGINT) AS cu
          |  FROM a$t a JOIN $trainEx AS ex ON ex.vec_id = a.vec_id GROUP BY 1, 2) m
          |  ON m.cluster = p.cluster AND m.dim = p.dim)""".stripMargin
     }
@@ -202,6 +247,26 @@ private[graft] object OracleBlocks {
       |  max(CASE WHEN rn = (9 * n + 9) // 10 THEN value END) AS p90,
       |  max(CASE WHEN rn = (99 * n + 99) // 100 THEN value END) AS p99""".stripMargin
 
+  /** Each user's bars in day order (FinAnalytics.byDay). */
+  val byDay = "PARTITION BY user_id ORDER BY day"
+
+  /** The trailing `bars`-bar frame of [[byDay]] (FinAnalytics.trailing). */
+  def trailing(bars: Int): String = s"$byDay ROWS BETWEEN ${bars - 1} PRECEDING AND CURRENT ROW"
+
+  /** Where a daily return over `prev` is defined (FinAnalytics.returnDefined). */
+  def returnDefined(prev: String): String = s"$prev IS NOT NULL AND $prev <> 0"
+
+  /** The daily return close / prev − 1 (FinAnalytics.dailyReturn). */
+  def dailyReturn(prev: String): String = s"close / $prev - 1.0"
+
+  /** `rets(user_id, day, close, ret)`: each user's daily returns over
+    * [[closesCte]] where defined (FinAnalytics.dailyReturns).
+    */
+  val returnsCte: String =
+    s"""rets AS (SELECT user_id, day, close, ${dailyReturn("prev_close")} AS ret FROM (
+       |  SELECT user_id, day, close, lag(close, 1) OVER ($byDay) AS prev_close FROM closes)
+       |  WHERE ${returnDefined("prev_close")})""".stripMargin
+
   /** Daily-close CTE shared by the fin_* window analytics. */
   val closesCte =
     """WITH closes AS (
@@ -223,9 +288,9 @@ private[graft] object OracleBlocks {
         |  CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS n_stop
         |  FROM t)
         |SELECT doc_id, n_chars, n_words, sum_word_len, n_punct, n_stop,
-        |  CASE WHEN n_words > 0 THEN CAST((2 * sum_word_len * 1000000 + n_words) // (2 * n_words) AS DOUBLE) / 1000000.0 + 0.0 END AS avg_word_len,
-        |  CASE WHEN n_chars > 0 THEN CAST((2 * n_punct * 1000000 + n_chars) // (2 * n_chars) AS DOUBLE) / 1000000.0 + 0.0 END AS punct_ratio,
-        |  CASE WHEN n_words > 0 THEN CAST((2 * n_stop * 1000000 + n_words) // (2 * n_words) AS DOUBLE) / 1000000.0 + 0.0 END AS stop_ratio,
+        |  CASE WHEN n_words > 0 THEN ${ratio6("sum_word_len", "n_words")} END AS avg_word_len,
+        |  CASE WHEN n_chars > 0 THEN ${ratio6("n_punct", "n_chars")} END AS punct_ratio,
+        |  CASE WHEN n_words > 0 THEN ${ratio6("n_stop", "n_words")} END AS stop_ratio,
         |  (n_words >= 5 AND punct_ratio <= 0.1
         |   AND avg_word_len >= 2.0 AND avg_word_len <= 12.0) AS keep
         |FROM m ORDER BY doc_id""".stripMargin)
@@ -256,9 +321,9 @@ private[graft] object OracleBlocks {
         |rl AS (SELECT doc_id, run_id, count(*) AS run_len FROM rid GROUP BY doc_id, run_id),
         |agg3 AS (SELECT doc_id, CAST(max(run_len) AS BIGINT) AS max_run FROM rl GROUP BY doc_id)
         |SELECT doc_id, n_tokens, top_token, top_n,
-        |  CAST((2 * top_n * 1000000 + n_tokens) // (2 * n_tokens) AS DOUBLE) / 1000000.0 + 0.0 AS top_frac,
-        |  CAST((2 * dup_tok * 1000000 + n_tokens) // (2 * n_tokens) AS DOUBLE) / 1000000.0 + 0.0 AS dup_token_frac,
-        |  CAST((2 * dup2 * 1000000 + total2) // (2 * total2) AS DOUBLE) / 1000000.0 + 0.0 AS dup_2gram_frac,
+        |  ${ratio6("top_n", "n_tokens")} AS top_frac,
+        |  ${ratio6("dup_tok", "n_tokens")} AS dup_token_frac,
+        |  ${ratio6("dup2", "total2")} AS dup_2gram_frac,
         |  max_run
         |FROM agg1 JOIN top USING (doc_id) JOIN agg2 USING (doc_id) JOIN agg3 USING (doc_id)
         |ORDER BY doc_id""".stripMargin)

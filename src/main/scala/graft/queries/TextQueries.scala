@@ -23,8 +23,8 @@ private[graft] object TextQueries extends Family {
          |  $counts FROM documents),
          |o AS (SELECT *, n_chars - n_latin - n_digit - n_cjk - n_space AS n_other FROM c)
          |SELECT doc_id, n_chars, n_latin, n_digit, n_cjk, n_space, n_other,
-         |  CASE WHEN n_chars > 0 THEN CAST((2 * n_latin * 1000000 + n_chars) // (2 * n_chars) AS DOUBLE) / 1000000.0 + 0.0 END AS latin_ratio,
-         |  CASE WHEN n_chars > 0 THEN CAST((2 * n_cjk * 1000000 + n_chars) // (2 * n_chars) AS DOUBLE) / 1000000.0 + 0.0 END AS cjk_ratio,
+         |  CASE WHEN n_chars > 0 THEN ${ratio6("n_latin", "n_chars")} END AS latin_ratio,
+         |  CASE WHEN n_chars > 0 THEN ${ratio6("n_cjk", "n_chars")} END AS cjk_ratio,
          |  CASE WHEN n_latin + n_digit + n_cjk + n_other = 0 THEN 'other'
          |       WHEN n_cjk >= greatest(n_latin, n_digit, n_other) THEN 'cjk'
          |       WHEN n_latin >= greatest(n_digit, n_other) THEN 'latin'
@@ -50,7 +50,7 @@ private[graft] object TextQueries extends Family {
         |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, CAST(len(w) AS BIGINT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_tokens,
         |  CASE WHEN bpe_tokens > 0
-        |       THEN CAST((2 * n_chars * 1000000 + bpe_tokens) // (2 * bpe_tokens) AS DOUBLE) / 1000000.0 + 0.0
+        |       THEN ${ratio6("n_chars", "bpe_tokens")}
         |  END AS chars_per_token
         |FROM t ORDER BY doc_id""".stripMargin),
     Query("text_fingerprint", (s, d) => TextOps.fingerprint(Tables(s, d).documents),
@@ -77,7 +77,7 @@ private[graft] object TextQueries extends Family {
         |df AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY token),
         |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
         |s AS (SELECT doc_id, token, tf, df,
-        |        CAST((2 * (tf * (n_docs + 1)) * 1000000 + (df + 1)) // (2 * (df + 1)) AS DOUBLE) / 1000000.0 + 0.0 AS score
+        |        ${ratio6("tf * (n_docs + 1)", "df + 1")} AS score
         |      FROM tf JOIN df USING (token) CROSS JOIN n),
         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, token) AS BIGINT) AS rank FROM s)
         |SELECT doc_id, token, tf, df, score, rank FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
@@ -103,8 +103,7 @@ private[graft] object TextQueries extends Family {
         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
         |  CAST(sum(bits) AS BIGINT) AS total_bits FROM s GROUP BY doc_id)
         |SELECT doc_id, n_tokens, total_bits,
-        |  CAST((2 * total_bits * 1000000 + n_tokens) // (2 * n_tokens) AS DOUBLE)
-        |    / 1000000.0 + 0.0 AS mean_bits
+        |  ${ratio6("total_bits", "n_tokens")} AS mean_bits
         |FROM g ORDER BY doc_id""".stripMargin),
   )
 

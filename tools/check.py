@@ -5,8 +5,11 @@ Runs graft.Verify (Spark) on a scale-factor dir, then replays each
 oracle SQL in DuckDB over the same parquet tables and compares
 results: sort columns by name, sort rows, compare values exactly.
 
-Usage: tools/check.py [sfdir] [query ...]
+Usage: tools/check.py [--same-as DUMP] [sfdir] [query ...]
   sfdir defaults to /root/testdata/sf0.01
+  --same-as DUMP  after the oracle compare, also diff every query's
+                  Spark answer against DUMP, another tree's graft.Verify
+                  output dir for the same sfdir (same row normalization)
 Requires `sbt package` (or compile) beforehand; runs Verify via java
 against target/scala-2.13/classes + /opt/spark/jars.
 """
@@ -14,6 +17,11 @@ import json, math, os, subprocess, sys
 
 import duckdb
 
+SAME_AS = None
+if "--same-as" in sys.argv:
+    i = sys.argv.index("--same-as")
+    SAME_AS = sys.argv[i + 1]
+    del sys.argv[i:i + 2]
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 # Scratch dir is PER SCALE FACTOR: two concurrent check.py runs on
@@ -57,6 +65,13 @@ def norm(v):
     return repr(v)
 
 
+def answer(rel):
+    """(sorted column names, sorted normalized rows) of a DuckDB relation."""
+    cols = sorted(rel.columns)
+    return cols, sorted(tuple(norm(v) for v in row) for row in
+                        rel.df()[cols].itertuples(index=False, name=None))
+
+
 def compare():
     con = duckdb.connect()
     for t in TABLES:
@@ -70,9 +85,7 @@ def compare():
             continue
         try:
             exp = con.sql(sql)
-            exp_cols = sorted(exp.columns)
-            exp_rows = sorted(tuple(norm(v) for v in row) for row in
-                              exp.df()[exp_cols].itertuples(index=False, name=None))
+            exp_cols, exp_rows = answer(exp)
         except Exception as e:
             print(f"FAIL {name}: oracle error: {str(e)[:200]}")
             bad += 1
@@ -93,9 +106,7 @@ def compare():
                 print(f"FAIL {name}: spark emits raw DECIMAL columns {dec_cols} (external comparator unsafe)")
                 bad += 1
                 continue
-            got_cols = sorted(got.columns)
-            got_rows = sorted(tuple(norm(v) for v in row) for row in
-                              got.df()[got_cols].itertuples(index=False, name=None))
+            got_cols, got_rows = answer(got)
         except Exception as e:
             print(f"FAIL {name}: spark result missing/unreadable: {str(e)[:200]}")
             bad += 1
@@ -115,9 +126,38 @@ def compare():
             print(f"ok   {name} ({len(got_rows)} rows)")
             ok += 1
     print(f"== {ok} ok, {bad} fail ==")
-    sys.exit(1 if bad else 0)
+    return bad
+
+
+def same_as(other):
+    """Diff every query's Spark answer (oracled or not) against `other`."""
+    con = duckdb.connect()
+    names = sorted(n for n in set(os.listdir(OUT)) | set(os.listdir(other))
+                   if os.path.isdir(f"{OUT}/{n}") or os.path.isdir(f"{other}/{n}"))
+    same = bad = 0
+    for name in names:
+        if ONLY and name not in ONLY:
+            continue
+        try:
+            mine, theirs = (answer(con.sql(f"SELECT * FROM '{d}/{name}/*.parquet'"))
+                            for d in (OUT, other))
+        except Exception as e:
+            print(f"DIFF {name}: unreadable: {str(e)[:200]}")
+            bad += 1
+            continue
+        if mine == theirs:
+            same += 1
+        else:
+            print(f"DIFF {name}: columns {'same' if mine[0] == theirs[0] else 'differ'}, "
+                  f"rows {len(mine[1])} vs {len(theirs[1])}")
+            bad += 1
+    print(f"== same-as {other}: {same} identical, {bad} differ ==")
+    return bad
 
 
 if __name__ == "__main__":
     run_verify()
-    compare()
+    bad = compare()
+    if SAME_AS:
+        bad += same_as(SAME_AS)
+    sys.exit(1 if bad else 0)
